@@ -180,7 +180,8 @@ def document_fingerprints(
 ) -> DataFrame:
     """Winnowing-style fingerprints: min-``keep`` murmur hashes of byte
     ``gram``-grams per document, one vectorized pass (flat window matrix →
-    one murmur call → lexsort-segmented min-k; zero per-row Python).
+    one murmur call → per-doc ``np.partition`` min-k; no per-row Python
+    hashing).
 
     Output: (id, fp bigint) — ``keep`` rows per non-trivial doc. Shared
     fingerprints indicate copied spans (containment, where token-level

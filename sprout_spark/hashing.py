@@ -398,9 +398,3 @@ def murmur3_64_batch(values, seed: int = 0) -> np.ndarray:
     mat, lens = pack_any(values)
     return murmur3_64_packed(mat, lens, seed)
 
-
-def murmur3_64_multi_seed(
-    mat: np.ndarray, lens: np.ndarray, seeds: np.ndarray
-) -> np.ndarray:
-    """Hash every packed row under every seed. Returns (k, n) uint64."""
-    return np.stack([murmur3_64_packed(mat, lens, s) for s in seeds])

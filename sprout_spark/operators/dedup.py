@@ -384,8 +384,6 @@ def _verify_jaccard_broadcast(
     expression performs — values are bit-identical."""
     import pyarrow.compute as pc
 
-    if not hasattr(ta, "toArrow"):  # pragma: no cover - pre-4.0
-        return None
     same = ta is tb
     cap = _VERIFY_BROADCAST_MAX_DOCS
     # ONE bounded collect doubles as the size guard: limit(cap+1) keeps
@@ -626,20 +624,16 @@ def exact_dedup(df: DataFrame, id_col: str, dup_cols: list[str]) -> DataFrame:
 _CLUSTERS_DRIVER_MAX_EDGES = 1_000_000
 
 
-def _clusters_driver_union_find(und: DataFrame) -> DataFrame:
-    """Driver-side connected components over a bounded, materialized
-    (a, b) edge list: path-compressed union-find, then one pass mapping
-    every node to its component's minimum id — exactly the fixpoint the
+def _clusters_driver_union_find(spark, rows) -> DataFrame:
+    """Driver-side connected components over a bounded, collected (a, b)
+    edge table: path-compressed union-find, then one pass mapping every
+    node to its component's minimum id — exactly the fixpoint the
     distributed label propagation converges to."""
     import pyarrow as _pa
 
-    rows = und.toArrow() if hasattr(und, "toArrow") else None
-    if rows is not None:
-        a_np = rows.column("a").combine_chunks().to_numpy(zero_copy_only=False)
-        b_np = rows.column("b").combine_chunks().to_numpy(zero_copy_only=False)
-        pairs_iter = zip(a_np.tolist(), b_np.tolist())
-    else:  # pragma: no cover - pre-4.0 fallback
-        pairs_iter = ((r["a"], r["b"]) for r in und.collect())
+    a_np = rows.column("a").combine_chunks().to_numpy(zero_copy_only=False)
+    b_np = rows.column("b").combine_chunks().to_numpy(zero_copy_only=False)
+    pairs_iter = zip(a_np.tolist(), b_np.tolist())
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -668,13 +662,7 @@ def _clusters_driver_union_find(und: DataFrame) -> DataFrame:
             "cluster": _pa.array(out_c, _pa.int64()),
         }
     )
-    spark = und.sparkSession
-    try:
-        return spark.createDataFrame(tbl)
-    except TypeError:  # pragma: no cover - arrow table unsupported
-        return spark.createDataFrame(
-            list(zip(out_a, out_c)), "id bigint, cluster bigint"
-        )
+    return spark.createDataFrame(tbl)
 
 
 def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
@@ -728,10 +716,14 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     # driver runs union-find over the collected list instead —
     # components (and the min-id cluster label) are identical by
     # construction; beyond the cap the distributed rounds run as
-    # before. The count and collect read checkpointed blocks, not the
-    # caller's lineage.
-    if und.count() <= 2 * _CLUSTERS_DRIVER_MAX_EDGES:
-        return _clusters_driver_union_find(und)
+    # before. One bounded collect is both the size guard and the
+    # union-find input (limit(cap+1): one job decides the path, driver
+    # memory stays bounded, and an over-cap graph pays one truncated
+    # pass); it reads checkpointed blocks, not the caller's lineage.
+    cap = 2 * _CLUSTERS_DRIVER_MAX_EDGES
+    rows = und.limit(cap + 1).toArrow()
+    if rows.num_rows <= cap:
+        return _clusters_driver_union_find(und.sparkSession, rows)
     labels = (
         und.select(F.col("a").alias("id"))
         .distinct()

@@ -20,7 +20,6 @@ per-document membership).
 from __future__ import annotations
 
 import math
-import time
 
 import numpy as np
 import pyarrow as pa
@@ -29,9 +28,9 @@ from pyspark.sql import functions as F
 
 from sprout_spark.sketch.misra_gries import MisraGries
 from sprout_spark.spark.aggregate import (  # noqa: F401 (build_sketch re-export)
-    SKETCH_ROW_SCHEMA,
     build_sketch,
     collect_merged,
+    emit_partials,
     tree_merge,
 )
 
@@ -135,35 +134,17 @@ def heavy_ngrams(
     # the MG partial directly — the gram explode never runs in the JVM
     # and gram rows never materialize as a DataFrame (guide §2.3/§4.2:
     # the only thing shuffled is one MG partial per partition).
-    def propose(batches):
-        from pyspark import TaskContext
+    def propose(sk, batch):
+        g = _gram_strings(batch.column(0), k)
+        if len(g):
+            sk.update_arrow(g)
 
-        t0 = time.perf_counter()
-        sk = MisraGries(k=mg_k)
-        rows = 0
-        for batch in batches:
-            g = _gram_strings(batch.column(0), k)
-            rows += len(g)
-            if len(g):
-                sk.update_arrow(g)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict(
-            {
-                "part_id": pa.array([pid], pa.int64()),
-                "sketch": pa.array([sk.to_bytes()], pa.binary()),
-                "rows": pa.array([rows], pa.int64()),
-                "build_ms": pa.array(
-                    [(time.perf_counter() - t0) * 1000.0], pa.float64()
-                ),
-            }
-        )
+    def factory():
+        return MisraGries(k=mg_k)
 
-    partials = text.mapInArrow(propose, SKETCH_ROW_SCHEMA)
+    partials = emit_partials(text, factory, propose)
     n = df.rdd.getNumPartitions()
-    mg = collect_merged(
-        tree_merge(partials, n, stop_at=64), lambda: MisraGries(k=mg_k)
-    )
+    mg = collect_merged(tree_merge(partials, n, stop_at=64), factory)
     cands = mg.heavy_hitters(phi)
     spark = df.sparkSession
     if not cands:

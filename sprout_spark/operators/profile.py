@@ -40,8 +40,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sketch import HyperLogLog, TDigest
-from ..sketch.base import sketch_from_bytes
-from ..spark.aggregate import MULTI_ROW_SCHEMA, tree_merge
+from ..spark.aggregate import (
+    MULTI_ROW_SCHEMA,
+    collect_merged,
+    emit_partials,
+    tree_merge,
+)
 
 _NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
 _FLOATY = ("float", "double")
@@ -93,71 +97,47 @@ def profile_table(
 
     # ---- pass 2: every sketch in one Arrow scan ---------------------------
     pos = {c: i for i, c in enumerate(cols)}
+    factories = {
+        **{f"hll::{c}": lambda: HyperLogLog(p=hll_p) for c in hll_cols},
+        **{f"td::{c}": lambda: TDigest(delta=tdigest_delta) for c in td_cols},
+    }
 
-    def kernel(batches):
-        from pyspark import TaskContext
-
+    def update(sks, batch):
         from ..hashing import pack_arrow
 
-        hlls = {c: HyperLogLog(p=hll_p) for c in hll_cols}
-        tds = {c: TDigest(delta=tdigest_delta) for c in td_cols}
-        for batch in batches:
-            for c in hll_cols:
-                arr = batch.column(pos[c]).drop_null()
-                if len(arr) == 0:
-                    continue
-                if pa.types.is_timestamp(arr.type):
-                    arr = arr.cast(pa.int64())
-                elif pa.types.is_date32(arr.type):
-                    arr = arr.cast(pa.int32()).cast(pa.int64())
-                elif pa.types.is_date64(arr.type):
-                    arr = arr.cast(pa.int64())
-                elif pa.types.is_boolean(arr.type):
-                    arr = arr.cast(pa.int8())
-                hlls[c].add_packed(*pack_arrow(arr))
-            for c in td_cols:
-                arr = batch.column(pos[c]).drop_null()
-                if len(arr) == 0:
-                    continue
-                tds[c].update_arrow(arr)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        names = [f"hll::{c}" for c in hll_cols] + [f"td::{c}" for c in td_cols]
-        payloads = [hlls[c].to_bytes() for c in hll_cols] + [
-            tds[c].to_bytes() for c in td_cols
-        ]
-        yield pa.RecordBatch.from_pydict(
-            {
-                "name": pa.array(names, pa.string()),
-                "part_id": pa.array([pid] * len(names), pa.int64()),
-                "sketch": pa.array(payloads, pa.binary()),
-                "rows": pa.array([0] * len(names), pa.int64()),
-                "build_ms": pa.array([0.0] * len(names), pa.float64()),
-            }
-        )
+        for c in hll_cols:
+            arr = batch.column(pos[c]).drop_null()
+            if len(arr) == 0:
+                continue
+            if pa.types.is_timestamp(arr.type):
+                arr = arr.cast(pa.int64())
+            elif pa.types.is_date32(arr.type):
+                arr = arr.cast(pa.int32()).cast(pa.int64())
+            elif pa.types.is_date64(arr.type):
+                arr = arr.cast(pa.int64())
+            elif pa.types.is_boolean(arr.type):
+                arr = arr.cast(pa.int8())
+            sks[f"hll::{c}"].add_packed(*pack_arrow(arr))
+        for c in td_cols:
+            arr = batch.column(pos[c]).drop_null()
+            if len(arr):
+                sks[f"td::{c}"].update_arrow(arr)
 
-    partials = df.select(*cols).mapInArrow(kernel, MULTI_ROW_SCHEMA)
-    n_parts = max(1, df.rdd.getNumPartitions())
-
-    def merge_named(tbl: pa.Table) -> pa.Table:
-        from ..spark.aggregate import _merge_group_arrow
-
-        out = _merge_group_arrow(tbl.drop_columns(["name"]))
-        return out.add_column(
-            0, "name", pa.array([tbl.column("name")[0].as_py()], pa.string())
-        )
-
-    merged = {}
-    # stop_at=64: the remaining <= 64 rows per name fold below at the
-    # driver instead of through one more shuffle + Python stage
-    for r in sorted(tree_merge(
-        partials, n_parts, group_cols=("name",), schema=MULTI_ROW_SCHEMA,
-        merge_fn=merge_named, stop_at=64,
-    ).collect(), key=lambda r: (r["name"], r["part_id"])):
-        sk = sketch_from_bytes(r["sketch"])
-        merged[r["name"]] = (
-            sk if r["name"] not in merged else merged[r["name"]].merge(sk)
-        )
+    partials = emit_partials(
+        df.select(*cols),
+        lambda: {name: f() for name, f in factories.items()},
+        update,
+        MULTI_ROW_SCHEMA,
+    )
+    # stop_at=64: the remaining <= 64 rows per name fold at the driver
+    # instead of through one more shuffle + Python stage
+    merged = collect_merged(
+        tree_merge(
+            partials, df.rdd.getNumPartitions(), group_cols=("name",),
+            stop_at=64,
+        ),
+        factories,
+    )
 
     rows = []
     for c in cols:

@@ -568,18 +568,6 @@ def ann_ivf_topk(
     return cosine_topk(cands, "id", "vec", query, k)
 
 
-def _pairwise_cosine(qvec: str = "qvec", vec: str = "vec") -> Column:
-    """Exact cosine between two array columns, JVM-side in double."""
-    a = F.transform(F.col(qvec), lambda x: x.cast("double"))
-    b = F.transform(F.col(vec), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return (dot / F.greatest(na * nb, F.lit(1e-12))).cast("double")
-
-
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     """(qid, id, cosine) -> per-query top-k, best first, deterministic
     ties. Catalyst plans the rank filter as WindowGroupLimit (map-side
@@ -682,8 +670,8 @@ def ann_ivf_topk_batch(
         )
     pruned = index.where(F.col("cell").isin(hit))
     right = F.broadcast(probes) if broadcast_queries else probes
-    # exact re-rank in the Arrow fold kernel (bit-identical to the
-    # _pairwise_cosine expression, ~10x faster on candidate volumes)
+    # exact re-rank in the Arrow fold kernel (bit-identical to a JVM
+    # zip_with/aggregate cosine, ~10x faster on candidate volumes)
     scored = _pairwise_cosine_map(
         pruned.join(right, "cell"), "qid", "qvec", "id", "vec", None
     )
@@ -745,7 +733,9 @@ def ann_lsh_topk_batch(
 _EXACT_BROADCAST_MAX_ROWS = 1 << 18
 
 
-def _cosine_pairs_exact_broadcast(vecs: DataFrame, thr: float) -> DataFrame:
+def _cosine_pairs_exact_broadcast(
+    spark, tbl: pa.Table, thr: float
+) -> DataFrame:
     """All-pairs cosine with the vector matrix broadcast ONCE and pairs
     enumerated inside the kernel (guide §8: decide with small data, move
     heavy bytes once — here the heavy bytes are the 2·d doubles the
@@ -760,17 +750,7 @@ def _cosine_pairs_exact_broadcast(vecs: DataFrame, thr: float) -> DataFrame:
     length group (zip_with pads the shorter side with NULL -> dropped)."""
     import pyarrow.compute as pc
 
-    spark = vecs.sparkSession
     out_schema = "a bigint, b bigint, cosine double"
-    try:
-        tbl = vecs.toArrow()
-    except AttributeError:  # pragma: no cover - pre-4.0 fallback
-        tbl = pa.Table.from_pylist(
-            [r.asDict() for r in vecs.collect()],
-            schema=pa.schema(
-                [("vid", pa.int64()), ("vec", pa.list_(pa.float64()))]
-            ),
-        )
     ids = tbl.column("vid").combine_chunks()
     vec = tbl.column("vec").combine_chunks()
     lens = np.asarray(
@@ -884,9 +864,15 @@ def cosine_pairs_exact(
         F.col(id_col).cast("bigint").alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
     )
-    n = vecs.count()
-    if n <= _EXACT_BROADCAST_MAX_ROWS:
-        return _cosine_pairs_exact_broadcast(vecs, float(min_cosine))
+    # one bounded collect is both the size guard and the broadcast
+    # input: one job decides the path, driver memory stays bounded, and
+    # an over-cap table falls back after one truncated pass
+    cap = _EXACT_BROADCAST_MAX_ROWS
+    tbl = vecs.limit(cap + 1).toArrow()
+    if tbl.num_rows <= cap:
+        return _cosine_pairs_exact_broadcast(
+            vecs.sparkSession, tbl, float(min_cosine)
+        )
     a = vecs.select(F.col("vid").alias("a"), F.col("vec").alias("va"))
     b = vecs.select(F.col("vid").alias("b"), F.col("vec").alias("vb"))
     pairs = a.crossJoin(b).where(F.col("a") < F.col("b"))
@@ -904,15 +890,17 @@ def _pairwise_cosine_map(
     min_cosine: float | None,
 ) -> DataFrame:
     """(id1, id2, cosine) for a pair table carrying both vectors, via a
-    vectorized Arrow kernel whose dimension-ascending fold replicates
-    the exact IEEE op order of the JVM ``zip_with``/``aggregate``
-    expression (:func:`_pairwise_cosine`) — cosines are bit-identical,
-    at ~10x the throughput (the expression form is interpreted per
-    pair). ``min_cosine=None`` keeps every pair (the re-rank shape);
-    with a threshold only surviving pairs are emitted. Pairs with NULL
-    or ragged vectors are dropped — the expression form gives them NULL
-    cosine, which a threshold filter drops identically (re-rank callers
-    never produce them: their kernels drop NULL embeddings)."""
+    vectorized Arrow kernel that replicates the exact IEEE op order of
+    the JVM ``zip_with``/``aggregate`` cosine in double: ``acc = 0;
+    acc += a_k*b_k`` for ascending k, both norms folded the same way,
+    ``sqrt``, then one divide by ``greatest(na*nb, 1e-12)`` — cosines
+    are bit-identical, at ~10x the throughput (the expression form is
+    interpreted per pair). ``min_cosine=None`` keeps every pair (the
+    re-rank shape); with a threshold only surviving pairs are emitted.
+    Pairs with NULL or ragged vectors are dropped — the expression form
+    gives them NULL cosine, which a threshold filter drops identically
+    (re-rank callers never produce them: their kernels drop NULL
+    embeddings)."""
     thr = None if min_cosine is None else float(min_cosine)
 
     def kernel(batches):

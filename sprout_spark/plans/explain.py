@@ -28,13 +28,3 @@ def read_schema(df: DataFrame) -> str:
         if "ReadSchema" in line
     )
 
-
-def assert_healthy_sketch_plan(df: DataFrame, col: str) -> None:
-    """Raise if a sketch-build input plan reads more than it should or
-    fell back to row-at-a-time Python."""
-    plan = formatted_plan(df)
-    if "BatchEvalPython" in plan:
-        raise AssertionError("row-at-a-time Python UDF in the plan")
-    rs = read_schema(df)
-    if rs and col not in rs:
-        raise AssertionError(f"scan does not read {col}: {rs}")

@@ -9,10 +9,15 @@ This is the Spark skeleton every sketch plugs into (SURVEY.md §3.4):
                                        #   numpy from Arrow batches —
                                        #   zero per-row Python
       → tree merge                     # groupBy(part_id // fanin)
-                                       #   .applyInPandas(merge) repeated,
+                                       #   .applyInArrow(merge) repeated,
                                        #   so no task ever receives more
                                        #   than fanin × sketch_size bytes
       → driver MergeableSketch         # final merge of ≤ fanin rows
+
+Every build in the package runs through the same three pieces defined
+here: :func:`emit_partials` (the partial step), :func:`merge_groups`
+(the one merge kernel) and :func:`collect_merged` (the driver fold). A
+partial row is ``[name,] part_id, sketch, rows``.
 
 The partial step is the distributed analog of the reference's ``Add`` loop
 (``bloom.go:164-187``), the merge step of its ``Merge``
@@ -43,20 +48,19 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-import time
 from typing import Callable
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sketch.base import MergeableSketch, merge_serialized, sketch_from_bytes
 
-SKETCH_ROW_SCHEMA = (
-    "part_id bigint, sketch binary, rows bigint, build_ms double"
-)
+SKETCH_ROW_SCHEMA = "part_id bigint, sketch binary, rows bigint"
+# one-scan multi-sketch builds: one row per (sketch name, partition)
+MULTI_ROW_SCHEMA = "name string, " + SKETCH_ROW_SCHEMA
 
 # dict slot for the NULL-key group in the map-combine partial build (a
 # plain None key would collide with nothing, but a sentinel keeps the
@@ -134,14 +138,11 @@ def _update_sketch_from_arrow_weighted(sk, arr, warr, kind) -> None:
 
 
 def _update_sketch_from_arrow(sk: MergeableSketch, arr) -> None:
-    """Dispatch an Arrow array to the sketch's vectorized update path."""
-    t = arr.type
-    if _is_numeric_arrow(t):
-        sk.update_arrow(arr)  # numeric sketches (tdigest/kll) handle this
-    elif pa.types.is_timestamp(t):
-        sk.update_arrow(arr.cast(pa.int64()))
-    else:
-        sk.update_arrow(arr)
+    """Dispatch an Arrow array to the sketch's vectorized update path
+    (timestamps hash as their int64 microseconds)."""
+    if pa.types.is_timestamp(arr.type):
+        arr = arr.cast(pa.int64())
+    sk.update_arrow(arr)
 
 
 def _update_sketch_from_pandas(sk: MergeableSketch, vals: pd.Series) -> None:
@@ -169,6 +170,57 @@ def _update_sketch_from_pandas(sk: MergeableSketch, vals: pd.Series) -> None:
     sk.update_arrow(pa.Array.from_pandas(vals.astype("string").fillna("")))
 
 
+def emit_partials(
+    frame: DataFrame,
+    make: Callable,
+    update: Callable,
+    schema: str = SKETCH_ROW_SCHEMA,
+    annotate: Callable | None = None,
+) -> DataFrame:
+    """The partial step of every sketch build: one ``mapInArrow`` task
+    per input partition builds partition-local sketches from ``frame``'s
+    Arrow batches (vectorized, zero per-row Python) and emits their
+    serialized rows.
+
+    ``make()`` returns one sketch (``SKETCH_ROW_SCHEMA`` rows) or a
+    ``{name: sketch}`` dict (``MULTI_ROW_SCHEMA`` rows);
+    ``update(sketches, batch)`` folds one non-empty Arrow batch into
+    what ``make`` returned. ``annotate(part_id, ctx)``, when given, runs
+    before the partition is read: it returns None to skip the partition
+    unread, or a callable that gives the values of ``schema``'s extra
+    trailing columns once the build is done."""
+
+    def fn(batches):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else 0
+        # no annotate: no extra columns (dict() == {})
+        finish = dict if annotate is None else annotate(pid, ctx)
+        if finish is None:
+            return  # skipped: the batches iterator is never consumed
+        sks = make()
+        rows = 0
+        for batch in batches:
+            if batch.num_rows:
+                rows += batch.num_rows
+                update(sks, batch)
+        named = isinstance(sks, dict)
+        items = sks if named else {None: sks}
+        n = len(items)
+        cols = {"name": pa.array(list(items), pa.string())} if named else {}
+        cols["part_id"] = pa.array([pid] * n, pa.int64())
+        cols["sketch"] = pa.array(
+            [sk.to_bytes() for sk in items.values()], pa.binary()
+        )
+        cols["rows"] = pa.array([rows] * n, pa.int64())
+        for c, v in finish().items():
+            cols[c] = pa.array([v] * n)
+        yield pa.RecordBatch.from_pydict(cols)
+
+    return frame.mapInArrow(fn, schema)
+
+
 def partial_sketches(
     df: DataFrame, col: str, factory: Callable[[], MergeableSketch]
 ) -> DataFrame:
@@ -180,52 +232,38 @@ def partial_sketches(
     exchange costs more than the serialized kernel it parallelizes
     (measured both round-robin and hash spread at sf0.1: bloom_build
     1.05s -> 1.61s / 0.98s, tdigest 0.55s -> 0.81s — both worse)."""
-
-    def fn(batches):
-        from pyspark import TaskContext
-
-        t0 = time.perf_counter()
-        sk = factory()
-        rows = 0
-        for batch in batches:
-            arr = batch.column(0)
-            rows += len(arr)
-            if len(arr):
-                _update_sketch_from_arrow(sk, arr)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict(
-            {
-                "part_id": pa.array([pid], pa.int64()),
-                "sketch": pa.array([sk.to_bytes()], pa.binary()),
-                "rows": pa.array([rows], pa.int64()),
-                "build_ms": pa.array(
-                    [(time.perf_counter() - t0) * 1000.0], pa.float64()
-                ),
-            }
-        )
-
-    return df.select(col).mapInArrow(fn, SKETCH_ROW_SCHEMA)
+    return emit_partials(
+        df.select(col),
+        factory,
+        lambda sk, batch: _update_sketch_from_arrow(sk, batch.column(0)),
+    )
 
 
-def _merge_group_arrow(tbl: pa.Table) -> pa.Table:
+def _merge_rows(tbl: pa.Table) -> pa.Table:
     # Arrow-native merge path: binary payloads stay Arrow buffers until
     # the numpy OR/max/add — no pandas object-column detour
-    payload = merge_serialized(tbl.column("sketch").to_pylist())
-    return pa.table(
-        {
-            "part_id": pa.array(
-                [pa.compute.min(tbl.column("part_id")).as_py()], pa.int64()
-            ),
-            "sketch": pa.array([payload], pa.binary()),
-            "rows": pa.array(
-                [pa.compute.sum(tbl.column("rows")).as_py()], pa.int64()
-            ),
-            "build_ms": pa.array(
-                [pa.compute.sum(tbl.column("build_ms")).as_py()], pa.float64()
-            ),
-        }
-    )
+    out = {}
+    for c in tbl.column_names:
+        if c == "sketch":
+            out[c] = pa.array(
+                [merge_serialized(tbl.column(c).to_pylist())], pa.binary()
+            )
+        elif c == "rows":
+            out[c] = pa.array(
+                [pa.compute.sum(tbl.column(c)).as_py()], pa.int64()
+            )
+        else:
+            out[c] = tbl.column(c).slice(0, 1)
+    return pa.table(out)
+
+
+def merge_groups(df: DataFrame, *keys: str) -> DataFrame:
+    """The one merge kernel: collapse ``df``'s sketch rows to one row per
+    ``keys`` group (``applyInArrow``). ``sketch`` payloads merge,
+    ``rows`` sum, and every other column keeps its first value with its
+    type — so callers project to (keys, sketch, rows) first; the output
+    schema is ``df.schema``."""
+    return df.groupBy(*keys).applyInArrow(_merge_rows, df.schema)
 
 
 def tree_merge(
@@ -233,16 +271,14 @@ def tree_merge(
     n_partials: int,
     fanin: int = 64,
     group_cols: tuple = (),
-    schema: str = None,
-    merge_fn=None,
     stop_at: int = 1,
 ) -> DataFrame:
     """Reduce sketch rows level by level; each task merges ≤ fanin sketches.
 
-    Returns a 1-row-per-group DataFrame with the fully merged sketch(es).
-    ``group_cols``/``schema``/``merge_fn`` generalize the reduction to
+    Returns a 1-row-per-group DataFrame with the fully merged sketch(es),
+    in ``partials``' schema. ``group_cols`` generalizes the reduction to
     keyed partial sets (e.g. the one-pass multi-sketch build reduces per
-    sketch ``name``); the defaults reduce a plain SKETCH_ROW_SCHEMA set
+    sketch ``name``); the default reduces a plain SKETCH_ROW_SCHEMA set
     to one row.
 
     ``stop_at`` stops the reduction once ≤ that many rows (per group)
@@ -257,31 +293,44 @@ def tree_merge(
     """
     df = partials
     n = max(1, n_partials)
-    schema = schema or SKETCH_ROW_SCHEMA
-    merge_fn = merge_fn or _merge_group_arrow
     while n > max(1, stop_at):
-        df = (
-            df.withColumn("part_id", (F.col("part_id") / fanin).cast("bigint"))
-            .groupBy(*group_cols, "part_id")
-            .applyInArrow(merge_fn, schema)
+        df = merge_groups(
+            df.withColumn("part_id", (F.col("part_id") / fanin).cast("bigint")),
+            *group_cols,
+            "part_id",
         )
         n = (n + fanin - 1) // fanin
     return df
 
 
-def collect_merged(merged: DataFrame, factory: Callable[[], MergeableSketch]):
+def collect_merged(
+    merged: DataFrame,
+    factory: Callable[[], MergeableSketch] | dict[str, Callable],
+):
     """Collect a (possibly partially) tree-merged partial set and fold to
     one driver sketch. Rows fold in ``part_id`` order so the driver-side
     merge order is deterministic run to run (order only matters for the
-    approximate quantile sketches, whose bounds hold under any order)."""
-    rows = merged.collect()
-    if not rows:
-        return factory()
-    rows = sorted(rows, key=lambda r: r["part_id"])
-    acc = sketch_from_bytes(rows[0]["sketch"])
-    for r in rows[1:]:
-        acc = acc.merge(sketch_from_bytes(r["sketch"]))
-    return acc
+    approximate quantile sketches, whose bounds hold under any order).
+
+    A set with a ``name`` column (multi-sketch builds) folds per name in
+    ``(name, part_id)`` order; ``factory`` is then a ``{name: factory}``
+    dict and the result a ``{name: sketch}`` dict with every one of its
+    names. A name (or an unnamed set) with no rows — e.g. a zero-
+    partition input — comes back as its factory's empty sketch."""
+    named = "name" in merged.columns
+    out: dict = {}
+    for r in sorted(
+        merged.collect(),
+        key=lambda r: (r["name"] if named else None, r["part_id"]),
+    ):
+        name = r["name"] if named else None
+        sk = sketch_from_bytes(r["sketch"])
+        out[name] = out[name].merge(sk) if name in out else sk
+    if not named:
+        return out[None] if out else factory()
+    return {
+        name: out[name] if name in out else f() for name, f in factory.items()
+    }
 
 
 _PARTIAL_SHUFFLE_WARN_BYTES = 1 << 30  # 1 GiB of full-width partials
@@ -318,13 +367,9 @@ def build_sketch(
     factory: Callable[[], MergeableSketch],
     fanin: int = 64,
 ) -> MergeableSketch:
-    """Scan → partial → tree merge → driver sketch (the full lifecycle)."""
-    partials = partial_sketches(df, col, factory)
-    n = df.rdd.getNumPartitions()
-    _warn_if_partials_oversized(factory, n)
-    return collect_merged(
-        tree_merge(partials, n, fanin=fanin, stop_at=fanin), factory
-    )
+    """Scan → partial → tree merge → driver sketch (the full lifecycle):
+    a one-spec :func:`build_sketches`."""
+    return build_sketches(df, {col: (col, factory)}, fanin=fanin)[col]
 
 
 def build_weighted_sketch(
@@ -351,35 +396,13 @@ def build_weighted_sketch(
     rank mass); NULL weights count 0 and NULL keys hash as the empty
     key in the hash path, exactly like the unweighted path."""
     kind = _require_weighted_interface(factory)
-
-    def fn(batches):
-        from pyspark import TaskContext
-
-        t0 = time.perf_counter()
-        sk = factory()
-        rows = 0
-        for batch in batches:
-            arr = batch.column(0)
-            rows += len(arr)
-            if not len(arr):
-                continue
-            _update_sketch_from_arrow_weighted(sk, arr, batch.column(1), kind)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict(
-            {
-                "part_id": pa.array([pid], pa.int64()),
-                "sketch": pa.array([sk.to_bytes()], pa.binary()),
-                "rows": pa.array([rows], pa.int64()),
-                "build_ms": pa.array(
-                    [(time.perf_counter() - t0) * 1000.0], pa.float64()
-                ),
-            }
-        )
-
-    partials = df.select(
-        F.col(col), F.col(weight_col).cast("long").alias("_w")
-    ).mapInArrow(fn, SKETCH_ROW_SCHEMA)
+    partials = emit_partials(
+        df.select(F.col(col), F.col(weight_col).cast("long").alias("_w")),
+        factory,
+        lambda sk, batch: _update_sketch_from_arrow_weighted(
+            sk, batch.column(0), batch.column(1), kind
+        ),
+    )
     n = df.rdd.getNumPartitions()
     return collect_merged(
         tree_merge(partials, n, fanin=fanin, stop_at=fanin), factory
@@ -389,11 +412,6 @@ def build_weighted_sketch(
 # ---------------------------------------------------------------------------
 # one-pass multi-sketch build: scan once, build every sketch
 # ---------------------------------------------------------------------------
-
-
-MULTI_ROW_SCHEMA = (
-    "name string, part_id bigint, sketch binary, rows bigint, build_ms double"
-)
 
 
 def build_sketches(
@@ -406,82 +424,45 @@ def build_sketches(
     sketch suite (membership + distinct + frequencies + quantiles) into a
     single pass is the difference between one and five full-table reads.
     Only the union of referenced columns crosses the JVM→Arrow boundary.
+    Every name comes back, empty if the input has no partitions.
     """
     cols = sorted({c for c, _ in specs.values()})
     col_pos = {c: i for i, c in enumerate(cols)}
+    factories = {name: factory for name, (_, factory) in specs.items()}
 
-    def fn(batches):
-        from pyspark import TaskContext
-
+    def update(sks, batch):
         from ..hashing import pack_arrow
 
-        t0 = time.perf_counter()
-        sks = {name: factory() for name, (_, factory) in specs.items()}
-        rows = 0
-        for batch in batches:
-            rows += batch.num_rows
-            if batch.num_rows == 0:
-                continue
-            packed: dict[str, tuple] = {}  # pack each key column ONCE
-            for name, (c, _) in specs.items():
-                sk = sks[name]
-                arr = batch.column(col_pos[c])
-                if (
-                    hasattr(sk, "add_packed")
-                    and not _is_numeric_arrow(arr.type)
-                    # timestamps route through the same int64 cast as the
-                    # single-sketch path (_update_sketch_from_arrow) —
-                    # pack_arrow rejects them
-                    and not pa.types.is_timestamp(arr.type)
-                ):
-                    if c not in packed:
-                        packed[c] = pack_arrow(arr)
-                    sk.add_packed(*packed[c])
-                else:
-                    _update_sketch_from_arrow(sk, arr)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        ms = (time.perf_counter() - t0) * 1000.0
-        names = list(sks)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "name": pa.array(names, pa.string()),
-                "part_id": pa.array([pid] * len(names), pa.int64()),
-                "sketch": pa.array(
-                    [sks[n].to_bytes() for n in names], pa.binary()
-                ),
-                "rows": pa.array([rows] * len(names), pa.int64()),
-                "build_ms": pa.array([ms] * len(names), pa.float64()),
-            }
-        )
+        packed: dict[str, tuple] = {}  # pack each key column ONCE
+        for name, (c, _) in specs.items():
+            sk = sks[name]
+            arr = batch.column(col_pos[c])
+            if (
+                hasattr(sk, "add_packed")
+                and not _is_numeric_arrow(arr.type)
+                # timestamps route through the int64 cast in
+                # _update_sketch_from_arrow — pack_arrow rejects them
+                and not pa.types.is_timestamp(arr.type)
+            ):
+                if c not in packed:
+                    packed[c] = pack_arrow(arr)
+                sk.add_packed(*packed[c])
+            else:
+                _update_sketch_from_arrow(sk, arr)
 
-    partials = df.select(*cols).mapInArrow(fn, MULTI_ROW_SCHEMA)
-    n = max(1, df.rdd.getNumPartitions())
-
-    def merge_named(tbl: pa.Table) -> pa.Table:
-        out = _merge_group_arrow(tbl.drop_columns(["name"]))
-        return out.add_column(
-            0, "name", pa.array([tbl.column("name")[0].as_py()], pa.string())
-        )
-
-    merged = tree_merge(
-        partials,
-        n,
-        fanin=fanin,
-        group_cols=("name",),
-        schema=MULTI_ROW_SCHEMA,
-        merge_fn=merge_named,
-        stop_at=fanin,
+    partials = emit_partials(
+        df.select(*cols),
+        lambda: {name: f() for name, f in factories.items()},
+        update,
+        MULTI_ROW_SCHEMA,
     )
-
-    out: dict[str, MergeableSketch] = {}
-    # fold in (name, part_id) order: deterministic driver merge order
-    for r in sorted(merged.collect(), key=lambda r: (r["name"], r["part_id"])):
-        sk = sketch_from_bytes(r["sketch"])
-        out[r["name"]] = (
-            sk if r["name"] not in out else out[r["name"]].merge(sk)
-        )
-    return out
+    n = df.rdd.getNumPartitions()
+    for factory in factories.values():
+        _warn_if_partials_oversized(factory, n)
+    merged = tree_merge(
+        partials, n, fanin=fanin, group_cols=("name",), stop_at=fanin
+    )
+    return collect_merged(merged, factories)
 
 
 # ---------------------------------------------------------------------------
@@ -589,20 +570,6 @@ def build_grouped_sketches(
             }
         )
 
-    def merge_group(tbl: pa.Table) -> pa.Table:
-        return pa.table(
-            {
-                "key": pa.array([tbl.column("key")[0].as_py()], pa.string()),
-                "sketch": pa.array(
-                    [merge_serialized(tbl.column("sketch").to_pylist())],
-                    pa.binary(),
-                ),
-                "rows": pa.array(
-                    [pa.compute.sum(tbl.column("rows")).as_py()], pa.int64()
-                ),
-            }
-        )
-
     cols = [F.col(key_col).cast("string").alias(key_col), F.col(val_col)]
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("long").alias("_w"))
@@ -699,7 +666,7 @@ def build_grouped_sketches(
                 )
 
         partials = base.mapInArrow(partial_batches, out_schema)
-        return partials.groupBy("key").applyInArrow(merge_group, out_schema)
+        return merge_groups(partials, "key")
     if salt and salt > 1:
         salted = base.withColumn(
             "_salt", F.pmod(F.xxhash64(F.col(val_col)), F.lit(salt))
@@ -707,7 +674,7 @@ def build_grouped_sketches(
         phase1 = salted.groupBy(key_col, "_salt").applyInArrow(
             lambda t: build_group(t.drop_columns(["_salt"])), out_schema
         )
-        return phase1.groupBy("key").applyInArrow(merge_group, out_schema)
+        return merge_groups(phase1, "key")
     return base.groupBy(key_col).applyInArrow(build_group, out_schema)
 
 

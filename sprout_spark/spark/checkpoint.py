@@ -27,20 +27,24 @@ from __future__ import annotations
 import time
 from typing import Callable
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sketch.base import MergeableSketch, sketch_from_bytes
+from ..sketch.base import MergeableSketch
 from .aggregate import (
-    SKETCH_ROW_SCHEMA,
     _update_sketch_from_arrow,
     collect_merged,
+    emit_partials,
     tree_merge,
 )
 
-CKPT_SCHEMA = SKETCH_ROW_SCHEMA + ", input_desc string, attempt bigint"
+# the on-disk column list (see the module docstring); the first three
+# are the in-flight SKETCH_ROW_SCHEMA columns, the rest lineage/metrics
+CKPT_SCHEMA = (
+    "part_id bigint, sketch binary, rows bigint, build_ms double, "
+    "input_desc string, attempt bigint"
+)
 
 
 def _read_ckpt(spark: SparkSession, ckpt_dir: str) -> DataFrame | None:
@@ -114,36 +118,23 @@ def checkpointed_partials(
     done = _completed_parts(spark, ckpt_dir, desc)
     done_bc = spark.sparkContext.broadcast(done)
 
-    def fn(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        attempt = ctx.attemptNumber() if ctx is not None else 0
+    def annotate(pid, ctx):
         if pid in done_bc.value:
-            return  # short-circuit: batches iterator never consumed
+            return None  # short-circuit: batches iterator never consumed
         t0 = time.perf_counter()
-        sk = factory()
-        rows = 0
-        for batch in batches:
-            arr = batch.column(0)
-            rows += len(arr)
-            if len(arr):
-                _update_sketch_from_arrow(sk, arr)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "part_id": pa.array([pid], pa.int64()),
-                "sketch": pa.array([sk.to_bytes()], pa.binary()),
-                "rows": pa.array([rows], pa.int64()),
-                "build_ms": pa.array(
-                    [(time.perf_counter() - t0) * 1000.0], pa.float64()
-                ),
-                "input_desc": pa.array([desc], pa.string()),
-                "attempt": pa.array([attempt], pa.int64()),
-            }
-        )
+        return lambda: {
+            "build_ms": (time.perf_counter() - t0) * 1000.0,
+            "input_desc": desc,
+            "attempt": ctx.attemptNumber() if ctx is not None else 0,
+        }
 
-    new_partials = df.select(col).mapInArrow(fn, CKPT_SCHEMA)
+    new_partials = emit_partials(
+        df.select(col),
+        factory,
+        lambda sk, batch: _update_sketch_from_arrow(sk, batch.column(0)),
+        CKPT_SCHEMA,
+        annotate,
+    )
     new_partials.write.mode("append").parquet(ckpt_dir)
 
     allp = spark.read.parquet(ckpt_dir)
@@ -169,7 +160,7 @@ def build_sketch_resumable(
     partials = checkpointed_partials(df, col, factory, ckpt_dir, spark, input_desc)
     n = df.rdd.getNumPartitions()
     merged = tree_merge(
-        partials.select("part_id", "sketch", "rows", "build_ms"),
+        partials.select("part_id", "sketch", "rows"),
         n,
         fanin=fanin,
         stop_at=fanin,

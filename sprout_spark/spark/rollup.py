@@ -49,12 +49,16 @@ import shutil
 from contextlib import contextmanager
 from typing import Callable
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sketch.base import MergeableSketch, merge_serialized, sketch_from_bytes
-from .aggregate import build_grouped_sketches, collect_merged, tree_merge
+from ..sketch.base import MergeableSketch, sketch_from_bytes
+from .aggregate import (
+    build_grouped_sketches,
+    collect_merged,
+    merge_groups,
+    tree_merge,
+)
 
 _GRAINS = ("minute", "hour", "day", "week", "month", "quarter", "year")
 # which coarser grains a source grain may downsample into: valid iff
@@ -75,27 +79,6 @@ _VERSION = 1
 _RESERVED = ("wstart", "sketch", "rows", "__w")
 # part_id fan for the range-merge tree: 2 rounds of fanin-64 tasks
 _MERGE_PARTS = 4096
-
-
-def _merge_group_kernel(group_cols: tuple[str, ...]):
-    """applyInArrow kernel: collapse one (group_cols) group to a single
-    row — first group-key values, OR/max/centroid-merged sketch, summed
-    exact row count. Group columns are always strings by construction."""
-
-    def kernel(tbl: pa.Table) -> pa.Table:
-        cols = {
-            c: pa.array([tbl.column(c)[0].as_py()], pa.string())
-            for c in group_cols
-        }
-        cols["sketch"] = pa.array(
-            [merge_serialized(tbl.column("sketch").to_pylist())], pa.binary()
-        )
-        cols["rows"] = pa.array(
-            [pa.compute.sum(tbl.column("rows")).as_py()], pa.int64()
-        )
-        return pa.table(cols)
-
-    return kernel
 
 
 def _norm_bound(t) -> str:
@@ -459,10 +442,7 @@ class SketchRollup:
         raw = self._filtered(spark, t0, t1, where)
         if raw is None:
             return spark.createDataFrame([], self._row_schema())
-        group = ("wstart", *self.dims)
-        return raw.groupBy(*group).applyInArrow(
-            _merge_group_kernel(group), self._row_schema()
-        )
+        return merge_groups(raw, "wstart", *self.dims)
 
     def by_dims(
         self, spark: SparkSession, t0=None, t1=None, where: dict | None = None
@@ -483,9 +463,7 @@ class SketchRollup:
         )
         if raw is None:
             return spark.createDataFrame([], schema)
-        return raw.groupBy(*self.dims).applyInArrow(
-            _merge_group_kernel(tuple(self.dims)), schema
-        )
+        return merge_groups(raw.drop("wstart"), *self.dims)
 
     def estimate_by(
         self,
@@ -532,7 +510,6 @@ class SketchRollup:
             F.pmod(F.xxhash64("wstart"), F.lit(_MERGE_PARTS)).alias("part_id"),
             "sketch",
             "rows",
-            F.lit(0.0).alias("build_ms"),
         )
         # stop_at: the last tree level would reduce <= 64 KB-sized rows
         # to 1 through a full shuffle + Python round trip; the driver
@@ -682,7 +659,6 @@ class SketchRollup:
                 "an existing rollup would double-count) — pick a fresh path"
             )
         raw = self._filtered(spark, t0, t1, None)
-        group = ("wstart", *self.dims)
         if raw is None:
             folded = spark.createDataFrame([], self._row_schema())
         else:
@@ -692,9 +668,7 @@ class SketchRollup:
                     "string"
                 ),
             )
-            folded = coarse.groupBy(*group).applyInArrow(
-                _merge_group_kernel(group), self._row_schema()
-            )
+            folded = merge_groups(coarse, "wstart", *self.dims)
         dest = object.__new__(SketchRollup)
         dest.path = dest_path
         dest.grain = grain

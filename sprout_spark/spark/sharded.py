@@ -41,7 +41,7 @@ from pyspark.sql.types import BooleanType
 from ..sketch.base import MergeableSketch, merge_serialized, sketch_from_bytes
 from ..sketch.bloom import BloomFilter
 from ..sketch.scalable_bloom import ScalableBloomFilter
-from .aggregate import _update_sketch_from_arrow
+from .aggregate import _update_sketch_from_arrow, merge_groups
 
 SHARD_ROW_SCHEMA = "shard bigint, sketch binary, rows bigint, n_shards int"
 
@@ -119,27 +119,9 @@ def build_sharded_sketch(
         partials = salted.groupBy("shard", "_salt").applyInArrow(
             lambda t: build_group(t.drop_columns(["_salt"])), SHARD_ROW_SCHEMA
         )
-
-        def merge_group(tbl: pa.Table) -> pa.Table:
-            return pa.table(
-                {
-                    "shard": pa.array(
-                        [tbl.column("shard")[0].as_py()], pa.int64()
-                    ),
-                    "sketch": pa.array(
-                        [merge_serialized(tbl.column("sketch").to_pylist())],
-                        pa.binary(),
-                    ),
-                    "rows": pa.array(
-                        [pa.compute.sum(tbl.column("rows")).as_py()], pa.int64()
-                    ),
-                    "n_shards": pa.array([n_shards], pa.int32()),
-                }
-            )
-
-        return partials.groupBy("shard").applyInArrow(
-            merge_group, SHARD_ROW_SCHEMA
-        )
+        # n_shards is one constant, so the kernel's first-value pass
+        # through keeps it
+        return merge_groups(partials, "shard")
     return base.groupBy("shard").applyInArrow(build_group, SHARD_ROW_SCHEMA)
 
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from sprout_spark.sketch import (
     KLL,
     BloomFilter,
+    BottomKSample,
     CountMinSketch,
     HyperLogLog,
     ScalableBloomFilter,
@@ -422,6 +423,88 @@ def test_build_sketches_timestamp_column_matches_single(spark, transcripts):
 def transcripts_path_of(transcripts):
     # module fixture exposes the DataFrame; reuse its source path
     return transcripts.inputFiles()[0].rsplit("/", 1)[0]
+
+
+_FAMILIES = {
+    "bloom": lambda: BloomFilter(200_000, 0.01),
+    "hll": lambda: HyperLogLog(p=12),
+    "cms": lambda: CountMinSketch(0.001, 0.01),
+    "bottomk": lambda: BottomKSample(k=128),
+}
+
+
+def _entry_point_build(entry, df, factory, spark, tmp_path):
+    from sprout_spark.sketch import merge_serialized
+    from sprout_spark.spark.aggregate import build_sketches, build_weighted_sketch
+    from sprout_spark.spark.checkpoint import build_sketch_resumable
+    from sprout_spark.spark.sharded import build_sharded_sketch
+
+    if entry == "build_sketch":
+        return build_sketch(df, "conv_id", factory, fanin=4)
+    if entry == "build_sketches":
+        return build_sketches(df, {"s": ("conv_id", factory)}, fanin=4)["s"]
+    if entry == "build_weighted_sketch":
+        unit = df.withColumn("w", F.lit(1))
+        return build_weighted_sketch(unit, "conv_id", "w", factory, fanin=4)
+    if entry == "build_sketch_resumable":
+        return build_sketch_resumable(
+            df, "conv_id", factory, str(tmp_path / "ckpt"), spark, fanin=4
+        )
+    shards = build_sharded_sketch(df, "conv_id", 4, factory, salt=2)
+    rows = shards.collect()
+    assert len(rows) == 4  # one merged row per shard
+    return sketch_from_bytes(merge_serialized([r["sketch"] for r in rows]))
+
+
+@pytest.mark.parametrize("parts", [2, 8])
+@pytest.mark.parametrize(
+    "entry,family",
+    [
+        (entry, family)
+        for entry in (
+            "build_sketch",
+            "build_sketches",
+            "build_weighted_sketch",
+            "build_sketch_resumable",
+            "build_sharded_sketch",
+        )
+        for family in sorted(_FAMILIES)
+        # the weighted build takes only sketches with a weighted update
+        # (CMS here; test_build_weighted_sketch_rejects_unweightable)
+        if entry != "build_weighted_sketch" or family == "cms"
+    ],
+)
+def test_entry_points_byte_equal_driver_build(
+    spark, transcripts, tmp_path, entry, family, parts
+):
+    """Every build entry point shares one partial emitter, merge kernel
+    and driver fold, so each must give the payload bytes of a driver-side
+    ``factory(); update_arrow(whole column)`` build at any parallelism."""
+    factory = _FAMILIES[family]
+    expect = factory()
+    expect.update_arrow(
+        transcripts.select("conv_id").toArrow().column(0).combine_chunks()
+    )
+    df = transcripts.repartition(parts)
+    got = _entry_point_build(entry, df, factory, spark, tmp_path)
+    assert got.to_bytes() == expect.to_bytes()
+
+
+def test_build_sketches_zero_partition_input(spark):
+    """A zero-partition input emits no partial rows; every requested
+    name must still come back, as its factory's empty sketch."""
+    from sprout_spark.spark.aggregate import build_sketches
+
+    df = spark.range(10).select(F.col("id").cast("string").alias("k"))
+    df = df.where("false")
+    assert df.rdd.getNumPartitions() == 0
+    bloom = lambda: BloomFilter(100, 0.01)
+    hll = lambda: HyperLogLog(p=10)
+    got = build_sketches(df, {"b": ("k", bloom), "h": ("k", hll)})
+    assert sorted(got) == ["b", "h"]
+    assert got["b"].to_bytes() == bloom().to_bytes()
+    assert got["h"].to_bytes() == hll().to_bytes()
+    assert build_sketch(df, "k", bloom).to_bytes() == bloom().to_bytes()
 
 
 def test_sketch_catalog_two_live_filters(spark, transcripts):
