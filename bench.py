@@ -707,7 +707,9 @@ def reference_microbench() -> dict:
     integer keys (the canonical int encoding; the reference benches byte
     keys of similar size)."""
     import numpy as np
+    import pyarrow as pa
 
+    from sprout_spark.hashing import pack_arrow
     from sprout_spark.sketch import BloomFilter
 
     n = 20_000_000
@@ -717,20 +719,14 @@ def reference_microbench() -> dict:
         bf = BloomFilter(n, 0.001, hash_mode=mode)
         t0 = time.perf_counter()
         for start in range(0, n, chunk):
-            ids = np.arange(start, start + chunk, dtype="<i8")
-            mat = np.zeros((chunk, 16), dtype=np.uint8)
-            mat[:, :8] = ids.view(np.uint8).reshape(chunk, 8)
-            lens = np.full(chunk, 8, dtype=np.int64)
-            bf.add_packed(mat, lens)
+            buf, lens = pack_arrow(pa.array(np.arange(start, start + chunk)))
+            bf.add_packed(buf, lens)
         add_s = time.perf_counter() - t0
         t0 = time.perf_counter()
         misses = 0
         for start in range(0, n, chunk):
-            ids = np.arange(start, start + chunk, dtype="<i8")
-            mat = np.zeros((chunk, 16), dtype=np.uint8)
-            mat[:, :8] = ids.view(np.uint8).reshape(chunk, 8)
-            lens = np.full(chunk, 8, dtype=np.int64)
-            misses += int((~bf.contains_packed(mat, lens)).sum())
+            buf, lens = pack_arrow(pa.array(np.arange(start, start + chunk)))
+            misses += int((~bf.contains_packed(buf, lens)).sum())
         contains_s = time.perf_counter() - t0
         assert misses == 0 and bf.count == n
         out[mode] = {
@@ -765,10 +761,10 @@ def flagship_mix_canary() -> dict:
         packed.append(pack_any(keys))
     pack_s = time.perf_counter() - t0
     t0 = time.perf_counter()
-    for mat, lens in packed:
-        bf.add_packed(mat, lens)
-        hll.add_packed(mat, lens)
-        cms.add_packed(mat, lens)
+    for buf, lens in packed:
+        bf.add_packed(buf, lens)
+        hll.add_packed(buf, lens)
+        cms.add_packed(buf, lens)
     upd_s = time.perf_counter() - t0
     assert bf.count == n and hll.count == n and cms.total == n
     return {

@@ -12,7 +12,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..hashing import murmur3_64_packed
+from ..hashing import murmur3_64_flat
 
 # A BPE-ish word/number/punctuation segmentation: word pieces, numbers,
 # single punctuation marks — deterministic and SQL-expressible.
@@ -152,8 +152,10 @@ def _gram_window_hashes(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Murmur hashes of every byte ``gram``-window of every row, computed
     from the Arrow string buffers with zero per-row Python: one flat
-    window-start vector (repeat + arange over the offsets), one (W, gram)
-    byte gather, ONE murmur pass over all windows of all rows.
+    window-start vector (repeat + arange over the offsets), then ONE
+    murmur pass over all windows of all rows, read at their offsets in
+    the data buffer (the kernel copies that buffer once to add its 16
+    bytes of slack; no per-window gather).
 
     Returns (hashes uint64 flat (W,), counts int64 (n,)) where row i owns
     ``hashes[cum(counts)[i-1]:cum(counts)[i]]``.
@@ -168,11 +170,7 @@ def _gram_window_hashes(
     excl = np.concatenate([[0], np.cumsum(counts)[:-1]])
     w_idx = np.arange(total, dtype=np.int64)
     starts = np.repeat(offsets[:-1], counts) + (w_idx - np.repeat(excl, counts))
-    width = max(16, ((gram + 15) // 16) * 16)
-    mat = np.zeros((total, width), dtype=np.uint8)
-    for j in range(gram):  # column-wise gather: gram 1-D gathers beat one
-        mat[:, j] = data[starts + j]  # (W, gram) 2-D fancy-index by ~5x
-    return murmur3_64_packed(mat, np.full(total, gram, dtype=np.int64), seed), counts
+    return murmur3_64_flat(data, starts, np.full(total, gram, dtype=np.int64), seed), counts
 
 
 def document_fingerprints(

@@ -1,4 +1,4 @@
-"""Vectorized MurmurHash3 x64-128 (h1 lane) over numpy byte matrices.
+"""Vectorized MurmurHash3 x64-128 (h1 lane) over a flat key buffer.
 
 Semantics match the reference's hash exactly (dsa0x/sprout,
 ``pkg/murmur/murmur3.go:10-139``, itself a port of Appleby's public
@@ -10,13 +10,20 @@ Two implementations are provided:
 
 * :func:`murmur3_64_scalar` — a straight per-key port used as the test
   oracle (and for tiny inputs).
-* :func:`murmur3_64_batch` — the hot path: hashes a whole batch of
-  variable-length keys at once with numpy uint64 arithmetic.  Keys are
-  packed into a zero-padded ``(n, W)`` uint8 matrix; body blocks are
-  processed column-wise with an "is this a real body block for this row"
-  mask, and the tail is processed unconditionally (zero padding makes the
-  tail mixing a no-op for absent bytes, mirroring the ``k1 == 0`` /
-  ``k2 == 0`` no-op in the reference's switch).
+* :func:`murmur3_64_flat` — the hot path: hashes a whole batch of
+  variable-length keys where they lie in one uint8 buffer, given each
+  key's ``(start, len)``. Keys are sorted once by block count, so block
+  round *b* runs only on the keys that still have a block *b*: the work
+  is proportional to the key bytes, not to n × the longest key. Each
+  16-byte block is read as two unaligned little-endian words at the
+  key's own offset; the tail words are masked to the key's tail bytes.
+  A sequence of seeds returns one row per seed, and the seed-independent
+  block mixing runs once for all of them.
+
+The packed layout (:func:`pack_arrow`, :func:`pack_any`) is ``(buf,
+lens)``: the keys' bytes back to back in ``buf``, followed by 16 bytes of
+slack so the last key's tail words can be read in place; key *i* starts
+at the exclusive cumsum of ``lens``.
 
 All arithmetic is modular uint64 (numpy wraps unsigned ints silently,
 matching Go/C overflow semantics).
@@ -38,17 +45,35 @@ _MASK64 = 0xFFFFFFFFFFFFFFFF
 
 
 def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
-    r = _U64(r)
-    return (x << r) | (x >> _U64(64 - int(r)))
+    """Rotate left in place (``x`` may be a view); returns ``x``."""
+    t = x >> _U64(64 - r)
+    x <<= _U64(r)
+    x |= t
+    return x
 
 
 def _fmix64(k: np.ndarray) -> np.ndarray:
-    k = k ^ (k >> _U64(33))
-    k = k * _FM1
-    k = k ^ (k >> _U64(33))
-    k = k * _FM2
-    k = k ^ (k >> _U64(33))
+    """fmix64 finalization in place; returns ``k``."""
+    k ^= k >> _U64(33)
+    k *= _FM1
+    k ^= k >> _U64(33)
+    k *= _FM2
+    k ^= k >> _U64(33)
     return k
+
+
+def _mix_k1(k1: np.ndarray) -> np.ndarray:
+    k1 *= _C1
+    _rotl64(k1, 31)
+    k1 *= _C2
+    return k1
+
+
+def _mix_k2(k2: np.ndarray) -> np.ndarray:
+    k2 *= _C2
+    _rotl64(k2, 33)
+    k2 *= _C1
+    return k2
 
 
 # ---------------------------------------------------------------------------
@@ -129,39 +154,46 @@ def murmur3_64_scalar(key: bytes, seed: int = 0) -> int:
 
 
 # ---------------------------------------------------------------------------
-# batched packing
+# flat key layout
 # ---------------------------------------------------------------------------
 
+_SLACK = 16  # bytes after the last key, so its tail words read in bounds
 
-def pack_keys(data: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Pack variable-length byte strings into a zero-padded uint8 matrix.
 
-    ``data`` is the concatenated bytes, ``offsets`` the (n+1,) int array of
-    key boundaries (pyarrow string/binary layout).  Returns ``(mat, lens)``
-    where ``mat`` is ``(n, W)`` uint8 with ``W`` a multiple of 16.
-    """
-    offsets = offsets.astype(np.int64)
-    lens = np.diff(offsets)
-    n = len(lens)
-    if n == 0:
-        return np.zeros((0, 16), dtype=np.uint8), lens
-    max_len = int(lens.max()) if n else 0
-    w = max(16, ((max_len + 15) // 16) * 16)
-    mat = np.zeros(n * w, dtype=np.uint8)
-    total = int(offsets[-1] - offsets[0])
+def _key_starts(lens: np.ndarray) -> np.ndarray:
+    """(n+1,) byte offsets of the keys in a flat buffer."""
+    offs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    return offs
+
+
+def _gather_keys(data: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Copy the keys ``data[starts[i]:starts[i]+lens[i]]`` back to back
+    into a new flat buffer with zeroed slack."""
+    lens = np.asarray(lens, dtype=np.int64)
+    total = int(lens.sum())
+    buf = np.zeros(total + _SLACK, dtype=np.uint8)
     if total:
-        # flat scatter: target index of source byte d is
-        # row(d)*w + (d - start[row(d)]), built with one repeat;
-        # int32 indices halve the memory traffic of the index arrays
-        itype = np.int32 if n * w < 2**31 and total < 2**31 else np.int64
-        d = np.arange(total, dtype=itype)
-        d += np.repeat(
-            (np.arange(n, dtype=itype) * w).astype(itype)
-            - (offsets[:-1] - offsets[0]).astype(itype),
+        # source index of output byte d is d + (start - out_start) of its
+        # key; int32 indices halve the memory traffic of the index arrays
+        itype = np.int32 if max(total, len(data)) < 2**31 else np.int64
+        src = np.arange(total, dtype=itype)
+        src += np.repeat(
+            (np.asarray(starts, dtype=np.int64) - _key_starts(lens)[:-1]).astype(itype),
             lens,
         )
-        mat[d] = data[offsets[0] : offsets[-1]]
-    return mat.reshape(n, w), lens
+        buf[:total] = data[src]
+    return buf
+
+
+def take_keys(buf: np.ndarray, lens: np.ndarray, idx) -> tuple[np.ndarray, np.ndarray]:
+    """Rows ``idx`` (a unit-step slice, bool mask or int indices) of a flat
+    ``(buf, lens)`` key layout, as a flat layout of their own. A slice is
+    a zero-copy view: the bytes after it serve as its slack."""
+    offs = _key_starts(lens)
+    if isinstance(idx, slice):
+        return buf[offs[idx.indices(len(lens))[0]] :], lens[idx]
+    return _gather_keys(buf, offs[:-1][idx], lens[idx]), lens[idx]
 
 
 def arrow_buffer_views(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -197,8 +229,9 @@ def arrow_buffer_views(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 
 def pack_arrow(arr) -> tuple[np.ndarray, np.ndarray]:
-    """Pack a pyarrow String/Binary/LargeString array without copies of the
-    underlying data buffer.  Nulls hash as empty strings.
+    """Pack a pyarrow String/Binary/LargeString array into the flat
+    ``(buf, lens)`` layout with one copy of its bytes. Nulls hash as
+    empty strings.
 
     Fixed-width integer arrays use the canonical little-endian fixed-width
     key encoding (mirroring the reference's test usage of LE uint32 keys,
@@ -230,38 +263,30 @@ def pack_arrow(arr) -> tuple[np.ndarray, np.ndarray]:
         # hash as the empty key (matching the string path)
         import pyarrow.compute as pc
 
-        nulls = None
+        lens = np.full(len(arr), 8, dtype=np.int64)
         if arr.null_count:
-            nulls = np.asarray(pc.is_null(arr).to_numpy(zero_copy_only=False))
-            arr = pc.fill_null(arr, 0)
+            lens[np.asarray(pc.is_null(arr).to_numpy(zero_copy_only=False))] = 0
+            arr = pc.drop_null(arr)
         # safe=False ONLY for uint64: values >= 2^63 reinterpret as the
         # two's-complement int64 with identical LE bytes (a safe cast
         # raises ArrowInvalid and would kill the build); narrower types
         # keep the checked widening cast.
         unsafe = pa.types.is_uint64(arr.type)
-        raw = np.ascontiguousarray(
-            pc.cast(arr, pa.int64(), safe=not unsafe)
-            .to_numpy(zero_copy_only=False)
-            .astype("<i8")
+        raw = pc.cast(arr, pa.int64(), safe=not unsafe).to_numpy(
+            zero_copy_only=False
         )
-        n = len(raw)
-        mat = np.zeros((n, 16), dtype=np.uint8)
-        mat[:, :8] = raw.view(np.uint8).reshape(n, 8)
-        lens = np.full(n, 8, dtype=np.int64)
-        if nulls is not None:
-            mat[nulls] = 0
-            lens[nulls] = 0
-        return mat, lens
-    data, offsets, lens0 = arrow_buffer_views(arr)
-    mat, lens = pack_keys(data, offsets)
-    if arr.null_count:
-        # NULLs hash as the empty key (a null slot's offsets are not
-        # guaranteed zero-width, so zero the packed bytes explicitly)
-        masked = (lens0 == 0) & (lens > 0)
-        if masked.any():
-            mat[masked] = 0
-        lens = lens0
-    return mat, lens
+        buf = np.zeros(8 * len(raw) + _SLACK, dtype=np.uint8)
+        buf[: 8 * len(raw)] = raw.astype("<i8").view(np.uint8)
+        return buf, lens
+    data, offsets, lens = arrow_buffer_views(arr)
+    if arr.null_count and (lens != np.diff(offsets)).any():
+        # a null slot whose offsets span bytes: drop those bytes so the
+        # NULL hashes as the empty key
+        return _gather_keys(data, offsets[:-1], lens), lens
+    total = int(offsets[-1] - offsets[0])
+    buf = np.zeros(total + _SLACK, dtype=np.uint8)
+    buf[:total] = data[offsets[0] : offsets[-1]]
+    return buf, lens
 
 
 def pack_any(values) -> tuple[np.ndarray, np.ndarray]:
@@ -284,117 +309,110 @@ def pack_any(values) -> tuple[np.ndarray, np.ndarray]:
 
     bs = [enc(v) for v in values]
     lens = np.array([len(b) for b in bs], dtype=np.int64)
-    offsets = np.concatenate([[0], np.cumsum(lens)])
-    data = (
-        np.frombuffer(b"".join(bs), dtype=np.uint8)
-        if bs
-        else np.zeros(0, dtype=np.uint8)
-    )
-    return pack_keys(data, offsets)
+    bs.append(bytes(_SLACK))
+    return np.frombuffer(b"".join(bs), dtype=np.uint8), lens
 
 
 # ---------------------------------------------------------------------------
 # batched hash
 # ---------------------------------------------------------------------------
 
+# per tail length t in 0..15: the bytes of the first tail word (0..7) and
+# of the second (8..14) that belong to the key
+_TAIL_MASK1 = np.array([(1 << (8 * min(t, 8))) - 1 for t in range(16)], dtype=np.uint64)
+_TAIL_MASK2 = np.array([(1 << (8 * max(t - 8, 0))) - 1 for t in range(16)], dtype=np.uint64)
 
-def murmur3_64_packed(
-    mat: np.ndarray, lens: np.ndarray, seed: int | np.uint64 = 0
-) -> np.ndarray:
-    """Hash every row of a packed ``(n, W)`` uint8 matrix. Returns (n,) uint64.
 
-    Equivalent to ``[murmur3_64_scalar(row_bytes, seed) for row in rows]``.
+def murmur3_64_flat(buf: np.ndarray, starts: np.ndarray, lens: np.ndarray, seed=0) -> np.ndarray:
+    """Hash the keys ``buf[starts[i] : starts[i] + lens[i]]`` in place.
+
+    ``seed`` is one seed — returns (n,) uint64 — or a sequence of S seeds
+    — returns (S, n), row j hashed with ``seed[j]``. Equivalent to
+    ``murmur3_64_scalar(key, s)`` per key and seed. Keys may overlap
+    (gram windows) and need not be back to back; a buffer without 16
+    bytes of slack after its last key is copied once into one that has.
     """
-    n, w = mat.shape
+    if not (isinstance(buf, np.ndarray) and buf.ndim == 1 and buf.dtype == np.uint8):
+        raise TypeError(
+            "buf must be a 1-D uint8 array of key bytes (the flat layout "
+            f"of pack_arrow/pack_any), got {getattr(buf, 'shape', type(buf))} "
+            f"{getattr(buf, 'dtype', '')}"
+        )
+    seeds = np.asarray(seed, dtype=np.uint64)
+    n = len(lens)
     if n == 0:
-        return np.zeros(0, dtype=np.uint64)
-    lens = lens.astype(np.int64)
-    words = np.ascontiguousarray(mat).view("<u8").reshape(n, w // 8)
-    nblocks = lens // 16
+        return np.zeros(seeds.shape + (0,), dtype=np.uint64)
+    starts = np.asarray(starts, dtype=np.int64)
+    lens = np.asarray(lens, dtype=np.int64)
+    need = int((starts + lens).max()) + _SLACK
+    if len(buf) < need:
+        padded = np.zeros(need, dtype=np.uint8)
+        padded[: len(buf)] = buf
+        buf = padded
+    # words[i] is the little-endian uint64 at byte i (unaligned view)
+    words = np.ndarray((len(buf) - 7,), dtype="<u8", buffer=buf, strides=(1,))
 
-    h1 = np.full(n, _U64(seed), dtype=np.uint64)
-    h2 = np.full(n, _U64(seed), dtype=np.uint64)
+    nblocks = lens >> 4
+    top = int(nblocks.max())
+    order = None
+    if top > int(nblocks.min()):
+        # longest keys first: block round b touches only the prefix of
+        # keys that still have a block b
+        order = np.argsort(
+            -nblocks.astype(np.int16 if top < 2**15 else np.int64), kind="stable"
+        )
+        starts, lens, nblocks = starts[order], lens[order], nblocks[order]
+    active = n - np.cumsum(np.bincount(nblocks, minlength=top + 1))
 
-    for blk in range(w // 16):
-        active = nblocks > blk
-        if not active.any():
-            break
-        k1 = words[:, 2 * blk].copy()
-        k2 = words[:, 2 * blk + 1].copy()
+    h1 = np.repeat(seeds.reshape(-1, 1), n, axis=1)
+    h2 = h1.copy()
+    pos = starts.copy()
+    for b in range(top):
+        c = int(active[b])
+        at = pos[:c]
+        k1 = _mix_k1(words[at])
+        k2 = _mix_k2(words[at + 8])
+        at += 16
+        a1, a2 = h1[:, :c], h2[:, :c]
+        a1 ^= k1
+        _rotl64(a1, 27)
+        a1 += a2
+        a1 *= _M5
+        a1 += _N1
+        a2 ^= k2
+        _rotl64(a2, 31)
+        a2 += a1
+        a2 *= _M5
+        a2 += _N2
 
-        k1 *= _C1
-        k1 = _rotl64(k1, 31)
-        k1 *= _C2
-        nh1 = h1 ^ k1
-        nh1 = _rotl64(nh1, 27)
-        nh1 += h2
-        nh1 = nh1 * _M5 + _N1
-
-        k2 *= _C2
-        k2 = _rotl64(k2, 33)
-        k2 *= _C1
-        nh2 = h2 ^ k2
-        nh2 = _rotl64(nh2, 31)
-        nh2 += nh1
-        nh2 = nh2 * _M5 + _N2
-
-        h1 = np.where(active, nh1, h1)
-        h2 = np.where(active, nh2, h2)
-
-    # Tail: gather the two words that start at byte offset nblocks*16.
-    # Zero padding means absent tail bytes contribute nothing, but bytes
-    # beyond ``len`` within the tail words are already zero too, so the
-    # gathered words equal the reference's byte-by-byte accumulation.
-    nwords = w // 8
-    if w == 16 or not nblocks.any():
-        # all keys fit one block pair (every <=16-byte batch: int64 keys,
-        # gram windows, band rows): the tail is columns 0/1 directly — no
-        # per-row fancy gather
-        k1 = np.where(nblocks == 0, words[:, 0], _U64(0))
-        k2 = np.where(nblocks == 0, words[:, 1], _U64(0))
-    else:
-        tail_word0 = nblocks * 2
-        tail_word1 = tail_word0 + 1
-        k1 = np.where(tail_word0 < nwords, words[np.arange(n), np.minimum(tail_word0, nwords - 1)], _U64(0))
-        k2 = np.where(tail_word1 < nwords, words[np.arange(n), np.minimum(tail_word1, nwords - 1)], _U64(0))
-    tail_len = lens - nblocks * 16
-
-    # mask k1 to the first min(tail_len, 8) bytes, k2 to bytes 8..14
-    nb1 = np.minimum(tail_len, 8).astype(np.uint64)
-    nb2 = np.clip(tail_len - 8, 0, 7).astype(np.uint64)
-    full1 = nb1 == 8
-    m1 = np.where(full1, _U64(_MASK64), (_U64(1) << (nb1 * _U64(8))) - _U64(1))
-    m2 = (_U64(1) << (nb2 * _U64(8))) - _U64(1)
-    k1 &= m1
-    k2 &= m2
-
-    has_k2 = tail_len > 8
-    k2 = np.where(has_k2, k2, _U64(0))
-    k2 *= _C2
-    k2 = _rotl64(k2, 33)
-    k2 *= _C1
-    h2 = np.where(has_k2, h2 ^ k2, h2)
-
-    has_k1 = tail_len > 0
-    k1 = np.where(has_k1, k1, _U64(0))
-    k1 *= _C1
-    k1 = _rotl64(k1, 31)
-    k1 *= _C2
-    h1 = np.where(has_k1, h1 ^ k1, h1)
+    # tail: the two words at the key's last partial block, masked to its
+    # tail bytes (absent bytes mix to 0, the reference's k == 0 no-op)
+    t = lens & 15
+    h1 ^= _mix_k1(words[pos] & _TAIL_MASK1[t])
+    h2 ^= _mix_k2(words[pos + 8] & _TAIL_MASK2[t])
 
     ulen = lens.astype(np.uint64)
     h1 ^= ulen
     h2 ^= ulen
     h1 += h2
     h2 += h1
-    h1 = _fmix64(h1)
-    h2 = _fmix64(h2)
+    _fmix64(h1)
+    _fmix64(h2)
     h1 += h2
-    return h1
+    if order is not None:
+        out = np.empty_like(h1)
+        out[:, order] = h1
+        h1 = out
+    return h1.reshape(seeds.shape + (n,))
+
+
+def murmur3_64_packed(buf: np.ndarray, lens: np.ndarray, seed=0) -> np.ndarray:
+    """Hash every key of a flat ``(buf, lens)`` layout (see
+    :func:`murmur3_64_flat` for ``seed``)."""
+    return murmur3_64_flat(buf, _key_starts(lens)[:-1], lens, seed)
 
 
 def murmur3_64_batch(values, seed: int = 0) -> np.ndarray:
     """Hash a sequence of str/bytes values. Returns (n,) uint64."""
-    mat, lens = pack_any(values)
-    return murmur3_64_packed(mat, lens, seed)
-
+    buf, lens = pack_any(values)
+    return murmur3_64_packed(buf, lens, seed)

@@ -29,7 +29,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..hashing import murmur3_64_packed, pack_arrow
+from ..hashing import murmur3_64_flat, murmur3_64_packed, pack_arrow
 
 # deterministic universal-hash family for minhash: g_i(h) = a_i*h + b_i
 _MINHASH_SEED = 0x5EED
@@ -56,8 +56,8 @@ def _tokenize_batch(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     offsets = np.asarray(toks.offsets, dtype=np.int64)
     offsets = offsets - offsets[0]
     counts = np.diff(offsets)
-    mat, lens = pack_arrow(flat)
-    h = murmur3_64_packed(mat, lens, 0)
+    buf, lens = pack_arrow(flat)
+    h = murmur3_64_packed(buf, lens, 0)
     keep = lens > 0
     if not keep.all():
         # drop empty tokens (leading/trailing whitespace artifacts) and
@@ -144,26 +144,22 @@ def minhash_band_rows(
             # meaningful near-dup claim
             ids = ids[nonempty]
             n = len(ids)
-            sig = np.empty((n, n_hashes), dtype=np.uint64)
+            # the signature matrix lives in a flat byte buffer with the
+            # kernel's 16 bytes of slack, so the band hash reads it in place
+            sig_buf = np.zeros(n * n_hashes * 8 + 16, dtype=np.uint8)
+            sig = sig_buf[:-16].view(np.uint64).reshape(n, n_hashes)
             starts = offsets[:-1][nonempty]
             for i in range(n_hashes):
                 g = _A[i] * h + _B[i]
                 sig[:, i] = np.minimum.reduceat(g, starts)
             # band hash: murmur over the r consecutive 8-byte lanes
-            band_mat = (
-                np.ascontiguousarray(sig)
-                .view(np.uint8)
-                .reshape(n * n_bands, band_r * 8)
-            )
-            if band_r * 8 < 16:
-                # packed-hash contract needs width >= 16; band_r=1 is
-                # only 8 wide and crashed the tail path. lens carry the
-                # true byte count so the padding never hashes.
-                padded = np.zeros((n * n_bands, 16), dtype=np.uint8)
-                padded[:, : band_r * 8] = band_mat
-                band_mat = padded
-            lens = np.full(n * n_bands, band_r * 8, dtype=np.int64)
-            bh = murmur3_64_packed(band_mat, lens, 7).astype(np.int64)
+            width = band_r * 8
+            bh = murmur3_64_flat(
+                sig_buf,
+                np.arange(n * n_bands, dtype=np.int64) * width,
+                np.full(n * n_bands, width, dtype=np.int64),
+                7,
+            ).astype(np.int64)
             yield pa.RecordBatch.from_pydict(
                 {
                     "id": pa.array(np.repeat(ids, n_bands), pa.int64()),

@@ -78,10 +78,11 @@ class BloomFilter(MergeableSketch):
           *i* uses ``h1 + i*h2`` from two seeded murmur3 passes. Same
           sliced layout and (asymptotically, and empirically per the FPR
           tests) the same false-positive guarantee as k independent
-          hashes, at 2 hash passes instead of k — the hot-loop win the
+          hashes, at 2 seeds instead of k — the hot-loop win the
           SURVEY.md §1.4 note anticipates.
-        * ``"seeded"`` — reference-parity: k independent murmur3 calls
-          with the reference's seed schedule (bloom.go:297-313).
+        * ``"seeded"`` — reference-parity: k independent murmur3 hashes
+          with the reference's seed schedule (bloom.go:297-313), taken
+          in one multi-seed kernel call.
         """
         if hash_mode not in ("km", "seeded"):
             raise ValueError("hash_mode must be 'km' or 'seeded'")
@@ -112,24 +113,24 @@ class BloomFilter(MergeableSketch):
         )
 
     # -- indices -----------------------------------------------------------
-    def _indices(self, mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
-        """(k, n) flat bit indices: i*m + g_i(key) % m."""
+    def _km_seeds(self) -> list:
+        return [self.seeds[0], self.seeds[1] if self.k > 1 else np.uint64(256)]
+
+    def _indices(self, buf: np.ndarray, lens: np.ndarray) -> np.ndarray:
+        """(k, n) flat bit indices: i*m + g_i(key) % m, from one hash call."""
         m = np.uint64(self.m)
-        n = len(lens)
-        out = np.empty((self.k, n), dtype=np.uint64)
+        slice_base = (np.arange(self.k, dtype=np.uint64) * m)[:, None]
         if self.hash_mode == "km":
-            h1 = murmur3_64_packed(mat, lens, self.seeds[0])
-            h2 = murmur3_64_packed(
-                mat, lens, self.seeds[1] if self.k > 1 else np.uint64(256)
-            )
-            g = h1.copy()
+            h1, h2 = murmur3_64_packed(buf, lens, self._km_seeds())
+            out = np.empty((self.k, len(lens)), dtype=np.uint64)
+            g = h1
             for i in range(self.k):
-                out[i] = np.uint64(i) * m + (g % m)
+                np.remainder(g, m, out=out[i])
                 g += h2
         else:
-            for i in range(self.k):
-                h = murmur3_64_packed(mat, lens, self.seeds[i])
-                out[i] = np.uint64(i) * m + (h % m)
+            out = murmur3_64_packed(buf, lens, self.seeds)
+            out %= m
+        out += slice_base
         return out
 
     # -- partial build -----------------------------------------------------
@@ -164,22 +165,20 @@ class BloomFilter(MergeableSketch):
         self.count += n
 
     def add_packed(
-        self, mat: np.ndarray, lens: np.ndarray, enforce_capacity: bool | None = None
+        self, buf: np.ndarray, lens: np.ndarray, enforce_capacity: bool | None = None
     ) -> None:
         n = len(lens)
         if n == 0:
             return
         if enforce_capacity is None:
             enforce_capacity = self.enforce_capacity
-        self._add_indices(self._indices(mat, lens), n, enforce_capacity)
+        self._add_indices(self._indices(buf, lens), n, enforce_capacity)
 
     def update_arrow(self, arr) -> None:
-        mat, lens = pack_arrow(arr)
-        self.add_packed(mat, lens)
+        self.add_packed(*pack_arrow(arr))
 
     def update_values(self, values) -> None:
-        mat, lens = pack_any(values)
-        self.add_packed(mat, lens)
+        self.add_packed(*pack_any(values))
 
     def add(self, key) -> None:
         """Single-key Add (API parity with bloom.go:164-187)."""
@@ -192,23 +191,23 @@ class BloomFilter(MergeableSketch):
         byte_idx = (idx >> np.uint64(3)).astype(np.int64)
         return (self.bits[byte_idx] >> (idx & np.uint64(7)).astype(np.uint8)) & 1
 
-    def contains_packed(self, mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
-        """Membership probe with adaptive early exit: every key checks
-        slice 0; keys already dead stop consuming hash/gather work in
-        later slices. Misses die after ~1/fill slices on average, so a
+    def contains_packed(self, buf: np.ndarray, lens: np.ndarray) -> np.ndarray:
+        """Membership probe. Seeded mode hashes all k seeds in one call
+        and ANDs the k slice bits: the seed-independent block mixing is
+        shared, so dropping dead keys early saves less than the subset
+        gathers cost at any hit ratio. km mode exits early instead: every
+        key checks slice 0; keys already dead stop consuming gather work
+        in later slices. Misses die after ~1/fill slices on average, so a
         miss-heavy probe (the semi-join pruning case — the reference's
         bloom-before-store elision, bloom.go:225-227) costs ~2 slice
         probes instead of k. When nearly everything survives slice 0
-        (hit-heavy), the full-matrix path is kept — no per-key index
+        (hit-heavy), the whole batch stays vectorized — no per-key index
         bookkeeping on the fast path. Results are identical either way."""
         n = len(lens)
         if n == 0:
             return np.zeros(0, dtype=bool)
         if self.hash_mode == "km":
-            h1 = murmur3_64_packed(mat, lens, self.seeds[0])
-            h2 = murmur3_64_packed(
-                mat, lens, self.seeds[1] if self.k > 1 else np.uint64(256)
-            )
+            h1, h2 = murmur3_64_packed(buf, lens, self._km_seeds())
             out = self._slice_bit(0, h1).astype(bool)
             alive = np.flatnonzero(out)
             if len(alive) > (n >> 1) + (n >> 2):  # hit-heavy: stay vectorized
@@ -227,32 +226,17 @@ class BloomFilter(MergeableSketch):
                 out[dead] = False
                 alive, h1a, h2a = alive[keep], h1a[keep], h2a[keep]
             return out
-        # seeded (reference-parity) mode: rehash only the still-alive keys
-        # per slice — the subset hash beats k full passes once misses thin
-        # the batch
-        out = np.ones(n, dtype=bool)
-        alive = np.arange(n)
-        cur_mat, cur_lens = mat, lens
-        for i in range(self.k):
-            h = murmur3_64_packed(cur_mat, cur_lens, self.seeds[i])
-            bit = self._slice_bit(i, h)
-            keep = bit != 0
-            dead = alive[~keep]
-            out[dead] = False
-            alive = alive[keep]
-            if len(alive) == 0:
-                break
-            if not keep.all():
-                cur_mat, cur_lens = cur_mat[keep], cur_lens[keep]
+        h = murmur3_64_packed(buf, lens, self.seeds)
+        out = self._slice_bit(0, h[0]) != 0
+        for i in range(1, self.k):
+            out &= self._slice_bit(i, h[i]) != 0
         return out
 
     def contains_arrow(self, arr) -> np.ndarray:
-        mat, lens = pack_arrow(arr)
-        return self.contains_packed(mat, lens)
+        return self.contains_packed(*pack_arrow(arr))
 
     def contains_values(self, values) -> np.ndarray:
-        mat, lens = pack_any(values)
-        return self.contains_packed(mat, lens)
+        return self.contains_packed(*pack_any(values))
 
     def contains(self, key) -> bool:
         return bool(self.contains_values([key])[0])

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..hashing import murmur3_64_packed, pack_any, pack_arrow
+from ..hashing import murmur3_64_packed, pack_any, pack_arrow, take_keys
 from .base import MergeableSketch, register
 
 _FULL = float(2**64)
@@ -37,7 +37,7 @@ class BottomKSample(MergeableSketch):
         self.count = 0  # rows observed
 
     # -- partial ---------------------------------------------------------------
-    def _absorb(self, h: np.ndarray, mat: np.ndarray, lens: np.ndarray) -> None:
+    def _absorb(self, h: np.ndarray, buf: np.ndarray, lens: np.ndarray) -> None:
         # candidate pruning: only rows already under the current threshold
         # can enter the sample
         if len(self.hashes) >= self.k:
@@ -45,8 +45,11 @@ class BottomKSample(MergeableSketch):
             cand = h < thresh
             if not cand.any():
                 return
-            h, mat, lens = h[cand], mat[cand], lens[cand]
-        new_keys = [mat[i, : lens[i]].tobytes() for i in range(len(lens))]
+            h = h[cand]
+            buf, lens = take_keys(buf, lens, cand)
+        ends = np.cumsum(lens).tolist()
+        raw = buf[: ends[-1]].tobytes()
+        new_keys = [raw[e - l : e] for e, l in zip(ends, lens.tolist())]
         all_h = np.concatenate([self.hashes, h])
         all_k = self.keys + new_keys
         # dedupe by hash (identical keys hash identically; 64-bit
@@ -56,21 +59,19 @@ class BottomKSample(MergeableSketch):
         self.hashes = uniq[:take]
         self.keys = [all_k[i] for i in idx[:take]]
 
-    def add_packed(self, mat: np.ndarray, lens: np.ndarray) -> None:
+    def add_packed(self, buf: np.ndarray, lens: np.ndarray) -> None:
         n = len(lens)
         if n == 0:
             return
         self.count += n
-        h = murmur3_64_packed(mat, lens, self.seed)
-        self._absorb(h, mat, lens)
+        h = murmur3_64_packed(buf, lens, self.seed)
+        self._absorb(h, buf, lens)
 
     def update_arrow(self, arr) -> None:
-        mat, lens = pack_arrow(arr)
-        self.add_packed(mat, lens)
+        self.add_packed(*pack_arrow(arr))
 
     def update_values(self, values) -> None:
-        mat, lens = pack_any(values)
-        self.add_packed(mat, lens)
+        self.add_packed(*pack_any(values))
 
     # -- final -----------------------------------------------------------------
     def merge(self, other: "BottomKSample") -> "BottomKSample":

@@ -40,28 +40,24 @@ class CountMinSketch(MergeableSketch):
         self.counts = np.zeros((self.d, self.w), dtype=np.int64)
         self.total = 0  # N: total added weight
 
-    def _cols(self, mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
-        """(d, n) column indices; km mode = 2 murmur passes + affine."""
+    def _cols(self, buf: np.ndarray, lens: np.ndarray) -> np.ndarray:
+        """(d, n) column indices from one hash call; km mode = 2 seeds +
+        affine."""
         w64 = _U64(self.w)
-        n = len(lens)
-        out = np.empty((self.d, n), dtype=np.int64)
-        if self.hash_mode == "km":
-            h1 = murmur3_64_packed(mat, lens, self.seeds[0])
-            h2 = murmur3_64_packed(mat, lens, self.seeds[1])
-            g = h1.copy()
-            for j in range(self.d):
-                out[j] = (g % w64).astype(np.int64)
-                g += h2
-        else:
-            for j in range(self.d):
-                out[j] = (murmur3_64_packed(mat, lens, self.seeds[j]) % w64).astype(
-                    np.int64
-                )
+        if self.hash_mode == "seeded":
+            return (murmur3_64_packed(buf, lens, self.seeds[: self.d]) % w64).astype(
+                np.int64
+            )
+        g, h2 = murmur3_64_packed(buf, lens, self.seeds[:2])
+        out = np.empty((self.d, len(lens)), dtype=np.int64)
+        for j in range(self.d):
+            out[j] = g % w64
+            g += h2
         return out
 
     # -- partial --------------------------------------------------------------
     def add_packed(
-        self, mat: np.ndarray, lens: np.ndarray, weights: np.ndarray | None = None
+        self, buf: np.ndarray, lens: np.ndarray, weights: np.ndarray | None = None
     ) -> None:
         n = len(lens)
         if n == 0:
@@ -70,18 +66,16 @@ class CountMinSketch(MergeableSketch):
             weights = np.ones(n, dtype=np.int64)
         else:
             weights = np.asarray(weights, dtype=np.int64)
-        cols = self._cols(mat, lens)
+        cols = self._cols(buf, lens)
         for j in range(self.d):
             np.add.at(self.counts[j], cols[j], weights)
         self.total += int(weights.sum())
 
     def update_arrow(self, arr, weights=None) -> None:
-        mat, lens = pack_arrow(arr)
-        self.add_packed(mat, lens, weights)
+        self.add_packed(*pack_arrow(arr), weights)
 
     def update_values(self, values, weights=None) -> None:
-        mat, lens = pack_any(values)
-        self.add_packed(mat, lens, weights)
+        self.add_packed(*pack_any(values), weights)
 
     # -- final -----------------------------------------------------------------
     def merge(self, other: "CountMinSketch") -> "CountMinSketch":
@@ -97,23 +91,21 @@ class CountMinSketch(MergeableSketch):
         return self
 
     # -- query --------------------------------------------------------------------
-    def estimate_packed(self, mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    def estimate_packed(self, buf: np.ndarray, lens: np.ndarray) -> np.ndarray:
         n = len(lens)
         if n == 0:
             return np.zeros(0, dtype=np.int64)
-        cols = self._cols(mat, lens)
+        cols = self._cols(buf, lens)
         est = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
         for j in range(self.d):
             np.minimum(est, self.counts[j, cols[j]], out=est)
         return est
 
     def estimate_values(self, values) -> np.ndarray:
-        mat, lens = pack_any(values)
-        return self.estimate_packed(mat, lens)
+        return self.estimate_packed(*pack_any(values))
 
     def estimate_arrow(self, arr) -> np.ndarray:
-        mat, lens = pack_arrow(arr)
-        return self.estimate_packed(mat, lens)
+        return self.estimate_packed(*pack_arrow(arr))
 
     def estimate(self, key) -> int:
         return int(self.estimate_values([key])[0])

@@ -32,15 +32,11 @@ _U64 = np.uint64
 
 
 def _bit_length_u64(x: np.ndarray) -> np.ndarray:
-    """Exact vectorized bit_length for uint64 (no float rounding)."""
-    x = x.copy()
-    bl = np.zeros(x.shape, dtype=np.uint64)
-    for s in (32, 16, 8, 4, 2, 1):
-        m = x >= (_U64(1) << _U64(s))
-        bl[m] += _U64(s)
-        x[m] >>= _U64(s)
-    bl[x > 0] += _U64(1)
-    return bl
+    """Exact vectorized bit_length for uint64: the frexp exponent of each
+    32-bit half, whose float64 value is exact (frexp(0) gives 0)."""
+    _, hi = np.frexp((x >> _U64(32)).astype(np.float64))
+    _, lo = np.frexp((x & _U64(0xFFFFFFFF)).astype(np.float64))
+    return np.where(hi > 0, hi + 32, lo).astype(np.uint64)
 
 
 _ALPHA_INF = 1.0 / (2.0 * math.log(2.0))
@@ -90,11 +86,11 @@ class HyperLogLog(MergeableSketch):
         self.count = 0  # rows observed (not distinct)
 
     # -- partial -------------------------------------------------------------
-    def add_packed(self, mat: np.ndarray, lens: np.ndarray) -> None:
+    def add_packed(self, buf: np.ndarray, lens: np.ndarray) -> None:
         n = len(lens)
         if n == 0:
             return
-        h = murmur3_64_packed(mat, lens, self.seed)
+        h = murmur3_64_packed(buf, lens, self.seed)
         idx = (h >> _U64(64 - self.p)).astype(np.int64)
         low = h & ((_U64(1) << _U64(64 - self.p)) - _U64(1))
         rho = (_U64(64 - self.p) - _bit_length_u64(low) + _U64(1)).astype(np.uint8)
@@ -102,12 +98,10 @@ class HyperLogLog(MergeableSketch):
         self.count += n
 
     def update_arrow(self, arr) -> None:
-        mat, lens = pack_arrow(arr)
-        self.add_packed(mat, lens)
+        self.add_packed(*pack_arrow(arr))
 
     def update_values(self, values) -> None:
-        mat, lens = pack_any(values)
-        self.add_packed(mat, lens)
+        self.add_packed(*pack_any(values))
 
     # -- final ----------------------------------------------------------------
     def merge(self, other: "HyperLogLog") -> "HyperLogLog":

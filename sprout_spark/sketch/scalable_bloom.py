@@ -44,7 +44,7 @@ import math
 
 import numpy as np
 
-from ..hashing import pack_any, pack_arrow
+from ..hashing import pack_any, pack_arrow, take_keys
 from .base import MergeableSketch, register
 from .bloom import BloomFilter
 
@@ -167,7 +167,7 @@ class ScalableBloomFilter(MergeableSketch):
         return self.stages[-1]
 
     # -- partial build ---------------------------------------------------------
-    def add_packed(self, mat: np.ndarray, lens: np.ndarray) -> None:
+    def add_packed(self, buf: np.ndarray, lens: np.ndarray) -> None:
         """Chunked fill: pack rows into the top stage until it reaches
         capacity, grow, continue (batch form of scalable_bloom.go:81-100)."""
         n = len(lens)
@@ -179,23 +179,21 @@ class ScalableBloomFilter(MergeableSketch):
                 continue
             take = min(room, n - pos)
             self.top.add_packed(
-                mat[pos : pos + take], lens[pos : pos + take], enforce_capacity=True
+                *take_keys(buf, lens, slice(pos, pos + take)), enforce_capacity=True
             )
             pos += take
 
     def update_arrow(self, arr) -> None:
-        mat, lens = pack_arrow(arr)
-        self.add_packed(mat, lens)
+        self.add_packed(*pack_arrow(arr))
 
     def update_values(self, values) -> None:
-        mat, lens = pack_any(values)
-        self.add_packed(mat, lens)
+        self.add_packed(*pack_any(values))
 
     def add(self, key) -> None:
         self.update_values([key])
 
     # -- probe -------------------------------------------------------------------
-    def contains_packed(self, mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    def contains_packed(self, buf: np.ndarray, lens: np.ndarray) -> np.ndarray:
         n = len(lens)
         out = np.zeros(n, dtype=bool)
         if n == 0:
@@ -206,24 +204,21 @@ class ScalableBloomFilter(MergeableSketch):
         # (scalable_bloom.go:110-117) but the result is an OR over
         # stages — probe order cannot change the answer, only the work.
         pending = np.arange(n)
-        cur_mat, cur_lens = mat, lens
         for st in reversed(self.stages):
-            hit = st.contains_packed(cur_mat, cur_lens)
+            hit = st.contains_packed(buf, lens)
             out[pending[hit]] = True
             miss = ~hit
             if not miss.any():
                 break
             pending = pending[miss]
-            cur_mat, cur_lens = cur_mat[miss], cur_lens[miss]
+            buf, lens = take_keys(buf, lens, miss)
         return out
 
     def contains_arrow(self, arr) -> np.ndarray:
-        mat, lens = pack_arrow(arr)
-        return self.contains_packed(mat, lens)
+        return self.contains_packed(*pack_arrow(arr))
 
     def contains_values(self, values) -> np.ndarray:
-        mat, lens = pack_any(values)
-        return self.contains_packed(mat, lens)
+        return self.contains_packed(*pack_any(values))
 
     def contains(self, key) -> bool:
         return bool(self.contains_values([key])[0])

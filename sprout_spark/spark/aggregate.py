@@ -78,7 +78,7 @@ def _is_numeric_arrow(arr_type: pa.DataType) -> bool:
 
 def _require_weighted_interface(factory) -> str:
     """Validate a factory's sketch can take per-row weights; returns the
-    interface kind: ``'hash'`` (``add_packed(mat, lens, weights)`` —
+    interface kind: ``'hash'`` (``add_packed(buf, lens, weights)`` —
     CMS), ``'numeric'`` (``update_array(values, weights)`` —
     t-digest/KLL), or ``'arrow'`` (``update_weighted_arrow(arr,
     weights)`` — Misra-Gries and other value-keyed summaries). Raises
@@ -101,7 +101,7 @@ def _require_weighted_interface(factory) -> str:
         return "arrow"
     raise ValueError(
         f"{type(probe).__name__} supports none of the weighted partial "
-        "interfaces: add_packed(mat, lens, weights), "
+        "interfaces: add_packed(buf, lens, weights), "
         "update_array(values, weights), update_weighted_arrow(arr, weights)"
     )
 
@@ -123,8 +123,7 @@ def _update_sketch_from_arrow_weighted(sk, arr, warr, kind) -> None:
     if kind == "hash":
         from ..hashing import pack_arrow
 
-        mat, lens = pack_arrow(arr)
-        sk.add_packed(mat, lens, weights)
+        sk.add_packed(*pack_arrow(arr), weights)
         return
     if kind == "arrow":
         sk.update_weighted_arrow(arr, weights)
@@ -385,7 +384,7 @@ def build_weighted_sketch(
     partial→tree-merge skeleton as :func:`build_sketch`.
 
     Dispatches on the sketch's partial interface: hash-keyed sketches
-    (CMS — ``add_packed(mat, lens, weights)``) get the packed-bytes
+    (CMS — ``add_packed(buf, lens, weights)``) get the packed-bytes
     path; numeric quantile sketches (t-digest, KLL —
     ``update_array(values, weights)``) a float64 path, giving weighted
     quantiles (sample-weighted token-length percentiles, price

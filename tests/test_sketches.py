@@ -81,6 +81,37 @@ def test_hll_roundtrip():
     assert back.estimate() == h.estimate()
 
 
+def _bit_length_loop(x):
+    """The masked 6-step loop the frexp form replaced (test oracle)."""
+    x = x.copy()
+    bl = np.zeros(x.shape, dtype=np.uint64)
+    for s in (32, 16, 8, 4, 2, 1):
+        m = x >= (np.uint64(1) << np.uint64(s))
+        bl[m] += np.uint64(s)
+        x[m] >>= np.uint64(s)
+    bl[x > 0] += np.uint64(1)
+    return bl
+
+
+def test_hll_bit_length_matches_loop():
+    from sprout_spark.sketch.hll import _bit_length_u64
+
+    edges = [0]
+    for k in range(64):
+        edges += [2**k - 1, 2**k, 2**k + 1]
+    edges = np.array(sorted(set(edges)), dtype=np.uint64)
+    rand = np.random.default_rng(5).integers(
+        0, 2**64 - 1, 1_000_000, dtype=np.uint64, endpoint=True
+    )
+    for x in (edges, rand, rand >> np.uint64(17)):
+        got = _bit_length_u64(x)
+        assert got.dtype == np.uint64
+        assert (got == _bit_length_loop(x)).all()
+    assert [int(v) for v in _bit_length_u64(edges)] == [
+        int(v).bit_length() for v in edges
+    ]
+
+
 # ------------------------------------------------------------------- CMS
 
 
