@@ -109,7 +109,12 @@ def minhash_band_rows(
 ) -> DataFrame:
     """One ``mapInArrow`` pass: text → tokens → (optional word-k-gram
     shingles) → minhash signature → band hashes. Output: (id bigint,
-    band int, bh bigint) — one row per band.
+    band int, bh bigint), all NOT NULL — one row per band. Docs with a
+    NULL id drop before the kernel: they can never be a pair partner
+    (the exact-verify join never matches a NULL id). The declared
+    NOT NULL lets the optimizer skip the null filters it would infer
+    below a self-join, so both branches of :func:`lsh_candidate_pairs`
+    read one reused exchange and the kernel runs once.
 
     ``shingle_k > 1`` minhashes the set of k-token SHINGLES instead of
     the token set — the standard near-dup construction for natural text
@@ -170,9 +175,15 @@ def minhash_band_rows(
                 }
             )
 
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"), F.col(text_col).alias("t")
-    ).mapInArrow(fn, "id bigint, band int, bh bigint")
+    return (
+        df.select(
+            F.col(id_col).cast("bigint").alias("id"), F.col(text_col).alias("t")
+        )
+        .where(F.col("id").isNotNull())
+        .mapInArrow(
+            fn, "id bigint not null, band int not null, bh bigint not null"
+        )
+    )
 
 
 def lsh_candidate_pairs(
@@ -343,12 +354,15 @@ _VERIFY_BROADCAST_MAX_DOCS = 1 << 17
 
 def _encode_token_side(tbl) -> tuple | None:
     """(ids int64, flat_tokens StringArray, offsets int64) for one token
-    table, nulls dropped like the verify join drops them; None when the
-    shape disqualifies the broadcast path (duplicate ids, NULL tokens
-    inside arrays — rare public-API edges that keep JVM semantics)."""
+    table, NULL ids and NULL token arrays dropped like the verify join
+    drops them; None when the shape disqualifies the broadcast path
+    (duplicate ids, NULL tokens inside arrays — rare public-API edges
+    that keep JVM semantics)."""
     import pyarrow.compute as pc
 
-    valid = pc.is_valid(tbl.column("tokens"))
+    valid = pc.and_(
+        pc.is_valid(tbl.column("id")), pc.is_valid(tbl.column("tokens"))
+    )
     if pa.compute.any(pc.invert(valid)).as_py():
         tbl = tbl.filter(valid)
     ids = np.asarray(

@@ -25,10 +25,13 @@ Scale shape (100 TB):
    broadcast Bloom built over the bad keys (the reference's lookup
    elision, ``bloom.go:220-236``, applied to corpus rewriting: zero
    false negatives means misses — almost every line — never shuffle
-   their text). Surviving lines group by the exact normalized TEXT, so a
-   64-bit hash collision can never change a decision: the key-level
-   count is a superset proposal, the norm-level count is the verdict.
-   Bloom false positives cost ~``err`` extra verify input, nothing else.
+   their text). Surviving lines are decided by one window over the
+   exact normalized TEXT (partitioned by ``(key, norm)``), so a 64-bit
+   hash collision can never change a decision: the key-level count is a
+   superset proposal, the norm-level count is the verdict. The window
+   reads the probed lines once — one probe evaluation, one exchange —
+   and emits the drop positions directly. Bloom false positives cost
+   ~``err`` extra verify input, nothing else.
 3. **Rewrite** — per-doc drop-position lists join back on the id (the
    one doc-sized shuffle; AQE broadcasts the list side when small) and
    lines drop JVM-side by position (``filter(lines, (x, i) -> ...)``).
@@ -48,7 +51,7 @@ plan (materialize first if your plan samples or uses ``rand()``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _GATES = ("bloom", "none")
@@ -209,13 +212,20 @@ def strip_boilerplate_lines(
     suspects = _suspects(ex, bad_keys, gate, err)
     if suspects is None:
         return _unchanged(base, id_col, text_col, joiner)
-    verified = (
-        suspects.groupBy("key", "norm")
-        .agg(F.count_distinct("id").alias("n_docs"))
-        .where(F.col("n_docs") >= min_docs)
-        .select("key", "norm")
+    # a window, not an aggregate joined back to `suspects`: the join
+    # would read `suspects` twice and so run the Bloom probe UDF twice.
+    # Distinct non-NULL ids per (key, norm) = the top dense rank of a
+    # NULLS LAST id order, taken over the non-NULL rows
+    w = Window.partitionBy("key", "norm")
+    rank = F.dense_rank().over(w.orderBy(F.col("id").asc_nulls_last()))
+    drops = (
+        suspects.withColumn("_r", rank)
+        .withColumn(
+            "_n", F.max(F.when(F.col("id").isNotNull(), F.col("_r"))).over(w)
+        )
+        .where(F.col("_n") >= min_docs)
+        .select("id", "pos")
     )
-    drops = suspects.join(verified, ["key", "norm"]).select("id", "pos")
     return _rewrite(base, drops, id_col, text_col, joiner)
 
 
@@ -254,21 +264,16 @@ def dedup_lines_keep_first(
     suspects = _suspects(ex, dup_keys, gate, err)
     if suspects is None:
         return _unchanged(base, id_col, text_col, joiner)
-    verified = (
-        suspects.groupBy("key", "norm")
-        .agg(
-            F.count("*").alias("n"),
-            F.min(F.struct("id", "pos")).alias("first"),
-        )
-        .where(F.col("n") >= 2)
-        .select("key", "norm", "first")
-    )
+    # one window over the probed suspects, as in strip_boilerplate_lines
+    w = Window.partitionBy("key", "norm")
     drops = (
-        suspects.join(verified, ["key", "norm"])
+        suspects.withColumn("_n", F.count("*").over(w))
+        .withColumn("_first", F.min(F.struct("id", "pos")).over(w))
+        .where(F.col("_n") >= 2)
         .where(
             ~(
-                (F.col("id") == F.col("first.id"))
-                & (F.col("pos") == F.col("first.pos"))
+                (F.col("id") == F.col("_first.id"))
+                & (F.col("pos") == F.col("_first.pos"))
             )
         )
         .select("id", "pos")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from sprout_spark.sketch.misra_gries import MisraGries
 from sprout_spark.spark.aggregate import (  # noqa: F401 (build_sketch re-export)
     build_sketch,
+    coalesce_to_slots,
     collect_merged,
     emit_partials,
     tree_merge,
@@ -142,8 +143,8 @@ def heavy_ngrams(
     def factory():
         return MisraGries(k=mg_k)
 
-    partials = emit_partials(text, factory, propose)
-    n = df.rdd.getNumPartitions()
+    frame, n = coalesce_to_slots(text)
+    partials = emit_partials(frame, factory, propose)
     mg = collect_merged(tree_merge(partials, n, stop_at=64), factory)
     cands = mg.heavy_hitters(phi)
     spark = df.sparkSession

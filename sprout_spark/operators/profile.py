@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..sketch import HyperLogLog, TDigest
 from ..spark.aggregate import (
     MULTI_ROW_SCHEMA,
+    coalesce_to_slots,
     collect_merged,
     emit_partials,
     tree_merge,
@@ -123,8 +124,9 @@ def profile_table(
             if len(arr):
                 sks[f"td::{c}"].update_arrow(arr)
 
+    frame, n = coalesce_to_slots(df.select(*cols))
     partials = emit_partials(
-        df.select(*cols),
+        frame,
         lambda: {name: f() for name, f in factories.items()},
         update,
         MULTI_ROW_SCHEMA,
@@ -132,10 +134,7 @@ def profile_table(
     # stop_at=64: the remaining <= 64 rows per name fold at the driver
     # instead of through one more shuffle + Python stage
     merged = collect_merged(
-        tree_merge(
-            partials, df.rdd.getNumPartitions(), group_cols=("name",),
-            stop_at=64,
-        ),
+        tree_merge(partials, n, group_cols=("name",), stop_at=64),
         factories,
     )
 

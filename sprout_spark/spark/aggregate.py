@@ -4,8 +4,10 @@ This is the Spark skeleton every sketch plugs into (SURVEY.md §3.4):
 
     transcripts DataFrame (parquet/Iceberg scan; Catalyst prunes to the
     sketched column)
+      → coalesce(task slots)           # narrow, no shuffle: at most one
+                                       #   partial task per core
       → mapInArrow(partial)            # one fixed-size sketch row per
-                                       #   partition, built vectorized in
+                                       #   task, built vectorized in
                                        #   numpy from Arrow batches —
                                        #   zero per-row Python
       → tree merge                     # groupBy(part_id // fanin)
@@ -19,6 +21,13 @@ here: :func:`emit_partials` (the partial step), :func:`merge_groups`
 (the one merge kernel) and :func:`collect_merged` (the driver fold). A
 partial row is ``[name,] part_id, sketch, rows``.
 
+The builds feed the partial step through :func:`coalesce_to_slots`, so
+16 input files on 4 cores build 4 partials instead of 16, and the merge
+tree and its shuffle shrink with them. Bloom, HLL, CMS and BottomK
+partials merge by OR / max / add / min-k, so their results are
+byte-identical at any grouping; t-digest, KLL and Misra-Gries results
+may differ within their error bounds.
+
 The partial step is the distributed analog of the reference's ``Add`` loop
 (``bloom.go:164-187``), the merge step of its ``Merge``
 (``bloom.go:241-260``); associativity + commutativity of every sketch's
@@ -27,22 +36,23 @@ irrelevant — tested by building at 2/8/32 partitions and comparing
 bitsets.
 
 Scale notes (100 TB / 1000 executors):
-* partials are O(sketch_size) per partition regardless of row count; the
-  only full-data pass is the scan itself, which stays in the JVM until the
-  Arrow hand-off of the single projected column;
-* CAVEAT for full-width Bloom partials: each partition serializes the
-  whole M-bit filter, so merge-shuffle volume is P × M/8 bytes. That is
-  fine while the filter is MBs; for big filters pick one of the two
-  population-sized paths instead — ScalableBloomFilter partials with
-  ``merge_mode="concat", err_rate=ε/P`` (each partial sized to its
-  partition's rows), or ``spark.sharded.build_sharded_bloom`` (one
+* partials are O(sketch_size) per partial task regardless of row count;
+  the only full-data pass is the scan itself, which stays in the JVM
+  until the Arrow hand-off of the single projected column;
+* CAVEAT for full-width Bloom partials: each partial task serializes the
+  whole M-bit filter, so merge-shuffle volume is min(P, slots) × M/8
+  bytes for P input partitions. That is fine while the filter is MBs;
+  for big filters pick one of the two population-sized paths instead —
+  ScalableBloomFilter partials with ``merge_mode="concat",
+  err_rate=ε/P`` (each partial sized to its task's rows), or
+  ``spark.sharded.build_sharded_bloom`` (one
   shuffle of the key column, per-shard filters sized to their shard,
   probes need no broadcast). HLL/CMS/t-digest/KLL/MG partials are small
   and constant — the caveat is bloom-specific;
 * the merge tree bounds driver inbound data to fanin × sketch_size — with
   the default fanin=64 and 3.6 MB bloom payloads that is ~230 MB worst
-  case at one level for 4096 partitions, and two levels cover 262k
-  partitions;
+  case at one level for 4096 partials, and two levels cover 262k
+  partials;
 * AQE may coalesce the tiny merge shuffles; that's fine and desired.
 """
 
@@ -167,6 +177,24 @@ def _update_sketch_from_pandas(sk: MergeableSketch, vals: pd.Series) -> None:
             "string or int first"
         )
     sk.update_arrow(pa.Array.from_pandas(vals.astype("string").fillna("")))
+
+
+def coalesce_to_slots(frame: DataFrame) -> tuple[DataFrame, int]:
+    """Narrow ``frame`` to at most one partition per task slot
+    (``defaultParallelism``) for a sketch's partial step, and return it
+    with the partial count :func:`tree_merge` receives.
+
+    ``coalesce`` is narrow (no shuffle): each slot's task reads its run
+    of input partitions back to back. Every Python task pays a fixed
+    worker start-up (~0.2 s on a local worker however little it
+    computes: the worker re-validates its zip-import caches per task),
+    so fewer, fuller partial tasks finish sooner. A frame already at or
+    under the slot count passes through unchanged."""
+    n = frame.rdd.getNumPartitions()
+    slots = frame.sparkSession.sparkContext.defaultParallelism
+    if n > slots:
+        return frame.coalesce(slots), slots
+    return frame, n
 
 
 def emit_partials(
@@ -335,23 +363,24 @@ def collect_merged(
 _PARTIAL_SHUFFLE_WARN_BYTES = 1 << 30  # 1 GiB of full-width partials
 
 
-def _warn_if_partials_oversized(factory, n_partitions: int) -> None:
-    """Full-width Bloom partials shuffle P × filter_size bytes no matter
-    how few rows a partition holds. When that product crosses ~1 GiB,
-    steer the caller to the population-sized paths (SBF-concat partials
-    or build_sharded_bloom) instead of silently building a merge shuffle
-    that will dominate the job at scale."""
+def _warn_if_partials_oversized(factory, n_partials: int) -> None:
+    """Full-width Bloom partials shuffle ``n_partials`` × filter_size
+    bytes no matter how few rows a partial holds (``n_partials`` is the
+    count after :func:`coalesce_to_slots`). When that product crosses
+    ~1 GiB, steer the caller to the population-sized paths (SBF-concat
+    partials or build_sharded_bloom) instead of silently building a
+    merge shuffle that will dominate the job at scale."""
     try:
         probe = factory()
     except Exception:
         return
     size = getattr(probe, "filter_size", lambda: 0)()
-    if size * max(n_partitions, 1) > _PARTIAL_SHUFFLE_WARN_BYTES:
+    if size * max(n_partials, 1) > _PARTIAL_SHUFFLE_WARN_BYTES:
         import warnings
 
         warnings.warn(
-            f"bloom partial merge shuffle is ~{size * n_partitions >> 20} MiB "
-            f"({n_partitions} partitions x {size >> 20} MiB full-width "
+            f"bloom partial merge shuffle is ~{size * n_partials >> 20} MiB "
+            f"({n_partials} partials x {size >> 20} MiB full-width "
             "partials); for filters this large use ScalableBloomFilter "
             "partials (merge_mode='concat', err_rate=eps/P — partition-"
             "sized) or spark.sharded.build_sharded_bloom (shard-sized, "
@@ -395,14 +424,16 @@ def build_weighted_sketch(
     rank mass); NULL weights count 0 and NULL keys hash as the empty
     key in the hash path, exactly like the unweighted path."""
     kind = _require_weighted_interface(factory)
+    frame, n = coalesce_to_slots(
+        df.select(F.col(col), F.col(weight_col).cast("long").alias("_w"))
+    )
     partials = emit_partials(
-        df.select(F.col(col), F.col(weight_col).cast("long").alias("_w")),
+        frame,
         factory,
         lambda sk, batch: _update_sketch_from_arrow_weighted(
             sk, batch.column(0), batch.column(1), kind
         ),
     )
-    n = df.rdd.getNumPartitions()
     return collect_merged(
         tree_merge(partials, n, fanin=fanin, stop_at=fanin), factory
     )
@@ -449,13 +480,13 @@ def build_sketches(
             else:
                 _update_sketch_from_arrow(sk, arr)
 
+    frame, n = coalesce_to_slots(df.select(*cols))
     partials = emit_partials(
-        df.select(*cols),
+        frame,
         lambda: {name: f() for name, f in factories.items()},
         update,
         MULTI_ROW_SCHEMA,
     )
-    n = df.rdd.getNumPartitions()
     for factory in factories.values():
         _warn_if_partials_oversized(factory, n)
     merged = tree_merge(

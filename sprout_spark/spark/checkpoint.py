@@ -128,6 +128,8 @@ def checkpointed_partials(
             "attempt": ctx.attemptNumber() if ctx is not None else 0,
         }
 
+    # one partial per INPUT partition, never coalesced to the task slots:
+    # part_id is the resume key, so it must keep naming the same rows
     new_partials = emit_partials(
         df.select(col),
         factory,

@@ -179,3 +179,37 @@ FROM flagged GROUP BY doc_id
 """).fetchall())
     )
     assert got == want
+
+
+def _final_plan(df) -> str:
+    """The AQE final plan of an executed query (its initial plan cut)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+@pytest.mark.parametrize("op", [strip_boilerplate_lines, dedup_lines_keep_first])
+def test_verify_evaluates_probe_once(spark, docs, op):
+    """The verify is one window over the probed suspect lines, so the
+    Bloom probe UDF runs once (an aggregate joined back to the suspects
+    would evaluate it on both sides of the join)."""
+    out = op(docs, "id", "text")
+    out.collect()
+    assert _final_plan(out).count("ArrowEvalPython") == 1
+
+
+@pytest.mark.parametrize("gate", ["bloom", "none"])
+def test_strip_null_ids_never_count_as_docs(spark, gate):
+    """A NULL id is not a document for the distinct-doc count (SQL
+    ``count(DISTINCT id)`` semantics), and a NULL-id doc never gets
+    lines dropped (its drop list cannot join back on the id)."""
+    docs = spark.createDataFrame(
+        [(1, "A\nx"), (None, "A\ny"), (None, "A\nz"), (2, "B\nw"),
+         (3, "B\nv")],
+        "id bigint, text string",
+    )
+    out = {
+        (r["id"], r["text"])
+        for r in strip_boilerplate_lines(docs, "id", "text", gate=gate).collect()
+    }
+    assert out == {(1, "A\nx"), (None, "A\ny"), (None, "A\nz"), (2, "w"),
+                   (3, "v")}

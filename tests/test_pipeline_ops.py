@@ -88,6 +88,43 @@ def test_minhash_lsh_matches_exact_jaccard(spark, docs):
     assert {(10, 300), (11, 301), (12, 302)} <= exact
 
 
+def test_near_dup_null_ids_never_pair(spark, monkeypatch):
+    """A NULL id is no pair partner: the broadcast verify and the join
+    plan agree, and no pair carries NULL or the int64 cast of one."""
+    from sprout_spark.operators import dedup as D
+
+    t = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, t), (None, t), (3, t + " x")], "id bigint, text string"
+    )
+
+    def pairs():
+        return sorted(
+            tuple(r) for r in near_dup_pairs(docs, "id", "text", 0.5).collect()
+        )
+
+    fast = pairs()
+    monkeypatch.setattr(D, "_VERIFY_BROADCAST_MAX_DOCS", 0)
+    assert pairs() == fast
+    assert [(a, b) for a, b, _ in fast] == [(1, 3)]
+
+
+def test_near_dup_minhash_kernel_runs_once(spark, docs):
+    """The band rows are declared NOT NULL, so both branches of the
+    candidate stage (bucket join and hot-bucket star) read one reused
+    exchange and the MinHash kernel runs once."""
+    import re
+
+    out = near_dup_pairs(docs, "doc_id", "text", threshold=0.8)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    band_rows = r"MapInArrow .*\[id#\d+L?, band#\d+, bh#\d+L?\]"
+    minhash = re.findall(band_rows, plan)
+    assert len(minhash) == 1, plan
+    assert "ReusedExchange" in plan
+
+
 def test_minhash_band_rows_shape(spark, docs):
     bands = minhash_band_rows(docs, "doc_id", "text", n_hashes=64, band_r=4)
     pdf = bands.toPandas()

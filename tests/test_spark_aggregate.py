@@ -819,3 +819,34 @@ def test_grouped_map_combine_rejects_bad_mode(spark, transcripts):
             transcripts, "tool", "conv_id", lambda: HyperLogLog(p=12),
             combine="reduce",
         )
+
+
+def test_build_sketches_partials_coalesce_to_task_slots(
+    spark, transcripts, monkeypatch
+):
+    """A 16-partition input builds min(16, defaultParallelism) partials —
+    one Python task per task slot, not per input partition — and every
+    payload stays byte-equal to the driver-side build of the column."""
+    from sprout_spark.spark import aggregate as agg
+
+    partial_rows = []
+    real_collect = agg.collect_merged
+
+    def spy(merged, factory):
+        counts = merged.groupBy("name").count().collect()
+        partial_rows.append({r["name"]: r["count"] for r in counts})
+        return real_collect(merged, factory)
+
+    monkeypatch.setattr(agg, "collect_merged", spy)
+    df = transcripts.repartition(16)
+    assert df.rdd.getNumPartitions() == 16
+    want = min(16, spark.sparkContext.defaultParallelism)
+    got = agg.build_sketches(
+        df, {name: ("conv_id", f) for name, f in _FAMILIES.items()}
+    )
+    assert partial_rows == [{name: want for name in _FAMILIES}]
+    col = transcripts.select("conv_id").toArrow().column(0).combine_chunks()
+    for name, factory in _FAMILIES.items():
+        expect = factory()
+        expect.update_arrow(col)
+        assert got[name].to_bytes() == expect.to_bytes(), name
