@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..hashing import murmur3_64_flat, murmur3_64_packed, pack_arrow
+from ..spark import fastpath
 
 # deterministic universal-hash family for minhash: g_i(h) = a_i*h + b_i
 _MINHASH_SEED = 0x5EED
@@ -324,6 +325,19 @@ def token_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """Token sets for ``k == 1``, else word-k-gram shingle sets."""
+    if k == 1:
+        return token_sets(df, id_col, text_col)
+    return shingle_sets(df, id_col, text_col, k)
+
+
+def _nonempty(df: DataFrame, text_col: str) -> DataFrame:
+    """Docs with a non-whitespace character (strips ALL whitespace: trim
+    only covers ASCII spaces, and tab/newline-only docs must go too)."""
+    return df.where(F.length(F.regexp_replace(F.col(text_col), r"\s", "")) > 0)
+
+
 def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(id, tokens array<string>) with DISTINCT word-k-gram shingles,
     pure JVM (``transform(sequence)`` windows joined by single spaces) —
@@ -342,14 +356,6 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame
         F.col(id_col).cast("bigint").alias("id"),
         F.array_distinct(grams).alias("tokens"),
     )
-
-
-# Above this many docs per side the token tables stop being broadcast
-# material and the verify joins run as before; below it the whole verify
-# runs against two broadcast code tables (guide §8: the candidate pairs
-# are the small rows, the token arrays are the heavy bytes the join
-# would duplicate once per pair).
-_VERIFY_BROADCAST_MAX_DOCS = 1 << 17
 
 
 def _encode_token_side(tbl) -> tuple | None:
@@ -395,16 +401,11 @@ def _verify_jaccard_broadcast(
     import pyarrow.compute as pc
 
     same = ta is tb
-    cap = _VERIFY_BROADCAST_MAX_DOCS
-    # ONE bounded collect doubles as the size guard: limit(cap+1) keeps
-    # driver memory bounded whatever the table size, and an over-cap
-    # result falls back having paid one truncated pass instead of a
-    # full count() + a second full collect
-    atab = ta.limit(cap + 1).toArrow()
-    if atab.num_rows > cap:
+    atab = fastpath.collect_at_most("verify_jaccard.docs", ta)
+    if atab is None:
         return None
-    btab = atab if same else tb.limit(cap + 1).toArrow()
-    if btab.num_rows > cap:
+    btab = atab if same else fastpath.collect_at_most("verify_jaccard.docs", tb)
+    if btab is None:
         return None
     ea = _encode_token_side(atab)
     eb = ea if same else _encode_token_side(btab)
@@ -510,26 +511,20 @@ def _verify_jaccard_broadcast(
     ).mapInArrow(kernel, "a bigint, b bigint, jaccard double")
 
 
-def verify_jaccard(
-    candidates: DataFrame, tokens: DataFrame, threshold: float
+def _verify(
+    cands: DataFrame, tokens_a: DataFrame, tokens_b: DataFrame,
+    threshold: float,
 ) -> DataFrame:
-    """Exact token-set Jaccard on candidate pairs.
-
-    Fast path (bounded side): the token table dictionary-encodes and
-    broadcasts ONCE, and only 16-byte candidate pairs reach the verify
-    kernel — the join plan below would re-ship both token arrays per
-    candidate pair (measured 6.3s of a 6.1s near-dup total at sf0.1,
-    where boilerplate makes candidates ~150x the doc count). Beyond
-    ``_VERIFY_BROADCAST_MAX_DOCS`` docs the original join plan runs:
-    candidate pairs are few at sane thresholds; the token arrays join by
-    id (shuffle on the 8-byte id only). Results are identical."""
-    fast = _verify_jaccard_broadcast(candidates, tokens, tokens, threshold)
+    """(a, b, jaccard) for candidate pairs at or above ``threshold``,
+    ``a``'s tokens from ``tokens_a`` and ``b``'s from ``tokens_b``: the
+    broadcast kernel when it qualifies, else the join plan."""
+    fast = _verify_jaccard_broadcast(cands, tokens_a, tokens_b, threshold)
     if fast is not None:
         return fast
-    ta = tokens.select(F.col("id").alias("a"), F.col("tokens").alias("ta"))
-    tb = tokens.select(F.col("id").alias("b"), F.col("tokens").alias("tb"))
+    ta = tokens_a.select(F.col("id").alias("a"), F.col("tokens").alias("ta"))
+    tb = tokens_b.select(F.col("id").alias("b"), F.col("tokens").alias("tb"))
     return (
-        candidates.join(ta, "a")
+        cands.join(ta, "a")
         .join(tb, "b")
         .withColumn(
             "jaccard",
@@ -539,6 +534,22 @@ def verify_jaccard(
         .where(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
+
+
+def verify_jaccard(
+    candidates: DataFrame, tokens: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact token-set Jaccard on candidate pairs.
+
+    Fast path (bounded side): the token table dictionary-encodes and
+    broadcasts ONCE, and only 16-byte candidate pairs reach the verify
+    kernel — the join plan would re-ship both token arrays per
+    candidate pair (measured 6.3s of a 6.1s near-dup total at sf0.1,
+    where boilerplate makes candidates ~150x the doc count). Beyond the
+    ``verify_jaccard.docs`` cap in :mod:`sprout_spark.spark.fastpath`
+    the join plan runs: candidate pairs are few at sane thresholds; the
+    token arrays join by id. Results are identical."""
+    return _verify(candidates, tokens, tokens, threshold)
 
 
 def near_dup_pairs(
@@ -563,22 +574,14 @@ def near_dup_pairs(
     construction for natural text, where token-set Jaccard ignores word
     order and repetition.
     """
-    # strip ALL whitespace (trim only covers ASCII spaces — tab/newline-only
-    # docs must not slip through)
-    nonempty = df.where(
-        F.length(F.regexp_replace(F.col(text_col), r"\s", "")) > 0
-    )
+    nonempty = _nonempty(df, text_col)
     bands = minhash_band_rows(
         nonempty, id_col, text_col, n_hashes, band_r, shingle_k
     )
     cands = lsh_candidate_pairs(
         bands, max_bucket, oversize_mode, n_bands=n_hashes // band_r
     )
-    toks = (
-        token_sets(nonempty, id_col, text_col)
-        if shingle_k == 1
-        else shingle_sets(nonempty, id_col, text_col, shingle_k)
-    )
+    toks = _sets(nonempty, id_col, text_col, shingle_k)
     return verify_jaccard(cands, toks, threshold)
 
 
@@ -589,11 +592,7 @@ def exact_jaccard_pairs(
     """Exact all-pairs token (or k-shingle) Jaccard via inverted-index
     join (oracle for the LSH path; O(sum of posting-list^2) — small
     data only)."""
-    toks = (
-        token_sets(df, id_col, text_col)
-        if shingle_k == 1
-        else shingle_sets(df, id_col, text_col, shingle_k)
-    ).where(F.size("tokens") > 0)
+    toks = _sets(df, id_col, text_col, shingle_k).where(F.size("tokens") > 0)
     posting = toks.select("id", F.explode("tokens").alias("tok"))
     a = posting.alias("a")
     b = posting.alias("b")
@@ -631,19 +630,13 @@ def exact_dedup(df: DataFrame, id_col: str, dup_cols: list[str]) -> DataFrame:
     )
 
 
-_CLUSTERS_DRIVER_MAX_EDGES = 1_000_000
-
-
 def _clusters_driver_union_find(spark, rows) -> DataFrame:
     """Driver-side connected components over a bounded, collected (a, b)
     edge table: path-compressed union-find, then one pass mapping every
     node to its component's minimum id — exactly the fixpoint the
     distributed label propagation converges to."""
-    import pyarrow as _pa
-
     a_np = rows.column("a").combine_chunks().to_numpy(zero_copy_only=False)
     b_np = rows.column("b").combine_chunks().to_numpy(zero_copy_only=False)
-    pairs_iter = zip(a_np.tolist(), b_np.tolist())
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -654,22 +647,17 @@ def _clusters_driver_union_find(spark, rows) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in pairs_iter:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
+    for a, b in zip(a_np.tolist(), b_np.tolist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)  # min-id root: the label
-    out_a, out_c = [], []
-    for node in parent:
-        out_a.append(node)
-        out_c.append(find(node))
-    tbl = _pa.table(
+    nodes = list(parent)
+    tbl = pa.table(
         {
-            "id": _pa.array(out_a, _pa.int64()),
-            "cluster": _pa.array(out_c, _pa.int64()),
+            "id": pa.array(nodes, pa.int64()),
+            "cluster": pa.array([find(n) for n in nodes], pa.int64()),
         }
     )
     return spark.createDataFrame(tbl)
@@ -722,17 +710,12 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     # shuffles, a localCheckpoint, and a convergence probe — fixed
     # stage overhead that dwarfs the work when the (already
     # materialized) edge list is small (measured ~9s of an ~10s
-    # semantic-dedup chain at sf0.1). Up to ~1M undirected edges the
-    # driver runs union-find over the collected list instead —
-    # components (and the min-id cluster label) are identical by
-    # construction; beyond the cap the distributed rounds run as
-    # before. One bounded collect is both the size guard and the
-    # union-find input (limit(cap+1): one job decides the path, driver
-    # memory stays bounded, and an over-cap graph pays one truncated
-    # pass); it reads checkpointed blocks, not the caller's lineage.
-    cap = 2 * _CLUSTERS_DRIVER_MAX_EDGES
-    rows = und.limit(cap + 1).toArrow()
-    if rows.num_rows <= cap:
+    # semantic-dedup chain at sf0.1). Under the cap the driver runs
+    # union-find over the collected edges instead (same components and
+    # min-id labels); the collect reads checkpointed blocks, not the
+    # caller's lineage.
+    rows = fastpath.collect_at_most("duplicate_clusters.rows", und)
+    if rows is not None:
         return _clusters_driver_union_find(und.sparkSession, rows)
     labels = (
         und.select(F.col("a").alias("id"))
@@ -1366,37 +1349,15 @@ def near_dup_pairs_between(
     ``text_col`` must exist on both sides; ids are not required to be
     disjoint (the pair is (left id, right id) — interpretation is the
     caller's join back to either table)."""
-    def clean(d: DataFrame) -> DataFrame:
-        return d.where(
-            F.length(F.regexp_replace(F.col(text_col), r"\s", "")) > 0
-        )
-
-    lc, rc = clean(left), clean(right)
+    lc, rc = _nonempty(left, text_col), _nonempty(right, text_col)
     lb = minhash_band_rows(lc, id_col, text_col, n_hashes, band_r, shingle_k)
     rb = minhash_band_rows(rc, id_col, text_col, n_hashes, band_r, shingle_k)
     cands = lsh_candidate_pairs_between(lb, rb, max_bucket, oversize_mode)
-    mk = token_sets if shingle_k == 1 else (
-        lambda d, i, t: shingle_sets(d, i, t, shingle_k)
-    )
-    tl, tr = mk(lc, id_col, text_col), mk(rc, id_col, text_col)
-    # broadcast-verify fast path, cross form (see verify_jaccard): both
-    # sides' code tables broadcast once, pairs verified in the kernel
-    fast = _verify_jaccard_broadcast(cands, tl, tr, threshold)
-    if fast is not None:
-        return fast
-    ta = tl.select(F.col("id").alias("a"), F.col("tokens").alias("ta"))
-    tb = tr.select(F.col("id").alias("b"), F.col("tokens").alias("tb"))
-    return (
-        cands.join(ta, "a")
-        .join(tb, "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("ta", "tb"))
-            / F.size(F.array_union("ta", "tb")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    # cross form of verify_jaccard: both sides' code tables broadcast
+    # once when they fit
+    tl = _sets(lc, id_col, text_col, shingle_k)
+    tr = _sets(rc, id_col, text_col, shingle_k)
+    return _verify(cands, tl, tr, threshold)
 
 
 def resolve_duplicates(

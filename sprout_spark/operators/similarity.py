@@ -34,6 +34,8 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..spark import fastpath
+
 _SRP_SEED = 0xA11CE  # fixed seed for the hyperplane family (deterministic)
 
 
@@ -726,13 +728,6 @@ def ann_lsh_topk_batch(
     return _topk_per_query(scored, k)
 
 
-# Above this many vectors the all-pairs table cannot be broadcast (and
-# O(n²) pair enumeration is infeasible anyway — 2^36 pairs); the guarded
-# fallback keeps the crossJoin + pair-kernel plan. 2^18 rows at dim 64
-# is a ~128 MB broadcast.
-_EXACT_BROADCAST_MAX_ROWS = 1 << 18
-
-
 def _cosine_pairs_exact_broadcast(
     spark, tbl: pa.Table, thr: float
 ) -> DataFrame:
@@ -864,12 +859,11 @@ def cosine_pairs_exact(
         F.col(id_col).cast("bigint").alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
     )
-    # one bounded collect is both the size guard and the broadcast
-    # input: one job decides the path, driver memory stays bounded, and
-    # an over-cap table falls back after one truncated pass
-    cap = _EXACT_BROADCAST_MAX_ROWS
-    tbl = vecs.limit(cap + 1).toArrow()
-    if tbl.num_rows <= cap:
+    # the bounded collect is both the size guard and the broadcast input;
+    # above the cap the all-pairs table cannot be broadcast, and the
+    # crossJoin + pair-kernel plan runs
+    tbl = fastpath.collect_at_most("cosine_pairs_exact.rows", vecs)
+    if tbl is not None:
         return _cosine_pairs_exact_broadcast(
             vecs.sparkSession, tbl, float(min_cosine)
         )

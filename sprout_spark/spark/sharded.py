@@ -41,6 +41,7 @@ from pyspark.sql.types import BooleanType
 from ..sketch.base import MergeableSketch, merge_serialized, sketch_from_bytes
 from ..sketch.bloom import BloomFilter
 from ..sketch.scalable_bloom import ScalableBloomFilter
+from . import fastpath
 from .aggregate import _update_sketch_from_arrow, merge_groups
 
 SHARD_ROW_SCHEMA = "shard bigint, sketch binary, rows bigint, n_shards int"
@@ -206,6 +207,15 @@ def _resolve_n_shards(filters: DataFrame, n_shards: int | None) -> int:
     return int(row[0][0])
 
 
+def _check_modulus(stored: set, n_shards: int) -> None:
+    if stored and stored != {n_shards}:
+        raise ValueError(
+            f"probe modulus n_shards={n_shards} does not match the filter "
+            f"table's build modulus {sorted(stored)} — keys would route "
+            "to the wrong shards (silent false negatives)"
+        )
+
+
 def _salted_probe(
     df: DataFrame, key_col: str, n_shards: int, probe_salt: int
 ) -> DataFrame:
@@ -240,46 +250,33 @@ def _salted_probe(
     return probe
 
 
-# Total filter payload at or below this broadcasts for a shuffle-free
-# probe; above it the cogroup plan runs (the beyond-broadcast design
-# this module exists for). Session-configurable; 0 disables broadcast.
-_PROBE_BROADCAST_CONF = "spark.sprout.sharded.broadcastMaxBytes"
-_PROBE_BROADCAST_DEFAULT = 64 << 20
-
-
 def _broadcast_sharded_probe(
     df: DataFrame,
     key_col: str,
     filters: DataFrame,
     n_shards: int,
     out_col: str,
-    max_bytes: int,
 ) -> DataFrame | None:
     """Shuffle-free probe for filter tables that fit a broadcast: the
     per-shard payloads ship once to every executor and the probe runs as
     an Arrow UDF over (key, shard) — the probe rows never move, and only
     the key column crosses the Python boundary (the cogroup plan
-    shuffles and re-serializes EVERY probe column). Returns None when
-    the payload exceeds ``max_bytes`` (caller cogroups as before).
-    Row-wise results are identical by construction."""
+    shuffles and re-serializes EVERY probe column). Returns None for an
+    empty filter table or a payload over the ``sharded_probe.bytes`` cap
+    (caller cogroups as before). Row-wise results are identical by
+    construction."""
     from .probe import _revive
 
-    stats = filters.agg(
-        F.sum(F.length("sketch")).alias("b"), F.count("*").alias("n")
-    ).collect()[0]
-    if stats["n"] == 0 or stats["b"] is None or int(stats["b"]) > max_bytes:
+    # a row limit cannot bound bytes: one job sums the payload sizes
+    size = filters.agg(F.sum(F.length("sketch"))).collect()[0][0]
+    if size is None or not fastpath.within("sharded_probe.bytes", int(size)):
         return None
     cols = ["shard", "sketch"] + (
         ["n_shards"] if "n_shards" in filters.columns else []
     )
     rows = filters.select(*cols).collect()
     stored = {int(r["n_shards"]) for r in rows if "n_shards" in cols}
-    if stored and stored != {n_shards}:
-        raise ValueError(
-            f"probe modulus n_shards={n_shards} does not match the filter "
-            f"table's build modulus {sorted(stored)} — keys would route "
-            "to the wrong shards (silent false negatives)"
-        )
+    _check_modulus(stored, n_shards)
     by_shard: dict[int, list[bytes]] = {}
     for r in rows:
         by_shard.setdefault(int(r["shard"]), []).append(bytes(r["sketch"]))
@@ -325,9 +322,9 @@ def sharded_might_contain(
     """``df`` plus a boolean membership column, probed against a sharded
     filter table.
 
-    Fast path: when the TOTAL filter payload fits
-    ``spark.sprout.sharded.broadcastMaxBytes`` (default 64 MB; 0
-    disables), the per-shard payloads broadcast once and the probe is a
+    Fast path: when the TOTAL filter payload fits the
+    ``sharded_probe.bytes`` cap in :mod:`sprout_spark.spark.fastpath`
+    (64 MB), the per-shard payloads broadcast once and the probe is a
     shuffle-free Arrow UDF over (key, shard) — probe rows never move and
     only the key column crosses the Python boundary. Identical row-wise
     results; measured ~3x faster at sf0.1, and strictly better whenever
@@ -353,20 +350,9 @@ def sharded_might_contain(
     from pyspark.sql.types import StructField, StructType
 
     n_shards = _resolve_n_shards(filters, n_shards)
-    try:
-        _bc_max = int(
-            df.sparkSession.conf.get(
-                _PROBE_BROADCAST_CONF, str(_PROBE_BROADCAST_DEFAULT)
-            )
-        )
-    except Exception:
-        _bc_max = _PROBE_BROADCAST_DEFAULT
-    if _bc_max > 0:
-        fast = _broadcast_sharded_probe(
-            df, key_col, filters, n_shards, out_col, _bc_max
-        )
-        if fast is not None:
-            return fast
+    fast = _broadcast_sharded_probe(df, key_col, filters, n_shards, out_col)
+    if fast is not None:
+        return fast
     probe_salt = max(1, int(probe_salt))
     probe = _salted_probe(df, key_col, n_shards, probe_salt)
     fdup = filters.withColumn(
@@ -388,13 +374,7 @@ def sharded_might_contain(
         else:
             if "n_shards" in right.column_names:
                 stored = set(right.column("n_shards").to_pylist())
-                if stored != {n_shards}:
-                    raise ValueError(
-                        f"probe modulus n_shards={n_shards} does not match "
-                        f"the filter table's build modulus {sorted(stored)}"
-                        " — keys would route to the wrong shards (silent"
-                        " false negatives)"
-                    )
+                _check_modulus(stored, n_shards)
             sk = sketch_from_bytes(
                 merge_serialized(right.column("sketch").to_pylist())
             )
@@ -426,9 +406,18 @@ def sharded_semi_join(
     """Exact left-semi join pruned by a sharded filter (the beyond-
     broadcast analog of ``probe.bloom_semi_join``): prune ``big`` by
     sharded membership, then confirm with the real semi join so false
-    positives drop out."""
+    positives drop out.
+
+    The key match is written as null-safe equality on a non-NULL big
+    key, which keeps exactly the rows of ``big_key == small_key``: an
+    attribute ``=`` lets the optimizer infer the probe filter onto
+    ``small`` across the join keys, which runs the probe UDF a second
+    time over ``small``."""
     pruned = sharded_might_contain(big, big_key, filters, n_shards)
     pruned = pruned.where(F.col("might_contain")).drop("might_contain")
     return pruned.join(
-        small, on=pruned[big_key] == small[small_key], how="left_semi"
+        small,
+        on=pruned[big_key].eqNullSafe(small[small_key])
+        & pruned[big_key].isNotNull(),
+        how="left_semi",
     )

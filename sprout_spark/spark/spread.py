@@ -11,14 +11,14 @@ stage while 31 cores idled.
 :func:`spread_small_input` is the guide-§2.5 "repartition immediately
 after the read" hedge made scale-adaptive: when the optimizer's size
 estimate (plan statistics — no job runs) says the whole input is at
-most ``spark.sprout.spread.maxBytes`` (default 256 MB), the input is
-round-robin repartitioned to the session's default parallelism — a
-shuffle that costs well under a second at that size. Larger inputs are
-left untouched: they necessarily span many row groups, their scans are
-already wide, and repartitioning them would shuffle the corpus. The
-threshold is session-configurable (set 0 to disable).
+most the ``spread.bytes`` cap in :mod:`sprout_spark.spark.fastpath`
+(256 MB), the input is repartitioned to the session's default
+parallelism — a shuffle that costs well under a second at that size.
+Larger inputs are left untouched: they necessarily span many row
+groups, their scans are already wide, and repartitioning them would
+shuffle the corpus.
 
-Row order is not preserved (round-robin repartition); callers are the
+Row order is not preserved (repartition); callers are the
 order-insensitive kernel operators (signatures, fingerprints, sketch
 partials), whose outputs are per-row or merge-associative.
 """
@@ -27,20 +27,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-_CONF_KEY = "spark.sprout.spread.maxBytes"
-_DEFAULT_MAX_BYTES = 256 << 20
+from . import fastpath
 
 
-def spread_small_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread_small_input(df: DataFrame) -> DataFrame:
     """Repartition a provably-small input to default parallelism; pass
     anything large (or of unknown size) through unchanged."""
-    spark = df.sparkSession
-    try:
-        max_bytes = int(spark.conf.get(_CONF_KEY, str(_DEFAULT_MAX_BYTES)))
-    except Exception:
-        max_bytes = _DEFAULT_MAX_BYTES
-    if max_bytes <= 0:
-        return df
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         # the size estimate is only trustworthy for scan-shaped plans
@@ -64,9 +56,9 @@ def spread_small_input(df: DataFrame, min_parts: int | None = None) -> DataFrame
         size = int(str(plan.stats().sizeInBytes()))
     except Exception:
         return df  # size unknown: never risk shuffling a corpus
-    if size > max_bytes:
+    if not fastpath.within("spread.bytes", size):
         return df
-    want = min_parts or spark.sparkContext.defaultParallelism
+    want = df.sparkSession.sparkContext.defaultParallelism
     # hash-repartition on the row content where possible: round-robin
     # repartition pays a per-partition sort (sortBeforeRepartition, the
     # SPARK-23207 retry fix) that serializes on the one populated input

@@ -24,6 +24,15 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def fast_paths_off(monkeypatch):
+    """Every size-capped fast path forced onto its distributed plan."""
+    from sprout_spark.spark import fastpath
+
+    for name in fastpath.CAPS:
+        monkeypatch.setitem(fastpath.CAPS, name, 0)
+
+
 @pytest.fixture(scope="session")
 def transcripts_path(tmp_path_factory):
     from sprout_spark.sources.transcripts import write_transcripts_parquet

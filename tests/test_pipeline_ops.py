@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from sprout_spark.spark import fastpath
 from sprout_spark.functions.text import (
     document_fingerprints,
     language_id,
@@ -91,8 +92,6 @@ def test_minhash_lsh_matches_exact_jaccard(spark, docs):
 def test_near_dup_null_ids_never_pair(spark, monkeypatch):
     """A NULL id is no pair partner: the broadcast verify and the join
     plan agree, and no pair carries NULL or the int64 cast of one."""
-    from sprout_spark.operators import dedup as D
-
     t = "the quick brown fox jumps over the lazy dog"
     docs = spark.createDataFrame(
         [(1, t), (None, t), (3, t + " x")], "id bigint, text string"
@@ -104,7 +103,7 @@ def test_near_dup_null_ids_never_pair(spark, monkeypatch):
         )
 
     fast = pairs()
-    monkeypatch.setattr(D, "_VERIFY_BROADCAST_MAX_DOCS", 0)
+    monkeypatch.setitem(fastpath.CAPS, "verify_jaccard.docs", 0)
     assert pairs() == fast
     assert [(a, b) for a, b, _ in fast] == [(1, 3)]
 
@@ -247,7 +246,7 @@ def test_embedding_near_dup_pairs(spark, emb):
     assert {(j, 100 + j) for j in range(5)} <= got
 
 
-def test_cosine_pairs_exact_mixed_dims_and_nulls(spark):
+def test_cosine_pairs_exact_mixed_dims_and_nulls(spark, monkeypatch):
     """The broadcast cosine kernel must reproduce the JVM fold's edge
     semantics: vectors only pair within their own length group (zip_with
     pads the shorter side with NULL -> NULL cosine -> dropped), and
@@ -269,23 +268,17 @@ def test_cosine_pairs_exact_mixed_dims_and_nulls(spark):
     assert set(got) == {(0, 1), (2, 3)}
     assert got[(0, 1)] == 1.0 and got[(2, 3)] == 1.0
     # above the broadcast cap the crossJoin + pair kernel must agree
-    from sprout_spark.operators import similarity as S
-    old_cap = S._EXACT_BROADCAST_MAX_ROWS
-    S._EXACT_BROADCAST_MAX_ROWS = 0
-    try:
-        got2 = {(r["a"], r["b"]): r["cosine"] for r in cosine_pairs_exact(
-            df, "vec_id", "embedding", 0.5).collect()}
-    finally:
-        S._EXACT_BROADCAST_MAX_ROWS = old_cap
+    monkeypatch.setitem(fastpath.CAPS, "cosine_pairs_exact.rows", 0)
+    got2 = {(r["a"], r["b"]): r["cosine"] for r in cosine_pairs_exact(
+        df, "vec_id", "embedding", 0.5).collect()}
     assert got2 == got
 
 
-def test_verify_jaccard_fallback_paths(spark):
+def test_verify_jaccard_fallback_paths(spark, monkeypatch):
     """Duplicate ids and NULL token elements must disqualify the
     broadcast verify (falling back to the join plan), with identical
     results from both plans on clean input."""
     from sprout_spark.operators.dedup import verify_jaccard
-    from sprout_spark.operators import dedup as D
 
     toks = spark.createDataFrame(
         [(1, ["a", "b", "c"]), (2, ["a", "b", "d"]), (3, ["x"])],
@@ -296,13 +289,10 @@ def test_verify_jaccard_fallback_paths(spark):
     )
     fast = {(r["a"], r["b"], r["jaccard"])
             for r in verify_jaccard(cands, toks, 0.4).collect()}
-    old = D._VERIFY_BROADCAST_MAX_DOCS
-    D._VERIFY_BROADCAST_MAX_DOCS = 0
-    try:
+    with monkeypatch.context() as m:
+        m.setitem(fastpath.CAPS, "verify_jaccard.docs", 0)
         slow = {(r["a"], r["b"], r["jaccard"])
                 for r in verify_jaccard(cands, toks, 0.4).collect()}
-    finally:
-        D._VERIFY_BROADCAST_MAX_DOCS = old
     assert fast == slow == {(1, 2, 0.5)}  # (1,3) below thr; (2,9) no b row
     # NULL element -> fall back (same answer, join plan)
     toks_null = spark.createDataFrame(
@@ -720,7 +710,7 @@ def test_duplicate_clusters_raises_when_not_converged(spark, monkeypatch):
     guard."""
     from sprout_spark.operators import dedup as dedup_mod
 
-    monkeypatch.setattr(dedup_mod, "_CLUSTERS_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setitem(fastpath.CAPS, "duplicate_clusters.rows", 0)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "a bigint, b bigint"
     )
@@ -744,7 +734,7 @@ def test_duplicate_clusters_driver_equals_distributed(spark, monkeypatch):
         (r["id"], r["cluster"])
         for r in dedup_mod.duplicate_clusters(pairs).collect()
     }
-    monkeypatch.setattr(dedup_mod, "_CLUSTERS_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setitem(fastpath.CAPS, "duplicate_clusters.rows", 0)
     dist = {
         (r["id"], r["cluster"])
         for r in dedup_mod.duplicate_clusters(pairs).collect()

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from sprout_spark.sketch import BloomFilter
 from sprout_spark.sketch.base import sketch_from_bytes
+from sprout_spark.spark import fastpath
 from sprout_spark.spark.sharded import (
     build_sharded_bloom,
     build_sharded_sketch,
@@ -61,26 +62,23 @@ def test_sharded_fpr_holds(spark, keyed_df):
     assert fp / 20_000 <= 0.02  # eps=0.01 + generous binomial slack
 
 
-def test_probe_plan_has_no_broadcast(spark, keyed_df):
+def test_probe_plan_has_no_broadcast(spark, keyed_df, monkeypatch):
     """The beyond-broadcast contract: with the small-filter broadcast
     fast path disabled, the filter payload must move through the shard
     shuffle (once per shard), never a BroadcastExchange (VERDICT r1 #1)."""
     filters = build_sharded_bloom(
         keyed_df, "k", n_shards=4, expected_distinct=20_000
     )
-    spark.conf.set("spark.sprout.sharded.broadcastMaxBytes", "0")
-    try:
-        probed = sharded_might_contain(keyed_df, "k", filters, 4)
-        plan = probed._sc._jvm.PythonSQLUtils.explainString(
-            probed._jdf.queryExecution(), "formatted"
-        )
-    finally:
-        spark.conf.unset("spark.sprout.sharded.broadcastMaxBytes")
+    monkeypatch.setitem(fastpath.CAPS, "sharded_probe.bytes", 0)
+    probed = sharded_might_contain(keyed_df, "k", filters, 4)
+    plan = probed._sc._jvm.PythonSQLUtils.explainString(
+        probed._jdf.queryExecution(), "formatted"
+    )
     assert "BroadcastExchange" not in plan
     assert "FlatMapCoGroupsInArrow" in plan or "CoGroup" in plan
 
 
-def test_probe_broadcast_fast_path_equals_cogroup(spark, keyed_df):
+def test_probe_broadcast_fast_path_equals_cogroup(spark, keyed_df, monkeypatch):
     """Default path for broadcast-sized filter tables: shuffle-free
     Arrow-UDF probe (no CoGroup, no Exchange of probe rows) with
     row-wise results identical to the cogroup plan."""
@@ -93,15 +91,13 @@ def test_probe_broadcast_fast_path_equals_cogroup(spark, keyed_df):
     )
     assert "FlatMapCoGroupsInArrow" not in plan
     assert "ArrowEvalPython" in plan
-    spark.conf.set("spark.sprout.sharded.broadcastMaxBytes", "0")
-    try:
+    with monkeypatch.context() as m:
+        m.setitem(fastpath.CAPS, "sharded_probe.bytes", 0)
         slow = sharded_might_contain(keyed_df, "k", filters, 4)
         b = sorted(
             (r["k"], r["might_contain"])
             for r in slow.select("k", "might_contain").collect()
         )
-    finally:
-        spark.conf.unset("spark.sprout.sharded.broadcastMaxBytes")
     a = sorted(
         (r["k"], r["might_contain"])
         for r in fast.select("k", "might_contain").collect()
@@ -158,6 +154,38 @@ def test_sharded_semi_join_exact(spark, keyed_df):
     assert got.count() == expect.count()
 
 
+def test_sharded_semi_join_probes_once(spark, keyed_df):
+    """The probe UDF runs on ``big`` only: the optimizer must not infer
+    it onto ``small`` across the join keys. Rows equal the plain
+    left-semi join, duplicates included, and a NULL key matches
+    nothing."""
+    small = keyed_df.where(F.col("k") % 13 == 0).distinct()
+    filters = build_sharded_bloom(
+        small, "k", 4, expected_distinct=2_000, err_rate=0.01
+    )
+    got = sharded_semi_join(keyed_df, "k", small, "k", filters, 4)
+    rows = sorted(r["k"] for r in got.collect())
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1
+    expect = sorted(
+        r["k"] for r in keyed_df.join(small, "k", "left_semi").collect()
+    )
+    assert rows == expect
+    nul = spark.createDataFrame([(None,)], "k bigint")
+    small_n = small.union(nul)
+    filters_n = build_sharded_bloom(
+        small_n, "k", 4, expected_distinct=2_000, err_rate=0.01
+    )
+    got_n = [
+        r["k"]
+        for r in sharded_semi_join(
+            keyed_df.union(nul), "k", small_n, "k", filters_n, 4
+        ).collect()
+    ]
+    assert None not in got_n and sorted(got_n) == expect
+
+
 def test_persist_and_reload_roundtrip(spark, keyed_df, tmp_path):
     from sprout_spark.sources.sketch_store import (
         load_grouped_sketches,
@@ -203,24 +231,23 @@ def test_probe_salt_fans_out_hot_shard(spark):
     assert a == b
 
 
-def test_probe_salt_results_identical_and_in_shuffle_key(spark, keyed_df):
+def test_probe_salt_results_identical_and_in_shuffle_key(
+    spark, keyed_df, monkeypatch
+):
     """Salting is work-placement only: row-wise results must be identical
     at any probe_salt, the salt column must be part of the cogroup
     shuffle key, and the plan must stay broadcast-free."""
     filters = build_sharded_bloom(
         keyed_df, "k", n_shards=4, expected_distinct=20_000
     ).cache()
-    spark.conf.set("spark.sprout.sharded.broadcastMaxBytes", "0")
-    try:
-        salted = sharded_might_contain(keyed_df, "k", filters, 4, probe_salt=4)
-        plain = sharded_might_contain(keyed_df, "k", filters, 4, probe_salt=1)
-        plan = salted._sc._jvm.PythonSQLUtils.explainString(
-            salted._jdf.queryExecution(), "formatted"
-        )
-        assert "_psalt" in plan
-        assert "BroadcastExchange" not in plan
-    finally:
-        spark.conf.unset("spark.sprout.sharded.broadcastMaxBytes")
+    monkeypatch.setitem(fastpath.CAPS, "sharded_probe.bytes", 0)
+    salted = sharded_might_contain(keyed_df, "k", filters, 4, probe_salt=4)
+    plain = sharded_might_contain(keyed_df, "k", filters, 4, probe_salt=1)
+    plan = salted._sc._jvm.PythonSQLUtils.explainString(
+        salted._jdf.queryExecution(), "formatted"
+    )
+    assert "_psalt" in plan
+    assert "BroadcastExchange" not in plan
     a = sorted(
         (r["k"], r["might_contain"])
         for r in salted.groupBy("k", "might_contain").count().collect()

@@ -378,7 +378,7 @@ def test_bloom_gated_kv_get_name_collisions(spark, tmp_path):
     assert bytes(got["value"]) == b"mine" and bytes(got["fetched"]) == b"1"
 
 
-def test_bloom_gated_kv_store_sharded_gate(spark, tmp_path):
+def test_bloom_gated_kv_store_sharded_gate(spark, tmp_path, monkeypatch):
     """gate='sharded': per-shard strict SBFs in a parquet table probed
     via the cogrouped shard join — no BroadcastExchange anywhere in the
     probe plan, zero false negatives, per-shard compound FPR within
@@ -420,8 +420,9 @@ def test_bloom_gated_kv_store_sharded_gate(spark, tmp_path):
     # the GATE probe never puts its payload through a BroadcastExchange:
     # broadcast-sized gates take the shuffle-free Arrow-UDF fast path
     # (an explicit sc.broadcast of payload bytes, not a join exchange);
-    # beyond spark.sprout.sharded.broadcastMaxBytes the cogrouped shard
-    # join runs — pin the cap to 0 to assert that beyond-broadcast shape
+    # beyond the sharded_probe.bytes cap the cogrouped shard join runs —
+    # pin the cap to 0 to assert that beyond-broadcast shape
+    from sprout_spark.spark import fastpath
     from sprout_spark.spark.sharded import sharded_might_contain
 
     probe_plan = (
@@ -432,16 +433,14 @@ def test_bloom_gated_kv_store_sharded_gate(spark, tmp_path):
     )
     assert "BroadcastExchange" not in probe_plan
     assert "ArrowEvalPython" in probe_plan  # small gate: fast path
-    spark.conf.set("spark.sprout.sharded.broadcastMaxBytes", "0")
-    try:
+    with monkeypatch.context() as m:
+        m.setitem(fastpath.CAPS, "sharded_probe.bytes", 0)
         probe_plan = (
             sharded_might_contain(probes, "k", kv._gate_df(), out_col="_m")
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
-    finally:
-        spark.conf.unset("spark.sprout.sharded.broadcastMaxBytes")
     assert "BroadcastExchange" not in probe_plan
     assert "FlatMapCoGroupsInArrow" in probe_plan or "CoGroup" in probe_plan
     # per-shard compound FPR stays within budget (strict SBF schedule)
