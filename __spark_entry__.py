@@ -2048,8 +2048,8 @@ def q_ann_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact brute force per query, so the full (qid, rank, id) result is
     reproducible by a plain SQL window over all pairs — a stronger gate
     than a recall threshold. Covers: per-query probe-cell assignment
-    (vectorized mapInArrow), cell-pruned index join, JVM cosine re-rank,
-    map-side WindowGroupLimit top-k per query."""
+    (vectorized mapInArrow), cell-pruned index join, cosine re-rank in
+    the Arrow kernel, map-side WindowGroupLimit top-k per query."""
     from sprout_spark.operators.similarity import (
         ann_ivf_topk_batch,
         build_ivf_index,

@@ -15,6 +15,7 @@ from .dedup import (
     lsh_candidate_pairs,
     minhash_band_rows,
     near_dup_pairs,
+    near_dup_pairs_between,
     simhash_near_dup_pairs,
     simhash_near_dup_pairs_portable,
     resolve_duplicates,
@@ -45,7 +46,9 @@ from .sessions import session_stats, sessionize
 from .stats import column_histogram, key_skew_stats
 from .similarity import (
     ann_ivf_topk,
+    ann_ivf_topk_batch,
     ann_lsh_topk,
+    ann_lsh_topk_batch,
     append_to_ivf_index,
     append_to_srp_index,
     build_ivf_index,

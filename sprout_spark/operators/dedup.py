@@ -187,27 +187,62 @@ def minhash_band_rows(
     )
 
 
+def _bucket_pairs(
+    l: DataFrame, r: DataFrame, self_form: bool, keys=("band", "bh")
+) -> DataFrame:
+    """(a=l id, b=r id) for every two rows that share ``keys``; the self
+    form keeps ``a < b`` only, which drops the diagonal and the mirror."""
+    pairs = l.alias("l").join(r.alias("r"), list(keys))
+    if self_form:
+        pairs = pairs.where(F.col("l.id") < F.col("r.id"))
+    return pairs.select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
+
+
+def _self_guard(
+    rows: DataFrame, keys: tuple, cap: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The self form's hot-bucket guard over buckets keyed by ``keys``:
+    (rows sized by one window, all ``a < b`` pairs of buckets with at
+    most ``cap`` members, (bucket-min id, member) star pairs of the
+    rest)."""
+    w = Window.partitionBy(*keys)
+    sized = rows.withColumn("_n", F.count("*").over(w)).withColumn(
+        "_min", F.min("id").over(w)
+    )
+    small = sized.where(F.col("_n") <= cap).select("id", *keys)
+    star = sized.where(
+        (F.col("_n") > cap) & (F.col("id") != F.col("_min"))
+    ).select(F.col("_min").alias("a"), F.col("id").alias("b"))
+    return sized, _bucket_pairs(small, small, True, keys), star
+
+
 def lsh_candidate_pairs(
-    band_rows: DataFrame,
+    bands: DataFrame,
+    right: DataFrame | None = None,
     max_bucket: int | None = 4096,
     oversize_mode: str = "star",
     n_bands: int | None = None,
 ) -> DataFrame:
-    """Self-join within (band, bh) buckets → distinct candidate (a, b) pairs.
-
-    The join key is the 12-byte band row, so the shuffle is tiny no matter
-    how large the documents are.
+    """Join band rows within (band, bh) buckets → distinct candidate
+    (a, b) pairs. ``right=None`` is the self form (``bands`` with itself,
+    ``a < b``); with ``right`` it is the cross form (a=``bands`` id,
+    b=``right`` id; ids need not be disjoint). The join key is the
+    12-byte band row, so the shuffle is tiny no matter how large the
+    documents are.
 
     Hot-bucket guard: boilerplate-heavy corpora (the common 100-TB case —
     identical headers/footers) put every copy of the template in the SAME
-    bucket in EVERY band, and an unguarded self-join on a 10^4-row bucket
-    emits ~10^8 pairs before verification. Buckets larger than
-    ``max_bucket`` therefore skip the all-pairs join:
+    bucket in EVERY band, and an unguarded join on a 10^4-row bucket
+    emits ~10^8 pairs before verification. Buckets over ``max_bucket``
+    (the self form counts members, the cross form the nl·nr pairs the
+    bucket would emit) therefore skip the all-pairs join:
 
-    * ``oversize_mode="star"`` (default) emits (bucket-min id, member)
-      pairs — O(n) per bucket, and every member stays connected to the
-      bucket representative, so after the exact-Jaccard verify
-      ``duplicate_clusters`` still groups true duplicate sets (a
+    * ``oversize_mode="star"`` (default) pairs every left member with the
+      bucket's min right id and every right member with the min left id
+      — O(nl+nr) per bucket; in the self form, where the bucket is both
+      sides, ``a < b`` leaves (bucket-min id, member) pairs. Every member
+      stays connected to a representative, so after the exact-Jaccard
+      verify ``duplicate_clusters`` still groups true duplicate sets (a
       boilerplate bucket is one clique; the star spans it). What is
       traded away is all-pairs *pair-level* recall inside a *mixed*
       oversized bucket (members similar to each other but not to the
@@ -215,7 +250,8 @@ def lsh_candidate_pairs(
       matters. ``max_bucket=None`` disables the guard.
     * ``oversize_mode="drop"`` discards oversized buckets entirely (the
       conservative "skip boilerplate" policy some pipelines want).
-    * ``oversize_mode="split"`` re-partitions each oversized bucket by a
+    * ``oversize_mode="split"`` (self form only; the cross form raises
+      ``ValueError``) re-partitions each oversized bucket by a
       SECONDARY minhash lane — every member's bucket hash in the *next*
       band, ``(band+1) % n_bands`` — and runs all-pairs within the
       sub-buckets (star again above the cap, so candidates stay
@@ -232,71 +268,71 @@ def lsh_candidate_pairs(
     split's optional n_bands probe); use ``lsh_bucket_stats`` to monitor
     how often it fires.
     """
+    if right is not None and not isinstance(right, DataFrame):
+        raise TypeError("right must be a band-row DataFrame or None "
+                        "(pass max_bucket and oversize_mode by keyword)")
+    self_form = right is None
     if max_bucket is None:
-        left = band_rows.alias("l")
-        right = band_rows.alias("r")
-        return (
-            left.join(right, ["band", "bh"])
-            .where(F.col("l.id") < F.col("r.id"))
-            .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-            .distinct()
+        return _bucket_pairs(
+            bands, bands if self_form else right, self_form
+        ).distinct()
+    modes = ("star", "drop", "split") if self_form else ("star", "drop")
+    if oversize_mode not in modes:
+        raise ValueError(f"oversize_mode must be one of {modes}")
+    if self_form:
+        sized, pairs, star = _self_guard(bands, ("band", "bh"), max_bucket)
+        over = sized.where(F.col("_n") > max_bucket)
+    else:
+        # tag the sides and size both in one window: nl, nr, min ids
+        w = Window.partitionBy("band", "bh")
+        is_r = F.col("_r")
+        sized = (
+            bands.select("id", "band", "bh", F.lit(False).alias("_r"))
+            .unionByName(
+                right.select("id", "band", "bh", F.lit(True).alias("_r"))
+            )
+            .withColumn("_nl", F.count(F.when(~is_r, 1)).over(w))
+            .withColumn("_nr", F.count(F.when(is_r, 1)).over(w))
+            .withColumn("_minl", F.min(F.when(~is_r, F.col("id"))).over(w))
+            .withColumn("_minr", F.min(F.when(is_r, F.col("id"))).over(w))
         )
-    if oversize_mode not in ("star", "drop", "split"):
-        raise ValueError("oversize_mode must be 'star', 'drop', or 'split'")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("band", "bh")
-    sized = band_rows.withColumn("_n", F.count("*").over(w)).withColumn(
-        "_min", F.min("id").over(w)
-    )
-    small = sized.where(F.col("_n") <= max_bucket).select("id", "band", "bh")
-    l, r = small.alias("l"), small.alias("r")
-    pairs = (
-        l.join(r, ["band", "bh"])
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-    )
+        size = F.col("_nl") * F.col("_nr")
+        fits = sized.where(size <= max_bucket)
+        over = sized.where(size > max_bucket)
+        pairs = _bucket_pairs(
+            fits.where(~is_r).select("id", "band", "bh"),
+            fits.where(is_r).select("id", "band", "bh"),
+            False,
+        )
+        # each side's members pair with the other side's min id
+        star = over.where(~is_r).select(
+            F.col("id").alias("a"), F.col("_minr").alias("b")
+        ).union(
+            over.where(is_r).select(
+                F.col("_minl").alias("a"), F.col("id").alias("b")
+            )
+        )
     if oversize_mode == "star":
-        star = (
-            sized.where((F.col("_n") > max_bucket) & (F.col("id") != F.col("_min")))
-            .select(F.col("_min").alias("a"), F.col("id").alias("b"))
-        )
         pairs = pairs.union(star)
     elif oversize_mode == "split":
         if n_bands is None:
-            mx = band_rows.agg(F.max("band")).collect()[0][0]
-            if mx is None:  # empty band_rows: nothing oversized to split
+            mx = bands.agg(F.max("band")).collect()[0][0]
+            if mx is None:  # empty bands: nothing oversized to split
                 return pairs.distinct()
             n_bands = mx + 1
-        over = sized.where(F.col("_n") > max_bucket).select("id", "band", "bh")
-        lane = band_rows.select(
+        lane = bands.select(
             "id", F.col("band").alias("_ab"), F.col("bh").alias("_sub")
         )
         over = (
-            over.withColumn(
+            over.select("id", "band", "bh")
+            .withColumn(
                 "_ab", (F.col("band") + F.lit(1)) % F.lit(int(n_bands))
             )
             .join(lane, ["id", "_ab"])
             .drop("_ab")
         )
-        w2 = Window.partitionBy("band", "bh", "_sub")
-        sized2 = over.withColumn("_n2", F.count("*").over(w2)).withColumn(
-            "_min2", F.min("id").over(w2)
-        )
-        small2 = sized2.where(F.col("_n2") <= max_bucket).select(
-            "id", "band", "bh", "_sub"
-        )
-        l2, r2 = small2.alias("l"), small2.alias("r")
-        sub_pairs = (
-            l2.join(r2, ["band", "bh", "_sub"])
-            .where(F.col("l.id") < F.col("r.id"))
-            .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        )
-        star2 = (
-            sized2.where(
-                (F.col("_n2") > max_bucket) & (F.col("id") != F.col("_min2"))
-            )
-            .select(F.col("_min2").alias("a"), F.col("id").alias("b"))
+        _, sub_pairs, star2 = _self_guard(
+            over, ("band", "bh", "_sub"), max_bucket
         )
         pairs = pairs.union(sub_pairs).union(star2)
     return pairs.distinct()
@@ -401,31 +437,21 @@ def _verify_jaccard_broadcast(
     import pyarrow.compute as pc
 
     same = ta is tb
-    atab = fastpath.collect_at_most("verify_jaccard.docs", ta)
-    if atab is None:
-        return None
-    btab = atab if same else fastpath.collect_at_most("verify_jaccard.docs", tb)
-    if btab is None:
-        return None
-    ea = _encode_token_side(atab)
-    eb = ea if same else _encode_token_side(btab)
-    if ea is None or eb is None:
-        return None
-    ids_a, flat_a, off_a = ea
-    ids_b, flat_b, off_b = eb
-    if same:
-        enc = pc.dictionary_encode(flat_a)
-        codes_a = codes_b = np.asarray(enc.indices.to_numpy(
-            zero_copy_only=False), dtype=np.int64)
-        vocab = len(enc.dictionary)
-    else:
-        combined = pa.chunked_array([flat_a, flat_b]).combine_chunks()
-        enc = pc.dictionary_encode(combined)
-        codes = np.asarray(
-            enc.indices.to_numpy(zero_copy_only=False), dtype=np.int64
-        )
-        codes_a, codes_b = codes[: len(flat_a)], codes[len(flat_a):]
-        vocab = len(enc.dictionary)
+    sides = []
+    for t in [ta] if same else [ta, tb]:
+        tab = fastpath.collect_at_most("verify_jaccard.docs", t)
+        enc = None if tab is None else _encode_token_side(tab)
+        if enc is None:
+            return None
+        sides.append(enc)
+    (ids_a, flat_a, off_a), (ids_b, flat_b, off_b) = sides[0], sides[-1]
+    # one dictionary over both sides, so codes compare across them
+    flat = flat_a if same else pa.concat_arrays([flat_a, flat_b])
+    enc = pc.dictionary_encode(flat)
+    codes = np.asarray(enc.indices.to_numpy(zero_copy_only=False), np.int64)
+    codes_a = codes[: len(flat_a)]
+    codes_b = codes_a if same else codes[len(flat_a):]
+    vocab = len(enc.dictionary)
 
     def build(ids, codes, off):
         # per-doc sorted DISTINCT codes (set semantics) + id -> slice map
@@ -562,6 +588,7 @@ def near_dup_pairs(
     max_bucket: int | None = 4096,
     oversize_mode: str = "star",
     shingle_k: int = 1,
+    right: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, exact-verified: (a, b, jaccard).
 
@@ -573,16 +600,28 @@ def near_dup_pairs(
     and the exact verify to word-k-gram shingle sets — the standard
     construction for natural text, where token-set Jaccard ignores word
     order and repetition.
+
+    ``right=None`` pairs ``df`` with itself (``a < b``); with ``right``
+    the pairs are cross-corpus (``a`` from ``df``, ``b`` from ``right``,
+    ids need not be disjoint) — the new crawl against the existing
+    corpus, or training data against an eval set, catching paraphrased
+    or lightly-edited overlap that fingerprint intersection misses. Both
+    sides run the SAME seeded minhash kernel, so signatures are
+    comparable across tables by construction.
     """
-    nonempty = _nonempty(df, text_col)
-    bands = minhash_band_rows(
-        nonempty, id_col, text_col, n_hashes, band_r, shingle_k
-    )
+    sides = [_nonempty(t, text_col) for t in (df, right) if t is not None]
+    bands = [
+        minhash_band_rows(t, id_col, text_col, n_hashes, band_r, shingle_k)
+        for t in sides
+    ]
     cands = lsh_candidate_pairs(
-        bands, max_bucket, oversize_mode, n_bands=n_hashes // band_r
+        *bands, max_bucket=max_bucket, oversize_mode=oversize_mode,
+        n_bands=n_hashes // band_r,
     )
-    toks = _sets(nonempty, id_col, text_col, shingle_k)
-    return verify_jaccard(cands, toks, threshold)
+    # the self form passes one token table twice: the broadcast verify
+    # then encodes it once
+    toks = [_sets(t, id_col, text_col, shingle_k) for t in sides]
+    return _verify(cands, toks[0], toks[-1], threshold)
 
 
 def exact_jaccard_pairs(
@@ -918,7 +957,9 @@ def simhash_near_dup_pairs_portable(
             )
         ).alias("e"),
     ).select("id", "e.band", "e.bh")
-    cands = lsh_candidate_pairs(bands, max_bucket, oversize_mode, n_bands=4)
+    cands = lsh_candidate_pairs(
+        bands, max_bucket=max_bucket, oversize_mode=oversize_mode, n_bands=4
+    )
     sa = sigs.select(
         F.col("id").alias("a"), F.col("hi").alias("_ha"), F.col("lo").alias("_la")
     )
@@ -988,7 +1029,9 @@ def simhash_near_dup_pairs(
             )
         ).alias("e"),
     ).select("id", "e.band", "e.bh")
-    cands = lsh_candidate_pairs(bands, max_bucket, oversize_mode, n_bands=4)
+    cands = lsh_candidate_pairs(
+        bands, max_bucket=max_bucket, oversize_mode=oversize_mode, n_bands=4
+    )
     sa = sigs.select(F.col("id").alias("a"), F.col("simhash").alias("_sa"))
     sb = sigs.select(F.col("id").alias("b"), F.col("simhash").alias("_sb"))
     return (
@@ -1017,6 +1060,8 @@ def containment_pairs(
     threshold: float = 0.8,
     max_fp_docs: int | None = 4096,
     portable: bool = False,
+    right: DataFrame | None = None,
+    denom: str = "min",
 ) -> DataFrame:
     """Containment-level near-dup pairs — the dedup family token-set
     Jaccard structurally misses: doc A pasted inside a 3× larger doc B
@@ -1028,76 +1073,108 @@ def containment_pairs(
     Construction: winnowing fingerprints (min-``keep`` hashes of char
     ``gram``-grams per doc, :func:`~sprout_spark.functions.text.
     document_fingerprints`; the md5 ``portable=True`` variant is the
-    exact-DuckDB-oracle contract) → inverted-index self-join on the
-    8-byte fp (the ONLY shuffle moves (fp, id) rows — same shape as the
-    ``fingerprint_shared`` query) → per-pair shared-fp count over
-    ``min(nfp_a, nfp_b)``. Containment here is EXACT over the winnowed
+    exact-DuckDB-oracle contract) → inverted-index join on the 8-byte fp
+    (the ONLY shuffle moves (fp, id) rows — same shape as the
+    ``fingerprint_shared`` query) → per-pair shared-fp count over the
+    ``denom`` count. Containment here is EXACT over the winnowed
     fingerprint sets; it equals true gram-containment whenever ``keep``
     covers a doc's distinct gram population (size ``keep`` for your
     p99 doc length for substring semantics; smaller ``keep`` keeps the
     cost-bounded proxy, biased low for very unequal lengths).
 
-    ``max_fp_docs`` is the hot-bucket guard (same rationale as
-    ``lsh_candidate_pairs``): a fingerprint present in more than that
-    many docs — site-wide boilerplate — would fan out quadratically, so
-    it is dropped from the JOIN (never from the per-doc ``nfp``
-    denominators, which are counted first); recall inside such grams is
-    traded for a bounded join, pass ``None`` for the exact oracle
-    contract.
+    ``right=None`` pairs ``df`` with itself (``a < b``); with ``right``
+    it is the cross form (``a`` from ``df``, ``b`` from ``right``, ids
+    need not be disjoint; both sides run the same fingerprint kernel).
+    ``denom="min"`` (default) scores ``shared / min(nfp_a, nfp_b)``, the
+    symmetric convention; ``"left"`` scores ``shared / nfp_a``, the
+    fraction of ``a``'s fingerprints found in ``b`` — decontamination at
+    CONTAINMENT level ("how much of this eval item appears inside that
+    training document?"; run the EVAL slice as ``df``).
 
-    Output: (a, b, shared, nfp_a, nfp_b, containment, trim) with
-    ``a < b``; ``trim`` is the doc the keep/trim policy drops — the one
-    with FEWER fingerprints (the contained side), ties dropping ``b``
-    (first-seen wins).
+    ``max_fp_docs`` is the hot-fp guard (same rationale as
+    ``lsh_candidate_pairs``): site-wide boilerplate fingerprints would
+    fan the join out quadratically, so the self form drops a fingerprint
+    present in more than that many docs and the cross form one whose
+    ``nl*nr`` product (left docs × right docs) exceeds it. It is dropped
+    from the JOIN, never from the per-doc ``nfp`` denominators, which
+    are counted first; recall inside such grams is traded for a bounded
+    join, pass ``None`` for the exact oracle contract.
+
+    Output: (a, b, shared, nfp_a, nfp_b, containment) with
+    ``containment >= threshold``. The self form adds ``trim``, the doc
+    the keep/trim policy drops — the one with FEWER fingerprints (the
+    contained side), ties dropping ``b`` (first-seen wins).
     """
+    if denom not in ("left", "min"):
+        raise ValueError(f"denom must be 'left' or 'min', got {denom!r}")
     from ..functions.text import (
         document_fingerprints,
         document_fingerprints_portable,
     )
 
     fn = document_fingerprints_portable if portable else document_fingerprints
-    fps = fn(df, id_col, text_col, gram, keep).distinct()
-    # materialize the fingerprint table ONCE (eager RDD checkpoint, same
-    # pattern as ann_ivf_topk_batch): it feeds FIVE consumers below (two
-    # join sides, two size lookups, the hot-fp aggregate), and the
-    # fingerprint kernel is opaque to Catalyst — without this the corpus
-    # would be re-scanned and re-fingerprinted per consumer. Blocks are
-    # ContextCleaner-managed: freed when the result DataFrame is dropped.
-    fps = fps.localCheckpoint(eager=True)
-    sizes = fps.groupBy("id").agg(F.count("*").alias("nfp"))
-    if max_fp_docs is not None:
-        hot = (
-            fps.groupBy("fp")
-            .agg(F.count("*").alias("_nd"))
-            .where(F.col("_nd") > int(max_fp_docs))
-            .select("fp")
+
+    def fingerprints(docs: DataFrame) -> DataFrame:
+        # materialize each fingerprint table ONCE (eager RDD checkpoint,
+        # same pattern as ann_ivf_topk_batch): it feeds its size
+        # aggregate, the hot-fp count and the join sides, and the kernel
+        # is opaque to Catalyst — without this the corpus would be
+        # re-scanned and re-fingerprinted per consumer. Blocks are
+        # ContextCleaner-managed: freed when the result is dropped.
+        return fn(docs, id_col, text_col, gram, keep).distinct().localCheckpoint(
+            eager=True
         )
-        fps = fps.join(hot, "fp", "left_anti")
-    l = fps.select(F.col("id").alias("a"), "fp")
-    r = fps.select(F.col("id").alias("b"), "fp")
-    shared = (
-        l.join(r, "fp")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("shared"))
+
+    def count(fps: DataFrame, key: str, name: str) -> DataFrame:
+        return fps.groupBy(key).agg(F.count("*").alias(name))
+
+    lf = fingerprints(df)
+    rf = lf if right is None else fingerprints(right)
+    sl = count(lf, "id", "nfp")
+    sr = sl if right is None else count(rf, "id", "nfp")
+    if max_fp_docs is not None:
+        if right is None:
+            hot = count(lf, "fp", "_nd").where(F.col("_nd") > int(max_fp_docs))
+        else:
+            hot = count(lf, "fp", "_nl").join(count(rf, "fp", "_nr"), "fp")
+            hot = hot.where(F.col("_nl") * F.col("_nr") > int(max_fp_docs))
+        hot = hot.select("fp")
+        lf = lf.join(hot, "fp", "left_anti")
+        rf = lf if right is None else rf.join(hot, "fp", "left_anti")
+    shared = lf.select(F.col("id").alias("a"), "fp").join(
+        rf.select(F.col("id").alias("b"), "fp"), "fp"
     )
-    sa = sizes.select(F.col("id").alias("a"), F.col("nfp").alias("nfp_a"))
-    sb = sizes.select(F.col("id").alias("b"), F.col("nfp").alias("nfp_b"))
-    return (
+    if right is None:
+        shared = shared.where(F.col("a") < F.col("b"))
+    shared = shared.groupBy("a", "b").agg(F.count("*").alias("shared"))
+    sa = sl.select(F.col("id").alias("a"), F.col("nfp").alias("nfp_a"))
+    sb = sr.select(F.col("id").alias("b"), F.col("nfp").alias("nfp_b"))
+    denom_col = (
+        F.col("nfp_a") if denom == "left" else F.least("nfp_a", "nfp_b")
+    )
+    out = (
         shared.join(sa, "a")
         .join(sb, "b")
-        .withColumn(
-            "containment",
-            (F.col("shared") / F.least("nfp_a", "nfp_b")).cast("double"),
-        )
+        .withColumn("containment", (F.col("shared") / denom_col).cast("double"))
         .where(F.col("containment") >= float(threshold))
-        .withColumn(
+    )
+    cols = ["a", "b", "shared", "nfp_a", "nfp_b", "containment"]
+    if right is None:
+        out = out.withColumn(
             "trim",
             F.when(F.col("nfp_a") < F.col("nfp_b"), F.col("a")).otherwise(
                 F.col("b")
             ),
         )
-        .select("a", "b", "shared", "nfp_a", "nfp_b", "containment", "trim")
+        cols.append("trim")
+    return out.select(*cols)
+
+
+def _without_ids(df: DataFrame, id_col: str, ids: DataFrame) -> DataFrame:
+    """``df`` minus the rows whose bigint id is in the one-column ``ids``."""
+    ids = ids.toDF("_drop_id").distinct()
+    return df.join(
+        ids, df[id_col].cast("bigint") == ids["_drop_id"], "left_anti"
     )
 
 
@@ -1119,109 +1196,22 @@ def drop_contained(
     pairs = containment_pairs(
         df, id_col, text_col, gram, keep, threshold, max_fp_docs, portable
     )
-    trims = pairs.select(F.col("trim").alias("_trim_id")).distinct()
-    return df.join(
-        trims,
-        df[id_col].cast("bigint") == trims["_trim_id"],
-        "left_anti",
-    )
+    return _without_ids(df, id_col, pairs.select("trim"))
 
 
 def containment_pairs_between(
-    left: DataFrame,
-    right: DataFrame,
-    id_col: str,
-    text_col: str,
-    gram: int = 8,
-    keep: int = 64,
-    threshold: float = 0.8,
-    max_fp_pairs: int | None = 4096,
-    portable: bool = False,
+    left: DataFrame, right: DataFrame, id_col: str, text_col: str,
+    gram: int = 8, keep: int = 64, threshold: float = 0.8,
+    max_fp_pairs: int | None = 4096, portable: bool = False,
     denom: str = "left",
 ) -> DataFrame:
-    """Cross-corpus containment — decontamination at CONTAINMENT level:
-    "how much of this eval item appears inside that training document?"
-    The fingerprint-intersection decontamination (``decontaminate_docs``)
-    answers *whether* any gram is shared; :func:`near_dup_pairs_between`
-    scores whole-doc Jaccard (which a short eval item quoted inside a
-    long training doc never trips); this scores the COVERAGE of one
-    side's fingerprints by the other — the Lee et al. 2021
-    substring-level shape across two tables.
-
-    Both sides run the SAME fingerprint kernel
-    (:func:`~sprout_spark.functions.text.document_fingerprints`; the md5
-    ``portable=True`` variant is the exact-DuckDB-oracle contract), so
-    fingerprints are comparable across tables by construction. The ONLY
-    shuffle moves (fp, id) rows — the inverted-index join of
-    :func:`containment_pairs`, cross form.
-
-    ``denom`` picks the score's denominator: ``"left"`` (default) is
-    ``shared / nfp_a`` — the fraction of the LEFT doc's fingerprints
-    found in the right doc, the decontamination question (run the EVAL
-    slice as ``left``); ``"min"`` is ``shared / min(nfp_a, nfp_b)`` —
-    the symmetric :func:`containment_pairs` convention.
-
-    ``max_fp_pairs`` is the hot-fp guard, cross form: a fingerprint in
-    ``nl`` left and ``nr`` right docs fans out ``nl*nr`` candidate rows
-    (site-wide boilerplate explodes quadratically), so fps whose PRODUCT
-    exceeds the cap are dropped from the JOIN — never from the per-doc
-    ``nfp`` denominators, which are counted first. Recall inside such
-    grams is traded for a bounded join; pass ``None`` for the exact
-    oracle contract.
-
-    Output: (a=left id, b=right id, shared, nfp_a, nfp_b, containment)
-    with ``containment >= threshold``. Ids need not be disjoint — the
-    pair is (left id, right id); interpretation is the caller's join
-    back to either table."""
-    if denom not in ("left", "min"):
-        raise ValueError(f"denom must be 'left' or 'min', got {denom!r}")
-    from ..functions.text import (
-        document_fingerprints,
-        document_fingerprints_portable,
-    )
-
-    fn = document_fingerprints_portable if portable else document_fingerprints
-    # one localCheckpoint per side: each fingerprint table feeds its
-    # size aggregate, the hot-fp count, and a join side — the kernel is
-    # opaque to Catalyst, so without it each consumer re-fingerprints
-    # the corpus (same pattern as containment_pairs / ann_ivf_topk_batch)
-    lf = fn(left, id_col, text_col, gram, keep).distinct().localCheckpoint(
-        eager=True
-    )
-    rf = fn(right, id_col, text_col, gram, keep).distinct().localCheckpoint(
-        eager=True
-    )
-    sa = lf.groupBy("id").agg(F.count("*").alias("nfp_a")).withColumnRenamed(
-        "id", "a"
-    )
-    sb = rf.groupBy("id").agg(F.count("*").alias("nfp_b")).withColumnRenamed(
-        "id", "b"
-    )
-    if max_fp_pairs is not None:
-        hot = (
-            lf.groupBy("fp")
-            .agg(F.count("*").alias("_nl"))
-            .join(rf.groupBy("fp").agg(F.count("*").alias("_nr")), "fp")
-            .where(F.col("_nl") * F.col("_nr") > int(max_fp_pairs))
-            .select("fp")
-        )
-        lf = lf.join(hot, "fp", "left_anti")
-        rf = rf.join(hot, "fp", "left_anti")
-    shared = (
-        lf.select(F.col("id").alias("a"), "fp")
-        .join(rf.select(F.col("id").alias("b"), "fp"), "fp")
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("shared"))
-    )
-    denom_col = (
-        F.col("nfp_a") if denom == "left" else F.least("nfp_a", "nfp_b")
-    )
-    return (
-        shared.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("containment", (F.col("shared") / denom_col).cast("double"))
-        .where(F.col("containment") >= float(threshold))
-        .select("a", "b", "shared", "nfp_a", "nfp_b", "containment")
+    """Cross-corpus :func:`containment_pairs` (a=left id, b=right id),
+    scored by default over the LEFT doc's fingerprints — the
+    decontamination coverage question; run the EVAL slice as ``left``.
+    ``max_fp_pairs`` caps a fingerprint's nl·nr product."""
+    return containment_pairs(
+        left, id_col, text_col, gram, keep, threshold, max_fp_pairs,
+        portable, right=right, denom=denom,
     )
 
 
@@ -1238,126 +1228,32 @@ def drop_contaminated(
 ) -> DataFrame:
     """The decontamination DECISION: remove every training document that
     CONTAINS eval material — any train doc on the right side of a
-    :func:`containment_pairs_between` pair at ``containment >=
+    cross-form :func:`containment_pairs` pair at ``containment >=
     threshold`` (left-denominator coverage: the fraction of the eval
     item's fingerprints found in the train doc) drops. One anti-join on
     the bigint id; all other train columns pass through. This is the
     policy step after scoring — the cross-table analogue of
     :func:`drop_contained`."""
-    pairs = containment_pairs_between(
-        evals, train, id_col, text_col, gram, keep, threshold,
-        max_fp_pairs, portable, denom="left",
+    pairs = containment_pairs(
+        evals, id_col, text_col, gram, keep, threshold, max_fp_pairs,
+        portable, right=train, denom="left",
     )
-    bad = pairs.select(F.col("b").alias("_contaminated_id")).distinct()
-    return train.join(
-        bad,
-        train[id_col].cast("bigint") == bad["_contaminated_id"],
-        "left_anti",
-    )
-
-
-def lsh_candidate_pairs_between(
-    left_bands: DataFrame,
-    right_bands: DataFrame,
-    max_bucket: int | None = 4096,
-    oversize_mode: str = "star",
-) -> DataFrame:
-    """Cross-corpus LSH candidates: join LEFT and RIGHT band rows on
-    (band, bh) → distinct (a=left id, b=right id). The shuffle carries
-    the same 12-byte band rows as the self-join path; documents never
-    move.
-
-    Hot-bucket guard, cross form: a bucket emits nl·nr pairs, so the
-    guard caps the PRODUCT. Over the cap, ``oversize_mode="star"``
-    pairs every left member with the bucket's min right id and every
-    right member with the min left id — O(nl+nr) per bucket, and any
-    left doc whose match group dominates the bucket stays connected to
-    a right representative (the cross analogue of the self-join star:
-    per-pair recall inside mixed oversized buckets is traded for
-    bounded candidates). ``"drop"`` discards oversized buckets;
-    ``max_bucket=None`` disables the guard (oracle paths)."""
-    if max_bucket is None:
-        return (
-            left_bands.select("band", "bh", F.col("id").alias("a"))
-            .join(
-                right_bands.select("band", "bh", F.col("id").alias("b")),
-                ["band", "bh"],
-            )
-            .select("a", "b")
-            .distinct()
-        )
-    if oversize_mode not in ("star", "drop"):
-        raise ValueError("oversize_mode must be 'star' or 'drop'")
-    # per-bucket (size, min id) summaries: map-side partial aggregation,
-    # one row per (band, bh) — the summary join is bucket-count sized
-    lsum = left_bands.groupBy("band", "bh").agg(
-        F.count("*").alias("_nl"), F.min("id").alias("_minl")
-    )
-    rsum = right_bands.groupBy("band", "bh").agg(
-        F.count("*").alias("_nr"), F.min("id").alias("_minr")
-    )
-    sized = lsum.join(rsum, ["band", "bh"])
-    ok = sized.where(F.col("_nl") * F.col("_nr") <= max_bucket)
-    pairs = (
-        left_bands.join(ok.select("band", "bh"), ["band", "bh"])
-        .select("band", "bh", F.col("id").alias("a"))
-        .join(
-            right_bands.select("band", "bh", F.col("id").alias("b")),
-            ["band", "bh"],
-        )
-        .select("a", "b")
-    )
-    if oversize_mode == "star":
-        over = sized.where(F.col("_nl") * F.col("_nr") > max_bucket)
-        star_l = (
-            left_bands.join(
-                over.select("band", "bh", "_minr"), ["band", "bh"]
-            )
-            .select(F.col("id").alias("a"), F.col("_minr").alias("b"))
-        )
-        star_r = (
-            right_bands.join(
-                over.select("band", "bh", "_minl"), ["band", "bh"]
-            )
-            .select(F.col("_minl").alias("a"), F.col("id").alias("b"))
-        )
-        pairs = pairs.union(star_l).union(star_r)
-    return pairs.distinct()
+    return _without_ids(train, id_col, pairs.select("b"))
 
 
 def near_dup_pairs_between(
-    left: DataFrame,
-    right: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.8,
-    n_hashes: int = 128,
-    band_r: int = 4,
-    max_bucket: int | None = 4096,
-    oversize_mode: str = "star",
+    left: DataFrame, right: DataFrame, id_col: str, text_col: str,
+    threshold: float = 0.8, n_hashes: int = 128, band_r: int = 4,
+    max_bucket: int | None = 4096, oversize_mode: str = "star",
     shingle_k: int = 1,
 ) -> DataFrame:
-    """Cross-corpus near-duplicate pairs, exact-verified: (a, b, jaccard)
-    with ``a`` from LEFT and ``b`` from RIGHT — "dedupe the new crawl
-    against the existing corpus" / "decontaminate training data against
-    an eval set at NEAR-dup level" (the fingerprint-intersection
-    decontamination catches verbatim overlap; this catches paraphrased
-    or lightly-edited overlap at the configured Jaccard).
-
-    Both sides run the SAME seeded minhash kernel, so signatures are
-    comparable across tables by construction. Columns named ``id_col``/
-    ``text_col`` must exist on both sides; ids are not required to be
-    disjoint (the pair is (left id, right id) — interpretation is the
-    caller's join back to either table)."""
-    lc, rc = _nonempty(left, text_col), _nonempty(right, text_col)
-    lb = minhash_band_rows(lc, id_col, text_col, n_hashes, band_r, shingle_k)
-    rb = minhash_band_rows(rc, id_col, text_col, n_hashes, band_r, shingle_k)
-    cands = lsh_candidate_pairs_between(lb, rb, max_bucket, oversize_mode)
-    # cross form of verify_jaccard: both sides' code tables broadcast
-    # once when they fit
-    tl = _sets(lc, id_col, text_col, shingle_k)
-    tr = _sets(rc, id_col, text_col, shingle_k)
-    return _verify(cands, tl, tr, threshold)
+    """Cross-corpus :func:`near_dup_pairs`: (a, b, jaccard) with ``a``
+    from LEFT and ``b`` from RIGHT; ``max_bucket`` caps a bucket's nl·nr
+    product."""
+    return near_dup_pairs(
+        left, id_col, text_col, threshold, n_hashes, band_r, max_bucket,
+        oversize_mode, shingle_k, right=right,
+    )
 
 
 def resolve_duplicates(

@@ -1,7 +1,8 @@
 """Cross-corpus near-dup (operators/dedup.py::near_dup_pairs_between):
 equality with the exact cross-Jaccard all-pairs on disjoint slices,
-self-identity when both sides are the same corpus, and the product-cap
-hot-bucket guard."""
+self-identity when both sides are the same corpus, the product-cap
+hot-bucket guard, and the self form of each pair family equal to its
+cross form on (X, X) with ``a < b``."""
 
 import os
 
@@ -9,8 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from sprout_spark.operators.dedup import (
-    lsh_candidate_pairs_between,
+    containment_pairs,
+    lsh_candidate_pairs,
     minhash_band_rows,
+    near_dup_pairs,
     near_dup_pairs_between,
     token_sets,
 )
@@ -71,9 +74,9 @@ def test_product_cap_guard_star_and_drop(halves):
     _, left, right = halves
     lb = minhash_band_rows(left, "doc_id", "text")
     rb = minhash_band_rows(right, "doc_id", "text")
-    full = lsh_candidate_pairs_between(lb, rb, max_bucket=None)
-    starred = lsh_candidate_pairs_between(lb, rb, max_bucket=1, oversize_mode="star")
-    dropped = lsh_candidate_pairs_between(lb, rb, max_bucket=1, oversize_mode="drop")
+    full = lsh_candidate_pairs(lb, rb, max_bucket=None)
+    starred = lsh_candidate_pairs(lb, rb, max_bucket=1, oversize_mode="star")
+    dropped = lsh_candidate_pairs(lb, rb, max_bucket=1, oversize_mode="drop")
     n_full, n_star, n_drop = full.count(), starred.count(), dropped.count()
     # cap=1: only 1x1 buckets join all-pairs; star bounds candidates
     assert n_star <= n_full
@@ -83,4 +86,37 @@ def test_product_cap_guard_star_and_drop(halves):
     star_lefts = {r["a"] for r in starred.collect()}
     assert left_ids <= star_lefts
     with pytest.raises(ValueError, match="oversize_mode"):
-        lsh_candidate_pairs_between(lb, rb, max_bucket=4, oversize_mode="split")
+        lsh_candidate_pairs(lb, rb, max_bucket=4, oversize_mode="split")
+
+
+def _self_and_cross(family, docs):
+    """(self rows, cross rows on (docs, docs) with a < b), guards off."""
+    if family == "lsh_candidate_pairs":
+        bands = minhash_band_rows(docs, "doc_id", "text")
+        return (lsh_candidate_pairs(bands, max_bucket=None),
+                lsh_candidate_pairs(bands, bands, max_bucket=None))
+    if family == "near_dup_pairs":
+        kw = dict(threshold=0.5, max_bucket=None)
+        return (near_dup_pairs(docs, "doc_id", "text", **kw),
+                near_dup_pairs(docs, "doc_id", "text", right=docs, **kw))
+    kw = dict(gram=8, keep=16, threshold=0.5, max_fp_docs=None, denom="min")
+    return (containment_pairs(docs, "doc_id", "text", **kw).drop("trim"),
+            containment_pairs(docs, "doc_id", "text", right=docs, **kw))
+
+
+@pytest.mark.parametrize(
+    "family", ["lsh_candidate_pairs", "near_dup_pairs", "containment_pairs"]
+)
+def test_self_form_equals_cross_on_same_corpus(halves, family):
+    """The self form is the cross form on (X, X) filtered to a < b: the
+    relation that lets one function serve both."""
+    docs, _, _ = halves
+    self_rows, cross_rows = _self_and_cross(family, docs)
+    cols = self_rows.columns
+    assert cross_rows.columns == cols
+    got = sorted(tuple(r) for r in self_rows.collect())
+    want = sorted(
+        tuple(r) for r in cross_rows.where(F.col("a") < F.col("b")).collect()
+    )
+    assert got == want
+    assert got, "fixture must contain pairs"
