@@ -263,10 +263,11 @@ def lsh_candidate_pairs(
       their all-pairs back. Pass ``n_bands`` when known (callers that
       built the signatures know it) to avoid a one-row driver agg.
 
-    The guard is declarative (one window over the same (band, bh) key the
-    join shuffles on — no extra action, no driver round-trip, except
-    split's optional n_bands probe); use ``lsh_bucket_stats`` to monitor
-    how often it fires.
+    The guard is declarative (the self form sizes buckets in one window
+    over the same (band, bh) key the join shuffles on, the cross form in
+    per-side groupBy summaries, one row per bucket — no extra action, no
+    driver round-trip, except split's optional n_bands probe); use
+    ``lsh_bucket_stats`` to monitor how often it fires.
     """
     if right is not None and not isinstance(right, DataFrame):
         raise TypeError("right must be a band-row DataFrame or None "
@@ -283,33 +284,33 @@ def lsh_candidate_pairs(
         sized, pairs, star = _self_guard(bands, ("band", "bh"), max_bucket)
         over = sized.where(F.col("_n") > max_bucket)
     else:
-        # tag the sides and size both in one window: nl, nr, min ids
-        w = Window.partitionBy("band", "bh")
-        is_r = F.col("_r")
-        sized = (
-            bands.select("id", "band", "bh", F.lit(False).alias("_r"))
-            .unionByName(
-                right.select("id", "band", "bh", F.lit(True).alias("_r"))
-            )
-            .withColumn("_nl", F.count(F.when(~is_r, 1)).over(w))
-            .withColumn("_nr", F.count(F.when(is_r, 1)).over(w))
-            .withColumn("_minl", F.min(F.when(~is_r, F.col("id"))).over(w))
-            .withColumn("_minr", F.min(F.when(is_r, F.col("id"))).over(w))
+        # per-bucket (size, min id) summaries: map-side partial aggregation,
+        # one row per (band, bh) — the summary join is bucket-count sized
+        lsum = bands.groupBy("band", "bh").agg(
+            F.count("*").alias("_nl"), F.min("id").alias("_minl")
         )
-        size = F.col("_nl") * F.col("_nr")
-        fits = sized.where(size <= max_bucket)
-        over = sized.where(size > max_bucket)
-        pairs = _bucket_pairs(
-            fits.where(~is_r).select("id", "band", "bh"),
-            fits.where(is_r).select("id", "band", "bh"),
-            False,
+        rsum = right.groupBy("band", "bh").agg(
+            F.count("*").alias("_nr"), F.min("id").alias("_minr")
+        )
+        sized = lsum.join(rsum, ["band", "bh"])
+        ok = sized.where(F.col("_nl") * F.col("_nr") <= max_bucket)
+        pairs = (
+            bands.join(ok.select("band", "bh"), ["band", "bh"])
+            .select("band", "bh", F.col("id").alias("a"))
+            .join(
+                right.select("band", "bh", F.col("id").alias("b")),
+                ["band", "bh"],
+            )
+            .select("a", "b")
         )
         # each side's members pair with the other side's min id
-        star = over.where(~is_r).select(
-            F.col("id").alias("a"), F.col("_minr").alias("b")
-        ).union(
-            over.where(is_r).select(
-                F.col("_minl").alias("a"), F.col("id").alias("b")
+        over = sized.where(F.col("_nl") * F.col("_nr") > max_bucket)
+        star = (
+            bands.join(over.select("band", "bh", "_minr"), ["band", "bh"])
+            .select(F.col("id").alias("a"), F.col("_minr").alias("b"))
+            .union(
+                right.join(over.select("band", "bh", "_minl"), ["band", "bh"])
+                .select(F.col("_minl").alias("a"), F.col("id").alias("b"))
             )
         )
     if oversize_mode == "star":
@@ -1086,10 +1087,11 @@ def containment_pairs(
     it is the cross form (``a`` from ``df``, ``b`` from ``right``, ids
     need not be disjoint; both sides run the same fingerprint kernel).
     ``denom="min"`` (default) scores ``shared / min(nfp_a, nfp_b)``, the
-    symmetric convention; ``"left"`` scores ``shared / nfp_a``, the
-    fraction of ``a``'s fingerprints found in ``b`` — decontamination at
-    CONTAINMENT level ("how much of this eval item appears inside that
-    training document?"; run the EVAL slice as ``df``).
+    symmetric convention and the self form's only one; in the cross
+    form ``"left"`` scores ``shared / nfp_a``, the fraction of ``a``'s
+    fingerprints found in ``b`` — decontamination at CONTAINMENT level
+    ("how much of this eval item appears inside that training
+    document?"; run the EVAL slice as ``df``).
 
     ``max_fp_docs`` is the hot-fp guard (same rationale as
     ``lsh_candidate_pairs``): site-wide boilerplate fingerprints would
@@ -1107,6 +1109,9 @@ def containment_pairs(
     """
     if denom not in ("left", "min"):
         raise ValueError(f"denom must be 'left' or 'min', got {denom!r}")
+    if right is None and denom != "min":
+        raise ValueError("the self form scores over min(nfp_a, nfp_b) only; "
+                         "denom='left' needs right")
     from ..functions.text import (
         document_fingerprints,
         document_fingerprints_portable,

@@ -5,26 +5,29 @@
   scan parallelizes and only per-partition top-k candidates reach the
   driver (Spark's ``orderBy().limit()`` = TakeOrdered: partition-local
   top-k then a k-way driver merge — no global sort shuffle).
-* :func:`srp_signatures` / :func:`ann_lsh_topk_batch` — the scale path:
-  signed random projections (SRP-LSH). Each vector gets ``n_tables``
-  bucket ids from seeded fixed hyperplanes (vectorized numpy matmul in
-  one ``mapInArrow`` pass); each query probes only its buckets and
-  re-ranks candidates exactly. Recall is tunable via (n_planes,
-  n_tables); the tests measure it against brute force.
+* :func:`srp_signatures` / :func:`ann_lsh_topk` — the scale path: signed
+  random projections (SRP-LSH). Each vector gets ``n_tables`` bucket ids
+  from seeded fixed hyperplanes (vectorized numpy matmul in one
+  ``mapInArrow`` pass); the query probes only its buckets and re-ranks
+  candidates exactly. Recall is tunable via (n_planes, n_tables); the
+  tests measure it against brute force.
 * :func:`embedding_near_dup_pairs` — embedding near-duplicate candidates
   via shared SRP buckets, exact-verified, for embedding-cosine near-dup
   detection in dedup pipelines.
 * :func:`train_ivf_centroids` / :func:`build_ivf_index` /
-  :func:`ann_ivf_topk_batch` — the IVF scale path: a sample-trained
-  k-means coarse quantizer, a zero-shuffle assignment pass producing the
+  :func:`ann_ivf_topk` — the IVF scale path: a sample-trained k-means
+  coarse quantizer, a zero-shuffle assignment pass producing the
   inverted file (persistable as cell-partitioned parquet), and a
   partition-pruned probe that touches only ``nprobe/n_cells`` of the
   data.
-* Both ANN probes take a whole TABLE of queries in one job (join queries
-  to their probe cells/buckets, exact re-rank in the Arrow cosine kernel
-  :func:`_pairwise_cosine_map`, map-side WindowGroupLimit top-k per
-  query). :func:`ann_lsh_topk` / :func:`ann_ivf_topk` are the same probes
-  over a one-row query table.
+* :func:`ann_ivf_topk_batch` / :func:`ann_lsh_topk_batch` — the batch
+  probe surface: top-k for a whole TABLE of queries in one job (join
+  queries to their probe cells/buckets, exact re-rank in the Arrow
+  cosine kernel :func:`_pairwise_cosine_map`, map-side WindowGroupLimit
+  top-k per query) instead of one Spark job per query vector. The
+  single-query probes stay separate because one query is cheaper as a
+  driver-side probe plus one JVM job than as a one-row batch (a Python
+  task, a join and a shuffle).
 """
 
 from __future__ import annotations
@@ -267,14 +270,6 @@ def srp_bucket_stats(index: DataFrame) -> DataFrame:
     )
 
 
-def _one_query(spark, query) -> DataFrame:
-    """A one-row query table (qid 0, qvec array<double>) in one partition,
-    so each query-side kernel runs one Python task, not one per core."""
-    return spark.createDataFrame(
-        [(0, [float(x) for x in query])], "qid bigint, qvec array<double>"
-    ).coalesce(1)
-
-
 def ann_lsh_topk(
     df: DataFrame,
     id_col: str,
@@ -285,12 +280,32 @@ def ann_lsh_topk(
     n_tables: int = 8,
     index: DataFrame | None = None,
 ) -> DataFrame:
-    """Approximate top-k for one query vector: :func:`ann_lsh_topk_batch`
-    over a one-row query table. Returns (id, cosine), best first."""
-    return ann_lsh_topk_batch(
-        df, id_col, vec_col, _one_query(df.sparkSession, query), "qid",
-        "qvec", len(query), k, n_planes, n_tables, index,
-    ).orderBy("rank").select("id", "cosine")
+    """Approximate top-k for one query vector: SRP buckets prune the
+    scan, exact cosine re-ranks the candidates. Returns (id, cosine),
+    best first.
+
+    The query's buckets are hashed on the driver and the candidates are
+    a semi-join on them, so one query costs one JVM job with no Python
+    task on the query side; :func:`ann_lsh_topk_batch` is the shape for
+    many queries. Pass ``index`` (from :func:`build_srp_index`, same
+    n_planes/n_tables) to reuse a persisted signature table instead of
+    recomputing signatures per query."""
+    dim = len(query)
+    sigs = (
+        index
+        if index is not None
+        else srp_signatures(df, id_col, vec_col, dim, n_planes, n_tables)
+    )
+    qb = srp_bucket_ids(np.asarray([query], dtype=np.float64), dim, n_planes, n_tables)
+    probe = [(int(t), int(qb[0, t])) for t in range(n_tables)]
+    probe_df = sigs.sparkSession.createDataFrame(probe, "table int, bucket bigint")
+    cand_ids = (
+        sigs.join(F.broadcast(probe_df), ["table", "bucket"]).select("id").distinct()
+    )
+    cands = df.join(
+        cand_ids, df[id_col].cast("bigint") == cand_ids["id"], "left_semi"
+    )
+    return cosine_topk(cands, id_col, vec_col, query, k)
 
 
 # ---------------------------------------------------------------------------
@@ -549,26 +564,36 @@ def ann_ivf_topk(
     n_cells: int = 16,
     index: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k for one query vector: :func:`ann_ivf_topk_batch`
-    over a one-row query table. Returns (id, cosine), best first.
-    Without ``centroids``/``index`` both are built from ``df`` first."""
+    """IVF approximate top-k for one query vector: probe the ``nprobe``
+    cells whose centroids are nearest the query, exact cosine re-rank
+    inside them. Returns (id, cosine), best first. Without
+    ``centroids``/``index`` both are built from ``df`` first.
+
+    The probe is a pure filter on the index's ``cell`` column — a
+    partition-pruned read when the index was persisted via
+    :func:`build_ivf_index(path=...)` — followed by TakeOrdered; no join,
+    no shuffle, no Python task, so one query costs one JVM job
+    (:func:`ann_ivf_topk_batch` is the shape for many queries). Recall
+    is tunable via nprobe/n_cells (nprobe == n_cells degenerates to
+    exact brute force)."""
     dim = len(query)
     if centroids is None:
         centroids = train_ivf_centroids(df, id_col, vec_col, dim, n_cells)
     if index is None:
         index = build_ivf_index(df, id_col, vec_col, dim, centroids)
-    return ann_ivf_topk_batch(
-        _one_query(df.sparkSession, query), "qid", "qvec", index, centroids,
-        k, nprobe,
-    ).orderBy("rank").select("id", "cosine")
+    q = np.asarray(query, dtype=np.float64)
+    scores = centroids @ q - 0.5 * (centroids * centroids).sum(axis=1)
+    probe = [int(c) for c in np.argsort(-scores)[:nprobe]]
+    cands = index.where(F.col("cell").isin(probe))
+    return cosine_topk(cands, "id", "vec", query, k)
 
 
 def _topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
     """(qid, qvec, id, vec) candidate pairs -> per-query top-k (qid, id,
     cosine, rank), best first, deterministic ties. The exact re-rank runs
     in the Arrow fold kernel :func:`_pairwise_cosine_map` (bit-identical
-    to a JVM zip_with/aggregate cosine, ~10x faster on candidate
-    volumes). Catalyst plans the rank filter as WindowGroupLimit
+    to a JVM zip_with/aggregate cosine in double, ~10x faster on
+    candidate volumes). Catalyst plans the rank filter as WindowGroupLimit
     (map-side bottom-k per qid BEFORE the exchange), so a query with a
     huge candidate set never ships more than k rows per map task."""
     from pyspark.sql.window import Window
@@ -838,13 +863,11 @@ def _pairwise_cosine_map(
     min_cosine: float | None,
 ) -> DataFrame:
     """(id1, id2, cosine) for a pair table carrying both vectors, via a
-    vectorized Arrow kernel that replicates the exact IEEE ops of the
-    JVM ``zip_with``/``aggregate`` cosine: ``acc = 0.0; acc += a_k*b_k``
-    for ascending k, each product in the type the JVM gives it (float
-    when both elements are float, else double) and summed in double,
-    both norms folded the same way, ``sqrt``, then one divide by
-    ``greatest(na*nb, 1e-12)`` — cosines are bit-identical to the
-    expression over the same columns, at ~10x the throughput (it is
+    vectorized Arrow kernel that replicates the exact IEEE op order of
+    the JVM ``zip_with``/``aggregate`` cosine in double: ``acc = 0;
+    acc += a_k*b_k`` for ascending k, both norms folded the same way,
+    ``sqrt``, then one divide by ``greatest(na*nb, 1e-12)`` — cosines
+    are bit-identical, at ~10x the throughput (the expression form is
     interpreted per pair). ``min_cosine=None`` keeps every pair (the
     re-rank shape); with a threshold only surviving pairs are emitted.
     Pairs with NULL or ragged vectors are dropped — the expression form
@@ -867,37 +890,44 @@ def _pairwise_cosine_map(
                 va = va.combine_chunks()
             if isinstance(vb, pa.ChunkedArray):
                 vb = vb.combine_chunks()
-            la, lb = (
-                np.asarray(pc.fill_null(pc.list_value_length(v), -1).to_numpy(
+            la = np.asarray(
+                pc.fill_null(pc.list_value_length(va), -1).to_numpy(
                     zero_copy_only=False
-                ))
-                for v in (va, vb)
+                )
+            )
+            lb = np.asarray(
+                pc.fill_null(pc.list_value_length(vb), -1).to_numpy(
+                    zero_copy_only=False
+                )
             )
             # JVM semantics: NULL vectors, ragged pairs, or NULL elements
             # make the fold NULL -> dropped
             ok = (la == lb) & (la > 0)
             if va.flatten().null_count or vb.flatten().null_count:
-                for v in (va, vb):
-                    ok &= np.asarray([
-                        v[i].is_valid and None not in v[i].as_py()
-                        for i in range(n)
-                    ])
+                valid_a = np.asarray([
+                    va[i].is_valid and None not in va[i].as_py() for i in range(n)
+                ])
+                valid_b = np.asarray([
+                    vb[i].is_valid and None not in vb[i].as_py() for i in range(n)
+                ])
+                ok &= valid_a & valid_b
             if not ok.any():
                 continue
             for d in np.unique(la[ok]):
                 sel = ok & (la == d)
                 idx = np.flatnonzero(sel)
-
-                def matrix(v):
-                    x = v.take(pa.array(idx)).flatten().to_numpy(
+                A = np.asarray(
+                    va.take(pa.array(idx)).flatten().to_numpy(
                         zero_copy_only=False
-                    )
-                    # float elements stay float: the JVM multiplies two
-                    # floats in float and widens only the product
-                    t = np.float32 if x.dtype == np.float32 else np.float64
-                    return np.asarray(x, dtype=t).reshape(len(idx), int(d))
-
-                A, B = matrix(va), matrix(vb)
+                    ),
+                    dtype=np.float64,
+                ).reshape(len(idx), int(d))
+                B = np.asarray(
+                    vb.take(pa.array(idx)).flatten().to_numpy(
+                        zero_copy_only=False
+                    ),
+                    dtype=np.float64,
+                ).reshape(len(idx), int(d))
                 dot = np.zeros(len(idx))
                 na2 = np.zeros(len(idx))
                 nb2 = np.zeros(len(idx))
@@ -943,9 +973,7 @@ def embedding_near_dup_pairs(
     oversize_mode: str = "star",
 ) -> DataFrame:
     """Embedding-cosine near-dup candidate pairs via shared SRP buckets,
-    exact-verified in the Arrow cosine kernel :func:`_pairwise_cosine_map`
-    (bit-identical to the JVM ``zip_with``/``aggregate`` fold): (a, b,
-    cosine).
+    exact-verified JVM-side: (a, b, cosine).
 
     Hot-bucket guard (``max_bucket``/``oversize_mode``): mass-identical
     embeddings — boilerplate pages embedded identically, zero vectors
@@ -976,9 +1004,17 @@ def embedding_near_dup_pairs(
     )
     va = vecs.select(F.col("vid").alias("a"), F.col("vec").alias("va"))
     vb = vecs.select(F.col("vid").alias("b"), F.col("vec").alias("vb"))
-    return _pairwise_cosine_map(
-        cands.join(va, "a").join(vb, "b"), "a", "va", "b", "vb",
-        float(min_cosine),
+    dot = F.aggregate(
+        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    na = F.sqrt(F.aggregate("va", F.lit(0.0), lambda acc, x: acc + x * x))
+    nb = F.sqrt(F.aggregate("vb", F.lit(0.0), lambda acc, x: acc + x * x))
+    return (
+        cands.join(va, "a")
+        .join(vb, "b")
+        .withColumn("cosine", (dot / (F.greatest(na * nb, F.lit(1e-12)))).cast("double"))
+        .where(F.col("cosine") >= min_cosine)
+        .select("a", "b", "cosine")
     )
 
 
@@ -1079,9 +1115,8 @@ def semantic_dedup(
 
     Candidate generation is the scale knob: the default routes through
     :func:`embedding_near_dup_pairs` (shared-SRP-bucket candidates,
-    exact cosine verify in the Arrow kernel — candidates stay
-    bucket-bounded at 100-TB corpus sizes; raise ``n_tables`` to push
-    pair recall up);
+    exact JVM cosine verify — candidates stay bucket-bounded at 100-TB
+    corpus sizes; raise ``n_tables`` to push pair recall up);
     ``exact=True`` swaps in the all-pairs :func:`cosine_pairs_exact`
     graph — O(n²), the oracle contract (the ``semantic_dedup_embeddings``
     driver query gates exactly this composition). Either way the

@@ -1,8 +1,9 @@
 """Cross-corpus near-dup (operators/dedup.py::near_dup_pairs_between):
 equality with the exact cross-Jaccard all-pairs on disjoint slices,
 self-identity when both sides are the same corpus, the product-cap
-hot-bucket guard, and the self form of each pair family equal to its
-cross form on (X, X) with ``a < b``."""
+hot-bucket guard, the self form of each pair family equal to its cross
+form on (X, X) with ``a < b``, and the self containment form's single
+scoring rule."""
 
 import os
 
@@ -120,3 +121,11 @@ def test_self_form_equals_cross_on_same_corpus(halves, family):
     )
     assert got == want
     assert got, "fixture must contain pairs"
+
+
+def test_self_containment_scores_over_min_only(halves):
+    """The self form has one scoring rule: denom='left' needs a right
+    table (in the self form "left" would only mean "the smaller id")."""
+    docs, _, _ = halves
+    with pytest.raises(ValueError, match="denom"):
+        containment_pairs(docs, "doc_id", "text", denom="left")

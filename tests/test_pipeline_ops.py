@@ -246,42 +246,6 @@ def test_embedding_near_dup_pairs(spark, emb):
     assert {(j, 100 + j) for j in range(5)} <= got
 
 
-@pytest.mark.parametrize("max_bucket", [None, 4096, 2])
-def test_embedding_near_dup_pairs_matches_jvm_fold(spark, emb, max_bucket):
-    """The Arrow cosine verify gives the same (a, b, cosine) rows, bit
-    for bit, as the JVM zip_with/aggregate fold over the same float
-    columns, with the hot-bucket guard off, idle and firing."""
-    from pyspark.sql import functions as F
-
-    from sprout_spark.operators.dedup import lsh_candidate_pairs
-    from sprout_spark.operators.similarity import srp_signatures
-
-    kw = dict(min_cosine=0.2, max_bucket=max_bucket)
-    got = embedding_near_dup_pairs(emb, "vec_id", "embedding", dim=32, **kw)
-    sigs = srp_signatures(emb, "vec_id", "embedding", 32, 12, 8)
-    cands = lsh_candidate_pairs(
-        sigs.select("id", F.col("table").alias("band"),
-                    F.col("bucket").alias("bh")),
-        max_bucket=max_bucket, n_bands=8,
-    )
-    va = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
-    vb = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate("va", F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate("vb", F.lit(0.0), lambda acc, x: acc + x * x))
-    want = (
-        cands.join(va, "a").join(vb, "b")
-        .withColumn("cosine",
-                    (dot / F.greatest(na * nb, F.lit(1e-12))).cast("double"))
-        .where(F.col("cosine") >= 0.2)
-        .select("a", "b", "cosine")
-    )
-    rows = sorted(tuple(r) for r in got.collect())
-    assert rows == sorted(tuple(r) for r in want.collect())
-    assert len(rows) >= 5
-
-
 def test_cosine_pairs_exact_mixed_dims_and_nulls(spark, monkeypatch):
     """The broadcast cosine kernel must reproduce the JVM fold's edge
     semantics: vectors only pair within their own length group (zip_with
