@@ -100,6 +100,53 @@ def _shingle_hashes(
 _U64_SHINGLE_MULT = np.uint64(0x100000001B3)  # FNV-style odd multiplier
 
 
+def _check_minhash(n_hashes: int, band_r: int, shingle_k: int) -> None:
+    if n_hashes > _MAX_HASHES:
+        raise ValueError(f"n_hashes must be <= {_MAX_HASHES}")
+    if n_hashes % band_r:
+        raise ValueError("band_r must divide n_hashes")
+    if shingle_k < 1:
+        raise ValueError("shingle_k must be >= 1")
+
+
+def _minhash_bands(
+    text: pa.Array, n_hashes: int, band_r: int, shingle_k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The MinHash batch kernel: text → tokens → (optional word-k-gram
+    shingles) → signature → band hashes. Returns (kept bool per row,
+    band hashes int64 (n_kept, n_bands)); rows with no tokens (or fewer
+    than ``shingle_k``) are not kept.
+
+    Zero-token docs are dropped entirely: an all-sentinel signature
+    would collide every such doc in every bucket (quadratic candidate
+    blowup) and "empty ~ empty" is not a meaningful near-dup claim."""
+    n_bands = n_hashes // band_r
+    h, offsets = _tokenize_batch(text)
+    if shingle_k > 1:
+        h, offsets = _shingle_hashes(h, offsets, shingle_k)
+    kept = np.diff(offsets) > 0
+    n = int(kept.sum())
+    if n == 0:
+        return kept, np.empty((0, n_bands), np.int64)
+    # the signature matrix lives in a flat byte buffer with the
+    # kernel's 16 bytes of slack, so the band hash reads it in place
+    sig_buf = np.zeros(n * n_hashes * 8 + 16, dtype=np.uint8)
+    sig = sig_buf[:-16].view(np.uint64).reshape(n, n_hashes)
+    starts = offsets[:-1][kept]
+    for i in range(n_hashes):
+        g = _A[i] * h + _B[i]
+        sig[:, i] = np.minimum.reduceat(g, starts)
+    # band hash: murmur over the r consecutive 8-byte lanes
+    width = band_r * 8
+    bh = murmur3_64_flat(
+        sig_buf,
+        np.arange(n * n_bands, dtype=np.int64) * width,
+        np.full(n * n_bands, width, dtype=np.int64),
+        7,
+    ).astype(np.int64)
+    return kept, bh.reshape(n, n_bands)
+
+
 def minhash_band_rows(
     df: DataFrame,
     id_col: str,
@@ -108,71 +155,43 @@ def minhash_band_rows(
     band_r: int = 4,
     shingle_k: int = 1,
 ) -> DataFrame:
-    """One ``mapInArrow`` pass: text → tokens → (optional word-k-gram
-    shingles) → minhash signature → band hashes. Output: (id bigint,
-    band int, bh bigint), all NOT NULL — one row per band. Docs with a
-    NULL id drop before the kernel: they can never be a pair partner
-    (the exact-verify join never matches a NULL id). The declared
-    NOT NULL lets the optimizer skip the null filters it would infer
-    below a self-join, so both branches of :func:`lsh_candidate_pairs`
-    read one reused exchange and the kernel runs once.
+    """One ``mapInArrow`` pass of :func:`_minhash_bands`. Output: (id
+    bigint, band int, bh bigint), all NOT NULL — one row per band. Docs
+    with a NULL id drop before the kernel: they can never be a pair
+    partner (the exact-verify join never matches a NULL id). The
+    declared NOT NULL lets the optimizer skip the null filters it would
+    infer below a self-join, so both branches of
+    :func:`lsh_candidate_pairs` read one reused exchange and the kernel
+    runs once.
 
     ``shingle_k > 1`` minhashes the set of k-token SHINGLES instead of
     the token set — the standard near-dup construction for natural text
     (token-set Jaccard ignores word order and length; shingle Jaccard
     does not). Docs with fewer than ``shingle_k`` tokens drop (no
-    shingles → never a candidate), consistent with the zero-token
-    policy below.
+    shingles → never a candidate), like zero-token docs.
     """
-    if n_hashes > _MAX_HASHES:
-        raise ValueError(f"n_hashes must be <= {_MAX_HASHES}")
-    if n_hashes % band_r:
-        raise ValueError("band_r must divide n_hashes")
-    if shingle_k < 1:
-        raise ValueError("shingle_k must be >= 1")
+    _check_minhash(n_hashes, band_r, shingle_k)
     n_bands = n_hashes // band_r
 
     def fn(batches):
         for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            arr = batch.column(1)
-            if len(ids) == 0:
+            if batch.num_rows == 0:
                 continue
-            h, offsets = _tokenize_batch(arr)
-            if shingle_k > 1:
-                h, offsets = _shingle_hashes(h, offsets, shingle_k)
-            nonempty = np.diff(offsets) > 0
-            if not nonempty.any():
+            kept, bh = _minhash_bands(
+                batch.column(1), n_hashes, band_r, shingle_k
+            )
+            if not len(bh):
                 continue
-            # zero-token docs are dropped entirely: an all-sentinel
-            # signature would collide every such doc in every bucket
-            # (quadratic candidate blowup) and "empty ~ empty" is not a
-            # meaningful near-dup claim
-            ids = ids[nonempty]
-            n = len(ids)
-            # the signature matrix lives in a flat byte buffer with the
-            # kernel's 16 bytes of slack, so the band hash reads it in place
-            sig_buf = np.zeros(n * n_hashes * 8 + 16, dtype=np.uint8)
-            sig = sig_buf[:-16].view(np.uint64).reshape(n, n_hashes)
-            starts = offsets[:-1][nonempty]
-            for i in range(n_hashes):
-                g = _A[i] * h + _B[i]
-                sig[:, i] = np.minimum.reduceat(g, starts)
-            # band hash: murmur over the r consecutive 8-byte lanes
-            width = band_r * 8
-            bh = murmur3_64_flat(
-                sig_buf,
-                np.arange(n * n_bands, dtype=np.int64) * width,
-                np.full(n * n_bands, width, dtype=np.int64),
-                7,
-            ).astype(np.int64)
+            ids = batch.column(0).to_numpy(zero_copy_only=False)
+            ids = ids.astype(np.int64)[kept]
             yield pa.RecordBatch.from_pydict(
                 {
                     "id": pa.array(np.repeat(ids, n_bands), pa.int64()),
                     "band": pa.array(
-                        np.tile(np.arange(n_bands, dtype=np.int32), n), pa.int32()
+                        np.tile(np.arange(n_bands, dtype=np.int32), len(ids)),
+                        pa.int32(),
                     ),
-                    "bh": pa.array(bh, pa.int64()),
+                    "bh": pa.array(bh.ravel(), pa.int64()),
                 }
             )
 
@@ -354,19 +373,35 @@ def lsh_bucket_stats(band_rows: DataFrame) -> DataFrame:
 
 def token_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, tokens array<string>) with distinct whitespace tokens (JVM)."""
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.array_remove(
+    return _sets(df, id_col, text_col, 1)
+
+
+def _set_col(text_col: str, k: int):
+    """The verify's token-set column: distinct whitespace tokens for
+    ``k == 1``, else distinct word-k-gram shingles (see
+    :func:`shingle_sets`)."""
+    if k == 1:
+        return F.array_remove(
             F.array_distinct(F.split(F.col(text_col), r"\s+")), ""
-        ).alias("tokens"),
+        )
+    t = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
+    toks = F.when(F.length(t) == 0, F.array()).otherwise(F.split(t, r"\s+"))
+    n = F.size(toks)
+    grams = F.when(n < k, F.array()).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), n - (k - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+        )
     )
+    return F.array_distinct(grams)
 
 
 def _sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """Token sets for ``k == 1``, else word-k-gram shingle sets."""
-    if k == 1:
-        return token_sets(df, id_col, text_col)
-    return shingle_sets(df, id_col, text_col, k)
+    return df.select(
+        F.col(id_col).cast("bigint").alias("id"),
+        _set_col(text_col, k).alias("tokens"),
+    )
 
 
 def _nonempty(df: DataFrame, text_col: str) -> DataFrame:
@@ -380,19 +415,7 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame
     pure JVM (``transform(sequence)`` windows joined by single spaces) —
     the exact-verify companion to ``minhash_band_rows(shingle_k=k)``.
     Docs with fewer than k tokens get an empty array."""
-    t = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
-    toks = F.when(F.length(t) == 0, F.array()).otherwise(F.split(t, r"\s+"))
-    n = F.size(toks)
-    grams = F.when(n < k, F.array()).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    )
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.array_distinct(grams).alias("tokens"),
-    )
+    return _sets(df, id_col, text_col, k)
 
 
 def _encode_token_side(tbl) -> tuple | None:
@@ -422,62 +445,137 @@ def _encode_token_side(tbl) -> tuple | None:
     return ids, flat, offsets - offsets[0]
 
 
-def _verify_jaccard_broadcast(
-    candidates: DataFrame, ta: DataFrame, tb: DataFrame, threshold: float
-):
-    """Exact Jaccard over broadcast dictionary-encoded token SETS: only
-    the 16-byte candidate pairs cross the Python boundary; per-pair
-    intersection sizes come from one global searchsorted over pair-major
-    sorted code arrays (fully vectorized). Returns None when the inputs
-    disqualify the path (caller falls back to the join plan).
-
-    Exactness: dictionary encoding is injective, per-doc codes are
-    deduplicated (array_intersect/array_union are set-semantic), and the
-    final ``inter / union`` is the same int→double IEEE division the JVM
-    expression performs — values are bit-identical."""
+def _token_index(tables: list) -> tuple | None:
+    """Per-doc sorted DISTINCT dictionary codes for one or two token
+    tables, under one dictionary so codes compare across them: (sides,
+    vocab) with each side ``(ids, flat_codes, starts, lens)``, doc ``i``
+    of a side holding ``flat_codes[starts[i]:starts[i] + lens[i]]``;
+    None when a table disqualifies the encoding
+    (:func:`_encode_token_side`). Dictionary encoding is injective and
+    the per-doc codes are deduplicated, as array_intersect/array_union
+    are set-semantic."""
     import pyarrow.compute as pc
 
-    same = ta is tb
-    sides = []
-    for t in [ta] if same else [ta, tb]:
-        tab = fastpath.collect_at_most("verify_jaccard.docs", t)
-        enc = None if tab is None else _encode_token_side(tab)
-        if enc is None:
-            return None
-        sides.append(enc)
-    (ids_a, flat_a, off_a), (ids_b, flat_b, off_b) = sides[0], sides[-1]
-    # one dictionary over both sides, so codes compare across them
-    flat = flat_a if same else pa.concat_arrays([flat_a, flat_b])
-    enc = pc.dictionary_encode(flat)
+    encs = [_encode_token_side(t) for t in tables]
+    if any(e is None for e in encs):
+        return None
+    enc = pc.dictionary_encode(pa.concat_arrays([e[1] for e in encs]))
     codes = np.asarray(enc.indices.to_numpy(zero_copy_only=False), np.int64)
-    codes_a = codes[: len(flat_a)]
-    codes_b = codes_a if same else codes[len(flat_a):]
-    vocab = len(enc.dictionary)
+    sides, pos = [], 0
+    for ids, flat, off in encs:
+        side_codes = codes[pos:pos + len(flat)]
+        pos += len(flat)
+        sets = [
+            np.unique(side_codes[off[i]:off[i + 1]]) for i in range(len(ids))
+        ]
+        lens = np.array([len(u) for u in sets], np.int64)
+        starts = np.concatenate(([0], np.cumsum(lens)[:-1])).astype(np.int64)
+        uniq = np.concatenate(sets) if sets else np.empty(0, np.int64)
+        sides.append((ids, uniq, starts, lens))
+    return sides, len(enc.dictionary)
 
-    def build(ids, codes, off):
-        # per-doc sorted DISTINCT codes (set semantics) + id -> slice map
-        n = len(ids)
-        sets, starts, lens = [], np.empty(n, np.int64), np.empty(n, np.int64)
-        pos = 0
-        for i in range(n):
-            u = np.unique(codes[off[i]:off[i + 1]])
-            sets.append(u)
-            starts[i], lens[i] = pos, len(u)
-            pos += len(u)
-        flat = (
-            np.concatenate(sets) if sets else np.empty(0, np.int64)
+
+# gathered token entries per verify chunk: bounds the kernel's scratch
+# arrays (about a dozen int64 copies of this many entries, ~3 MB)
+# whatever the pair count
+_VERIFY_CHUNK = 1 << 15
+
+
+def _jaccard(ra, rb, side_a, side_b, vocab: int) -> np.ndarray:
+    """The exact Jaccard kernel: float64 Jaccard of each doc pair
+    (``ra[i]`` of ``side_a``, ``rb[i]`` of ``side_b``; sides as
+    :func:`_token_index` gives them), in chunks of at most
+    ``_VERIFY_CHUNK`` gathered entries (at least one pair each).
+
+    Per-pair intersection sizes come from one searchsorted over
+    pair-major sorted code arrays (each pair's codes offset by
+    ``pair * vocab``, so both gathers are globally sorted); the final
+    ``inter / union`` is the same int→double IEEE division the JVM
+    expression performs, so values are bit-identical, and an empty pair
+    gives NaN (0/0), which compares false against any threshold like
+    the JVM's."""
+    _, fa, sa, la = side_a
+    _, fb, sb, lb = side_b
+    lena, lenb = la[ra], lb[rb]
+    ends = np.cumsum(lena + lenb)
+    out = np.empty(len(ra), np.float64)
+    lo = 0
+    while lo < len(ra):
+        base = ends[lo - 1] if lo else 0
+        hi = max(
+            lo + 1, int(np.searchsorted(ends, base + _VERIFY_CHUNK, "right"))
         )
-        index = {int(ids[i]): i for i in range(n)}
-        return flat, starts, lens, index
+        out[lo:hi] = _jaccard_chunk(
+            fa, sa[ra[lo:hi]], lena[lo:hi], fb, sb[rb[lo:hi]], lenb[lo:hi],
+            vocab,
+        )
+        lo = hi
+    return out
 
-    side_a = build(ids_a, codes_a, off_a)
-    side_b = side_a if same else build(ids_b, codes_b, off_b)
+
+def _jaccard_chunk(fa, sa, lena, fb, sb, lenb, vocab: int) -> np.ndarray:
+    pair = np.arange(len(lena), dtype=np.int64)
+
+    def gather(flat, starts, lens_):
+        tot = int(lens_.sum())
+        seg = np.repeat(pair, lens_)
+        excl = np.concatenate(([0], np.cumsum(lens_)[:-1])).astype(np.int64)
+        local = np.arange(tot, dtype=np.int64) - np.repeat(excl, lens_)
+        vals = flat[np.repeat(starts, lens_) + local]
+        return vals + seg * vocab, excl
+
+    a_ent, off_a = gather(fa, sa, lena)
+    b_ent, _ = gather(fb, sb, lenb)
+    if len(a_ent) and len(b_ent):
+        idx = np.searchsorted(b_ent, a_ent)
+        idx_c = np.minimum(idx, len(b_ent) - 1)
+        hits = (b_ent[idx_c] == a_ent) & (idx < len(b_ent))
+        inter = np.add.reduceat(
+            np.concatenate((hits, [False])),
+            np.minimum(off_a, len(hits)),
+        ).astype(np.int64)
+        inter[lena == 0] = 0
+    else:
+        inter = np.zeros(len(lena), np.int64)
+    union = lena + lenb - inter
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return inter / union
+
+
+def _verify_jaccard_broadcast(
+    candidates: DataFrame, ta: DataFrame, tb: DataFrame, threshold: float,
+    collected: pa.Table | None = None,
+):
+    """Exact Jaccard over broadcast dictionary-encoded token SETS: only
+    the 16-byte candidate pairs cross the Python boundary, and the
+    :func:`_jaccard` kernel verifies each batch. Returns None when the
+    inputs disqualify the path (caller falls back to the join plan).
+    ``collected`` is the self form's token table when the caller already
+    holds it, so it is not collected a second time."""
+    if collected is not None:
+        if not fastpath.within("verify_jaccard.docs", collected.num_rows):
+            return None
+        tabs = [collected]
+    else:
+        tabs = []
+        for t in [ta] if ta is tb else [ta, tb]:
+            tabs.append(fastpath.collect_at_most("verify_jaccard.docs", t))
+            if tabs[-1] is None:
+                return None
+    index = _token_index(tabs)
+    if index is None:
+        return None
+    sides, vocab = index
+    side_a, side_b = sides[0], sides[-1]
+    lookup = [{int(x): i for i, x in enumerate(s[0])} for s in sides]
     spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast((side_a, side_b, int(vocab)))
+    bc = spark.sparkContext.broadcast(
+        (side_a, side_b, lookup[0], lookup[-1], int(vocab))
+    )
     thr = float(threshold)
 
     def kernel(batches):
-        (fa, sa, la, ixa), (fb, sb, lb, ixb), V = bc.value
+        side_a, side_b, ixa, ixb, vocab = bc.value
         for batch in batches:
             aa = batch.column(0).to_numpy(zero_copy_only=False)
             bb = batch.column(1).to_numpy(zero_copy_only=False)
@@ -493,42 +591,13 @@ def _verify_jaccard_broadcast(
             ok = (ra >= 0) & (rb >= 0)  # inner-join semantics
             if not ok.any():
                 continue
-            ra, rb = ra[ok], rb[ok]
-            pa_ids, pb_ids = aa[ok], bb[ok]
-            m = len(ra)
-            lena, lenb = la[ra], lb[rb]
-            pair = np.arange(m, dtype=np.int64)
-            # pair-major gather of each side's sorted codes, offset by
-            # pair*V so both arrays are globally sorted
-            def gather(flat, starts, lens_):
-                tot = int(lens_.sum())
-                seg = np.repeat(pair, lens_)
-                excl = np.concatenate(([0], np.cumsum(lens_)[:-1]))
-                local = np.arange(tot, dtype=np.int64) - np.repeat(excl, lens_)
-                vals = flat[np.repeat(starts, lens_) + local]
-                return vals + seg * V, excl
-            Aent, offA = gather(fa, sa[ra], lena)
-            Bent, _ = gather(fb, sb[rb], lenb)
-            if len(Aent) and len(Bent):
-                idx = np.searchsorted(Bent, Aent)
-                idx_c = np.minimum(idx, len(Bent) - 1)
-                hits = (Bent[idx_c] == Aent) & (idx < len(Bent))
-                inter = np.add.reduceat(
-                    np.concatenate((hits, [False])),
-                    np.minimum(offA, len(hits)),
-                ).astype(np.int64)
-                inter[lena == 0] = 0
-            else:
-                inter = np.zeros(m, np.int64)
-            union = lena + lenb - inter
-            with np.errstate(divide="ignore", invalid="ignore"):
-                j = inter / union  # same int->double IEEE divide as JVM
+            j = _jaccard(ra[ok], rb[ok], side_a, side_b, vocab)
             keep = j >= thr  # NaN (0/0) compares false, like the JVM
             if keep.any():
                 yield pa.RecordBatch.from_pydict(
                     {
-                        "a": pa.array(pa_ids[keep], pa.int64()),
-                        "b": pa.array(pb_ids[keep], pa.int64()),
+                        "a": pa.array(aa[ok][keep], pa.int64()),
+                        "b": pa.array(bb[ok][keep], pa.int64()),
                         "jaccard": pa.array(j[keep], pa.float64()),
                     }
                 )
@@ -540,12 +609,14 @@ def _verify_jaccard_broadcast(
 
 def _verify(
     cands: DataFrame, tokens_a: DataFrame, tokens_b: DataFrame,
-    threshold: float,
+    threshold: float, collected: pa.Table | None = None,
 ) -> DataFrame:
     """(a, b, jaccard) for candidate pairs at or above ``threshold``,
     ``a``'s tokens from ``tokens_a`` and ``b``'s from ``tokens_b``: the
     broadcast kernel when it qualifies, else the join plan."""
-    fast = _verify_jaccard_broadcast(cands, tokens_a, tokens_b, threshold)
+    fast = _verify_jaccard_broadcast(
+        cands, tokens_a, tokens_b, threshold, collected
+    )
     if fast is not None:
         return fast
     ta = tokens_a.select(F.col("id").alias("a"), F.col("tokens").alias("ta"))
@@ -609,8 +680,30 @@ def near_dup_pairs(
     or lightly-edited overlap that fingerprint intersection misses. Both
     sides run the SAME seeded minhash kernel, so signatures are
     comparable across tables by construction.
+
+    Plans by size (self form, ``oversize_mode`` star or drop or
+    ``max_bucket=None``): one bounded collect of (id, text, tokens); a
+    corpus within the ``near_dup_local.docs`` cap whose candidate count,
+    summed from the bucket sizes before any pair is built, fits
+    ``near_dup_local.candidates`` runs in the driver and comes back as a
+    local DataFrame — no Spark job beyond the collect. Otherwise the
+    distributed plan below runs (signature ``mapInArrow``, bucket
+    self-join, broadcast or join verify), its verify reusing the
+    collected token sets. Both plans run the same MinHash and Jaccard
+    kernels and give the same rows; caps in
+    :mod:`sprout_spark.spark.fastpath`.
     """
     sides = [_nonempty(t, text_col) for t in (df, right) if t is not None]
+    collected = None
+    if right is None and (max_bucket is None or oversize_mode in ("star", "drop")):
+        _check_minhash(n_hashes, band_r, shingle_k)
+        local = _near_dup_local(
+            sides[0], id_col, text_col, threshold, n_hashes, band_r,
+            max_bucket, oversize_mode, shingle_k,
+        )
+        if isinstance(local, DataFrame):
+            return local
+        collected = local
     bands = [
         minhash_band_rows(t, id_col, text_col, n_hashes, band_r, shingle_k)
         for t in sides
@@ -622,7 +715,112 @@ def near_dup_pairs(
     # the self form passes one token table twice: the broadcast verify
     # then encodes it once
     toks = [_sets(t, id_col, text_col, shingle_k) for t in sides]
-    return _verify(cands, toks[0], toks[-1], threshold)
+    return _verify(cands, toks[0], toks[-1], threshold, collected)
+
+
+# docs per MinHash kernel call in the driver plan
+_MINHASH_SLICE = 256
+
+
+def _near_dup_local(
+    docs: DataFrame, id_col: str, text_col: str, threshold: float,
+    n_hashes: int, band_r: int, max_bucket: int | None, oversize_mode: str,
+    shingle_k: int,
+) -> DataFrame | pa.Table | None:
+    """The self form of :func:`near_dup_pairs` run in the driver, for a
+    corpus within the ``near_dup_local.docs`` cap whose candidate count
+    fits ``near_dup_local.candidates``: the verified pairs as a local
+    DataFrame. Otherwise the (id, tokens) table it collected, for the
+    distributed plan's verify to reuse (the corpus is not collected
+    twice), or None when the corpus was over the docs cap.
+
+    Same kernels and same rows as the distributed plan: the MinHash
+    kernel over the same text, the ``_self_guard`` bucket rule over
+    (band, bh) buckets, the exact Jaccard kernel over the same JVM token
+    sets. Candidates are counted from the bucket sizes before any pair
+    is built, so the candidate cap bounds driver memory."""
+    # a NULL id is no pair partner (the distributed plan drops it before
+    # the kernel and the verify join never matches it)
+    tbl = fastpath.collect_at_most(
+        "near_dup_local.docs",
+        docs.select(
+            F.col(id_col).cast("bigint").alias("id"),
+            F.col(text_col).alias("t"),
+            _set_col(text_col, shingle_k).alias("tokens"),
+        ).where(F.col("id").isNotNull()),
+    )
+    if tbl is None:
+        return None
+    ids = tbl.column("id").to_numpy()
+    spark = docs.sparkSession
+    schema = "a bigint, b bigint, jaccard double"
+    if not len(ids):
+        return spark.createDataFrame([], schema)
+    by_id = np.argsort(ids, kind="stable")
+    sorted_ids = ids[by_id]
+    if (sorted_ids[1:] == sorted_ids[:-1]).any():
+        # duplicate ids make the distributed bucket join and verify join
+        # fan out: leave them to that plan
+        return tbl.select(["id", "tokens"])
+    # buckets hold id ranks, so a rank pair a < b is an id pair a < b and
+    # a bucket's first member is its min id
+    rank = np.empty(len(ids), np.int64)
+    rank[by_id] = np.arange(len(ids))
+    # the MinHash kernel over slices of docs, as over Arrow batches in the
+    # distributed plan: its scratch arrays grow with the slice
+    text = tbl.column("t").combine_chunks()
+    parts = [
+        _minhash_bands(text.slice(i, _MINHASH_SLICE), n_hashes, band_r, shingle_k)
+        for i in range(0, len(text), _MINHASH_SLICE)
+    ]
+    kept = np.concatenate([k for k, _ in parts])
+    bh = np.concatenate([b for _, b in parts])
+    n_bands = bh.shape[1]
+    band = np.repeat(np.arange(n_bands, dtype=np.int64), len(bh))
+    key = bh.T.ravel()
+    member = np.tile(rank[kept], n_bands)
+    order = np.lexsort((member, key, band))
+    band, key, member = band[order], key[order], member[order]
+    new = np.ones(len(key), bool)
+    new[1:] = (band[1:] != band[:-1]) | (key[1:] != key[:-1])
+    starts = np.flatnonzero(new)
+    sizes = np.diff(np.append(starts, len(key)))
+    small = sizes <= (len(ids) if max_bucket is None else max_bucket)
+    star = oversize_mode == "star"
+    n_cands = int((sizes[small] * (sizes[small] - 1) // 2).sum())
+    if star:
+        n_cands += int((sizes[~small] - 1).sum())
+    index = None
+    if fastpath.within("near_dup_local.candidates", n_cands):
+        index = _token_index([tbl])
+    if index is None:
+        return tbl.select(["id", "tokens"])
+    # each pair (a, b) as one int64 code a * n + b, so distinct is one
+    # np.unique
+    n = len(ids)
+    codes = [np.empty(0, np.int64)]
+    for size in np.unique(sizes[small & (sizes > 1)]):
+        st = starts[small & (sizes == size)][:, None]
+        i, j = np.triu_indices(int(size), 1)
+        codes.append((member[st + i] * n + member[st + j]).ravel())
+    if star and (~small).any():
+        # (bucket-min id, member) for the other members of an oversized
+        # bucket
+        rest = np.repeat(~small, sizes) & ~new
+        codes.append(np.repeat(member[starts], sizes)[rest] * n + member[rest])
+    code = np.unique(np.concatenate(codes))
+    ra, rb = code // n, code % n
+    (side,), vocab = index  # in the table's row order
+    jac = _jaccard(by_id[ra], by_id[rb], side, side, vocab)
+    keep = jac >= threshold  # NaN (0/0) compares false, like the JVM
+    out = pa.table(
+        {
+            "a": pa.array(sorted_ids[ra[keep]], pa.int64()),
+            "b": pa.array(sorted_ids[rb[keep]], pa.int64()),
+            "jaccard": pa.array(jac[keep], pa.float64()),
+        }
+    )
+    return spark.createDataFrame(out, schema)
 
 
 def exact_jaccard_pairs(

@@ -1,20 +1,48 @@
-"""Size-capped fast paths: the one place that decides them.
+"""Size-capped plan choices: the one place that decides them.
 
-Five operators take a shortcut on small inputs, a driver-side collect or
-a broadcast in place of their distributed plan; both plans give the same
-rows. Each shortcut checks one entry of :data:`CAPS`, read at call time,
-so patching this dict (every entry to 0, say) forces every fallback. A
-cap of 0 forces the distributed plan on any non-empty input. Each
-decision writes one DEBUG line to this module's logger: name, path
-taken, observed size and cap.
+Seven operators pick their plan by input size, eight decisions in all:
+a driver-side collect, a broadcast or a plan without a pre-filter in
+place of their distributed plan; both plans give the same rows. Each
+decision checks one entry of :data:`CAPS`, read at call time, so
+patching this dict (every entry to 0, say) forces every fallback. A cap
+of 0 forces the distributed plan on any non-empty input. Each decision
+writes one DEBUG line to this module's logger: name, path taken,
+observed size and cap. Caps on an input's size read the optimizer's
+estimate through :func:`plan_bytes`; an unknown estimate keeps the
+distributed plan.
 
-Why fixed caps are enough: four caps bound what the driver collects or
-what a broadcast ships to each executor, and the fifth bounds the size
-of an extra shuffle; none bounds executor memory. A bounded collect
-reads at most ``cap + 1`` rows whatever the input size, so the cap, not
-the data, sets the driver's peak, and executors never hold more than the
-distributed plan would give them: there is nothing to derive from
-executor memory.
+Why fixed caps are enough: most caps bound what the driver collects or
+builds, or what a broadcast ships to each executor; ``spread.bytes``
+bounds the size of an extra shuffle and ``lines_gate.bytes`` the text
+an ungated verify shuffles. None bounds executor memory. A bounded
+collect reads at most ``cap + 1`` rows whatever the input size, so the
+cap, not the data, sets the driver's peak, and executors never hold
+more than the distributed plan would give them: there is nothing to
+derive from executor memory.
+
+Crossovers measured for the newest caps (4-core VM, ``local[4]``, warm
+session, min of 3 alternating runs of each plan, same rows from both):
+
+* ``near_dup_local.docs``: distinct random 60-token docs (no
+  candidates) took 0.75 / 1.59 / 7.12 s in the driver against 2.55 /
+  3.66 / 11.14 s distributed at 4k / 16k / 64k docs. No crossover up to
+  64k; the cap bounds the (id, text, tokens) collect and what an
+  over-cap corpus pays for trying (one truncated collect).
+* ``near_dup_local.candidates``: prefixes of the sf0.1 documents
+  (boilerplate-heavy) at threshold 0.8 took 1.33 / 2.49 / 3.44 / 4.82 s
+  in the driver against 3.22 / 5.13 / 7.70 / 9.76 s distributed at
+  3.8M / 7.6M / 11.4M / 15.8M candidates. No crossover in range; the
+  cap is set by driver memory instead, about 28 bytes per candidate
+  (the process peaked at 644 MB at 15.8M), so 2^22 adds at most about
+  120 MB. The full sf0.1 corpus is far over it and runs distributed.
+* ``lines_gate.bytes``: ``strip_boilerplate_lines`` on random
+  8-line docs with one planted boilerplate line each took 1.35 / 3.46 /
+  9.56 s without the gate against 3.23 / 5.31 / 14.31 s with it at 14 /
+  56 / 223 MB plan estimate (40k / 160k / 640k docs). No crossover in
+  range on one host, where a shuffle is a local disk write; the cap
+  stays at 64 MB because on a cluster the ungated verify ships every
+  nonblank line's text over the network, which the gate exists to
+  avoid.
 """
 
 from __future__ import annotations
@@ -37,7 +65,41 @@ CAPS: dict[str, int] = {
     "sharded_probe.bytes": 64 << 20,
     # plan-estimated input size that spread_small_input repartitions
     "spread.bytes": 256 << 20,
+    # (id, text, tokens) docs near_dup_pairs collects to run in the driver
+    "near_dup_local.docs": 1 << 14,
+    # candidate pairs (counted from bucket sizes) the driver may build
+    "near_dup_local.candidates": 1 << 22,
+    # plan-estimated line-operator input run without the Bloom gate
+    "lines_gate.bytes": 64 << 20,
 }
+
+
+# Optimized-plan operators whose size estimate is not bounded by the
+# scanned bytes. Generate/Join multiply rows, so the estimate is a
+# fiction (a 16x explode estimates at its CHILD's size); the rest put
+# the input through an exchange already, so they are also refused by
+# spread_small_input, which would only add a second shuffle.
+_UNBOUNDED = (
+    "Generate", "Join", "Aggregate", "Window", "Sort", "Repartition", "Union",
+)
+
+
+def plan_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate for ``df`` (plan statistics; no job
+    runs), or None when it cannot be trusted: the plan holds one of the
+    operators above, or Spark has no estimate (it then reports
+    ``spark.sql.defaultSizeInBytes``, as for an RDD-backed frame).
+    Callers keep their distributed plan on None."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if any(k in plan.toString() for k in _UNBOUNDED):
+            return None
+        size = int(str(plan.stats().sizeInBytes()))
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        unknown = int(conf.defaultSizeInBytes())
+    except Exception:
+        return None
+    return None if size >= unknown else size
 
 
 def within(name: str, observed: int) -> bool:

@@ -187,13 +187,12 @@ def build_sharded_sbf(
 
 def _resolve_n_shards(filters: DataFrame, n_shards: int | None) -> int:
     """Driver-side modulus resolution. An explicit ``n_shards`` costs
-    nothing here (it is cross-checked against the stored column inside
-    each cogroup task — probing with the wrong modulus would route keys
-    to shards they were never added to, silent false negatives, so a
-    mismatch is a hard task error). With no argument, ONE row of the
-    filter table is read — note that on an uncached, just-built filter
-    DataFrame even that triggers partial recomputation of the build, so
-    persist the filter table (or pass the modulus) in query loops."""
+    nothing here (it is cross-checked against the stored column wherever
+    the payloads are read — probing with the wrong modulus would route
+    keys to shards they were never added to, silent false negatives, so
+    a mismatch is a hard error). With no argument, ONE row of the filter
+    table is read; :func:`sharded_might_contain` materializes an
+    uncached table first, so that read does not rerun the build."""
     if n_shards is not None:
         return int(n_shards)
     if "n_shards" not in filters.columns:
@@ -346,9 +345,19 @@ def sharded_might_contain(
     duplicated ``probe_salt`` times so every salted group still sees its
     shard's payload; filter traffic grows salt×, which is noise next to
     probe rows (filters are sized in MBs, probes in TBs). Results are
-    row-wise identical for any salt."""
+    row-wise identical for any salt.
+
+    Both plans read the filter table more than once (payload-size sum,
+    then collect or cogroup; the modulus read without ``n_shards``). An
+    uncached table is therefore materialized once with
+    ``localCheckpoint``, so a just-built one runs its build once per
+    call; a persisted table is read as it is."""
     from pyspark.sql.types import StructField, StructType
 
+    level = filters.storageLevel
+    if not (level.useMemory or level.useDisk):
+        # see the docstring; ContextCleaner reclaims the blocks
+        filters = filters.localCheckpoint(eager=True)
     n_shards = _resolve_n_shards(filters, n_shards)
     fast = _broadcast_sharded_probe(df, key_col, filters, n_shards, out_col)
     if fast is not None:

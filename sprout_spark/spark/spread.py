@@ -10,7 +10,8 @@ stage while 31 cores idled.
 
 :func:`spread_small_input` is the guide-§2.5 "repartition immediately
 after the read" hedge made scale-adaptive: when the optimizer's size
-estimate (plan statistics — no job runs) says the whole input is at
+estimate (:func:`sprout_spark.spark.fastpath.plan_bytes` — plan
+statistics, no job runs) says the whole input is at
 most the ``spread.bytes`` cap in :mod:`sprout_spark.spark.fastpath`
 (256 MB), the input is repartitioned to the session's default
 parallelism — a shuffle that costs well under a second at that size.
@@ -33,28 +34,8 @@ from . import fastpath
 def spread_small_input(df: DataFrame) -> DataFrame:
     """Repartition a provably-small input to default parallelism; pass
     anything large (or of unknown size) through unchanged."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        # the size estimate is only trustworthy for scan-shaped plans
-        # (project/filter over file sources, where it is bounded by the
-        # file bytes). Row-multiplying operators make it a fiction —
-        # a 16x explode estimates at its CHILD's size — and spreading
-        # on a fiction would shuffle a corpus, so refuse them.
-        text = plan.toString()
-        # Generate/Join: row-multiplying — the estimate is a fiction.
-        # Aggregate/Window/Sort/Repartition/Union: the input already
-        # went (or will go) through an exchange that spreads it; a
-        # second repartition would be a pure extra shuffle.
-        if any(
-            k in text
-            for k in (
-                "Generate", "Join", "Aggregate", "Window", "Sort",
-                "Repartition", "Union",
-            )
-        ):
-            return df
-        size = int(str(plan.stats().sizeInBytes()))
-    except Exception:
+    size = fastpath.plan_bytes(df)
+    if size is None:
         return df  # size unknown: never risk shuffling a corpus
     if not fastpath.within("spread.bytes", size):
         return df

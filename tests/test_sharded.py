@@ -403,3 +403,32 @@ def test_sketch_catalog_put_memoized_and_uniform_transform(spark, keyed_df):
     got = {r["k"]: r["might_contain"]
            for r in cat.might_contain("f", df, "k").collect()}
     assert got["alpha"] and got["gamma"]
+
+
+@pytest.mark.parametrize("cap", [None, 0], ids=["broadcast", "cogroup"])
+@pytest.mark.parametrize("n_shards", [None, 4])
+def test_probe_builds_uncached_filter_table_once(
+    spark, monkeypatch, cap, n_shards
+):
+    """An uncached, just-built filter table is read for the modulus, the
+    payload-size sum, the broadcast collect or the cogroup: each read
+    would rerun the build, so one probe call must pass over the build
+    input once per partition, on both probe plans."""
+    passes = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        passes.add(1)
+        yield from batches
+
+    keys = (
+        spark.range(0, 4_000, numPartitions=4)
+        .select((F.col("id") * 7919 % 100_000).alias("k"))
+        .mapInArrow(count, "k bigint")
+    )
+    filters = build_sharded_bloom(keys, "k", n_shards=4, expected_distinct=4_000)
+    if cap is not None:
+        monkeypatch.setitem(fastpath.CAPS, "sharded_probe.bytes", cap)
+    probe = spark.range(0, 2_000).select((F.col("id") * 7919 % 100_000).alias("k"))
+    out = sharded_might_contain(probe, "k", filters, n_shards)
+    assert out.where("might_contain").count() == 2_000
+    assert passes.value == 4
