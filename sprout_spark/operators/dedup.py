@@ -551,10 +551,8 @@ def _verify_jaccard_broadcast(
     :func:`_jaccard` kernel verifies each batch. Returns None when the
     inputs disqualify the path (caller falls back to the join plan).
     ``collected`` is the self form's token table when the caller already
-    holds it, so it is not collected a second time."""
+    collected it under the same cap, so it is not collected again."""
     if collected is not None:
-        if not fastpath.within("verify_jaccard.docs", collected.num_rows):
-            return None
         tabs = [collected]
     else:
         tabs = []
@@ -619,6 +617,14 @@ def _verify(
     )
     if fast is not None:
         return fast
+    return _verify_join(cands, tokens_a, tokens_b, threshold)
+
+
+def _verify_join(
+    cands: DataFrame, tokens_a: DataFrame, tokens_b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """The verify's distributed plan: token sets joined onto the pairs."""
     ta = tokens_a.select(F.col("id").alias("a"), F.col("tokens").alias("ta"))
     tb = tokens_b.select(F.col("id").alias("b"), F.col("tokens").alias("tb"))
     return (
@@ -682,20 +688,25 @@ def near_dup_pairs(
     comparable across tables by construction.
 
     Plans by size (self form, ``oversize_mode`` star or drop or
-    ``max_bucket=None``): one bounded collect of (id, text, tokens); a
-    corpus within the ``near_dup_local.docs`` cap whose candidate count,
-    summed from the bucket sizes before any pair is built, fits
+    ``max_bucket=None``): one bounded collect of (id, text, tokens)
+    under the ``verify_jaccard.docs`` cap, the one the broadcast verify
+    collects under. A corpus within it whose candidate count, summed
+    from the bucket sizes before any pair is built, fits
     ``near_dup_local.candidates`` runs in the driver and comes back as a
     local DataFrame — no Spark job beyond the collect. Otherwise the
     distributed plan below runs (signature ``mapInArrow``, bucket
-    self-join, broadcast or join verify), its verify reusing the
-    collected token sets. Both plans run the same MinHash and Jaccard
-    kernels and give the same rows; caps in
+    self-join, then the verify): within the docs cap the broadcast
+    verify reuses the collected token sets, over it the join verify
+    runs without a second collect. Both plans run the same MinHash and
+    Jaccard kernels and give the same rows; caps in
     :mod:`sprout_spark.spark.fastpath`.
     """
     sides = [_nonempty(t, text_col) for t in (df, right) if t is not None]
+    local_first = right is None and (
+        max_bucket is None or oversize_mode in ("star", "drop")
+    )
     collected = None
-    if right is None and (max_bucket is None or oversize_mode in ("star", "drop")):
+    if local_first:
         _check_minhash(n_hashes, band_r, shingle_k)
         local = _near_dup_local(
             sides[0], id_col, text_col, threshold, n_hashes, band_r,
@@ -715,6 +726,10 @@ def near_dup_pairs(
     # the self form passes one token table twice: the broadcast verify
     # then encodes it once
     toks = [_sets(t, id_col, text_col, shingle_k) for t in sides]
+    if local_first and collected is None:
+        # over the verify's docs cap: the broadcast verify would only
+        # repeat the truncated collect
+        return _verify_join(cands, toks[0], toks[-1], threshold)
     return _verify(cands, toks[0], toks[-1], threshold, collected)
 
 
@@ -728,7 +743,7 @@ def _near_dup_local(
     shingle_k: int,
 ) -> DataFrame | pa.Table | None:
     """The self form of :func:`near_dup_pairs` run in the driver, for a
-    corpus within the ``near_dup_local.docs`` cap whose candidate count
+    corpus within the ``verify_jaccard.docs`` cap whose candidate count
     fits ``near_dup_local.candidates``: the verified pairs as a local
     DataFrame. Otherwise the (id, tokens) table it collected, for the
     distributed plan's verify to reuse (the corpus is not collected
@@ -742,7 +757,7 @@ def _near_dup_local(
     # a NULL id is no pair partner (the distributed plan drops it before
     # the kernel and the verify join never matches it)
     tbl = fastpath.collect_at_most(
-        "near_dup_local.docs",
+        "verify_jaccard.docs",
         docs.select(
             F.col(id_col).cast("bigint").alias("id"),
             F.col(text_col).alias("t"),
@@ -774,44 +789,64 @@ def _near_dup_local(
         for i in range(0, len(text), _MINHASH_SLICE)
     ]
     kept = np.concatenate([k for k, _ in parts])
-    bh = np.concatenate([b for _, b in parts])
-    n_bands = bh.shape[1]
-    band = np.repeat(np.arange(n_bands, dtype=np.int64), len(bh))
-    key = bh.T.ravel()
-    member = np.tile(rank[kept], n_bands)
-    order = np.lexsort((member, key, band))
-    band, key, member = band[order], key[order], member[order]
-    new = np.ones(len(key), bool)
-    new[1:] = (band[1:] != band[:-1]) | (key[1:] != key[:-1])
-    starts = np.flatnonzero(new)
-    sizes = np.diff(np.append(starts, len(key)))
-    small = sizes <= (len(ids) if max_bucket is None else max_bucket)
+    # one band per row, docs in rank order: a stable sort of a band's
+    # hashes keeps each bucket's members ascending
+    member = rank[kept]
+    by_rank = np.argsort(member)
+    member = member[by_rank]
+    bands = np.concatenate([b for _, b in parts])[by_rank].T.copy()
+    del parts
+    cap = len(ids) if max_bucket is None else max_bucket
     star = oversize_mode == "star"
-    n_cands = int((sizes[small] * (sizes[small] - 1) // 2).sum())
-    if star:
-        n_cands += int((sizes[~small] - 1).sum())
-    index = None
-    if fastpath.within("near_dup_local.candidates", n_cands):
-        index = _token_index([tbl])
-    if index is None:
+
+    def buckets(band):
+        """One band's (members in bucket order, bucket starts, sizes):
+        one band at a time, so the scratch arrays stay one band wide."""
+        o = np.argsort(band, kind="stable")
+        key = band[o]
+        new = np.ones(len(key), bool)
+        new[1:] = key[1:] != key[:-1]
+        starts = np.flatnonzero(new)
+        return member[o], starts, np.diff(np.append(starts, len(key)))
+
+    n_cands = 0
+    for band in bands:
+        sizes = buckets(band)[2]
+        small = sizes <= cap
+        n_cands += int((sizes[small] * (sizes[small] - 1) // 2).sum())
+        if star:
+            n_cands += int((sizes[~small] - 1).sum())
+    if not fastpath.within("near_dup_local.candidates", n_cands):
         return tbl.select(["id", "tokens"])
     # each pair (a, b) as one int64 code a * n + b, so distinct is one
     # np.unique
     n = len(ids)
     codes = [np.empty(0, np.int64)]
-    for size in np.unique(sizes[small & (sizes > 1)]):
-        st = starts[small & (sizes == size)][:, None]
-        i, j = np.triu_indices(int(size), 1)
-        codes.append((member[st + i] * n + member[st + j]).ravel())
-    if star and (~small).any():
-        # (bucket-min id, member) for the other members of an oversized
-        # bucket
-        rest = np.repeat(~small, sizes) & ~new
-        codes.append(np.repeat(member[starts], sizes)[rest] * n + member[rest])
+    for band in bands:
+        mem, starts, sizes = buckets(band)
+        small = sizes <= cap
+        for size in np.unique(sizes[small & (sizes > 1)]):
+            st = starts[small & (sizes == size)][:, None]
+            i, j = np.triu_indices(int(size), 1)
+            codes.append((mem[st + i] * n + mem[st + j]).ravel())
+        if star and not small.all():
+            # (bucket-min id, member) for the other members of an
+            # oversized bucket
+            rest = np.repeat(~small, sizes)
+            rest[starts] = False
+            codes.append(np.repeat(mem[starts], sizes)[rest] * n + mem[rest])
     code = np.unique(np.concatenate(codes))
     ra, rb = code // n, code % n
-    (side,), vocab = index  # in the table's row order
-    jac = _jaccard(by_id[ra], by_id[rb], side, side, vocab)
+    # only docs in some pair are encoded for the verify
+    paired = np.union1d(ra, rb)
+    index = _token_index([tbl.select(["id", "tokens"]).take(by_id[paired])])
+    if index is None:
+        return tbl.select(["id", "tokens"])
+    (side,), vocab = index  # in `paired` order
+    jac = _jaccard(
+        np.searchsorted(paired, ra), np.searchsorted(paired, rb),
+        side, side, vocab,
+    )
     keep = jac >= threshold  # NaN (0/0) compares false, like the JVM
     out = pa.table(
         {

@@ -31,13 +31,7 @@ Scale shape (100 TB):
    superset proposal, the norm-level count is the verdict. The window
    reads the probed lines once — one probe evaluation, one exchange —
    and emits the drop positions directly. Bloom false positives cost
-   ~``err`` extra verify input, nothing else. The gate has a fixed cost
-   (a checkpoint, a ``count``, a Python build stage, a broadcast and a
-   Python probe stage), so an input whose plan-estimated size fits the
-   ``lines_gate.bytes`` cap in :mod:`sprout_spark.spark.fastpath`
-   (64 MB) skips it and the window reads every nonblank line — the
-   ``gate="none"`` plan, with the same rows. On 460 documents the strip
-   took 1.17 s ungated against 2.91 s gated (4-core VM, min of 3).
+   ~``err`` extra verify input, nothing else.
 3. **Rewrite** — per-doc drop-position lists join back on the id (the
    one doc-sized shuffle; AQE broadcasts the list side when small) and
    lines drop JVM-side by position (``filter(lines, (x, i) -> ...)``).
@@ -59,8 +53,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..spark import fastpath
 
 _GATES = ("bloom", "none")
 
@@ -90,29 +82,15 @@ def _exploded(base: DataFrame) -> DataFrame:
     ).select("id", "pos", F.col("kn.key").alias("key"), F.col("kn.norm").alias("norm"))
 
 
-def _bloom_gated(df: DataFrame, id_col: str, text_col: str, gate: str) -> bool:
-    """Whether the verify's input goes through the Bloom gate: always
-    for ``gate="bloom"``, except when the input's plan-estimated size
-    fits the ``lines_gate.bytes`` cap in :mod:`sprout_spark.spark.fastpath`.
-    An unknown size keeps the gate."""
-    if gate == "none":
-        return False
-    size = fastpath.plan_bytes(df.select(id_col, text_col))
-    return size is None or not fastpath.within("lines_gate.bytes", size)
-
-
-def _suspects(ex: DataFrame, bad_keys: DataFrame, gated: bool, err: float) -> DataFrame:
+def _suspects(ex: DataFrame, bad_keys: DataFrame, gate: str, err: float) -> DataFrame:
     """Nonblank lines pruned to the bad-key superset.
 
-    Gated: broadcast Bloom over bad_keys; zero FN keeps the verify
-    exact, misses never shuffle text. The gate costs a checkpoint, a
-    ``count``, a Python build stage, a broadcast and a Python probe
-    stage, so :func:`_bloom_gated` drops it for small inputs. Ungated
-    (also ``gate="none"``): every nonblank line goes to the verify;
-    exact either way, and right too when the bad-key set is a large
-    fraction of all lines and the Bloom would not prune."""
+    gate="bloom": broadcast Bloom over bad_keys; zero FN keeps the
+    verify exact, misses never shuffle text. gate="none": every nonblank
+    line goes to the verify (exact either way; for when the bad-key set
+    is a large fraction of all lines and the bloom would not prune)."""
     nonblank = ex.where(F.col("norm") != "")
-    if not gated:
+    if gate == "none":
         return nonblank
     from ..sketch.bloom import BloomFilter
     from ..spark.aggregate import build_sketch
@@ -188,9 +166,7 @@ def boilerplate_lines(
         .where(F.col("n") >= min_docs)
         .select("key")
     )
-    suspects = _suspects(
-        ex, bad_keys, _bloom_gated(df, id_col, text_col, gate), err
-    )
+    suspects = _suspects(ex, bad_keys, gate, err)
     if suspects is None:
         return df.sparkSession.createDataFrame([], "line string, n_docs bigint")
     return (
@@ -233,9 +209,7 @@ def strip_boilerplate_lines(
         .where(F.col("n") >= min_docs)
         .select("key")
     )
-    suspects = _suspects(
-        ex, bad_keys, _bloom_gated(df, id_col, text_col, gate), err
-    )
+    suspects = _suspects(ex, bad_keys, gate, err)
     if suspects is None:
         return _unchanged(base, id_col, text_col, joiner)
     # a window, not an aggregate joined back to `suspects`: the join
@@ -287,9 +261,7 @@ def dedup_lines_keep_first(
         .where(F.col("n") >= 2)
         .select("key")
     )
-    suspects = _suspects(
-        ex, dup_keys, _bloom_gated(df, id_col, text_col, gate), err
-    )
+    suspects = _suspects(ex, dup_keys, gate, err)
     if suspects is None:
         return _unchanged(base, id_col, text_col, joiner)
     # one window over the probed suspects, as in strip_boilerplate_lines

@@ -1,9 +1,9 @@
 """Size-capped plan choices: the one place that decides them.
 
-Seven operators pick their plan by input size, eight decisions in all:
-a driver-side collect, a broadcast or a plan without a pre-filter in
-place of their distributed plan; both plans give the same rows. Each
-decision checks one entry of :data:`CAPS`, read at call time, so
+Operators pick their plan by input size in seven decisions against six
+caps: a driver-side collect or a broadcast in place of their distributed
+plan, or a repartition of a small input; both plans give the same rows.
+Each decision checks one entry of :data:`CAPS`, read at call time, so
 patching this dict (every entry to 0, say) forces every fallback. A cap
 of 0 forces the distributed plan on any non-empty input. Each decision
 writes one DEBUG line to this module's logger: name, path taken,
@@ -13,21 +13,22 @@ distributed plan.
 
 Why fixed caps are enough: most caps bound what the driver collects or
 builds, or what a broadcast ships to each executor; ``spread.bytes``
-bounds the size of an extra shuffle and ``lines_gate.bytes`` the text
-an ungated verify shuffles. None bounds executor memory. A bounded
-collect reads at most ``cap + 1`` rows whatever the input size, so the
-cap, not the data, sets the driver's peak, and executors never hold
-more than the distributed plan would give them: there is nothing to
-derive from executor memory.
+bounds the size of an extra shuffle. None bounds executor memory. A
+bounded collect reads at most ``cap + 1`` rows whatever the input size,
+so the cap, not the data, sets the driver's peak, and executors never
+hold more than the distributed plan would give them: there is nothing
+to derive from executor memory.
 
-Crossovers measured for the newest caps (4-core VM, ``local[4]``, warm
-session, min of 3 alternating runs of each plan, same rows from both):
+The near-dup driver plan shares ``verify_jaccard.docs`` with the
+broadcast verify: both hold the corpus's token sets in the driver, so
+one collect under one cap serves either. Measured crossovers (4-core
+VM, ``local[4]``, warm session, min of 3 alternating runs of each
+plan, same rows from both):
 
-* ``near_dup_local.docs``: distinct random 60-token docs (no
-  candidates) took 0.75 / 1.59 / 7.12 s in the driver against 2.55 /
-  3.66 / 11.14 s distributed at 4k / 16k / 64k docs. No crossover up to
-  64k; the cap bounds the (id, text, tokens) collect and what an
-  over-cap corpus pays for trying (one truncated collect).
+* ``verify_jaccard.docs`` for the driver plan: distinct random 60-token
+  docs (no candidates) took 0.75 / 1.59 / 7.12 s in the driver against
+  2.55 / 3.66 / 11.14 s distributed at 4k / 16k / 64k docs. No
+  crossover up to 64k; the cap bounds the (id, text, tokens) collect.
 * ``near_dup_local.candidates``: prefixes of the sf0.1 documents
   (boilerplate-heavy) at threshold 0.8 took 1.33 / 2.49 / 3.44 / 4.82 s
   in the driver against 3.22 / 5.13 / 7.70 / 9.76 s distributed at
@@ -35,14 +36,6 @@ session, min of 3 alternating runs of each plan, same rows from both):
   cap is set by driver memory instead, about 28 bytes per candidate
   (the process peaked at 644 MB at 15.8M), so 2^22 adds at most about
   120 MB. The full sf0.1 corpus is far over it and runs distributed.
-* ``lines_gate.bytes``: ``strip_boilerplate_lines`` on random
-  8-line docs with one planted boilerplate line each took 1.35 / 3.46 /
-  9.56 s without the gate against 3.23 / 5.31 / 14.31 s with it at 14 /
-  56 / 223 MB plan estimate (40k / 160k / 640k docs). No crossover in
-  range on one host, where a shuffle is a local disk write; the cap
-  stays at 64 MB because on a cluster the ungated verify ships every
-  nonblank line's text over the network, which the gate exists to
-  avoid.
 """
 
 from __future__ import annotations
@@ -57,7 +50,8 @@ log = logging.getLogger(__name__)
 CAPS: dict[str, int] = {
     # vectors broadcast for the all-pairs kernel (~128 MB at dim 64)
     "cosine_pairs_exact.rows": 1 << 18,
-    # token-set docs per side, broadcast as code tables for the verify
+    # token-set docs per side, broadcast as code tables for the verify;
+    # also the docs near_dup_pairs collects to run in the driver
     "verify_jaccard.docs": 1 << 17,
     # directed edge rows (two per pair) for driver-side union-find
     "duplicate_clusters.rows": 2_000_000,
@@ -65,12 +59,8 @@ CAPS: dict[str, int] = {
     "sharded_probe.bytes": 64 << 20,
     # plan-estimated input size that spread_small_input repartitions
     "spread.bytes": 256 << 20,
-    # (id, text, tokens) docs near_dup_pairs collects to run in the driver
-    "near_dup_local.docs": 1 << 14,
     # candidate pairs (counted from bucket sizes) the driver may build
     "near_dup_local.candidates": 1 << 22,
-    # plan-estimated line-operator input run without the Bloom gate
-    "lines_gate.bytes": 64 << 20,
 }
 
 
@@ -100,6 +90,33 @@ def plan_bytes(df: DataFrame) -> int | None:
     except Exception:
         return None
     return None if size >= unknown else size
+
+
+# Optimized-plan nodes that re-read stored rows: file and in-memory
+# relations under projections and filters. An RDD-backed frame
+# (LogicalRDD) is not one of them: reading it reruns its lineage.
+_SCAN = frozenset({
+    "Project", "Filter", "LogicalRelation", "LocalRelation",
+    "InMemoryRelation", "DataSourceV2Relation", "DataSourceV2ScanRelation",
+})
+
+
+def scan_only(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan only projects and filters stored
+    rows (files, a local relation or a cached table), so reading it
+    again costs one more scan and reruns no upstream work; False for
+    anything else, or when the plan cannot be read."""
+    def nodes(plan):
+        yield plan.nodeName()
+        kids = plan.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        return all(n in _SCAN for n in nodes(plan))
+    except Exception:
+        return False
 
 
 def within(name: str, observed: int) -> bool:

@@ -191,8 +191,8 @@ def _resolve_n_shards(filters: DataFrame, n_shards: int | None) -> int:
     the payloads are read — probing with the wrong modulus would route
     keys to shards they were never added to, silent false negatives, so
     a mismatch is a hard error). With no argument, ONE row of the filter
-    table is read; :func:`sharded_might_contain` materializes an
-    uncached table first, so that read does not rerun the build."""
+    table is read; :func:`sharded_might_contain` materializes a computed
+    table first, so that read does not rerun the build."""
     if n_shards is not None:
         return int(n_shards)
     if "n_shards" not in filters.columns:
@@ -242,7 +242,11 @@ def _salted_probe(
         cols = [c for c, t in df.dtypes if "map<" not in t]
         probe = probe.withColumn(
             "_psalt",
-            F.pmod(F.xxhash64(F.lit(7), *(cols or [key_col])), F.lit(probe_salt)),
+            # int, as the filter side's duplicated salt: both sides must
+            # hash a (shard, salt) group to the same shuffle partition
+            F.pmod(
+                F.xxhash64(F.lit(7), *(cols or [key_col])), F.lit(probe_salt)
+            ).cast("int"),
         )
     else:
         probe = probe.withColumn("_psalt", F.lit(0))
@@ -348,14 +352,15 @@ def sharded_might_contain(
     row-wise identical for any salt.
 
     Both plans read the filter table more than once (payload-size sum,
-    then collect or cogroup; the modulus read without ``n_shards``). An
-    uncached table is therefore materialized once with
-    ``localCheckpoint``, so a just-built one runs its build once per
-    call; a persisted table is read as it is."""
+    then collect or cogroup; the modulus read without ``n_shards``). A
+    table whose plan computes it (a just-built one, say) is therefore
+    materialized once with ``localCheckpoint``, so its build runs once
+    per call; a table that only scans stored rows (files, a cached
+    table: :func:`sprout_spark.spark.fastpath.scan_only`) is read as it
+    is, since a copy would cost more than the re-reads."""
     from pyspark.sql.types import StructField, StructType
 
-    level = filters.storageLevel
-    if not (level.useMemory or level.useDisk):
+    if not fastpath.scan_only(filters):
         # see the docstring; ContextCleaner reclaims the blocks
         filters = filters.localCheckpoint(eager=True)
     n_shards = _resolve_n_shards(filters, n_shards)

@@ -75,9 +75,6 @@ GUARDED = (
     # spread_small_input
     "heavy_ngrams_docs",
     "ann_lsh_recall",
-    # the line operators' Bloom gate
-    "strip_boilerplate_docs",
-    "dedup_lines_keep_first",
 )
 
 

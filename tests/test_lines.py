@@ -10,7 +10,6 @@ from sprout_spark.operators.lines import (
     dedup_lines_keep_first,
     strip_boilerplate_lines,
 )
-from sprout_spark.spark import fastpath
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
@@ -89,8 +88,7 @@ def test_dedup_lines_within_doc_repeat(spark):
     assert r["text"] == "x\ny" and r["n_dropped"] == 2
 
 
-def test_gate_none_equals_bloom(spark, docs, monkeypatch):
-    monkeypatch.setitem(fastpath.CAPS, "lines_gate.bytes", 0)
+def test_gate_none_equals_bloom(spark, docs):
     a = strip_boilerplate_lines(docs, "id", "text", min_docs=2, gate="bloom")
     b = strip_boilerplate_lines(docs, "id", "text", min_docs=2, gate="none")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
@@ -190,22 +188,20 @@ def _final_plan(df) -> str:
 
 
 @pytest.mark.parametrize("op", [strip_boilerplate_lines, dedup_lines_keep_first])
-def test_verify_evaluates_probe_once(spark, docs, op, monkeypatch):
+def test_verify_evaluates_probe_once(spark, docs, op):
     """The verify is one window over the probed suspect lines, so the
     Bloom probe UDF runs once (an aggregate joined back to the suspects
     would evaluate it on both sides of the join)."""
-    monkeypatch.setitem(fastpath.CAPS, "lines_gate.bytes", 0)
     out = op(docs, "id", "text")
     out.collect()
     assert _final_plan(out).count("ArrowEvalPython") == 1
 
 
 @pytest.mark.parametrize("gate", ["bloom", "none"])
-def test_strip_null_ids_never_count_as_docs(spark, gate, monkeypatch):
+def test_strip_null_ids_never_count_as_docs(spark, gate):
     """A NULL id is not a document for the distinct-doc count (SQL
     ``count(DISTINCT id)`` semantics), and a NULL-id doc never gets
     lines dropped (its drop list cannot join back on the id)."""
-    monkeypatch.setitem(fastpath.CAPS, "lines_gate.bytes", 0)
     docs = spark.createDataFrame(
         [(1, "A\nx"), (None, "A\ny"), (None, "A\nz"), (2, "B\nw"),
          (3, "B\nv")],

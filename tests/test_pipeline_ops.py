@@ -92,7 +92,7 @@ def test_minhash_lsh_matches_exact_jaccard(spark, docs):
 def test_near_dup_null_ids_never_pair(spark, monkeypatch):
     """A NULL id is no pair partner: the broadcast verify and the join
     plan agree, and no pair carries NULL or the int64 cast of one."""
-    monkeypatch.setitem(fastpath.CAPS, "near_dup_local.docs", 0)
+    monkeypatch.setitem(fastpath.CAPS, "near_dup_local.candidates", 0)
     t = "the quick brown fox jumps over the lazy dog"
     docs = spark.createDataFrame(
         [(1, t), (None, t), (3, t + " x")], "id bigint, text string"
@@ -115,7 +115,7 @@ def test_near_dup_minhash_kernel_runs_once(spark, docs, monkeypatch):
     exchange and the MinHash kernel runs once."""
     import re
 
-    monkeypatch.setitem(fastpath.CAPS, "near_dup_local.docs", 0)
+    monkeypatch.setitem(fastpath.CAPS, "near_dup_local.candidates", 0)
     out = near_dup_pairs(docs, "doc_id", "text", threshold=0.8)
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()

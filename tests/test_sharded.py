@@ -432,3 +432,56 @@ def test_probe_builds_uncached_filter_table_once(
     out = sharded_might_contain(probe, "k", filters, n_shards)
     assert out.where("might_contain").count() == 2_000
     assert passes.value == 4
+
+
+def test_probe_reads_stored_filter_table_without_copy(
+    spark, keyed_df, tmp_path, monkeypatch
+):
+    """A filter table that only scans stored rows (a parquet read, as the
+    catalog and the KV gate hold it) is probed as it is: re-reading it
+    reruns no build, so no local checkpoint copies it first. A computed
+    table is materialized once."""
+    path = str(tmp_path / "filters")
+    build_sharded_bloom(
+        keyed_df, "k", n_shards=4, expected_distinct=20_000
+    ).write.parquet(path)
+    copies = []
+    cls = type(keyed_df)  # the session's concrete DataFrame class
+    real = cls.localCheckpoint
+
+    def counting(self, *a, **kw):
+        copies.append(1)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting)
+    stored = spark.read.parquet(path)
+    assert fastpath.scan_only(stored)
+    assert sharded_might_contain(keyed_df, "k", stored).where(
+        "might_contain"
+    ).count() == 20_000
+    assert copies == []
+    computed = build_sharded_bloom(
+        keyed_df, "k", n_shards=4, expected_distinct=20_000
+    )
+    assert not fastpath.scan_only(computed)
+    sharded_might_contain(keyed_df, "k", computed).count()
+    assert copies == [1]
+
+
+def test_salted_cogroup_probe_keeps_every_member(spark, monkeypatch):
+    """The probe side's salt and the filter side's duplicated salt are
+    one type, so both sides hash each (shard, salt) group to the same
+    shuffle partition: every member probes true at the default salt.
+    (With a bigint salt on one side and an int salt on the other, about
+    half the groups met no filter row and probed all-false.)"""
+    def keys(n):
+        return spark.range(0, n, numPartitions=4).select(
+            (F.col("id") * 7919 % 10_000_000).alias("k")
+        )
+
+    filters = build_sharded_bloom(
+        keys(200_000), "k", n_shards=16, expected_distinct=200_000
+    )
+    monkeypatch.setitem(fastpath.CAPS, "sharded_probe.bytes", 0)
+    got = sharded_might_contain(keys(20_000), "k", filters)
+    assert got.where("might_contain").count() == 20_000

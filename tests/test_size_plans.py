@@ -1,6 +1,6 @@
-"""Plans picked by input size: the driver-side near-dup plan and the
-line operators without their Bloom gate give the rows of the distributed
-plans they stand in for, and fall back when over their caps."""
+"""Plans picked by input size: the driver-side near-dup plan gives the
+rows of the distributed plan it stands in for, and falls back when over
+its caps with one collect of the corpus at most."""
 
 import logging
 
@@ -9,11 +9,6 @@ import pytest
 
 from sprout_spark.operators import dedup
 from sprout_spark.operators.dedup import near_dup_pairs
-from sprout_spark.operators.lines import (
-    boilerplate_lines,
-    dedup_lines_keep_first,
-    strip_boilerplate_lines,
-)
 from sprout_spark.spark import fastpath
 
 VOCAB = [f"w{i:03d}" for i in range(300)]
@@ -47,8 +42,9 @@ def _pairs(df, **kw):
 
 
 def _distributed(monkeypatch, df, **kw):
+    # over the docs cap: no collect, the join verify
     with monkeypatch.context() as m:
-        m.setitem(fastpath.CAPS, "near_dup_local.docs", 0)
+        m.setitem(fastpath.CAPS, "verify_jaccard.docs", 0)
         return _pairs(df, **kw)
 
 
@@ -94,17 +90,9 @@ def test_local_near_dup_empty_corpus(spark, corpus, monkeypatch):
     assert _pairs(empty) == _distributed(monkeypatch, empty) == []
 
 
-def test_local_near_dup_over_candidate_cap_collects_once(
-    spark, monkeypatch, caplog
-):
-    """Identical docs share every bucket: over the candidate cap the
-    distributed plan runs, and its verify reuses the rows the driver
-    plan collected instead of collecting the corpus again."""
-    caplog.set_level(logging.DEBUG, logger=fastpath.log.name)
-    docs = spark.createDataFrame(
-        [(i, "the same boilerplate text every time") for i in range(20)],
-        "id bigint, text string",
-    )
+@pytest.fixture
+def identical_docs(spark, monkeypatch):
+    """Identical docs share every bucket; each collect is recorded."""
     collects = []
     real = fastpath.collect_at_most
 
@@ -113,16 +101,52 @@ def test_local_near_dup_over_candidate_cap_collects_once(
         return real(name, df)
 
     monkeypatch.setattr(fastpath, "collect_at_most", counting)
+    docs = spark.createDataFrame(
+        [(i, "the same boilerplate text every time") for i in range(20)],
+        "id bigint, text string",
+    )
+    return docs, collects
+
+
+def test_local_near_dup_over_candidate_cap_collects_once(
+    identical_docs, monkeypatch, caplog
+):
+    """Over the candidate cap the distributed plan runs, and its verify
+    reuses the rows the driver plan collected instead of collecting the
+    corpus again."""
+    docs, collects = identical_docs
+    caplog.set_level(logging.DEBUG, logger=fastpath.log.name)
     monkeypatch.setitem(fastpath.CAPS, "near_dup_local.candidates", 100)
     got = _pairs(docs, threshold=0.9)
     assert _decisions(caplog, "near_dup_local.candidates")[-1].startswith(
         "near_dup_local.candidates: distributed path"
     )
-    assert collects == ["near_dup_local.docs"]
-    assert _decisions(caplog, "verify_jaccard.docs")[-1].startswith(
-        "verify_jaccard.docs: fast path"
-    )
+    assert collects == ["verify_jaccard.docs"]
+    assert _decisions(caplog, "verify_jaccard.docs") == [
+        "verify_jaccard.docs: fast path (observed 20, cap 131072)"
+    ]
     assert len(got) == 20 * 19 // 2
+
+
+def test_local_near_dup_over_docs_cap_joins_without_recollect(
+    identical_docs, monkeypatch, caplog
+):
+    """Over the docs cap the truncated collect is the only one: the
+    verify goes straight to the join plan, with the same rows."""
+    docs, collects = identical_docs
+    caplog.set_level(logging.DEBUG, logger=fastpath.log.name)
+    monkeypatch.setitem(fastpath.CAPS, "verify_jaccard.docs", 5)
+    out = near_dup_pairs(docs, "id", "text", threshold=0.9)
+    got = sorted(map(tuple, out.collect()))
+    assert collects == ["verify_jaccard.docs"]
+    assert not _decisions(caplog, "near_dup_local.candidates")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    # the MinHash kernel is the plan's only Python stage
+    assert plan.count("MapInArrow") == 1, plan
+    assert [(a, b) for a, b, _ in got] == [
+        (a, b) for a in range(20) for b in range(a + 1, 20)
+    ]
 
 
 def test_local_near_dup_runs_no_python_stage(spark, corpus):
@@ -157,54 +181,27 @@ def test_jaccard_kernel_chunks_match_one_pass(monkeypatch):
 
 
 @pytest.fixture(scope="module")
-def lines_docs(spark, tmp_path_factory):
-    # a file scan: an RDD-backed frame has no size estimate, and the
-    # line operators then keep the gate
-    path = str(tmp_path_factory.mktemp("lines") / "docs.parquet")
+def stored(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("stored") / "docs.parquet")
     spark.createDataFrame(
-        [
-            (1, "MENU\nalpha one\n\nMENU\nfooter"),
-            (2, "MENU\nbeta two\nfooter"),
-            (3, "gamma\n  MENU  \nbeta two"),
-            (None, "MENU\nfooter\nnull id"),
-            (None, "MENU\nsecond null"),
-            (4, ""),
-            (5, None),
-        ],
-        "id bigint, text string",
+        [(1, "MENU\nalpha one"), (2, "beta two")], "id bigint, text string"
     ).write.parquet(path)
     return spark.read.parquet(path)
 
 
-def _rows(df):
-    return sorted(map(tuple, df.collect()), key=repr)
-
-
-@pytest.mark.parametrize(
-    "op", [strip_boilerplate_lines, dedup_lines_keep_first, boilerplate_lines]
-)
-def test_line_ops_gate_decision_keeps_rows(
-    spark, lines_docs, monkeypatch, caplog, op
-):
-    caplog.set_level(logging.DEBUG, logger=fastpath.log.name)
-    ungated = _rows(op(lines_docs, "id", "text"))
-    assert _decisions(caplog, "lines_gate.bytes")[-1].startswith(
-        "lines_gate.bytes: fast path"
-    )
-    with monkeypatch.context() as m:
-        m.setitem(fastpath.CAPS, "lines_gate.bytes", 0)
-        gated = _rows(op(lines_docs, "id", "text"))
-    assert _decisions(caplog, "lines_gate.bytes")[-1].startswith(
-        "lines_gate.bytes: distributed path"
-    )
-    assert ungated == gated
-    assert ungated
-
-
-def test_plan_bytes_refuses_unbounded_estimates(spark, lines_docs):
+def test_plan_bytes_refuses_unbounded_estimates(spark, stored):
     from pyspark.sql import functions as F
 
-    assert fastpath.plan_bytes(lines_docs) > 0
+    assert fastpath.plan_bytes(stored) > 0
     assert fastpath.plan_bytes(spark.createDataFrame([(1,)], "x int")) is None
-    exploded = lines_docs.select(F.explode(F.split("text", "\n")))
+    exploded = stored.select(F.explode(F.split("text", "\n")))
     assert fastpath.plan_bytes(exploded) is None
+
+
+def test_scan_only_tells_stored_rows_from_computed(spark, stored):
+    assert fastpath.scan_only(stored)
+    assert fastpath.scan_only(stored.where("id > 1").select("text"))
+    assert not fastpath.scan_only(stored.groupBy("id").count())
+    assert not fastpath.scan_only(stored.mapInArrow(lambda b: b, stored.schema))
+    # an RDD-backed frame reruns its lineage on each read
+    assert not fastpath.scan_only(spark.createDataFrame([(1,)], "x int"))
