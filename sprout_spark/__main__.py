@@ -21,6 +21,7 @@ import json
 import sys
 
 from .sketch import BloomFilter, ScalableBloomFilter, sketch_from_bytes
+from .sources.commit import atomic_write
 
 # the reference CLI hardcodes capacity=100, err=0.001 (cli/bloom.go:104-113);
 # we keep its defaults overridable
@@ -34,8 +35,7 @@ def _load(path: str):
 
 
 def _save(sk, path: str) -> None:
-    with open(path, "wb") as f:
-        f.write(sk.to_bytes())
+    atomic_write(path, sk.to_bytes())  # a crash keeps the old filter file
 
 
 def main(argv=None) -> int:

@@ -37,6 +37,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.commit import read_json, write_json
 from ..spark import fastpath
 
 _SRP_SEED = 0xA11CE  # fixed seed for the hyperplane family (deterministic)
@@ -194,21 +195,17 @@ def build_srp_index(
 def _write_srp_sidecar(
     path: str, dim: int, n_planes: int, n_tables: int
 ) -> None:
-    import json
     import os
 
-    tmp = os.path.join(path, "_srp_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "dim": int(dim),
-                "n_planes": int(n_planes),
-                "n_tables": int(n_tables),
-                "seed": _SRP_SEED,
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(path, "_srp_meta.json"))
+    write_json(
+        os.path.join(path, "_srp_meta.json"),
+        {
+            "dim": int(dim),
+            "n_planes": int(n_planes),
+            "n_tables": int(n_tables),
+            "seed": _SRP_SEED,
+        },
+    )
 
 
 def append_to_srp_index(
@@ -228,17 +225,14 @@ def append_to_srp_index(
     would produce buckets no query ever joins (silent recall loss), so
     a mismatch is a hard error. append(A); append(B) equals a one-shot
     build over A ∪ B exactly."""
-    import json
     import os
 
-    mpath = os.path.join(path, "_srp_meta.json")
-    if not os.path.exists(mpath):
+    meta = read_json(os.path.join(path, "_srp_meta.json"))
+    if meta is None:
         raise ValueError(
             f"index at {path!r} has no _srp_meta.json sidecar — rebuild "
             "once via build_srp_index(path=...) to pin the geometry"
         )
-    with open(mpath) as f:
-        meta = json.load(f)
     want = {
         "dim": int(dim),
         "n_planes": int(n_planes),
@@ -460,7 +454,6 @@ def _write_ivf_sidecar(path: str, centroids: np.ndarray, dim: int) -> None:
     never sees it) records shape + digest + the centroid values
     themselves, making the index self-describing: later appends verify
     against it, and a reader can probe without re-deriving centroids."""
-    import json
     import os
 
     c = np.ascontiguousarray(centroids, dtype=np.float64)
@@ -470,10 +463,7 @@ def _write_ivf_sidecar(path: str, centroids: np.ndarray, dim: int) -> None:
         "digest": _centroid_digest(c),
         "centroids": c.tolist(),
     }
-    tmp = os.path.join(path, "_ivf_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "_ivf_meta.json"))
+    write_json(os.path.join(path, "_ivf_meta.json"), meta)
 
 
 def read_ivf_centroids(path: str) -> np.ndarray:
@@ -512,18 +502,15 @@ def append_to_ivf_index(
     Note: drifted data under a frozen quantizer shows up as cell skew —
     watch :func:`ivf_cell_stats` and re-train + rebuild when the
     max/mean ratio degrades."""
-    import json
     import os
 
-    mpath = os.path.join(path, "_ivf_meta.json")
-    if not os.path.exists(mpath):
+    meta = read_json(os.path.join(path, "_ivf_meta.json"))
+    if meta is None:
         raise ValueError(
             f"index at {path!r} has no _ivf_meta.json sidecar (built "
             "before centroid pinning, or not via build_ivf_index(path=...))"
             " — rebuild once to pin the quantizer"
         )
-    with open(mpath) as f:
-        meta = json.load(f)
     got = _centroid_digest(np.asarray(centroids, dtype=np.float64))
     if meta["digest"] != got or meta["dim"] != int(dim):
         raise ValueError(
@@ -1034,18 +1021,15 @@ def compact_ivf_index(spark, path: str) -> DataFrame:
     object store, point readers at a manifest/catalog (e.g. an Iceberg
     table of (id, vec, cell)) and swap that instead. Returns the
     re-read index."""
-    import json
     import os
     import shutil
 
-    mpath = os.path.join(path, "_ivf_meta.json")
-    if not os.path.exists(mpath):
+    meta = read_json(os.path.join(path, "_ivf_meta.json"))
+    if meta is None:
         raise ValueError(
             f"index at {path!r} has no _ivf_meta.json sidecar — only "
             "pinned indexes (build_ivf_index(path=...)) can be compacted"
         )
-    with open(mpath) as f:
-        meta = json.load(f)
     idx = spark.read.parquet(path)
     tmp = path.rstrip("/") + ".compacting"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -1055,8 +1039,7 @@ def compact_ivf_index(spark, path: str) -> DataFrame:
         .partitionBy("cell")
         .parquet(tmp)
     )
-    with open(os.path.join(tmp, "_ivf_meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_json(os.path.join(tmp, "_ivf_meta.json"), meta)
     shutil.rmtree(path)
     os.rename(tmp, path)
     return spark.read.parquet(path)
@@ -1070,24 +1053,20 @@ def compact_srp_index(spark, path: str, n_files: int = 8) -> DataFrame:
     files, geometry sidecar carried verbatim (compaction moves bytes,
     never re-signatures). Same write-aside + rename swap as
     :func:`compact_ivf_index`. Returns the re-read index."""
-    import json
     import os
     import shutil
 
-    mpath = os.path.join(path, "_srp_meta.json")
-    if not os.path.exists(mpath):
+    meta = read_json(os.path.join(path, "_srp_meta.json"))
+    if meta is None:
         raise ValueError(
             f"index at {path!r} has no _srp_meta.json sidecar — only "
             "pinned indexes (build_srp_index(path=...)) can be compacted"
         )
-    with open(mpath) as f:
-        meta = json.load(f)
     idx = spark.read.parquet(path)
     tmp = path.rstrip("/") + ".compacting"
     shutil.rmtree(tmp, ignore_errors=True)
     idx.repartition(int(n_files)).write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_srp_meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_json(os.path.join(tmp, "_srp_meta.json"), meta)
     shutil.rmtree(path)
     os.rename(tmp, path)
     return spark.read.parquet(path)

@@ -1,7 +1,7 @@
 """Training-shard sink — materialize `shuffle_shards`' deterministic
-permutation as on-disk shard files a training loader streams, with the
-same commit discipline as the package's stores (novelty / KV / catalog):
-the parquet lands first, a fsync'd ``manifest.json`` swapped in via
+permutation as on-disk shard files a training loader streams, under the
+package commit protocol (:mod:`sprout_spark.sources.commit`): the
+parquet lands first, a fsync'd ``manifest.json`` swapped in via
 ``os.replace`` is the single commit point, and a reader REFUSES a
 directory without a committed manifest (a torn write must never be
 mistaken for a corpus).
@@ -23,13 +23,13 @@ a count mismatch at commit time, not at training time.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.corpus import shuffle_shards
+from .commit import parquet_rows, read_json, write_json
 
 _MANIFEST_VERSION = 1
 
@@ -62,8 +62,6 @@ def write_shards(
     )
 
     # counts from the COMMITTED footers, not the writer's intent
-    import pyarrow.parquet as pq
-
     shards = []
     for name in sorted(os.listdir(data_dir)):
         if not name.startswith("shard="):
@@ -79,9 +77,7 @@ def write_shards(
                 f"shard dir {name} holds {len(files)} files (expected 1) — "
                 "refusing to commit a fragmented shard set"
             )
-        rows = pq.ParquetFile(
-            os.path.join(data_dir, name, files[0])
-        ).metadata.num_rows
+        rows = parquet_rows(os.path.join(data_dir, name))
         shards.append({"shard": k, "file": f"{name}/{files[0]}", "rows": rows})
     manifest = {
         "version": _MANIFEST_VERSION,
@@ -92,24 +88,18 @@ def write_shards(
         "total_rows": sum(s["rows"] for s in shards),
         "shards": shards,
     }
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, manifest_path)  # the single commit point
+    write_json(manifest_path, manifest, indent=1)  # the single commit point
     return manifest
 
 
 def read_manifest(path: str) -> dict:
     manifest_path = os.path.join(path, "manifest.json")
-    if not os.path.exists(manifest_path):
+    m = read_json(manifest_path)
+    if m is None:
         raise FileNotFoundError(
             f"no committed manifest at {manifest_path} — refusing to read "
             "an uncommitted (possibly torn) shard set"
         )
-    with open(manifest_path) as f:
-        m = json.load(f)
     if m.get("version") != _MANIFEST_VERSION:
         raise ValueError(
             f"unknown shard-manifest version {m.get('version')!r}"

@@ -18,8 +18,8 @@ file, and the same exactness contract:
   epoch directory partitioned by ``bucket = pmod(xxhash64(key),
   n_buckets)``; the committed-epoch watermark and the bloom persist
   atomically AFTER the parquet lands, so a crash between the two leaves
-  an orphan dir that readers ignore (same commit-point discipline as the
-  streaming novelty store).
+  an orphan dir that readers ignore (the commit protocol of
+  :mod:`sprout_spark.sources.commit`).
 * **Scale shape**: a Get over a batch of probe keys reads only the
   bucket directories its bloom-maybe keys hash into (directory-level
   partition pruning), joins on ``(bucket, key)``, and resolves the
@@ -35,18 +35,24 @@ traffic equals filter size, same exactness contract, same store layout.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sketch.base import MergeableSketch, sketch_from_bytes
+from ..sketch.base import sketch_from_bytes
 from ..sketch.bloom import BloomFilter
-from ..spark.aggregate import build_sketch
 from ..spark.probe import might_contain
+from .commit import (
+    EpochStore,
+    fold_epoch,
+    parquet_rows,
+    pin_layout,
+    read_state,
+    write_lock,
+    write_state,
+)
 
 
 class BloomGatedKVStore:
@@ -103,11 +109,13 @@ class BloomGatedKVStore:
         self.factory = factory or (
             lambda: BloomFilter(expected_keys, err_rate, enforce_capacity=False)
         )
-        os.makedirs(path, exist_ok=True)
         pin = self._pin(int(n_buckets), gate, gate_shards)
         self.n_buckets = pin["n_buckets"]
         self.gate = pin["gate"]
         self.gate_shards = pin.get("gate_shards")
+        self._store = EpochStore(
+            path, "key string, value binary, bucket int", epoch_col="_epoch"
+        )
         self.sketch, self.last_epoch, self.gate_dir = self._load_state()
         self._prev_gate_dir = None  # retained one put for lazy readers
 
@@ -116,56 +124,39 @@ class BloomGatedKVStore:
         want = {"n_buckets": n_buckets, "gate": gate}
         if gate == "sharded":
             want["gate_shards"] = int(gate_shards)
-        bpath = os.path.join(self.path, "buckets.json")
-        if os.path.exists(bpath):
-            with open(bpath) as f:
-                pinned = json.load(f)
-            pinned.setdefault("gate", "broadcast")  # pre-sharded layout
-            if int(pinned["n_buckets"]) != n_buckets:
-                raise ValueError(
-                    f"store at {self.path!r} was built with n_buckets="
-                    f"{pinned['n_buckets']}; got {n_buckets} — re-bucketing "
-                    "requires a rewrite"
+        pinned = pin_layout(self.path, want)
+        pinned.setdefault("gate", "broadcast")  # pre-sharded layout
+        if int(pinned["n_buckets"]) != n_buckets:
+            raise ValueError(
+                f"store at {self.path!r} was built with n_buckets="
+                f"{pinned['n_buckets']}; got {n_buckets} — re-bucketing "
+                "requires a rewrite"
+            )
+        if pinned["gate"] != gate or (
+            gate == "sharded"
+            and int(pinned["gate_shards"]) != int(gate_shards)
+        ):
+            raise ValueError(
+                f"store at {self.path!r} was built with gate="
+                f"{pinned['gate']!r}"
+                + (
+                    f" gate_shards={pinned.get('gate_shards')}"
+                    if pinned["gate"] == "sharded"
+                    else ""
                 )
-            if pinned["gate"] != gate or (
-                gate == "sharded"
-                and int(pinned["gate_shards"]) != int(gate_shards)
-            ):
-                raise ValueError(
-                    f"store at {self.path!r} was built with gate="
-                    f"{pinned['gate']!r}"
-                    + (
-                        f" gate_shards={pinned.get('gate_shards')}"
-                        if pinned["gate"] == "sharded"
-                        else ""
-                    )
-                    + f"; got gate={gate!r} gate_shards={gate_shards} — "
-                    "re-gating requires a rewrite"
-                )
-            return pinned
-        tmp = bpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(want, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, bpath)
-        return want
+                + f"; got gate={gate!r} gate_shards={gate_shards} — "
+                "re-gating requires a rewrite"
+            )
+        return pinned
 
     def _state_path(self) -> str:
         return os.path.join(self.path, "state.bin")
 
     def _load_state(self):
-        sp = self._state_path()
-        if not os.path.exists(sp):
-            return (
-                self.factory() if self.gate == "broadcast" else None,
-                -1,
-                None,
-            )
-        with open(sp, "rb") as f:
-            blob = f.read()
-        hdr, payload = blob.split(b"\n", 1)
-        meta = json.loads(hdr.decode())
+        st = read_state(self._state_path())
+        if st is None:
+            return self.factory() if self.gate == "broadcast" else None, -1, None
+        meta, payload = st
         if self.gate == "sharded":
             return None, int(meta["epoch"]), meta["gate_dir"]
         return sketch_from_bytes(payload), int(meta["epoch"]), None
@@ -174,66 +165,30 @@ class BloomGatedKVStore:
         """The COMMIT POINT for a put: gate + watermark land in one
         atomic replace, strictly after the epoch's parquet (and, for a
         sharded gate, strictly after the new gate table's parquet)."""
-        sp = self._state_path()
-        tmp = sp + ".tmp"
         meta: dict = {"epoch": self.last_epoch}
         if self.gate == "sharded":
             meta["gate_dir"] = self.gate_dir
-        with open(tmp, "wb") as f:
-            f.write(json.dumps(meta).encode())
-            f.write(b"\n")
-            if self.gate == "broadcast":
-                f.write(self.sketch.to_bytes())
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, sp)
+        payload = self.sketch.to_bytes() if self.gate == "broadcast" else b""
+        write_state(self._state_path(), meta, payload)
 
     def _bucket(self, col):
         return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
 
-    @property
-    def _schema(self) -> str:
-        return "key string, value binary, bucket int"
-
-    @contextmanager
     def _write_lock(self):
-        """Single-writer serialization for mutating ops (put/compact) —
-        the reference's advisory per-path fslock (``bloom.go:428-443``
-        holds one for the mmap'd filter file) at store granularity.
-        Non-blocking: a second concurrent writer fails loud instead of
-        silently racing the epoch counter / commit point. Under the
-        lock the on-disk watermark is re-checked: a STALE instance
-        (another writer advanced the store since this one loaded state)
-        must not allocate an already-committed epoch id."""
-        import fcntl
+        """Single-writer serialization for put/compact, re-checking the
+        watermark in ``state.bin`` (:func:`~.commit.write_lock`)."""
 
-        lf = open(os.path.join(self.path, ".lock"), "w")
-        try:
-            fcntl.flock(lf, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            lf.close()
-            raise RuntimeError(
-                f"another writer holds the lock on {self.path!r}; "
-                "concurrent mutations would race the commit point"
-            )
-        try:
-            sp = self._state_path()
-            if os.path.exists(sp):
-                with open(sp, "rb") as f:
-                    disk_epoch = int(
-                        json.loads(f.read().split(b"\n", 1)[0].decode())["epoch"]
-                    )
-                if disk_epoch != self.last_epoch:
-                    raise RuntimeError(
-                        f"store at {self.path!r} advanced to epoch "
-                        f"{disk_epoch} (this instance loaded "
-                        f"{self.last_epoch}) — another writer committed; "
-                        "reopen the store before mutating"
-                    )
-            yield
-        finally:
-            fcntl.flock(lf, fcntl.LOCK_UN)
-            lf.close()
+        def disk_epoch():
+            st = read_state(self._state_path())
+            return None if st is None else int(st[0]["epoch"])
+
+        return write_lock(
+            self.path,
+            disk_epoch,
+            self.last_epoch,
+            "store",
+            "reopen the store before mutating",
+        )
 
     # -- Put --------------------------------------------------------------------
     def put(self, kv_df: DataFrame, key_col: str, val_col: str) -> int:
@@ -253,10 +208,7 @@ class BloomGatedKVStore:
             F.col(val_col).cast("binary").alias("value"),
         ).where(F.col("key").isNotNull())
         kv = kv.withColumn("bucket", self._bucket(F.col("key")))
-        epoch_path = os.path.join(self.path, f"epoch={epoch}")
-        shutil.rmtree(epoch_path, ignore_errors=True)  # orphan from a crash
-        kv.write.mode("overwrite").partitionBy("bucket").parquet(epoch_path)
-        committed = self.spark.read.schema(self._schema).parquet(epoch_path)
+        committed, epoch_path = self._store.write_epoch(kv, epoch)
         # duplicate-key check runs on the COMMITTED parquet, not the
         # caller's plan: a nondeterministic input (sample(), rand() keys)
         # could pass a pre-write check yet write something else — and the
@@ -273,9 +225,11 @@ class BloomGatedKVStore:
                 "not the store's)"
             )
         if self.gate == "sharded":
-            self._fold_epoch_sharded(committed, epoch)
+            self._fold_epoch_sharded(committed, epoch, epoch_path)
         else:
-            self._fold_epoch(committed, epoch_path)
+            self.sketch = fold_epoch(
+                self.sketch, self.factory, committed, "key", epoch_path
+            )
         self.last_epoch = epoch
         self._save_state()
         if self.gate == "sharded":
@@ -292,39 +246,6 @@ class BloomGatedKVStore:
                     )
         return epoch
 
-    def _fold_epoch(self, committed: DataFrame, epoch_path: str) -> None:
-        """Fold the epoch's keys into the gate sketch. Same dispatch as
-        the streaming novelty filter: fixed sketches keep partial-build +
-        merge; a ScalableBloomFilter gate FOLDS one fixed stage per
-        epoch, sized for the epoch's actual key count (parquet footers —
-        no extra scan) at the schedule's next ε. Stage-merging a fresh
-        SBF partial instead would OR every epoch's stage 0 into the
-        running stage 0 and drift the gate's FPR to ~E× budget after E
-        puts — the exact leak the novelty store fixed this round."""
-        from ..sketch.scalable_bloom import ScalableBloomFilter
-
-        if not isinstance(self.sketch, ScalableBloomFilter):
-            partial = build_sketch(committed, "key", self.factory)
-            self.sketch = self.sketch.merge(partial)
-            return
-        import glob
-
-        import pyarrow.parquet as pq
-
-        n_new = sum(
-            pq.read_metadata(p).num_rows
-            for p in glob.glob(
-                os.path.join(epoch_path, "**", "*.parquet"), recursive=True
-            )
-        )
-        if n_new == 0:
-            return  # empty put: no stage, schedule doesn't advance
-        eps = self.sketch.next_stage_err()
-        stage = build_sketch(
-            committed, "key", lambda: BloomFilter(max(n_new, 11), eps)
-        )
-        self.sketch.fold_stage(stage)
-
     def _gate_df(self) -> DataFrame | None:
         """The committed sharded gate table (shard, sketch, rows,
         n_shards), or None before the first put."""
@@ -336,35 +257,27 @@ class BloomGatedKVStore:
             os.path.join(self.path, self.gate_dir)
         )
 
-    def _fold_epoch_sharded(self, committed: DataFrame, epoch: int) -> None:
+    def _fold_epoch_sharded(
+        self, committed: DataFrame, epoch: int, epoch_path: str
+    ) -> None:
         """Fold the epoch's keys into the per-shard SBF gate table in ONE
         cogrouped pass: each task gets one shard's current SBF row plus
         that shard's slice of the batch, builds a fixed Bloom sized for
         the slice at the shard's own ``next_stage_err()``, and folds it
         as the SBF's next schedule stage — the distributed form of
-        ``_fold_epoch``, with no driver-side sketch and no broadcast.
-        Shards untouched by the batch pass through unchanged (cogroup
-        yields the union of group keys). The new gate generation is
-        fully written BEFORE ``_save_state`` commits it. An all-empty
+        :func:`~.commit.fold_epoch`, with no driver-side sketch and no
+        broadcast. Shards untouched by the batch pass through unchanged
+        (cogroup yields the union of group keys). The new gate generation
+        is fully written BEFORE ``_save_state`` commits it. An all-empty
         epoch writes NO generation (a zero-row gate table would brick
         the probe's modulus lookup; the broadcast path's n_new==0 skip
         is the same rule)."""
-        import glob
-
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from ..sketch.scalable_bloom import ScalableBloomFilter
         from ..spark.sharded import SHARD_ROW_SCHEMA, shard_id
 
-        n_new = sum(
-            pq.read_metadata(p).num_rows
-            for p in glob.glob(
-                os.path.join(self.path, f"epoch={epoch}", "**", "*.parquet"),
-                recursive=True,
-            )
-        )
-        if n_new == 0:
+        if parquet_rows(epoch_path) == 0:
             return  # nothing to fold; gate generation stays as-is
         err, n_shards = self.err_rate, self.gate_shards
         keys = committed.select(
@@ -411,47 +324,6 @@ class BloomGatedKVStore:
         self.gate_dir = gen
 
     # -- Get --------------------------------------------------------------------
-    def _manifest(self) -> dict:
-        mpath = os.path.join(self.path, "manifest.json")
-        if os.path.exists(mpath):
-            with open(mpath) as f:
-                return json.load(f)
-        return {"compacted_upto": -1, "dir": None}
-
-    def _store_df(self, buckets: list[int] | None = None) -> DataFrame | None:
-        """Committed rows as (key, value, bucket, _epoch), bucket-pruned:
-        the compacted base generation (if any) plus the epoch dirs newer
-        than it."""
-        man = self._manifest()
-        parts = []
-        if man["dir"] is not None:
-            base = self.spark.read.schema(self._schema + ", _epoch int").parquet(
-                os.path.join(self.path, man["dir"])
-            )
-            if buckets is not None:
-                base = base.where(
-                    F.col("bucket").isin([int(b) for b in buckets])
-                )
-            parts.append(base)
-        for d in sorted(os.listdir(self.path)):
-            if d.startswith("epoch="):
-                e = int(d.split("=", 1)[1])
-                if man["compacted_upto"] < e <= self.last_epoch:
-                    df = self.spark.read.schema(self._schema).parquet(
-                        os.path.join(self.path, d)
-                    )
-                    if buckets is not None:
-                        df = df.where(
-                            F.col("bucket").isin([int(b) for b in buckets])
-                        )
-                    parts.append(df.withColumn("_epoch", F.lit(e)))
-        if not parts:
-            return None
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d)
-        return out
-
     @staticmethod
     def _resolve_latest(store: DataFrame) -> DataFrame:
         """Latest-epoch-wins per key: (key, value, bucket, _epoch)."""
@@ -484,54 +356,9 @@ class BloomGatedKVStore:
         (3) is harmless (swept next time). Resolved rows KEEP their
         winning ``_epoch`` so later epochs still win over the base."""
         with self._write_lock():
-            return self._compact_locked(n_files)
-
-    def _compact_locked(self, n_files: int) -> int:
-        import glob
-
-        import pyarrow.parquet as pq
-
-        man = self._manifest()
-        if man["compacted_upto"] >= self.last_epoch:
-            return sum(
-                pq.read_metadata(p).num_rows
-                for p in glob.glob(
-                    os.path.join(self.path, man["dir"] or "", "**", "*.parquet"),
-                    recursive=True,
-                )
+            return self._store.compact(
+                self.spark, self.last_epoch, n_files, self._resolve_latest
             )
-        store = self._store_df()
-        if store is None:
-            return 0
-        gen = f"compact-{self.last_epoch}"
-        gen_path = os.path.join(self.path, gen)
-        # hash-repartition on bucket: each bucket lands wholly in one of
-        # the n_files tasks → ONE file per bucket dir, still prunable
-        self._resolve_latest(store).repartition(
-            n_files, "bucket"
-        ).write.mode("overwrite").partitionBy("bucket").parquet(gen_path)
-        n = sum(
-            pq.read_metadata(p).num_rows
-            for p in glob.glob(
-                os.path.join(gen_path, "**", "*.parquet"), recursive=True
-            )
-        )
-        mpath = os.path.join(self.path, "manifest.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"compacted_upto": self.last_epoch, "dir": gen}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, mpath)  # the compaction commit point
-        for d in os.listdir(self.path):
-            folded = (
-                d.startswith("epoch=")
-                and int(d.split("=", 1)[1]) <= self.last_epoch
-            )
-            stale_gen = d.startswith("compact-") and d != gen
-            if folded or stale_gen:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        return n
 
     def get(self, keys_df: DataFrame, key_col: str, out_col: str = "value") -> DataFrame:
         """Batch Get: ``keys_df`` plus a binary ``out_col`` (NULL = never
@@ -558,53 +385,41 @@ class BloomGatedKVStore:
                 name += "_"
             return name
 
-        c_key, c_bkt = _tmp("_key"), _tmp("_bucket")
+        c_key, c_bkt, c_maybe = _tmp("_key"), _tmp("_bucket"), _tmp("_maybe")
         keys = keys_df.withColumn(c_key, F.col(key_col).cast("string"))
         null_val = F.lit(None).cast("binary")
         if self.gate == "sharded":
             from ..spark.sharded import sharded_might_contain
 
-            nulls = keys.where(F.col(c_key).isNull()).withColumn(
-                out_col, null_val
-            )
-            nonnull = keys.where(F.col(c_key).isNotNull())
             gate = self._gate_df()
             if gate is None:  # nothing was ever put
-                return nulls.unionByName(
-                    nonnull.withColumn(out_col, null_val)
-                ).drop(c_key)
-            c_maybe = _tmp("_maybe")
+                return keys.withColumn(out_col, null_val).drop(c_key)
+            # NULL keys probe as "" and are then flagged misses: one
+            # probe over every row, no union of two branches of keys
+            c_probe = _tmp("_probe")
             probed = sharded_might_contain(
-                nonnull, c_key, gate, out_col=c_maybe
-            )
-            misses = nulls.unionByName(
-                probed.where(~F.col(c_maybe))
-                .drop(c_maybe)
-                .withColumn(out_col, null_val)
-            )
-            suspects = (
-                probed.where(F.col(c_maybe))
-                .drop(c_maybe)
-                .withColumn(c_bkt, self._bucket(F.col(c_key)))
+                keys.withColumn(c_probe, F.coalesce(F.col(c_key), F.lit(""))),
+                c_probe,
+                gate,
+                out_col=c_maybe,
+            ).drop(c_probe)
+            flagged = probed.withColumn(
+                c_maybe, F.col(c_key).isNotNull() & F.col(c_maybe)
             )
         else:
             maybe = might_contain(self.spark, self.sketch, F.col(c_key))
-            misses = keys.where(~maybe | F.col(c_key).isNull()).withColumn(
-                out_col, null_val
-            )
-            suspects = keys.where(maybe & F.col(c_key).isNotNull()).withColumn(
-                c_bkt, self._bucket(F.col(c_key))
-            )
-        hit = [
-            r[c_bkt]
-            for r in suspects.select(c_bkt).distinct().collect()
-        ]
-        store = self._store_df(buckets=hit) if hit else None
+            flagged = keys.withColumn(c_maybe, F.col(c_key).isNotNull() & maybe)
+        misses, suspects, store = self._store.gated_read(
+            self.spark,
+            flagged.withColumn(c_bkt, self._bucket(F.col(c_key))),
+            c_maybe,
+            c_bkt,
+            self.last_epoch,
+        )
+        misses = misses.drop(c_bkt).withColumn(out_col, null_val)
         if store is None:
             return misses.unionByName(
-                suspects.drop(c_bkt).withColumn(
-                    out_col, F.lit(None).cast("binary")
-                )
+                suspects.drop(c_bkt).withColumn(out_col, null_val)
             ).drop(c_key)
         latest = self._resolve_latest(store).select(
             F.col("bucket").alias(c_bkt),

@@ -27,13 +27,13 @@ row-shuffling salted build (``combine="shuffle", salt=64``) remains for
 degenerate key spaces whose cardinality approaches the row count; both
 are exact by mergeability.
 
-Commit discipline (the package convention — sources/kv_store.py,
-sources/corpus_shards.py): epoch parquet lands first under a dir
-readers ignore, then one fsync'd ``manifest.json`` swapped via
-``os.replace`` is the single commit point; a torn append leaves an
-orphan dir that readers never see and the next mutation sweeps.
-Mutations are single-writer (advisory flock + staleness re-check), so
-concurrent appends fail loud instead of racing the epoch counter.
+Commit discipline (the package protocol, sources/commit.py): epoch
+parquet lands first under a dir readers ignore, then one fsync'd
+``manifest.json`` swapped via ``os.replace`` is the single commit point;
+a torn append leaves an orphan dir that readers never see and the next
+mutation sweeps. Mutations are single-writer (advisory flock +
+staleness re-check), so concurrent appends fail loud instead of racing
+the epoch counter.
 
 Reference parity: the reference persists one mmap'd filter per path
 (``/root/reference/bloom.go:428-443`` holds its fslock for the same
@@ -43,16 +43,15 @@ time-keyed sketches behind one commit point.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-from contextlib import contextmanager
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sketch.base import MergeableSketch, sketch_from_bytes
+from ..sources.commit import parquet_rows, read_json, write_json, write_lock
 from .aggregate import (
     build_grouped_sketches,
     collect_merged,
@@ -198,58 +197,31 @@ class SketchRollup:
         return os.path.join(self.path, "manifest.json")
 
     def _manifest(self) -> dict | None:
-        mp = self._manifest_path()
-        if not os.path.exists(mp):
-            return None
-        with open(mp) as f:
-            return json.load(f)
+        return read_json(self._manifest_path())
 
     def _save_manifest(self) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": _VERSION,
-                    "grain": self.grain,
-                    "dims": self.dims,
-                    "sketch": self.pin,
-                    "epoch": self.last_epoch,
-                    "epochs": self.epochs,
-                    "base": self.base,
-                    "tags": self.tags,
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path())  # the commit point
+        write_json(
+            self._manifest_path(),
+            {
+                "version": _VERSION,
+                "grain": self.grain,
+                "dims": self.dims,
+                "sketch": self.pin,
+                "epoch": self.last_epoch,
+                "epochs": self.epochs,
+                "base": self.base,
+                "tags": self.tags,
+            },
+        )  # the commit point
 
-    @contextmanager
     def _write_lock(self):
-        import fcntl
-
-        lf = open(os.path.join(self.path, ".lock"), "w")
-        try:
-            fcntl.flock(lf, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            lf.close()
-            raise RuntimeError(
-                f"another writer holds the lock on {self.path!r}; "
-                "concurrent mutations would race the commit point"
-            )
-        try:
+        def disk_epoch():
             man = self._manifest()
-            if man is not None and int(man["epoch"]) != self.last_epoch:
-                raise RuntimeError(
-                    f"rollup at {self.path!r} advanced to epoch "
-                    f"{man['epoch']} (this instance loaded "
-                    f"{self.last_epoch}) — another writer committed; "
-                    "reopen before mutating"
-                )
-            yield
-        finally:
-            fcntl.flock(lf, fcntl.LOCK_UN)
-            lf.close()
+            return None if man is None else int(man["epoch"])
+
+        return write_lock(
+            self.path, disk_epoch, self.last_epoch, "rollup", "reopen before mutating"
+        )
 
     def _sweep_orphans(self) -> None:
         live = {f"epoch={e}" for e in self.epochs}
@@ -357,8 +329,7 @@ class SketchRollup:
             edir = os.path.join(self.path, f"epoch={epoch}")
             # parquet first; the manifest swap below is the commit point
             grouped.write.mode("overwrite").parquet(edir)
-            spark = df.sparkSession
-            n = spark.read.parquet(edir).count()
+            n = parquet_rows(edir)
             self.last_epoch = epoch
             self.epochs.append(epoch)
             if tag is not None:
@@ -551,26 +522,7 @@ class SketchRollup:
         grain dimensioned rollup spanning years is millions of rows of
         KB payloads, which must not funnel through one task: size
         ``n_files`` so a file holds ~1M rows there."""
-        if n_files < 1:
-            raise ValueError(f"n_files must be >= 1, got {n_files}")
-        with self._write_lock():
-            merged = self.windows(spark)
-            gen = f"compact-g{self.last_epoch + 1}"
-            gdir = os.path.join(self.path, gen)
-            merged.repartition(n_files, "wstart").write.mode(
-                "overwrite"
-            ).parquet(gdir)
-            n = spark.read.parquet(gdir).count()
-            # compaction consumes an epoch id so a concurrent stale
-            # writer's staleness check trips on it
-            self.last_epoch += 1
-            self.epochs = []
-            self.base = gen
-            # tags kept on purpose: a replayed micro-batch arriving
-            # after compaction must still skip, not re-append
-            self._save_manifest()
-            self._sweep_orphans()
-            return n
+        return self._rewrite_base(spark, n_files)
 
     # -- retention ------------------------------------------------------------
 
@@ -589,20 +541,31 @@ class SketchRollup:
         after. Idempotency tags are KEPT — a late replay of an
         already-expired batch must still skip, not re-admit expired
         rows. Returns the number of surviving window rows."""
+        return self._rewrite_base(spark, n_files, _norm_bound(before))
+
+    def _rewrite_base(self, spark: SparkSession, n_files: int, cutoff=None) -> int:
+        """Rewrite every committed window at or after ``cutoff`` (all of
+        them without one) into a new base generation, merged per
+        (window, dims); returns its row count."""
         if n_files < 1:
             raise ValueError(f"n_files must be >= 1, got {n_files}")
-        cutoff = _norm_bound(before)
         with self._write_lock():
-            merged = self.windows(spark).where(F.col("wstart") >= cutoff)
+            merged = self.windows(spark)
+            if cutoff is not None:
+                merged = merged.where(F.col("wstart") >= cutoff)
             gen = f"compact-g{self.last_epoch + 1}"
             gdir = os.path.join(self.path, gen)
             merged.repartition(n_files, "wstart").write.mode(
                 "overwrite"
             ).parquet(gdir)
-            n = spark.read.parquet(gdir).count()
+            n = parquet_rows(gdir)
+            # the rewrite consumes an epoch id so a concurrent stale
+            # writer's staleness check trips on it
             self.last_epoch += 1
             self.epochs = []
             self.base = gen
+            # tags kept on purpose: a replayed micro-batch arriving
+            # after a rewrite must still skip, not re-append
             self._save_manifest()
             self._sweep_orphans()
             return n

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, LongType
 
 from ..sketch.base import MergeableSketch
+from ..sources.commit import read_json, write_json
 from .probe import (
     _chunked,
     _revive,
@@ -250,11 +251,11 @@ class SketchCatalog:
     # The nightly-roll workflow outlives any one driver: tonight's batch
     # job builds the filters and saves the catalog; tomorrow's serving
     # session (or a restarted driver) loads it and probes the same names.
-    # Same commit discipline as the novelty store (novelty.py:198-259):
-    # new state is written aside under a generation nobody reads, the
-    # manifest is atomically os.replace'd as the single commit point,
-    # and only then are superseded generations swept — a crash at any
-    # step leaves the previous catalog fully loadable.
+    # The package commit protocol (sources/commit.py): new state is
+    # written aside under a generation nobody reads, the manifest is
+    # atomically os.replace'd as the single commit point, and only then
+    # are superseded generations swept — a crash at any step leaves the
+    # previous catalog fully loadable.
 
     _MANIFEST_VERSION = 1
 
@@ -270,7 +271,6 @@ class SketchCatalog:
         materialized into ``sharded/<name>-g<N>/``. Local-filesystem
         manifest swap via ``os.replace``; on an object store use its
         conditional-put for the same commit point."""
-        import json
         import os
 
         os.makedirs(path, exist_ok=True)
@@ -316,13 +316,8 @@ class SketchCatalog:
             "prefix": self.prefix,
             "entries": entries,
         }
-        mpath = os.path.join(path, "manifest.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, mpath)  # the commit point
+        # the commit point
+        write_json(os.path.join(path, "manifest.json"), manifest, indent=1)
         # sweep superseded generations (and any aside dirs a crashed
         # earlier save leaked) — everything g-suffixed below gen
         import re
@@ -341,14 +336,9 @@ class SketchCatalog:
 
     @staticmethod
     def _read_manifest(path: str) -> dict:
-        import json
         import os
 
-        mpath = os.path.join(path, "manifest.json")
-        if not os.path.exists(mpath):
-            return {}
-        with open(mpath) as f:
-            return json.load(f)
+        return read_json(os.path.join(path, "manifest.json"), {})
 
     @classmethod
     def load(

@@ -20,7 +20,6 @@ running state. Two surfaces:
 
 from __future__ import annotations
 
-import json
 import os
 import struct  # truncated sketch headers raise struct.error on load
 from typing import Callable
@@ -30,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sketch.base import MergeableSketch, sketch_from_bytes
+from ..sources.commit import read_state, write_state
 from ..spark.aggregate import build_sketch
 
 
@@ -52,46 +52,37 @@ class StreamingSketchAccumulator:
         self.sketch, self.last_epoch = self._load()
 
     # -- persistence ---------------------------------------------------------
-    # One file holds BOTH the epoch watermark and the payload so the
-    # commit is a single atomic os.replace — a crash can never leave a
-    # new sketch paired with an old epoch (which would double-merge the
-    # replayed micro-batch on restart).
+    # ``state.bin`` holds BOTH the epoch watermark and the payload, so the
+    # commit is a single atomic replace (sources/commit.py) — a crash can
+    # never leave a new sketch paired with an old epoch (which would
+    # double-merge the replayed micro-batch on restart).
     def _path(self) -> str:
         return os.path.join(self.state_dir, "state.bin")
 
     def _load(self) -> tuple[MergeableSketch, int]:
         path = self._path()
-        if os.path.exists(path):
-            try:
-                with open(path, "rb") as f:
-                    header = f.readline()
-                    st = json.loads(header.decode())
-                    return sketch_from_bytes(f.read()), int(st["epoch"])
-            except (ValueError, KeyError, struct.error) as e:
-                # a power failure could in principle survive the rename
-                # with truncated payload bytes (fsync below closes the
-                # common case); fail loud but recover — accumulated state
-                # is LOST and must be rebuilt from the source in batch
-                # mode if exactness matters
-                import warnings
+        try:
+            st = read_state(path)
+            if st is not None:
+                return sketch_from_bytes(st[1]), int(st[0]["epoch"])
+        except (ValueError, KeyError, struct.error) as e:
+            # a power failure could in principle survive the rename with
+            # truncated payload bytes (the fsync before it closes the
+            # common case); fail loud but recover — accumulated state is
+            # LOST and must be rebuilt from the source in batch mode if
+            # exactness matters
+            import warnings
 
-                warnings.warn(
-                    f"corrupt streaming sketch state at {path!r} ({e}); "
-                    "restarting from an EMPTY sketch — prior accumulated "
-                    "state is lost, rebuild from the source if needed",
-                    stacklevel=2,
-                )
+            warnings.warn(
+                f"corrupt streaming sketch state at {path!r} ({e}); "
+                "restarting from an EMPTY sketch — prior accumulated "
+                "state is lost, rebuild from the source if needed",
+                stacklevel=2,
+            )
         return self.factory(), -1
 
     def _save(self, epoch_id: int) -> None:
-        path = self._path()
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(json.dumps({"epoch": epoch_id}).encode() + b"\n")
-            f.write(self.sketch.to_bytes())
-            f.flush()
-            os.fsync(f.fileno())  # rename must never outlive the payload
-        os.replace(tmp, path)  # atomic: crash leaves the old state intact
+        write_state(self._path(), {"epoch": epoch_id}, self.sketch.to_bytes())
 
     # -- foreachBatch hook -----------------------------------------------------
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:

@@ -16,8 +16,8 @@ Per micro-batch:
 4. novel keys append to the seen-keys table (one parquet dir per epoch —
    a replayed micro-batch overwrites its own dir, so replays are
    idempotent) and fold into the Bloom, which persists atomically with
-   the epoch watermark (same commit protocol as
-   :class:`~sprout_spark.streaming.accumulate.StreamingSketchAccumulator`).
+   the epoch watermark (the commit protocol of
+   :mod:`sprout_spark.sources.commit`).
 
 Exactness: false negatives are impossible (novel rows can never be
 wrongly dropped) and false positives are caught by the exact anti-join,
@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sketch.base import MergeableSketch
-from ..spark.aggregate import build_sketch
+from ..sources.commit import LAYOUT, EpochStore, fold_epoch, pin_layout
 from ..spark.probe import might_contain
 from .accumulate import StreamingSketchAccumulator
 
@@ -69,6 +69,10 @@ class StreamingNoveltyFilter(StreamingSketchAccumulator):
         super().__init__(key_col, factory, state_dir, fanin)
         self.seen_dir = os.path.join(state_dir, "seen")
         self.n_buckets = self._pin_n_buckets(int(n_buckets))
+        # explicit schema: a bucketed epoch with zero novel keys writes no
+        # partition dirs at all, and a schema-less read of that empty dir
+        # would fail inference instead of returning an empty frame
+        self._store = EpochStore(self.seen_dir, f"{self.col} string, bucket int")
 
     def _pin_n_buckets(self, n_buckets: int) -> int:
         """The bucket count is part of the on-disk layout: a restart with
@@ -77,10 +81,8 @@ class StreamingNoveltyFilter(StreamingSketchAccumulator):
         fail loud on any later mismatch."""
         if n_buckets < 1:
             raise ValueError("n_buckets must be >= 1")
-        import json
-
-        bpath = os.path.join(self.seen_dir, "buckets.json")
-        if not os.path.exists(bpath) and os.path.isdir(self.seen_dir):
+        layout = os.path.join(self.seen_dir, LAYOUT)
+        if os.path.isdir(self.seen_dir) and not os.path.exists(layout):
             # a seen store from before bucketing (flat epoch dirs, no
             # buckets.json): reading it through the bucketed schema
             # would give bucket=NULL rows that never match the (bucket,
@@ -98,93 +100,30 @@ class StreamingNoveltyFilter(StreamingSketchAccumulator):
                     "rewriting each dir partitioned by "
                     "pmod(xxhash64(key), n_buckets)) before restarting"
                 )
-        if os.path.exists(bpath):
-            with open(bpath) as f:
-                pinned = int(json.load(f)["n_buckets"])
-            if pinned != n_buckets:
-                raise ValueError(
-                    f"seen store at {self.seen_dir!r} was built with "
-                    f"n_buckets={pinned}; got {n_buckets}. Re-bucketing "
-                    "requires rewriting the store (compact + migrate)."
-                )
-            return pinned
-        os.makedirs(self.seen_dir, exist_ok=True)
-        tmp = bpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"n_buckets": n_buckets}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, bpath)
-        return n_buckets
+        pinned = int(pin_layout(self.seen_dir, {"n_buckets": n_buckets})["n_buckets"])
+        if pinned != n_buckets:
+            raise ValueError(
+                f"seen store at {self.seen_dir!r} was built with "
+                f"n_buckets={pinned}; got {n_buckets}. Re-bucketing "
+                "requires rewriting the store (compact + migrate)."
+            )
+        return pinned
 
     def _bucket_expr(self):
         return F.pmod(F.xxhash64(F.col(self.col)), F.lit(self.n_buckets)).cast(
             "int"
         )
 
-    @property
-    def _seen_schema(self) -> str:
-        # explicit schema: a bucketed epoch with zero novel keys writes no
-        # partition dirs at all, and a schema-less read of that empty dir
-        # would fail inference instead of returning an empty frame
-        return f"{self.col} string, bucket int"
-
-    # -- committed-state reads -------------------------------------------
     # The COMMIT POINT for an epoch's novel keys is _save(epoch) (the
     # atomic bloom+watermark replace), NOT the parquet write that precedes
-    # it. _seen therefore reads only epoch dirs <= last_epoch: a crash
-    # between the epoch-N parquet write and _save(N) leaves a stale
-    # epoch=N dir on disk, and reading it during N's replay would
-    # anti-join away that batch's bloom-false-positive novel keys —
-    # silently losing ~epsilon of them forever. Compaction state rides in
-    # a manifest (atomic os.replace) so mid-compaction crashes are also
-    # invisible to readers.
-
-    def _manifest(self) -> dict:
-        mpath = os.path.join(self.seen_dir, "manifest.json")
-        if os.path.exists(mpath):
-            import json
-
-            with open(mpath) as f:
-                return json.load(f)
-        return {"compacted_upto": -1, "dir": None}
-
-    def _seen(self, spark, buckets: list[int] | None = None) -> DataFrame | None:
-        """The committed seen-keys store as (key, bucket). With
-        ``buckets`` the read is pruned PER STORE DIRECTORY to matching
-        ``bucket=K`` subdirs before any union — a filter on the partition
-        column, so Catalyst prunes at the directory level and only
-        matching-bucket files are ever listed in the scan."""
-        if self.last_epoch < 0 or not os.path.isdir(self.seen_dir):
-            return None
-        man = self._manifest()
-        paths = []
-        if man["dir"] is not None:
-            paths.append(os.path.join(self.seen_dir, man["dir"]))
-        for d in sorted(os.listdir(self.seen_dir)):
-            if not d.startswith("epoch="):
-                continue
-            epoch = int(d.split("=", 1)[1])
-            # committed AND not already folded into the compacted dir
-            if man["compacted_upto"] < epoch <= self.last_epoch:
-                paths.append(os.path.join(self.seen_dir, d))
-        if not paths:
-            return None
-        parts = []
-        for p in paths:
-            d = spark.read.schema(self._seen_schema).parquet(p)
-            if buckets is not None:
-                d = d.where(F.col("bucket").isin([int(b) for b in buckets]))
-            parts.append(d)
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d)
-        return out
+    # it: reads take only epoch dirs <= last_epoch, so a crash between the
+    # epoch-N parquet write and _save(N) cannot make N's replay anti-join
+    # away that batch's bloom-false-positive novel keys (EpochStore).
 
     def novel_keys(self, spark) -> DataFrame:
         """The accumulated novel keys — exactly the stream's distinct
         ``key_col`` set, one row per key (committed epochs only)."""
-        seen = self._seen(spark)
+        seen = self._store.read(spark, self.last_epoch)
         if seen is None:
             return spark.createDataFrame([], f"{self.col} string")
         return seen.select(self.col)
@@ -203,108 +142,7 @@ class StreamingNoveltyFilter(StreamingSketchAccumulator):
         dir and treat the old dirs as folded-in, so a partial (3) is
         harmless. On an object store, swap the manifest via its
         conditional-put equivalent."""
-        import glob
-        import json
-        import shutil
-
-        import pyarrow.parquet as pq
-
-        man = self._manifest()
-        if man["compacted_upto"] >= self.last_epoch:
-            # nothing new to fold — and rewriting the committed generation
-            # dir IN PLACE (gen name would collide with man['dir']) would
-            # destroy the only copy of the store before any commit point
-            return sum(
-                pq.read_metadata(p).num_rows
-                for p in glob.glob(
-                    os.path.join(self.seen_dir, man["dir"] or "", "**", "*.parquet"),
-                    recursive=True,
-                )
-            )
-        seen = self._seen(spark)
-        if seen is None:
-            return 0
-        gen = f"compact-{self.last_epoch}"
-        gen_path = os.path.join(self.seen_dir, gen)
-        # hash-repartition on bucket: each bucket lands wholly in one of
-        # the n_files tasks, so the consolidated store keeps ONE file per
-        # bucket dir (no small-file regrowth) and stays prunable
-        seen.repartition(n_files, "bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(gen_path)
-        # count from the written files' parquet footers: no second scan
-        n = sum(
-            pq.read_metadata(p).num_rows
-            for p in glob.glob(
-                os.path.join(gen_path, "**", "*.parquet"), recursive=True
-            )
-        )
-        mpath = os.path.join(self.seen_dir, "manifest.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"compacted_upto": self.last_epoch, "dir": gen}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, mpath)  # the compaction commit point
-        for d in os.listdir(self.seen_dir):
-            folded = (
-                d.startswith("epoch=") and int(d.split("=", 1)[1]) <= self.last_epoch
-            )
-            # also sweep superseded/orphaned generations (a crash between a
-            # gen write and its manifest swap would otherwise leak a full
-            # store copy forever)
-            stale_gen = d.startswith("compact-") and d != gen
-            if folded or stale_gen:
-                shutil.rmtree(os.path.join(self.seen_dir, d), ignore_errors=True)
-        return n
-
-    def _fold_epoch(
-        self, novel_committed: DataFrame, epoch_path: str
-    ) -> None:
-        """Fold an epoch's novel keys into the running filter.
-
-        Fixed sketches (Bloom, HLL, ...) keep the partial-build + merge
-        path. A ScalableBloomFilter gate instead FOLDS one fixed Bloom
-        stage per epoch (``fold_stage``): the r4 path built a fresh SBF
-        partial per epoch and stage-merged it, so every epoch's stage 0
-        OR'd into the running stage 0 — after E epochs the gate's real
-        FPR drifted to ~E× the budget (an efficiency leak: every false
-        positive is an unnecessary store read; exactness was never at
-        risk). The folded stage is sized for the epoch's ACTUAL novel
-        count (read from the just-written parquet footers — no extra
-        scan) at the schedule's next ε, so ``prob()`` tracks the organic
-        growth schedule and stays ≤ the configured ε for a
-        ``strict=True`` SBF, with no overload warning ever fired."""
-        from ..sketch.bloom import BloomFilter
-        from ..sketch.scalable_bloom import ScalableBloomFilter
-
-        if not isinstance(self.sketch, ScalableBloomFilter):
-            partial = build_sketch(
-                novel_committed, self.col, self.factory, fanin=self.fanin
-            )
-            self.sketch = self.sketch.merge(partial)
-            return
-        import glob
-
-        import pyarrow.parquet as pq
-
-        n_new = sum(
-            pq.read_metadata(p).num_rows
-            for p in glob.glob(
-                os.path.join(epoch_path, "**", "*.parquet"), recursive=True
-            )
-        )
-        if n_new == 0:
-            return  # nothing novel: no stage, schedule doesn't advance
-        eps = self.sketch.next_stage_err()
-        cap = max(n_new, 11)  # bloom geometry floor
-        stage = build_sketch(
-            novel_committed,
-            self.col,
-            lambda: BloomFilter(cap, eps),
-            fanin=self.fanin,
-        )
-        self.sketch.fold_stage(stage)
+        return self._store.compact(spark, self.last_epoch, n_files)
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         if epoch_id <= self.last_epoch:
@@ -316,55 +154,28 @@ class StreamingNoveltyFilter(StreamingSketchAccumulator):
             .distinct()
             .withColumn("bucket", self._bucket_expr())
         )
-        keys.persist()  # reused by the bucket collect, the write, the build
-        try:
-            if self.last_epoch >= 0:  # state exists: gate with the bloom
-                maybe = might_contain(spark, self.sketch, F.col(self.col))
-                fresh = keys.where(~maybe)
-                suspects = keys.where(maybe)
-                # which store buckets can the suspects possibly live in?
-                # <= n_buckets rows — a bounded driver collect that lets
-                # the anti-join read ONLY matching bucket directories
-                hit = [
-                    r["bucket"]
-                    for r in suspects.select("bucket").distinct().collect()
-                ]
-                if hit:
-                    seen = self._seen(spark, buckets=hit)
-                    if seen is not None:
-                        # join on (bucket, key): the pruned store slices
-                        # co-locate with their suspects on the same keys
-                        suspects = suspects.join(
-                            seen, ["bucket", self.col], "left_anti"
-                        )
-                    novel = fresh.unionByName(suspects)
-                else:
-                    novel = fresh
-            else:
-                novel = keys
-            # epoch-scoped dir: a replayed epoch overwrites itself, never
-            # double-appends (static partitionOverwriteMode truncates the
-            # whole dir). The dir is UNCOMMITTED until _save(epoch_id)
-            # below — _seen ignores it on replay (see commit-point note),
-            # so a crash here cannot lose bloom-false-positive novel keys.
-            epoch_path = os.path.join(self.seen_dir, f"epoch={epoch_id}")
-            # truncate any stale replay remnant ourselves: a session with
-            # partitionOverwriteMode=dynamic would otherwise only replace
-            # the buckets this replay writes, leaving crashed-write debris
-            import shutil
-
-            shutil.rmtree(epoch_path, ignore_errors=True)
-            novel.write.mode("overwrite").partitionBy("bucket").parquet(
-                epoch_path
+        if self.last_epoch >= 0:  # state exists: gate with the bloom
+            flag = self.col + "_maybe"
+            maybe = might_contain(spark, self.sketch, F.col(self.col))
+            fresh, suspects, seen = self._store.gated_read(
+                spark, keys.withColumn(flag, maybe), flag, "bucket", self.last_epoch
             )
-            novel_committed = spark.read.schema(self._seen_schema).parquet(
-                epoch_path
-            )
-            self._fold_epoch(novel_committed, epoch_path)
-            self.last_epoch = epoch_id
-            self._save(epoch_id)
-        finally:
-            keys.unpersist()
+            if seen is not None:
+                # join on (bucket, key): the pruned store slices
+                # co-locate with their suspects on the same keys
+                suspects = suspects.join(seen, ["bucket", self.col], "left_anti")
+            novel = fresh.unionByName(suspects)
+        else:
+            novel = keys
+        # epoch-scoped dir: a replayed epoch overwrites itself, never
+        # double-appends. The dir is UNCOMMITTED until _save(epoch_id)
+        # below, so a crash here cannot lose bloom-false-positive keys.
+        committed, epoch_path = self._store.write_epoch(novel, epoch_id)
+        self.sketch = fold_epoch(
+            self.sketch, self.factory, committed, self.col, epoch_path, self.fanin
+        )
+        self.last_epoch = epoch_id
+        self._save(epoch_id)
 
 
 def stream_novelty_filter(

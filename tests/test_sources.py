@@ -240,7 +240,7 @@ def test_bloom_gated_kv_get_prunes_to_probe_buckets(spark, tmp_path):
     hit_bucket = one.select(
         F.pmod(F.xxhash64(F.col("k").cast("string")), F.lit(16)).cast("int")
     ).collect()[0][0]
-    store = kv._store_df(buckets=[hit_bucket])
+    store = kv._store.read(spark, kv.last_epoch, buckets=[hit_bucket])
     files = {
         r[0]
         for r in store.select(

@@ -328,7 +328,7 @@ def test_novelty_seen_store_bucketed_and_anti_join_pruned(
         .collect()
     )
     assert len(hit) < len(bucket_dirs)
-    pruned = flt._seen(spark, buckets=hit)
+    pruned = flt._store.read(spark, flt.last_epoch, buckets=hit)
     # plan-level: the bucket filter reaches the scan as a partition filter
     assert "PartitionFilters" in formatted_plan(pruned)
     # runtime-level: only matching bucket dirs are ever read
