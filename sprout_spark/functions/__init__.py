@@ -13,5 +13,7 @@ from .text import (
     language_id,
     quality_score,
     with_text_stats,
+    ws_grams,
     ws_token_count,
+    ws_tokens,
 )

@@ -3,6 +3,14 @@
 Everything here is either pure ``pyspark.sql.functions`` (JVM-side,
 whole-stage-codegen, SQL-oracle-able) or one vectorized ``mapInArrow``
 pass (fingerprinting). No per-row Python anywhere.
+
+The package's one whitespace token rule lives here: a token is a
+maximal run of non-whitespace characters, whitespace is Java's ``\\s``
+class ``[ \\t\\n\\x0B\\f\\r]``, and a blank or whitespace-only text has
+no tokens. :func:`ws_tokens` and :func:`ws_grams` are its JVM form,
+:func:`ws_split_arrow` its Arrow form and :func:`nonblank` its
+predicate; every text operator tokenizes through them, so a sketch's
+keys and the exact verify that checks them agree token for token.
 """
 
 from __future__ import annotations
@@ -26,15 +34,77 @@ _STOPWORDS = {
 }
 
 
-def ws_token_count(text: Column) -> Column:
-    """Whitespace token count: separators+1 on trimmed text, 0 for blank.
-    Exact and trivially SQL-oracle-able. The trim is regex-based: Spark's
-    ``trim()`` strips only ASCII spaces, so leading tabs/newlines would
-    otherwise produce a phantom empty first token (count off by one)."""
-    t = F.regexp_replace(text, r"^\s+|\s+$", "")
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.split(t, r"\s+"))
+# RE2's \s omits \x0B, so the Arrow kernel spells Java's class out
+_WS_RUN_ARROW = r"[ \t\n\x0B\f\r]+"
+
+
+def ws_tokens(text: Column) -> Column:
+    """The whitespace tokens of ``text`` (array<string>): one split on
+    runs of whitespace, with the empty tokens a leading or trailing run
+    leaves dropped. Blank or whitespace-only text gives ``[]``; NULL
+    stays NULL."""
+    return F.array_remove(F.split(text, r"\s+"), "")
+
+
+def _windows(toks: Column, k: int) -> Column:
+    """Every k-token window of a token array, joined by single spaces,
+    with multiplicity; ``[]`` for fewer than k tokens."""
+    if k == 1:
+        return toks
+    n = F.size(toks)
+    return F.when(n < k, F.array()).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), n - (k - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+        )
     )
+
+
+def ws_grams(text: Column, k: int) -> Column:
+    """Word k-grams of ``text`` with multiplicity: each window of k
+    :func:`ws_tokens` joined by single spaces (``k == 1`` is the tokens
+    themselves). The tokens are bound once through a one-element
+    ``transform``; written inline, the split would run again for every
+    window's ``slice``."""
+    if k == 1:
+        return ws_tokens(text)
+    return F.transform(F.array(ws_tokens(text)), lambda t: _windows(t, k))[0]
+
+
+def nonblank(text: Column) -> Column:
+    """True when ``text`` has a non-whitespace character (so at least
+    one token); NULL for NULL."""
+    return text.rlike(r"\S")
+
+
+def ws_split_arrow(arr) -> tuple[pa.Array, np.ndarray]:
+    """:func:`ws_tokens` over an Arrow string array, in Arrow/numpy: the
+    flat tokens of every row and row offsets (n+1,), so row i owns
+    ``flat[offsets[i]:offsets[i+1]]``. NULL rows have no tokens."""
+    import pyarrow.compute as pc
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    toks = pc.split_pattern_regex(pc.coalesce(arr, ""), _WS_RUN_ARROW)
+    if isinstance(toks, pa.ChunkedArray):
+        toks = toks.combine_chunks()
+    flat = toks.flatten()
+    offsets = np.asarray(toks.offsets, dtype=np.int64)
+    offsets = offsets - offsets[0]
+    keep = pc.binary_length(flat).to_numpy(zero_copy_only=False) > 0
+    if not keep.all():
+        # a leading or trailing run leaves an empty token (an interior
+        # one never does): drop them and count the kept ones per row
+        flat = flat.filter(pa.array(keep))
+        kept = np.concatenate([[0], np.cumsum(keep, dtype=np.int64)])
+        offsets = kept[offsets]
+    return flat, offsets
+
+
+def ws_token_count(text: Column) -> Column:
+    """Whitespace token count: the size of :func:`ws_tokens`, 0 for
+    blank. Exact and trivially SQL-oracle-able."""
+    return F.size(ws_tokens(text))
 
 
 def bpe_ish_token_count(text: Column) -> Column:
@@ -244,8 +314,8 @@ def with_repetition_stats(df: DataFrame, text_col: str) -> DataFrame:
     Pure JVM expressions end to end (split → slice windows via
     ``transform(sequence)`` → ``array_distinct`` set sizes) — whole-stage
     codegen, no Python, no shuffle; blank/whitespace-only docs get all
-    zeros. Tokenization matches :func:`ws_token_count` (regex trim +
-    ``\\s+`` split), so the counters compose with `with_text_stats`."""
+    zeros. Tokens are :func:`ws_tokens`, so the counters compose with
+    `with_text_stats`."""
     out_names = [
         "n_tokens", "n_dup_tokens", "n_2grams", "n_dup_2grams",
         "n_3grams", "n_dup_3grams",
@@ -259,22 +329,10 @@ def with_repetition_stats(df: DataFrame, text_col: str) -> DataFrame:
     tmp = "_toks"
     while tmp in df.columns:  # collision-free temp name
         tmp += "_"
-    t = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
-    toks = F.when(F.length(t) == 0, F.array()).otherwise(F.split(t, r"\s+"))
-    out = df.withColumn(tmp, toks)
-    n = F.size(F.col(tmp))
+    out = df.withColumn(tmp, ws_tokens(F.col(text_col)))
 
     def gram_counts(k: int, prefix: str):
-        if k == 1:
-            grams = F.col(tmp)
-        else:
-            # window i..i+k-1 joined by a single space: slice is 1-based
-            grams = F.when(n < k, F.array()).otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), n - (k - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(F.col(tmp), i, k)),
-                )
-            )
+        grams = _windows(F.col(tmp), k)
         total = F.size(grams)
         dup = total - F.size(F.array_distinct(grams))
         return [

@@ -12,18 +12,21 @@ nothing to embed).
 Pure JVM end to end: ``split`` -> ``explode(sequence(...))`` ->
 ``slice`` + ``array_join`` — no Python, no shuffle at all (chunking is
 embarrassingly row-local; the explode multiplies rows in-task).
-Tokenization matches the package convention (regex trim then split on
-``\\s+`` — `functions/text.py`), so chunk boundaries agree with
-`ws_token_count` and the DuckDB oracle reproduces chunks byte-for-byte
-(consecutive whitespace collapses to the single-space join; chunk text
-is for downstream embedding, not byte-faithful reconstruction — use
-(tok_from, tok_to) against the original when fidelity matters).
+Tokens are the package's whitespace tokens
+(:func:`~sprout_spark.functions.text.ws_tokens`), so chunk boundaries
+agree with `ws_token_count` and the DuckDB oracle reproduces chunks
+byte-for-byte (consecutive whitespace collapses to the single-space
+join; chunk text is for downstream embedding, not byte-faithful
+reconstruction — use (tok_from, tok_to) against the original when
+fidelity matters).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.text import ws_tokens
 
 
 def chunk_text(
@@ -49,10 +52,8 @@ def chunk_text(
         if tmp in df.columns:
             raise ValueError(f"reserved column name {tmp!r} in input")
 
-    t = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
-    toks = F.split(t, r"\s+")
-    # split("") yields [""] (size 1): blank docs need the explicit 0
-    n = F.when(t == "", F.lit(0)).otherwise(F.size(toks))
+    toks = ws_tokens(F.col(text_col))
+    n = F.size(toks)
     base = (
         df.select(F.col(id_col), toks.alias("__toks"), n.alias("__n"))
         .where(F.col("__n") > 0)

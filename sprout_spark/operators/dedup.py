@@ -29,6 +29,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import nonblank, ws_grams, ws_split_arrow
 from ..hashing import murmur3_64_flat, murmur3_64_packed, pack_arrow
 from ..spark import fastpath
 
@@ -41,33 +42,16 @@ _B = _rng.randint(0, 2**63, _MAX_HASHES).astype(np.uint64)
 
 
 def _tokenize_batch(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Whitespace-tokenize an Arrow string array entirely in Arrow/numpy.
+    """Murmur hashes of the whitespace tokens of an Arrow string array
+    (:func:`~sprout_spark.functions.text.ws_split_arrow`, so the same
+    tokens the JVM token sets hold).
 
     Returns (token_hashes uint64 flat, row_offsets int64 (n+1,)) where
     tokens of row i occupy hashes[offsets[i]:offsets[i+1]].
     """
-    import pyarrow.compute as pc
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    toks = pc.split_pattern_regex(pc.coalesce(arr, ""), r"\s+")
-    if isinstance(toks, pa.ChunkedArray):
-        toks = toks.combine_chunks()
-    flat = toks.flatten()
-    offsets = np.asarray(toks.offsets, dtype=np.int64)
-    offsets = offsets - offsets[0]
-    counts = np.diff(offsets)
+    flat, offsets = ws_split_arrow(arr)
     buf, lens = pack_arrow(flat)
-    h = murmur3_64_packed(buf, lens, 0)
-    keep = lens > 0
-    if not keep.all():
-        # drop empty tokens (leading/trailing whitespace artifacts) and
-        # remap the per-row offsets accordingly
-        h = h[keep]
-        seg = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-        kept_counts = np.bincount(seg[keep], minlength=len(counts))
-        offsets = np.concatenate([[0], np.cumsum(kept_counts)]).astype(np.int64)
-    return h, offsets
+    return murmur3_64_packed(buf, lens, 0), offsets
 
 
 def _shingle_hashes(
@@ -380,20 +364,7 @@ def _set_col(text_col: str, k: int):
     """The verify's token-set column: distinct whitespace tokens for
     ``k == 1``, else distinct word-k-gram shingles (see
     :func:`shingle_sets`)."""
-    if k == 1:
-        return F.array_remove(
-            F.array_distinct(F.split(F.col(text_col), r"\s+")), ""
-        )
-    t = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
-    toks = F.when(F.length(t) == 0, F.array()).otherwise(F.split(t, r"\s+"))
-    n = F.size(toks)
-    grams = F.when(n < k, F.array()).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    )
-    return F.array_distinct(grams)
+    return F.array_distinct(ws_grams(F.col(text_col), k))
 
 
 def _sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
@@ -404,16 +375,10 @@ def _sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     )
 
 
-def _nonempty(df: DataFrame, text_col: str) -> DataFrame:
-    """Docs with a non-whitespace character (strips ALL whitespace: trim
-    only covers ASCII spaces, and tab/newline-only docs must go too)."""
-    return df.where(F.length(F.regexp_replace(F.col(text_col), r"\s", "")) > 0)
-
-
 def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(id, tokens array<string>) with DISTINCT word-k-gram shingles,
-    pure JVM (``transform(sequence)`` windows joined by single spaces) —
-    the exact-verify companion to ``minhash_band_rows(shingle_k=k)``.
+    pure JVM (:func:`~sprout_spark.functions.text.ws_grams`) — the
+    exact-verify companion to ``minhash_band_rows(shingle_k=k)``.
     Docs with fewer than k tokens get an empty array."""
     return _sets(df, id_col, text_col, k)
 
@@ -701,7 +666,9 @@ def near_dup_pairs(
     Jaccard kernels and give the same rows; caps in
     :mod:`sprout_spark.spark.fastpath`.
     """
-    sides = [_nonempty(t, text_col) for t in (df, right) if t is not None]
+    sides = [
+        t.where(nonblank(F.col(text_col))) for t in (df, right) if t is not None
+    ]
     local_first = right is None and (
         max_bucket is None or oversize_mode in ("star", "drop")
     )
@@ -1106,27 +1073,12 @@ def simhash_signatures_portable(
     This is the *portable contract* variant; ``simhash_signatures`` (the
     murmur mapInArrow kernel) is the single-pass throughput path for
     100 TB runs — same banding/verify machinery downstream."""
-    if shingle_k == 1:
-        toks = df.select(
-            F.col(id_col).cast("bigint").alias("id"),
-            F.explode(F.split(F.col(text_col), r"\s+")).alias("tok"),
-        ).where(F.col("tok") != "")
-    else:
-        t = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
-        arr = F.when(F.length(t) == 0, F.array()).otherwise(F.split(t, r"\s+"))
-        n = F.size(arr)
-        grams = F.when(n < shingle_k, F.array()).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), n - (shingle_k - 1)),
-                lambda i: F.concat_ws(" ", F.slice(arr, i, shingle_k)),
-            )
-        )
-        # explode keeps multiplicity: repeated shingles vote repeatedly,
-        # matching the unigram variant's semantics
-        toks = df.select(
-            F.col(id_col).cast("bigint").alias("id"),
-            F.explode(grams).alias("tok"),
-        )
+    # explode keeps multiplicity: repeated tokens and shingles vote
+    # repeatedly, as in the murmur kernel
+    toks = df.select(
+        F.col(id_col).cast("bigint").alias("id"),
+        F.explode(ws_grams(F.col(text_col), shingle_k)).alias("tok"),
+    )
     hashed = toks.select(
         "id",
         F.expr("cast(conv(substring(md5(tok),1,8),16,10) as bigint)").alias("hi"),
@@ -1157,96 +1109,14 @@ def simhash_signatures_portable(
     return per.select("id", sig("h").alias("hi"), sig("l").alias("lo"))
 
 
-def simhash_near_dup_pairs_portable(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    max_bucket: int | None = 4096,
-    oversize_mode: str = "star",
-    shingle_k: int = 1,
+def _simhash_pairs(
+    sigs: DataFrame, max_hamming: int, max_bucket: int | None, oversize_mode: str
 ) -> DataFrame:
-    """Near-dup pairs from the portable md5 SimHash: candidates share one
-    of four 16-bit bands (pigeonhole => total recall at hamming<=3), then
-    exact Hamming verify, all JVM-side. The default ``max_bucket=4096``
-    keeps the hot-bucket guard (a boilerplate corpus can put thousands of
-    template docs into one (band, bh) bucket — an unbounded quadratic
-    self-join without it); inside over-cap buckets pair recall follows
-    ``oversize_mode`` rather than being total. Pass ``max_bucket=None``
-    for the unconditional pigeonhole guarantee — the all-pairs SQL oracle
-    queries do exactly that. The band self-join routes through
-    :func:`lsh_candidate_pairs` either way."""
+    """(a, b, hamming) from (id, simhash bigint) signatures: the four
+    16-bit bands, :func:`lsh_candidate_pairs` and the Hamming verify
+    both SimHash pair functions run."""
     if max_hamming > 3:
         raise ValueError("4-band pigeonhole guarantees recall only up to 3")
-    sigs = simhash_signatures_portable(df, id_col, text_col, shingle_k)
-    mask = F.lit(0xFFFF)
-    bands = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("band"), F.col("hi").bitwiseAND(mask).alias("bh")),
-                F.struct(F.lit(1).alias("band"), F.shiftright("hi", 16).bitwiseAND(mask).alias("bh")),
-                F.struct(F.lit(2).alias("band"), F.col("lo").bitwiseAND(mask).alias("bh")),
-                F.struct(F.lit(3).alias("band"), F.shiftright("lo", 16).bitwiseAND(mask).alias("bh")),
-            )
-        ).alias("e"),
-    ).select("id", "e.band", "e.bh")
-    cands = lsh_candidate_pairs(
-        bands, max_bucket=max_bucket, oversize_mode=oversize_mode, n_bands=4
-    )
-    sa = sigs.select(
-        F.col("id").alias("a"), F.col("hi").alias("_ha"), F.col("lo").alias("_la")
-    )
-    sb = sigs.select(
-        F.col("id").alias("b"), F.col("hi").alias("_hb"), F.col("lo").alias("_lb")
-    )
-    return (
-        cands.join(sa, "a")
-        .join(sb, "b")
-        .select(
-            "a",
-            "b",
-            F.expr("bit_count(_ha ^ _hb) + bit_count(_la ^ _lb)").alias(
-                "hamming"
-            ),
-        )
-        .where(F.col("hamming") <= max_hamming)
-    )
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    max_bucket: int | None = 4096,
-    oversize_mode: str = "star",
-    shingle_k: int = 1,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: candidates share one of four 16-bit
-    bands (pigeonhole: any pair within Hamming distance 3 shares at least
-    one intact band), verified with ``bit_count(a ^ b) <= max_hamming``
-    entirely JVM-side.
-
-    Zero-token docs are dropped (every empty doc hashes to sig=0, so they
-    would all collide in every band — a quadratic join of meaningless
-    "empty ~ empty" pairs; same policy as the minhash path); NULL texts
-    hash like empty ones and are dropped with them. With ``shingle_k >
-    1``, docs with fewer than ``shingle_k`` tokens yield no shingles and
-    are dropped too (the kernel emits no row for vote-less docs), so
-    unrelated short docs cannot alias as sig=0 "exact" near-dups. The band self-join
-    routes through :func:`lsh_candidate_pairs`, so the minhash hot-bucket
-    guard applies here too (boilerplate corpora put thousands of template
-    docs in one simhash band bucket) — note the default
-    ``max_bucket=4096`` means pair recall inside buckets beyond the cap
-    follows the ``oversize_mode`` policy rather than being total; pass
-    ``max_bucket=None`` for unconditional pigeonhole recall."""
-    if max_hamming > 3:
-        raise ValueError("4-band pigeonhole guarantees recall only up to 3")
-    nonempty = df.where(
-        F.length(F.regexp_replace(F.col(text_col), r"\s", "")) > 0
-    )
-    sigs = simhash_signatures(nonempty, id_col, text_col, shingle_k)
     bands = sigs.select(
         "id",
         F.explode(
@@ -1271,13 +1141,65 @@ def simhash_near_dup_pairs(
     return (
         cands.join(sa, "a")
         .join(sb, "b")
-        .select(
-            "a",
-            "b",
-            F.expr("bit_count(_sa ^ _sb)").alias("hamming"),
-        )
+        .select("a", "b", F.expr("bit_count(_sa ^ _sb)").alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
     )
+
+
+def simhash_near_dup_pairs_portable(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    max_bucket: int | None = 4096,
+    oversize_mode: str = "star",
+    shingle_k: int = 1,
+) -> DataFrame:
+    """Near-dup pairs from the portable md5 SimHash: the same banding,
+    hot-bucket guard and Hamming verify as :func:`simhash_near_dup_pairs`
+    over the signature ``(hi << 32) | lo``. The default
+    ``max_bucket=4096`` keeps the hot-bucket guard (a boilerplate corpus
+    can put thousands of template docs into one (band, bh) bucket — an
+    unbounded quadratic self-join without it); inside over-cap buckets
+    pair recall follows ``oversize_mode`` rather than being total. Pass
+    ``max_bucket=None`` for the unconditional pigeonhole guarantee — the
+    all-pairs SQL oracle queries do exactly that."""
+    sigs = simhash_signatures_portable(df, id_col, text_col, shingle_k)
+    sigs = sigs.select(
+        "id", F.shiftleft("hi", 32).bitwiseOR(F.col("lo")).alias("simhash")
+    )
+    return _simhash_pairs(sigs, max_hamming, max_bucket, oversize_mode)
+
+
+def simhash_near_dup_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    max_bucket: int | None = 4096,
+    oversize_mode: str = "star",
+    shingle_k: int = 1,
+) -> DataFrame:
+    """Near-dup pairs by SimHash: candidates share one of four 16-bit
+    bands (pigeonhole: any pair within Hamming distance 3 shares at least
+    one intact band), verified with ``bit_count(a ^ b) <= max_hamming``
+    entirely JVM-side.
+
+    Zero-token docs are dropped (every empty doc hashes to sig=0, so they
+    would all collide in every band — a quadratic join of meaningless
+    "empty ~ empty" pairs; same policy as the minhash path); NULL texts
+    have no tokens and are dropped with them. With ``shingle_k > 1``,
+    docs with fewer than ``shingle_k`` tokens yield no shingles and are
+    dropped too (the kernel emits no row for vote-less docs), so
+    unrelated short docs cannot alias as sig=0 "exact" near-dups. The
+    band self-join routes through :func:`lsh_candidate_pairs`, so the
+    minhash hot-bucket guard applies here too (boilerplate corpora put
+    thousands of template docs in one simhash band bucket) — note the
+    default ``max_bucket=4096`` means pair recall inside buckets beyond
+    the cap follows the ``oversize_mode`` policy rather than being total;
+    pass ``max_bucket=None`` for unconditional pigeonhole recall."""
+    sigs = simhash_signatures(df, id_col, text_col, shingle_k)
+    return _simhash_pairs(sigs, max_hamming, max_bucket, oversize_mode)
 
 
 # ---------------------------------------------------------------------------

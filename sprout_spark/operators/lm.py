@@ -25,8 +25,9 @@ path (``F.log`` is whole-stage-codegen JVM). Training is the
 ``build_vocab`` plan: map-side-combined term counts + TakeOrdered
 top-V (the driver never sees more than V rows).
 
-Tokenization is the package convention (regex trim + ``\\s+`` split,
-case-preserving) shared with operators/vocab.py — model and scorer
+Tokens are the package's whitespace tokens
+(:func:`~sprout_spark.functions.text.ws_tokens`, case-preserving),
+shared with operators/vocab.py — model and scorer
 MUST tokenize identically or OOV rates silently inflate.
 """
 

@@ -11,10 +11,12 @@ only for the ≤ k proposed candidates. One broadcast semi-join confirms,
 so the final answer is EXACT (the oracle is plain SQL), while the full
 shuffle only ever carries candidate grams.
 
-The k-gram generation is pure JVM (``transform(sequence)`` windows
-joined by single spaces — the same construction as ``shingle_sets``,
-but WITH multiplicity: corpus frequency counts occurrences, not
-per-document membership).
+The k-grams are the package's word k-grams
+(:func:`~sprout_spark.functions.text.ws_grams` in the JVM, the same
+windows over :func:`~sprout_spark.functions.text.ws_split_arrow` in the
+Arrow propose pass) — the construction ``shingle_sets`` uses, but WITH
+multiplicity: corpus frequency counts occurrences, not per-document
+membership.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sprout_spark.functions.text import ws_grams, ws_split_arrow
 from sprout_spark.sketch.misra_gries import MisraGries
 from sprout_spark.spark.aggregate import (  # noqa: F401 (build_sketch re-export)
     build_sketch,
@@ -35,42 +38,23 @@ from sprout_spark.spark.aggregate import (  # noqa: F401 (build_sketch re-export
     tree_merge,
 )
 
-# Java \s (the tokenizer contract shared with ngram_rows/shingle_sets):
-# [ \t\n\x0B\f\r]. RE2's \s omits \x0B, so the Arrow kernel spells the
-# class out rather than trusting the shorthand to agree across engines.
-_WS_CLASS = r"[ \t\n\r\f\x0B]+"
-
 
 def _gram_strings(arr, k: int):
     """All k-token-window gram strings of an Arrow string column, with
-    multiplicity, built entirely in Arrow/numpy: split → drop empty
-    tokens → k shifted takes of the flat token array → one vectorized
-    join. Same tokenization as :func:`ngram_rows` (trim + ``\\s+``
-    split); rows with fewer than k tokens contribute nothing. The JVM
-    equivalent (transform(sequence)+concat_ws+explode) re-slices the
-    token array per window with interpreted higher-order expressions —
-    measured ~4x slower than this kernel at sf0.1 (guide §4.2)."""
+    multiplicity, built entirely in Arrow/numpy: the tokens of
+    :func:`~sprout_spark.functions.text.ws_split_arrow` → k shifted
+    takes of the flat token array → one vectorized join. Same grams as
+    :func:`ngram_rows`; rows with fewer than k tokens contribute
+    nothing. The JVM equivalent (transform(sequence)+concat_ws+explode)
+    re-slices the token array per window with interpreted higher-order
+    expressions — measured ~4x slower than this kernel at sf0.1 (guide
+    §4.2)."""
     import pyarrow.compute as pc
 
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    toks = pc.split_pattern_regex(pc.coalesce(arr, ""), _WS_CLASS)
-    if isinstance(toks, pa.ChunkedArray):
-        toks = toks.combine_chunks()
-    flat = toks.flatten()
-    offsets = np.asarray(toks.offsets, dtype=np.int64)
-    offsets = offsets - offsets[0]
+    flat, offsets = ws_split_arrow(arr)
+    if k == 1:
+        return flat
     counts = np.diff(offsets)
-    lens = pc.binary_length(flat).to_numpy(zero_copy_only=False)
-    keep = lens > 0
-    if not keep.all():
-        # leading/trailing whitespace artifacts: drop empty tokens and
-        # remap per-row counts (interior tokens are never empty — the
-        # split pattern eats whole whitespace runs)
-        seg = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-        flat = flat.filter(pa.array(keep))
-        counts = np.bincount(seg[keep], minlength=len(counts)).astype(np.int64)
-        offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
     out_counts = np.maximum(counts - (k - 1), 0)
     total = int(out_counts.sum())
     if total == 0:
@@ -80,27 +64,17 @@ def _gram_strings(arr, k: int):
     local = np.arange(total, dtype=np.int64) - np.repeat(excl, out_counts)
     start = offsets[:-1][row_id] + local
     parts = [flat.take(pa.array(start + j)) for j in range(k)]
-    if k == 1:
-        return parts[0]
     return pc.binary_join_element_wise(*parts, " ")
 
 
 def ngram_rows(df: DataFrame, text_col: str, k: int) -> DataFrame:
     """One row per k-gram OCCURRENCE (column ``ngram``): whitespace
     tokens, k-token windows joined by single spaces, multiplicity
-    preserved. Docs with fewer than k tokens contribute nothing."""
+    preserved (:func:`~sprout_spark.functions.text.ws_grams`). Docs with
+    fewer than k tokens contribute nothing."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    t = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
-    toks = F.when(F.length(t) == 0, F.array()).otherwise(F.split(t, r"\s+"))
-    n = F.size(toks)
-    grams = F.when(n < k, F.array()).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    )
-    return df.select(F.explode(grams).alias("ngram"))
+    return df.select(F.explode(ws_grams(F.col(text_col), k)).alias("ngram"))
 
 
 def heavy_ngrams(

@@ -33,8 +33,9 @@ Every shuffle carries (id/term, counts) — never document text.
     whenever tf and df order the same way; use it when cross-engine
     reproducibility matters more than the exact idf curve.
 
-Tokenization is the package convention (regex trim + ``\\s+`` split)
-lowercased — term statistics are case-folded by standard practice.
+Tokens are the package's whitespace tokens
+(:func:`~sprout_spark.functions.text.ws_tokens`) of the lowercased
+text — term statistics are case-folded by standard practice.
 Ties (equal score) break on the term string ascending: fully
 deterministic output.
 """
@@ -43,6 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.text import ws_tokens
 
 _IDF_MODES = ("smooth_log", "rarity")
 
@@ -66,11 +69,8 @@ def tfidf_top_terms(
     if idf not in _IDF_MODES:
         raise ValueError(f"idf must be one of {_IDF_MODES}")
 
-    t = F.regexp_replace(F.lower(F.col(text_col)), r"^\s+|\s+$", "")
-    tok = (
-        df.select(F.col(id_col), t.alias("__t"))
-        .where(F.col("__t") != "")
-        .select(id_col, F.explode(F.split("__t", r"\s+")).alias("term"))
+    tok = df.select(
+        id_col, F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("term")
     )
     # tf is consumed by three branches (the join probe side, per-term
     # doc counts, and the corpus size N). Exchange reuse does NOT kick

@@ -22,9 +22,10 @@ SQL-reproducible; ``collect_ids`` re-assembles per-document arrays with
 an order-proof ``array_sort(struct(pos, id))`` when arrays are wanted
 (one shuffle on the doc id).
 
-Tokenization is the package convention (regex trim + ``\\s+`` split),
-case-preserving — vocabulary case folding is a corpus policy, not the
-operator's call; lowercase upstream if wanted.
+Tokens are the package's whitespace tokens
+(:func:`~sprout_spark.functions.text.ws_tokens`), case-preserving —
+vocabulary case folding is a corpus policy, not the operator's call;
+lowercase upstream if wanted.
 """
 
 from __future__ import annotations
@@ -32,16 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import ws_tokens
+
 
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    t = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
-    return (
-        df.select(F.col(id_col), t.alias("__t"))
-        .where(F.col("__t") != "")
-        .select(
-            id_col,
-            F.posexplode(F.split("__t", r"\s+")).alias("pos", "term"),
-        )
+    return df.select(
+        id_col, F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "term")
     )
 
 

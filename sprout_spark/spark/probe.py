@@ -152,8 +152,16 @@ def bloom_semi_join(
 ) -> DataFrame:
     """Exact left-semi join, bloom-pruned: filter ``big`` by
     ``might_contain(big_key)`` (cheap, broadcast, no shuffle of misses)
-    then confirm with the real semi join so false positives drop out."""
+    then confirm with the real semi join so false positives drop out.
+
+    The key match is null-safe equality on a non-NULL big key (the rows
+    of ``big_key == small_key``), as in ``sharded.sharded_semi_join``:
+    an attribute ``=`` lets the optimizer infer the probe filter onto
+    ``small`` and run the probe UDF over it too."""
     pruned = big.where(might_contain(spark, sketch, F.col(big_key)))
     return pruned.join(
-        small, on=pruned[big_key] == small[small_key], how="left_semi"
+        small,
+        on=pruned[big_key].eqNullSafe(small[small_key])
+        & pruned[big_key].isNotNull(),
+        how="left_semi",
     )

@@ -22,10 +22,7 @@ plain groupBy. The build therefore defaults to the MAP-SIDE COMBINE
 (``build_grouped_sketches(combine="map")``): every input partition
 sketches the windows it sees and only kilobyte sketch rows shuffle for
 the per-window merge — raw rows never move, and a hot window costs
-nothing extra because its rows stay wherever the scan put them. The
-row-shuffling salted build (``combine="shuffle", salt=64``) remains for
-degenerate key spaces whose cardinality approaches the row count; both
-are exact by mergeability.
+nothing extra because its rows stay wherever the scan put them.
 
 Commit discipline (the package protocol, sources/commit.py): epoch
 parquet lands first under a dir readers ignore, then one fsync'd
@@ -240,10 +237,8 @@ class SketchRollup:
         df: DataFrame,
         ts_col: str,
         val_col: str,
-        salt: int = 64,
         weight_col: str | None = None,
         tag: str | None = None,
-        combine: str = "map",
     ) -> int:
         """Build this batch's per-(window, dims) partials and commit
         them as one epoch. Never reads existing data — duplicate
@@ -266,18 +261,13 @@ class SketchRollup:
         skip). The namespace is the caller's: two different streams
         into one rollup need distinct tag prefixes.
 
-        ``combine="map"`` (default) builds per-(window, dims) partials
-        map-side — each input partition sketches the windows it sees and
-        only kilobyte sketch rows shuffle for the per-key merge, never
-        raw turns. A rollup's key space (windows × dims) is bounded by
-        construction while its row count is not, which is exactly the
-        map-combine applicability condition; hot windows need no salt
-        because their rows stay in place. ``combine="shuffle"`` restores
-        the row-shuffling (key, salt) build (``salt`` only applies
-        there) for degenerate dims whose cardinality approaches the row
-        count. Mergeability makes the committed partials byte-equal for
-        the idempotent sketches (HLL/CMS/Bloom) and bound-equivalent for
-        the order-sensitive ones (t-digest/KLL) either way."""
+        The partials are built map-side — each input partition sketches
+        the windows it sees and only kilobyte sketch rows shuffle for
+        the per-key merge, never raw turns. A rollup's key space
+        (windows × dims) is bounded by construction while its row count
+        is not, which is exactly the map-combine applicability
+        condition; hot windows need no salt because their rows stay in
+        place."""
         if self.factory is None:
             raise ValueError(
                 "append needs the sketch factory; reopen with factory= "
@@ -313,9 +303,8 @@ class SketchRollup:
                 "__rollup_key",
                 val_col,
                 self.factory,
-                salt=salt,
                 weight_col=weight_col,
-                combine=combine,
+                combine="map",
             )
             parsed = grouped.select(
                 F.from_json("key", key_schema).alias("__k"), "sketch", "rows"
@@ -342,10 +331,8 @@ class SketchRollup:
         self,
         ts_col: str,
         val_col: str,
-        salt: int = 64,
         weight_col: str | None = None,
         tag_prefix: str = "stream",
-        combine: str = "map",
     ):
         """A ``foreachBatch`` hook: each micro-batch commits as one
         tagged epoch (``<tag_prefix>-<epoch_id>``), so restarts that
@@ -358,10 +345,8 @@ class SketchRollup:
                 batch_df,
                 ts_col,
                 val_col,
-                salt=salt,
                 weight_col=weight_col,
                 tag=f"{tag_prefix}-{int(epoch_id)}",
-                combine=combine,
             )
 
         return sink
@@ -660,7 +645,6 @@ def stream_rollup(
     val_col: str,
     checkpoint_dir: str,
     trigger: dict | None = None,
-    salt: int = 64,
     weight_col: str | None = None,
     tag_prefix: str = "stream",
 ):
@@ -671,7 +655,7 @@ def stream_rollup(
     epochs."""
     writer = (
         stream_df.writeStream.foreachBatch(
-            rollup.stream_sink(ts_col, val_col, salt, weight_col, tag_prefix)
+            rollup.stream_sink(ts_col, val_col, weight_col, tag_prefix)
         )
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")

@@ -151,6 +151,29 @@ def test_bloom_semi_join_exact(spark, sf_dir):
     )
 
 
+def test_bloom_semi_join_probes_once(spark):
+    """The probe UDF runs on ``big`` only (the optimizer must not infer
+    it onto ``small`` across the join keys); rows equal the plain
+    left-semi join, duplicates kept, and a NULL key matches nothing."""
+    big = spark.range(5000).select((F.col("id") % 4000).alias("k")).union(
+        spark.createDataFrame([(None,)], "k bigint")
+    )
+    small = (
+        spark.range(0, 5000, 15)
+        .select(F.col("id").alias("k"))
+        .union(spark.createDataFrame([(None,)], "k bigint"))
+    )
+    bf = build_sketch(small.where(F.col("k").isNotNull()), "k",
+                      lambda: BloomFilter(400, 0.01))
+    got = bloom_semi_join(spark, big, "k", small, "k", bf)
+    rows = sorted(r["k"] for r in got.collect())
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.split("== Initial Plan ==")[0].count("ArrowEvalPython") == 1
+    exact = big.join(small, "k", "left_semi")
+    assert rows == sorted(r["k"] for r in exact.collect())
+    assert None not in rows
+
+
 def test_grouped_salted_sketches(spark, transcripts):
     # per-tool HLL of distinct conv_ids, salted 8 ways; salting must not
     # change results (mergeability makes it exact)
