@@ -10,16 +10,21 @@ This is the Spark skeleton every sketch plugs into (SURVEY.md §3.4):
                                        #   task, built vectorized in
                                        #   numpy from Arrow batches —
                                        #   zero per-row Python
-      → tree merge                     # groupBy(part_id // fanin)
-                                       #   .applyInArrow(merge) repeated,
-                                       #   so no task ever receives more
-                                       #   than fanin × sketch_size bytes
+      → tree merge                     # merge_groups on part_id // fanin,
+                                       #   repeated, so no task ever
+                                       #   receives more than fanin ×
+                                       #   sketch_size bytes
       → driver MergeableSketch         # final merge of ≤ fanin rows
 
 Every build in the package runs through the same three pieces defined
-here: :func:`emit_partials` (the partial step), :func:`merge_groups`
-(the one merge kernel) and :func:`collect_merged` (the driver fold). A
-partial row is ``[name,] part_id, sketch, rows``.
+here: :func:`emit_partials` (the partial step), the key-run fold
+:func:`_fold_runs` (every per-key build and merge: :func:`build_groups`
+and :func:`merge_groups`) and :func:`collect_merged` (the driver fold).
+A partial row is ``[name,] part_id, sketch, rows``. The fold cuts Arrow
+batches into runs of equal keys, vectorized, and folds each run into one
+row. After a shuffle its input is ``repartition(keys)
+.sortWithinPartitions(keys)``, the Exchange and Sort a grouped
+``applyInArrow`` needs, but with no Python call per key.
 
 The builds feed the partial step through :func:`coalesce_to_slots`, so
 16 input files on 4 cores build 4 partials instead of 16, and the merge
@@ -58,24 +63,28 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import warnings
 from typing import Callable
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from ..sketch.base import MergeableSketch, merge_serialized, sketch_from_bytes
 
 SKETCH_ROW_SCHEMA = "part_id bigint, sketch binary, rows bigint"
 # one-scan multi-sketch builds: one row per (sketch name, partition)
 MULTI_ROW_SCHEMA = "name string, " + SKETCH_ROW_SCHEMA
-
-# dict slot for the NULL-key group in the map-combine partial build (a
-# plain None key would collide with nothing, but a sentinel keeps the
-# "is this the null group" check identity-based and explicit)
-_NULL_KEY = object()
 
 
 def _is_numeric_arrow(arr_type: pa.DataType) -> bool:
@@ -119,12 +128,6 @@ def _require_weighted_interface(factory) -> str:
 def _update_sketch_from_arrow_weighted(sk, arr, warr, kind) -> None:
     """Weighted analog of :func:`_update_sketch_from_arrow`: dispatch an
     Arrow (values, weights) pair to the sketch's weighted update."""
-    import pyarrow.compute as pc
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if isinstance(warr, pa.ChunkedArray):
-        warr = warr.combine_chunks()
     weights = (
         pc.fill_null(pc.cast(warr, pa.int64()), 0)
         .to_numpy(zero_copy_only=False)
@@ -259,38 +262,165 @@ def partial_sketches(
     exchange costs more than the serialized kernel it parallelizes
     (measured both round-robin and hash spread at sf0.1: bloom_build
     1.05s -> 1.61s / 0.98s, tdigest 0.55s -> 0.81s — both worse)."""
-    return emit_partials(
-        df.select(col),
-        factory,
-        lambda sk, batch: _update_sketch_from_arrow(sk, batch.column(0)),
+    frame = df.select(F.col(col).alias("_v"))
+    return emit_partials(frame, factory, _value_update(factory, False))
+
+
+def _value_update(factory: Callable, weighted: bool) -> Callable:
+    """The update step of every value build: ``update(sk, batch)`` folds
+    ``batch``'s ``_v`` column into ``sk``, each row weighted by its
+    ``_w`` column when ``weighted``. The weighted interface is checked
+    here, at the driver (:func:`_require_weighted_interface`)."""
+    if not weighted:
+        return lambda sk, batch: _update_sketch_from_arrow(sk, batch.column("_v"))
+    kind = _require_weighted_interface(factory)
+    return lambda sk, batch: _update_sketch_from_arrow_weighted(
+        sk, batch.column("_v"), batch.column("_w"), kind
     )
 
 
-def _merge_rows(tbl: pa.Table) -> pa.Table:
-    # Arrow-native merge path: binary payloads stay Arrow buffers until
-    # the numpy OR/max/add — no pandas object-column detour
-    out = {}
-    for c in tbl.column_names:
-        if c == "sketch":
-            out[c] = pa.array(
-                [merge_serialized(tbl.column(c).to_pylist())], pa.binary()
-            )
-        elif c == "rows":
-            out[c] = pa.array(
-                [pa.compute.sum(tbl.column(c)).as_py()], pa.int64()
-            )
-        else:
-            out[c] = tbl.column(c).slice(0, 1)
-    return pa.table(out)
+def _key_runs(batch: pa.RecordBatch, keys: list, local_sort: bool):
+    """Cut ``batch`` into runs of equal ``keys`` (vectorized: one
+    dictionary encode per key column; a NULL key is a value of its own).
+    With ``local_sort`` the batch is first stably sorted by its key
+    codes, so each key present in it forms one run. Returns the
+    (possibly reordered) batch and the runs' start and end rows."""
+    codes = [
+        np.asarray(
+            pc.dictionary_encode(batch.column(k), null_encoding="encode").indices
+        )
+        for k in keys
+    ]
+    if local_sort:
+        order = np.lexsort(codes[::-1])
+        batch = batch.take(pa.array(order))
+        codes = [c[order] for c in codes]
+    new_run = np.zeros(batch.num_rows, dtype=bool)
+    new_run[0] = True
+    for c in codes:
+        new_run[1:] |= c[1:] != c[:-1]
+    starts = np.flatnonzero(new_run)
+    return batch, starts, np.append(starts[1:], batch.num_rows)
+
+
+def _fold_runs(
+    keys: list,
+    names: list,
+    make: Callable | None = None,
+    update: Callable | None = None,
+    sorted_input: bool = True,
+) -> Callable:
+    """The key-run fold kernel (a ``mapInArrow`` function): one row of
+    columns ``names`` per key run. Without ``make`` the rows are sketch
+    rows: a run's ``sketch`` payloads merge with one ``merge_serialized``
+    call at its end, in row order, and ``rows`` sum. With ``make`` a
+    run builds a fresh ``make()`` sketch through ``update(sketch,
+    rows)`` and ``rows`` counts it. Every other column keeps its first
+    value and type.
+
+    ``sorted_input`` holds each key's rows together (a shuffle on
+    ``keys`` then a sort on them): a new key closes the open run, which
+    carries across batches, so memory is one batch plus the open run.
+    Otherwise (the map-combine step, no shuffle) each batch is sorted
+    locally and runs fold into one accumulator per partition."""
+    heads = [c for c in names if c not in ("sketch", "rows")]
+
+    def close(ent) -> dict:
+        head, state, rows = ent
+        payload = state.to_bytes() if make else merge_serialized(state)
+        return {**head, "sketch": payload, "rows": rows}
+
+    def fn(batches):
+        acc: dict[tuple, list] = {}  # key -> [first values, state, rows]
+        done: list[dict] = []
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            types = dict(zip(batch.schema.names, batch.schema.types))
+            types.update(sketch=pa.binary(), rows=pa.int64())
+            out = pa.schema([(c, types[c]) for c in names])
+            batch, starts, ends = _key_runs(batch, keys, not sorted_input)
+            first = batch.select(heads).take(pa.array(starts)).to_pylist()
+            if make:
+                counts = ends - starts
+            else:
+                payloads = batch.column("sketch").to_pylist()
+                counts = np.add.reduceat(
+                    pc.fill_null(batch.column("rows"), 0).to_numpy(), starts
+                )
+            for head, s, e, n in zip(first, starts, ends, counts.tolist()):
+                key = tuple(head[k] for k in keys)
+                ent = acc.get(key)
+                if ent is None:
+                    if sorted_input:
+                        done += [close(x) for x in acc.values()]
+                        acc.clear()
+                    ent = acc[key] = [head, make() if make else [], 0]
+                    if len(acc) == 262_145:  # map side: grows with keys
+                        warnings.warn(
+                            "map-combine partial dict exceeded 262k keys in "
+                            "one partition; key cardinality approaches row "
+                            "count — use combine='shuffle'",
+                            stacklevel=2,
+                        )
+                if make:
+                    update(ent[1], batch.slice(s, e - s))
+                else:
+                    ent[1] += payloads[s:e]
+                ent[2] += n
+            if done:
+                yield pa.RecordBatch.from_pylist(done, schema=out)
+                done = []
+        if acc:
+            done = [close(x) for x in acc.values()]
+            yield pa.RecordBatch.from_pylist(done, schema=out)
+
+    return fn
 
 
 def merge_groups(df: DataFrame, *keys: str) -> DataFrame:
-    """The one merge kernel: collapse ``df``'s sketch rows to one row per
-    ``keys`` group (``applyInArrow``). ``sketch`` payloads merge,
-    ``rows`` sum, and every other column keeps its first value with its
-    type — so callers project to (keys, sketch, rows) first; the output
-    schema is ``df.schema``."""
-    return df.groupBy(*keys).applyInArrow(_merge_rows, df.schema)
+    """The one merge: collapse ``df``'s sketch rows to one row per
+    ``keys`` group through the key-run fold (:func:`_fold_runs`).
+    ``sketch`` payloads merge, ``rows`` sum, and every other column
+    keeps its first value with its type — so callers project to (keys,
+    sketch, rows) first; the output schema is ``df.schema``."""
+    by_key = df.repartition(*keys).sortWithinPartitions(*keys)
+    return by_key.mapInArrow(_fold_runs(list(keys), df.columns), df.schema)
+
+
+def build_groups(
+    frame: DataFrame,
+    keys: list,
+    factory: Callable[[], MergeableSketch],
+    weighted: bool = False,
+    map_side: bool = False,
+) -> DataFrame:
+    """One sketch per ``keys`` group, built from ``frame``'s ``_v``
+    column (weighted by ``_w`` when ``weighted``) through the key-run
+    fold. The output replaces ``_v``/``_w`` with ``sketch binary, rows
+    bigint``; every other column keeps its first value and type.
+
+    By default each key's rows shuffle together first, so the result
+    has one row per key. ``map_side`` builds one partial per key per
+    input partition instead, with no shuffle (merge them with
+    :func:`merge_groups`)."""
+    update = _value_update(factory, weighted)
+    fields = [
+        StructField(f.name, f.dataType)
+        for f in frame.schema.fields
+        if f.name not in ("_v", "_w")
+    ]
+    at = frame.columns.index("_v")
+    fields[at:at] = [
+        StructField("sketch", BinaryType()),
+        StructField("rows", LongType()),
+    ]
+    schema = StructType(fields)
+    if not map_side:
+        frame = frame.repartition(*keys).sortWithinPartitions(*keys)
+    return frame.mapInArrow(
+        _fold_runs(keys, schema.names, factory, update, not map_side), schema
+    )
 
 
 def tree_merge(
@@ -313,8 +443,8 @@ def tree_merge(
     a driver-side fold anyway (:func:`collect_merged`,
     :func:`build_sketches`) pass ``stop_at=fanin``: the final ≤ fanin
     rows collect directly — the same fanin × sketch_size driver-inbound
-    bound the full tree has — and each ``applyInArrow`` level is a full
-    shuffle + Python round trip, so skipping the last level(s) removes
+    bound the full tree has — and each level is a full shuffle +
+    Python pass, so skipping the last level(s) removes
     whole stages from every build (measured ~0.5-1.0s per build at
     local[32], where two levels reduced 32 tiny partials).
     """
@@ -376,8 +506,6 @@ def _warn_if_partials_oversized(factory, n_partials: int) -> None:
         return
     size = getattr(probe, "filter_size", lambda: 0)()
     if size * max(n_partials, 1) > _PARTIAL_SHUFFLE_WARN_BYTES:
-        import warnings
-
         warnings.warn(
             f"bloom partial merge shuffle is ~{size * n_partials >> 20} MiB "
             f"({n_partials} partials x {size >> 20} MiB full-width "
@@ -423,17 +551,11 @@ def build_weighted_sketch(
     dropped in the numeric path (a zero-weight observation carries no
     rank mass); NULL weights count 0 and NULL keys hash as the empty
     key in the hash path, exactly like the unweighted path."""
-    kind = _require_weighted_interface(factory)
+    update = _value_update(factory, weighted=True)
     frame, n = coalesce_to_slots(
-        df.select(F.col(col), F.col(weight_col).cast("long").alias("_w"))
+        df.select(F.col(col).alias("_v"), F.col(weight_col).cast("long").alias("_w"))
     )
-    partials = emit_partials(
-        frame,
-        factory,
-        lambda sk, batch: _update_sketch_from_arrow_weighted(
-            sk, batch.column(0), batch.column(1), kind
-        ),
-    )
+    partials = emit_partials(frame, factory, update)
     return collect_merged(
         tree_merge(partials, n, fanin=fanin, stop_at=fanin), factory
     )
@@ -532,12 +654,14 @@ def build_grouped_sketches(
     byte-equal either way):
 
     * ``"shuffle"`` (default, the historical plan): raw rows shuffle on
-      (key[, salt]) and each group builds in one task. Right when key
+      (key[, salt]), sort within their partition, and the key-run fold
+      (:func:`build_groups`) builds each key's sketch batch by batch, so
+      a hot key never has to fit in memory as one table. Right when key
       cardinality approaches row count (per-partition partial dicts
       would explode) — the per-conversation build over 10^9 conv_ids.
     * ``"map"`` — the classic map-side combine: every input partition
-      builds one partial sketch per key it sees (vectorized key-run
-      slicing over Arrow batches, zero per-row Python), and only the
+      builds one partial sketch per key it sees (the same fold over
+      locally sorted Arrow batches, zero per-row Python), and only the
       O(partitions × keys-per-partition) SKETCH rows shuffle for the
       per-key merge; raw rows never move. Right when keys are bounded
       (time windows, event types, sources) and rows are not — the
@@ -548,7 +672,6 @@ def build_grouped_sketches(
     """
     if combine not in ("shuffle", "map"):
         raise ValueError(f"combine must be 'shuffle' or 'map', got {combine!r}")
-    out_schema = "key string, sketch binary, rows bigint"
 
     # grouped-build analog of _warn_if_partials_oversized: HLL/CMS
     # partials self-shrink (sparse wire payloads), but a Bloom filter's
@@ -562,8 +685,6 @@ def build_grouped_sketches(
     if _probe is not None:
         _size = getattr(_probe, "filter_size", lambda: 0)()
         if _size * max(int(salt), 1) > (64 << 20):
-            import warnings
-
             warnings.warn(
                 f"grouped bloom build ships a dense ~{_size >> 20} MiB "
                 f"payload PER KEY{' x salt' if salt and salt > 1 else ''} "
@@ -573,148 +694,49 @@ def build_grouped_sketches(
                 stacklevel=2,
             )
 
-    weighted_kind = (
-        _require_weighted_interface(factory) if weight_col is not None else None
-    )
-
-    def build_group(tbl: pa.Table) -> pa.Table:
-        # Arrow-native: the value column goes straight to the sketch's
-        # vectorized update (exact int64+null handling), never through a
-        # pandas conversion
-        sk = factory()
-        arr = tbl.column(val_col)
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        if len(arr):
-            if weight_col is not None:
-                _update_sketch_from_arrow_weighted(
-                    sk, arr, tbl.column("_w"), weighted_kind
-                )
-            else:
-                _update_sketch_from_arrow(sk, arr)
-        return pa.table(
-            {
-                "key": pa.array([tbl.column(key_col)[0].as_py()], pa.string()),
-                "sketch": pa.array([sk.to_bytes()], pa.binary()),
-                "rows": pa.array([tbl.num_rows], pa.int64()),
-            }
-        )
-
-    cols = [F.col(key_col).cast("string").alias(key_col), F.col(val_col)]
-    if weight_col is not None:
+    cols = [F.col(key_col).cast("string").alias("key"), F.col(val_col).alias("_v")]
+    weighted = weight_col is not None
+    if weighted:
         cols.append(F.col(weight_col).cast("long").alias("_w"))
     base = df.select(*cols)
     if combine == "map":
-        weighted = weight_col is not None
-
-        def partial_batches(batches):
-            import pyarrow.compute as pc
-
-            # key -> [sketch, rows]; bounded by the keys THIS partition
-            # sees, which is the mode's applicability condition
-            acc: dict[object, list] = {}
-            warned = False
-            for batch in batches:
-                tbl = pa.Table.from_batches([batch])
-                if tbl.num_rows == 0:
-                    continue
-                karr = tbl.column(key_col).combine_chunks()
-                # NULL keys form their own group (groupBy parity)
-                if karr.null_count:
-                    nmask = pc.is_null(karr)
-                    ntbl = tbl.filter(nmask)
-                    ent = acc.get(_NULL_KEY)
-                    if ent is None:
-                        ent = acc[_NULL_KEY] = [factory(), 0]
-                    narr = ntbl.column(val_col).combine_chunks()
-                    if len(narr):
-                        if weighted:
-                            _update_sketch_from_arrow_weighted(
-                                ent[0], narr,
-                                ntbl.column("_w").combine_chunks(),
-                                weighted_kind,
-                            )
-                        else:
-                            _update_sketch_from_arrow(ent[0], narr)
-                    ent[1] += ntbl.num_rows
-                    tbl = tbl.filter(pc.invert(nmask))
-                    if tbl.num_rows == 0:
-                        continue
-                    karr = tbl.column(key_col).combine_chunks()
-                # dictionary-encode once, then stable-argsort the int
-                # codes — contiguous key runs with ONE take of the
-                # value column, no string sort
-                enc = pc.dictionary_encode(karr)
-                codes = np.asarray(enc.indices)
-                kvals = enc.dictionary.to_pylist()
-                order = np.argsort(codes, kind="stable")
-                sorted_codes = codes[order]
-                taken = tbl.take(pa.array(order))
-                varr = taken.column(val_col).combine_chunks()
-                warr = taken.column("_w").combine_chunks() if weighted else None
-                cuts = np.flatnonzero(np.diff(sorted_codes)) + 1
-                starts = np.concatenate(([0], cuts))
-                ends = np.concatenate((cuts, [len(sorted_codes)]))
-                for s, e in zip(starts, ends):
-                    k = kvals[sorted_codes[s]]
-                    ent = acc.get(k)
-                    if ent is None:
-                        ent = acc[k] = [factory(), 0]
-                        if len(acc) > 262_144 and not warned:
-                            import warnings
-
-                            warnings.warn(
-                                "map-combine partial dict exceeded 262k "
-                                "keys in one partition; key cardinality "
-                                "approaches row count — use "
-                                "combine='shuffle' (rows group by key "
-                                "instead of per-partition sketch dicts)",
-                                stacklevel=2,
-                            )
-                            warned = True
-                    vslice = varr.slice(s, e - s)
-                    if weighted:
-                        _update_sketch_from_arrow_weighted(
-                            ent[0], vslice, warr.slice(s, e - s), weighted_kind
-                        )
-                    else:
-                        _update_sketch_from_arrow(ent[0], vslice)
-                    ent[1] += e - s
-            if acc:
-                keys_out, sk_out, rows_out = [], [], []
-                for k, (sk, n) in acc.items():
-                    keys_out.append(None if k is _NULL_KEY else k)
-                    sk_out.append(sk.to_bytes())
-                    rows_out.append(n)
-                yield pa.record_batch(
-                    [
-                        pa.array(keys_out, pa.string()),
-                        pa.array(sk_out, pa.binary()),
-                        pa.array(rows_out, pa.int64()),
-                    ],
-                    names=["key", "sketch", "rows"],
-                )
-
-        partials = base.mapInArrow(partial_batches, out_schema)
+        partials = build_groups(base, ["key"], factory, weighted, map_side=True)
         return merge_groups(partials, "key")
     if salt and salt > 1:
-        salted = base.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(val_col)), F.lit(salt))
-        )
-        phase1 = salted.groupBy(key_col, "_salt").applyInArrow(
-            lambda t: build_group(t.drop_columns(["_salt"])), out_schema
-        )
-        return merge_groups(phase1, "key")
-    return base.groupBy(key_col).applyInArrow(build_group, out_schema)
+        salted = base.withColumn("_salt", F.pmod(F.xxhash64("_v"), F.lit(salt)))
+        phase1 = build_groups(salted, ["key", "_salt"], factory, weighted)
+        return merge_groups(phase1.drop("_salt"), "key")
+    return build_groups(base, ["key"], factory, weighted)
+
+
+def estimate_rows(
+    sketches: DataFrame,
+    estimator: Callable[[MergeableSketch], float],
+    names: list,
+) -> DataFrame:
+    """Decode ``sketches``' payloads map-side (one ``mapInArrow`` pass,
+    no shuffle): the output has columns ``names``, where ``estimate`` is
+    ``estimator`` of the row's sketch (a double; NaN reads as NULL) and
+    every other name is ``sketches``' column as it is."""
+    types = {f.name: f.dataType for f in sketches.schema.fields}
+    types["estimate"] = DoubleType()
+    schema = StructType([StructField(c, types[c]) for c in names])
+
+    def fn(batches):
+        for batch in batches:
+            payloads = batch.column("sketch").to_pylist()
+            ests = [estimator(sketch_from_bytes(b)) for b in payloads]
+            ests = pa.array(np.array(ests, np.float64), from_pandas=True)
+            cols = [ests if c == "estimate" else batch.column(c) for c in names]
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return sketches.mapInArrow(fn, schema)
 
 
 def grouped_estimate(
     sketches: DataFrame, estimator: Callable[[MergeableSketch], float]
 ) -> DataFrame:
-    """Map DataFrame[key, sketch] → DataFrame[key, estimate double]."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        ests = [estimator(sketch_from_bytes(b)) for b in pdf["sketch"]]
-        return pd.DataFrame({"key": pdf["key"], "estimate": ests})
-
-    return sketches.groupBy("key").applyInPandas(fn, "key string, estimate double")
+    """Map DataFrame[key, sketch] → DataFrame[key string, estimate
+    double], decoded map-side (:func:`estimate_rows`)."""
+    frame = sketches.select(F.col("key").cast("string").alias("key"), "sketch")
+    return estimate_rows(frame, estimator, ["key", "estimate"])

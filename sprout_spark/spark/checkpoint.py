@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 from ..sketch.base import MergeableSketch
 from .aggregate import (
-    _update_sketch_from_arrow,
+    _value_update,
     collect_merged,
     emit_partials,
     tree_merge,
@@ -131,9 +131,9 @@ def checkpointed_partials(
     # one partial per INPUT partition, never coalesced to the task slots:
     # part_id is the resume key, so it must keep naming the same rows
     new_partials = emit_partials(
-        df.select(col),
+        df.select(F.col(col).alias("_v")),
         factory,
-        lambda sk, batch: _update_sketch_from_arrow(sk, batch.column(0)),
+        _value_update(factory, False),
         CKPT_SCHEMA,
         annotate,
     )

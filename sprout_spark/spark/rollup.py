@@ -47,11 +47,12 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sketch.base import MergeableSketch, sketch_from_bytes
+from ..sketch.base import MergeableSketch
 from ..sources.commit import parquet_rows, read_json, write_json, write_lock
 from .aggregate import (
     build_grouped_sketches,
     collect_merged,
+    estimate_rows,
     merge_groups,
     tree_merge,
 )
@@ -430,23 +431,13 @@ class SketchRollup:
         where: dict | None = None,
     ) -> DataFrame:
         """:meth:`by_dims` with the sketch payloads decoded to numbers
-        executor-side: ``(<dims…> string, estimate double, rows
-        bigint)``."""
-        dims = list(self.dims)
-        merged = self.by_dims(spark, t0, t1, where)
-
-        def fn(it):
-            for pdf in it:
-                pdf["estimate"] = [
-                    estimator(sketch_from_bytes(b)) for b in pdf["sketch"]
-                ]
-                yield pdf[dims + ["estimate", "rows"]]
-
-        schema = (
-            ", ".join(f"`{d}` string" for d in dims)
-            + ", estimate double, rows bigint"
+        map-side (``aggregate.estimate_rows``): ``(<dims…> string,
+        estimate double, rows bigint)``."""
+        return estimate_rows(
+            self.by_dims(spark, t0, t1, where),
+            estimator,
+            self.dims + ["estimate", "rows"],
         )
-        return merged.mapInPandas(fn, schema)
 
     def query(
         self, spark: SparkSession, t0=None, t1=None, where: dict | None = None

@@ -42,7 +42,7 @@ from ..sketch.base import MergeableSketch, merge_serialized, sketch_from_bytes
 from ..sketch.bloom import BloomFilter
 from ..sketch.scalable_bloom import ScalableBloomFilter
 from . import fastpath
-from .aggregate import _update_sketch_from_arrow, merge_groups
+from .aggregate import build_groups, merge_groups
 
 SHARD_ROW_SCHEMA = "shard bigint, sketch binary, rows bigint, n_shards int"
 
@@ -60,7 +60,10 @@ def build_sharded_sketch(
     factory: Callable[[], MergeableSketch],
     salt: int = 0,
 ) -> DataFrame:
-    """One sketch per hash-shard: DataFrame[shard, sketch, rows].
+    """One sketch per hash-shard: DataFrame[shard, sketch, rows,
+    n_shards]. Keys shuffle on their shard and sort within their
+    partition, and the key-run fold (``aggregate.build_groups``) builds
+    each shard batch by batch: a shard never sits in memory as one table.
 
     ``salt > 1`` splits each shard's build across ``salt`` tasks (bounding
     the per-task group size to ~rows/(n_shards*salt)) and merges the salted
@@ -85,45 +88,24 @@ def build_sharded_sketch(
     give byte-identical filters across differently-partitioned reruns;
     the membership/estimate CONTRACT is unchanged either way.
     """
-    base = df.select(F.col(col).alias("k")).withColumn(
-        "shard", shard_id(F.col("k"), n_shards)
+    base = df.select(
+        shard_id(F.col(col), n_shards).alias("shard"),
+        F.col(col).alias("_v"),
+        # the modulus rides with the table: probes infer it, so a
+        # build/probe mismatch (silent false negatives) can't happen
+        F.lit(n_shards).cast("int").alias("n_shards"),
     )
-
-    def build_group(tbl: pa.Table) -> pa.Table:
-        sk = factory()
-        arr = tbl.column("k")
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        if len(arr):
-            _update_sketch_from_arrow(sk, arr)
-        return pa.table(
-            {
-                "shard": pa.array(
-                    [tbl.column("shard")[0].as_py()], pa.int64()
-                ),
-                "sketch": pa.array([sk.to_bytes()], pa.binary()),
-                "rows": pa.array([tbl.num_rows], pa.int64()),
-                # the modulus rides with the table: probes infer it, so a
-                # build/probe mismatch (silent false negatives) can't happen
-                "n_shards": pa.array([n_shards], pa.int32()),
-            }
-        )
-
     if salt and salt > 1:
         # row-varying sub-split (NOT a function of the key value — see
         # docstring) so hot shards AND hot duplicate keys spread across
         # tasks; local full-row sort first so a retried map task
         # reproduces identical salts (SPARK-23207 — see docstring)
-        salted = base.sortWithinPartitions("shard", "k").withColumn(
+        salted = base.sortWithinPartitions("shard", "_v").withColumn(
             "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt))
         )
-        partials = salted.groupBy("shard", "_salt").applyInArrow(
-            lambda t: build_group(t.drop_columns(["_salt"])), SHARD_ROW_SCHEMA
-        )
-        # n_shards is one constant, so the kernel's first-value pass
-        # through keeps it
-        return merge_groups(partials, "shard")
-    return base.groupBy("shard").applyInArrow(build_group, SHARD_ROW_SCHEMA)
+        partials = build_groups(salted, ["shard", "_salt"], factory)
+        return merge_groups(partials.drop("_salt"), "shard")
+    return build_groups(base, ["shard"], factory)
 
 
 def build_sharded_bloom(

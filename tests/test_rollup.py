@@ -372,7 +372,7 @@ def test_rollup_stream_ingest_equals_batch_and_restart(spark, tmp_path):
     q = stream_rollup(
         stream, r, "ts", "user_id", ckpt, trigger={"availableNow": True}
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), "stream did not finish"
     assert len(r.epochs) >= 3  # really ran multiple micro-batches
     got = {
         row["wstart"]: (row["rows"], row["sketch"])
@@ -386,7 +386,7 @@ def test_rollup_stream_ingest_equals_batch_and_restart(spark, tmp_path):
     q2 = stream_rollup(
         stream, r2, "ts", "user_id", ckpt, trigger={"availableNow": True}
     )
-    q2.awaitTermination(300)
+    assert q2.awaitTermination(300), "stream did not finish"
     assert {
         row["wstart"]: (row["rows"], row["sketch"])
         for row in r2.windows(spark).collect()

@@ -45,7 +45,7 @@ def test_stream_equals_batch(spark, transcripts_path, stream_dir, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         trigger={"availableNow": True},
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), "stream did not finish"
     assert acc.sketch.count == n
     assert (acc.sketch.bits == truth.bits).all()  # streamed == batch, bitwise
     assert acc.last_epoch >= 1  # really ran multiple micro-batches
@@ -66,7 +66,7 @@ def test_stream_restart_is_idempotent(spark, transcripts_path, stream_dir, tmp_p
     q, acc = stream_sketch(
         stream, "conv_id", factory, state, ckpt, trigger={"availableNow": True}
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), "stream did not finish"
     first_bits = acc.sketch.bits.copy()
     first_count = acc.sketch.count
 
@@ -75,7 +75,7 @@ def test_stream_restart_is_idempotent(spark, transcripts_path, stream_dir, tmp_p
     q2, acc2 = stream_sketch(
         stream, "conv_id", factory, state, ckpt, trigger={"availableNow": True}
     )
-    q2.awaitTermination(300)
+    assert q2.awaitTermination(300), "stream did not finish"
     assert acc2.sketch.count == first_count == n
     assert (acc2.sketch.bits == first_bits).all()
 
@@ -121,7 +121,7 @@ def test_grouped_stream_sketches(spark, transcripts_path, stream_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), "stream did not finish"
     res = spark.sql(
         "SELECT key, max(rows) AS rows, last(estimate) AS est "
         "FROM tool_distinct GROUP BY key"
@@ -168,7 +168,7 @@ def test_stream_novelty_filter_exact(spark, transcripts_path, stream_dir, tmp_pa
         checkpoint_dir=str(tmp_path / "nckpt"),
         trigger={"availableNow": True},
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), "stream did not finish"
     got = [r["conv_id"] for r in flt.novel_keys(spark).collect()]
     assert len(got) == len(set(got))  # each key novel exactly once
     assert set(got) == exact
@@ -197,7 +197,7 @@ def test_stream_novelty_filter_restart(spark, transcripts_path, stream_dir, tmp_
             checkpoint_dir=ckpt,
             trigger={"availableNow": True},
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "stream did not finish"
         return flt
 
     flt1 = run()
@@ -235,7 +235,7 @@ def test_novelty_compact_preserves_keys_and_resumes(
             checkpoint_dir=ckpt,
             trigger={"availableNow": True},
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "stream did not finish"
         return flt
 
     flt = run()
@@ -400,7 +400,7 @@ def test_stream_novelty_filter_sbf_growth_and_restart(
             trigger={"availableNow": True},
             n_buckets=8,
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "stream did not finish"
         return flt
 
     with warnings.catch_warnings():
@@ -468,7 +468,7 @@ def test_windowed_stream_sketches_match_batch_windows(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), "stream did not finish"
     # update mode re-emits a window each time it changes: keep the LAST
     # emission per window (rows is monotone within a window's updates)
     rows = spark.sql("SELECT * FROM winsk").collect()
@@ -539,7 +539,7 @@ def test_windowed_stream_sketches_fold_late_data(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), "stream did not finish"
     rows = spark.sql("SELECT * FROM latewin").collect()
     final = {}
     for r in rows:
@@ -599,7 +599,7 @@ def test_windowed_stream_sketches_evict_after_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), "stream did not finish"
     rows = spark.sql("SELECT * FROM evwin").collect()
     w10 = [r for r in rows if r["key"] == str(t0)]
     w13 = [r for r in rows if r["key"] == "2026-01-01 13:00:00"]
